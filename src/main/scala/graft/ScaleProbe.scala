@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve harness (dev main): MEASURE the 100 TB story instead of
@@ -640,7 +640,7 @@ object ScaleProbe {
             graft.operators.StreamArtifacts.incrHash(s, r)
               .select(col("exact_partner").cast("string").as("x"))
               .unionByName(graft.operators.StreamArtifacts.gramIndex(s, r)
-                .select(col("gram_hash").cast("string").as("x")))
+                .select(functions.lower(hex(col("gram_hash"))).as("x")))
           })) :+
         ("stream_index_append_slice" ->
           ((s: SparkSession, d: String) => {

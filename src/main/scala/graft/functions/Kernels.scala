@@ -514,9 +514,12 @@ object Kernels {
     override def initialValue() = new MyersScratch
   }
 
-  /** Decode valid UTF-8 bytes [from, until) into code points. Returns the
-    * count. Matches `String.codePoints` on any valid UTF-8 input (Spark
-    * strings always are); continuation bytes never appear as leads. */
+  /** Decode UTF-8 bytes [from, until) into code points. Returns the
+    * count. Matches `String.codePoints` on any valid UTF-8 input. Spark
+    * strings are not guaranteed valid (a binary cast keeps any bytes), so
+    * continuation reads stop at `until`: a multi-byte sequence cut short
+    * by the end decodes as ONE code point, the way `numChars` counts it,
+    * instead of reading past the range. */
   private def utf8Decode(bytes: Array[Byte], from: Int, until: Int,
       out: Array[Int]): Int = {
     var i = from
@@ -524,20 +527,17 @@ object Kernels {
     while (i < until) {
       val b = bytes(i)
       if (b >= 0) { // ASCII fast path: tight copy, no length dispatch
-        out(n) = b; i += 1; n += 1
+        out(n) = b; i += 1
       } else {
         val b0 = b & 0xFF
-        if (b0 < 0xE0) {
-          out(n) = ((b0 & 0x1F) << 6) | (bytes(i + 1) & 0x3F); i += 2
-        } else if (b0 < 0xF0) {
-          out(n) = ((b0 & 0x0F) << 12) | ((bytes(i + 1) & 0x3F) << 6) |
-            (bytes(i + 2) & 0x3F); i += 3
-        } else {
-          out(n) = ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3F) << 12) |
-            ((bytes(i + 2) & 0x3F) << 6) | (bytes(i + 3) & 0x3F); i += 4
-        }
-        n += 1
+        val len = if (b0 < 0xE0) 2 else if (b0 < 0xF0) 3 else 4
+        val end = math.min(i + len, until)
+        var cp = b0 & (0xFF >>> (len + 1)) // the lead's payload bits
+        i += 1
+        while (i < end) { cp = (cp << 6) | (bytes(i) & 0x3F); i += 1 }
+        out(n) = cp
       }
+      n += 1
     }
     n
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** The PERSISTED dedup-artifact layer — the production shape of the
   * composed dedup reports (SURVEY.md §2 C39/C59/C75/C82).
@@ -135,7 +136,7 @@ object DedupArtifacts {
     * segment). */
   private[operators] def refreshManifest(spark: SparkSession, path: String,
       params: Map[String, String] = Map.empty): Unit = {
-    val back = spark.read.parquet(path)
+    val back = Tables.readParquet(spark, path)
     val row = back.agg(count(lit(1)).as("n"),
       coalesce(expr(s"bit_xor(xxhash64(${back.columns.mkString(", ")}))"),
         lit(0L)).as("ck")).head()
@@ -156,7 +157,7 @@ object DedupArtifacts {
   private[graft] def refreshManifestCanonical(spark: SparkSession,
       path: String, params: Map[String, String],
       dropCol: String, canon: DataFrame => DataFrame): Unit = {
-    val back = canon(spark.read.parquet(path).drop(dropCol))
+    val back = canon(Tables.readParquet(spark, path).drop(dropCol))
     val row = back.agg(count(lit(1)).as("n"),
       coalesce(expr(s"bit_xor(xxhash64(${back.columns.mkString(", ")}))"),
         lit(0L)).as("ck")).head()
@@ -230,7 +231,7 @@ object DedupArtifacts {
       sys.error(s"$path has no manifest — store half-built; rebuild the " +
         "family (the manifest travels with compaction's publish, so a " +
         "crashed compaction cannot leave this state)")
-    val raw = spark.read.parquet(path)
+    val raw = Tables.readParquet(spark, path)
     // distinct slice labels, never index rows — the bounded collect
     val nMerge = raw.select(partCol).distinct()
       .filter(col(partCol) <= upTo).count()
@@ -314,7 +315,7 @@ object DedupArtifacts {
       path: String, expectParams: Map[String, String],
       dropCol: String, canon: DataFrame => DataFrame): DataFrame = {
     val (wantN, wantCk) = checkManifest(spark, path, expectParams)
-    val raw = spark.read.parquet(path).drop(dropCol)
+    val raw = Tables.readParquet(spark, path).drop(dropCol)
     val c = canon(raw)
     val row = c.agg(count(lit(1)).as("n"),
       coalesce(expr(s"bit_xor(xxhash64(${c.columns.mkString(", ")}))"),
@@ -438,7 +439,7 @@ object DedupArtifacts {
   def readVerified(spark: SparkSession, path: String,
       expectParams: Map[String, String] = Map.empty): DataFrame = {
     val (wantN, wantCk) = checkManifest(spark, path, expectParams)
-    val df = spark.read.parquet(path)
+    val df = Tables.readParquet(spark, path)
     val row = df.agg(count(lit(1)).as("n"),
       coalesce(expr(s"bit_xor(xxhash64(${df.columns.mkString(", ")}))"),
         lit(0L)).as("ck")).head()

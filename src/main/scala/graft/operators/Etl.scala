@@ -20,7 +20,13 @@ object Etl {
   // ---- A1: client validation (etl_service.py:20-56) --------------------
   /** Valid clients: required id + name, junk-literal normalization, RUT &
     * email format flags, amount sanity flag. */
-  def validateClients(spark: SparkSession, dir: String): DataFrame = {
+  def validateClients(spark: SparkSession, dir: String): DataFrame =
+    clientRows(spark, dir).orderBy("id_cliente")
+
+  /** [[validateClients]] unsorted — the body the reports aggregate (see
+    * [[entityCounts]] for why it must stay unsorted). Each validator below
+    * has the same split: the rule is written once, in the body. */
+  private def clientRows(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val rut = concat((col("c_custkey") + lit(10000000)).cast("string"),
       lit("-"), (col("c_custkey") % 10).cast("string"))
@@ -37,7 +43,6 @@ object Etl {
       .withColumn("rut_valido", Clean.rutValid(col("rut")))
       .withColumn("email_valido", Clean.emailValid(col("email")))
       .withColumn("saldo_ok", col("saldo") >= 0)
-      .orderBy("id_cliente")
   }
 
   val validateClientsSql: String = s"""
@@ -69,7 +74,10 @@ object Etl {
     *  - negative margin flagged, not rejected (etl_service.py:86-88).
     * Both side inputs scale with the fact data, so neither is force-broadcast
     * — key-key joins, AQE decides the physical strategy. */
-  def validateProducts(spark: SparkSession, dir: String): DataFrame = {
+  def validateProducts(spark: SparkSession, dir: String): DataFrame =
+    productRows(spark, dir).orderBy("id_producto")
+
+  private def productRows(spark: SparkSession, dir: String): DataFrame = {
     val p = Tables.part(spark, dir).select(
       col("p_partkey").as("id_producto"),
       Clean.normStr(col("p_name")).as("nombre"),
@@ -88,7 +96,6 @@ object Etl {
         col("nombre").isNotNull && col("id_producto").isNotNull)
       .withColumn("margen_negativo", col("precio_neto") <= col("costo_neto"))
       .withColumn("estado", lit(1))
-      .orderBy("id_producto")
   }
 
   val validateProductsSql: String = s"""
@@ -124,7 +131,10 @@ object Etl {
     * ([[Feeds.documents]]) — pure validation of what the source carries,
     * exactly like the reference's `validate_document`
     * (etl_service.py:125-141). Narrow pass, stays in WholeStageCodegen. */
-  def validateDocuments(spark: SparkSession, dir: String): DataFrame = {
+  def validateDocuments(spark: SparkSession, dir: String): DataFrame =
+    documentRows(spark, dir).orderBy("id_documento")
+
+  private def documentRows(spark: SparkSession, dir: String): DataFrame = {
     def cents(c: Column): Column = floor(c * lit(100.0) + lit(0.5)).cast("double")
     Feeds.documents(spark, dir)
       .filter(col("id_documento").isNotNull && col("fecha_emision").isNotNull &&
@@ -132,7 +142,6 @@ object Etl {
       .withColumn("montos_coherentes",
         abs(cents(col("monto_total")) -
           (cents(col("monto_neto")) + cents(col("monto_iva")))) <= lit(1.0))
-      .orderBy("id_documento")
   }
 
   val validateDocumentsSql: String = s"""
@@ -153,12 +162,14 @@ object Etl {
     * tolerance, mirroring the reference's `validate_document_detail`
     * (etl_service.py:182-188). Narrow pass, stays in WholeStageCodegen. */
   def validateDetails(spark: SparkSession, dir: String): DataFrame =
+    detailRows(spark, dir).orderBy("id_documento", "numero_linea")
+
+  private def detailRows(spark: SparkSession, dir: String): DataFrame =
     Feeds.details(spark, dir)
       .filter(col("cantidad") > 0 && col("precio_neto_unitario") > 0)
       .withColumn("linea_coherente",
         abs(col("monto_total_linea") -
           (col("cantidad") * col("precio_neto_unitario") * (lit(1.0) - col("descuento_porcentual") / lit(100.0)))) <= lit(0.01))
-      .orderBy("id_documento", "numero_linea")
 
   val validateDetailsSql: String = s"""
     WITH feed AS (${Feeds.detailsSql})
@@ -504,29 +515,51 @@ object Etl {
     * validators' hard filters) and warning volume (soft flags on loaded
     * rows — invalid RUT/email/negative balance, negative margin, amount
     * incoherence). Every number is an exact integer count off the same
-    * validator plans the load itself runs; the four per-entity aggregates
-    * are 1-row reductions, so the report costs four partial-agg scans and
-    * no join wider than a 1-row broadcast. */
+    * validator plans the load itself runs. Each entity row is ONE global
+    * aggregate over its loaded and input rows ([[entityCounts]]), so the
+    * report costs one partial-agg pass per scan, one single-partition
+    * exchange per entity and no join. The loaded side is the validator's
+    * unsorted body: a Sort under that union would survive as a range
+    * exchange plus a sampling job per entity (OperatorsSpec pins the job
+    * count). */
   def syncReport(spark: SparkSession, dir: String): DataFrame = {
     def entityRow(entity: String, input: DataFrame, loaded: DataFrame,
-        warn: org.apache.spark.sql.Column): DataFrame =
-      loaded.agg(count(lit(1)).as("n_cargados"),
-          sum(warn.cast("long")).as("n_adv"))
-        .crossJoin(broadcast(input.agg(count(lit(1)).as("n_entrada"))))
-        .select(lit(entity).as("entidad"), col("n_entrada"), col("n_cargados"),
-          (col("n_entrada") - col("n_cargados")).as("n_rechazados"),
-          coalesce(col("n_adv"), lit(0L)).as("n_advertencias"))
+        warn: Column): DataFrame =
+      entityCounts(input, loaded, warn)
+        .select(lit(entity).as("entidad"), col("*"))
     entityRow("clientes", Tables.customer(spark, dir),
-        validateClients(spark, dir),
-        !(col("rut_valido") && col("email_valido") && col("saldo_ok")))
+        clientRows(spark, dir), ClientWarning)
       .unionByName(entityRow("productos", Tables.part(spark, dir),
-        validateProducts(spark, dir), col("margen_negativo")))
+        productRows(spark, dir), col("margen_negativo")))
       .unionByName(entityRow("documentos", Tables.orders(spark, dir),
-        validateDocuments(spark, dir), !col("montos_coherentes")))
+        documentRows(spark, dir), !col("montos_coherentes")))
       .unionByName(entityRow("detalles", Tables.lineitem(spark, dir),
-        validateDetails(spark, dir), !col("linea_coherente")))
+        detailRows(spark, dir), !col("linea_coherente")))
       .orderBy("entidad")
   }
+
+  /** The soft flags a loaded client is warned for. */
+  private val ClientWarning: Column =
+    !(col("rut_valido") && col("email_valido") && col("saldo_ok"))
+
+  /** One entity's report counts as ONE global aggregate over the tagged
+    * union of its loaded and input rows: (n_entrada, n_cargados,
+    * n_rechazados, n_advertencias), the warnings summed over the loaded
+    * side only. `loaded` must be a validator's UNSORTED body: the
+    * optimizer drops a Sort under an order-insensitive aggregate only
+    * through narrow operators, never through a Union, and each surviving
+    * Sort costs a range exchange plus a sampling job. */
+  private def entityCounts(input: DataFrame, loaded: DataFrame,
+      warn: Column): DataFrame =
+    loaded.select(lit(true).as("_cargado"), warn.cast("long").as("_adv"))
+      .unionByName(input.select(lit(false).as("_cargado"),
+        lit(null).cast("long").as("_adv")))
+      .agg(count_if(!col("_cargado")).as("n_entrada"),
+        count_if(col("_cargado")).as("n_cargados"),
+        coalesce(sum("_adv"), lit(0L)).as("n_advertencias"))
+      .select(col("n_entrada"), col("n_cargados"),
+        (col("n_entrada") - col("n_cargados")).as("n_rechazados"),
+        col("n_advertencias"))
 
   val syncReportSql: String = s"""
     SELECT 'clientes' AS entidad,
@@ -572,30 +605,24 @@ object Etl {
     val cutoffTs = lit(DailyEtlCutoff).cast("timestamp")
     def stepRow(paso: Long, entity: String, modo: String, input: DataFrame,
         loaded: DataFrame, warn: Column): DataFrame =
-      loaded.agg(count(lit(1)).as("n_cargados"),
-          sum(warn.cast("long")).as("n_adv"))
-        .crossJoin(broadcast(input.agg(count(lit(1)).as("n_entrada"))))
-        .select(lit(paso).as("paso"), lit(entity).as("entidad"),
-          lit(modo).as("modo"), col("n_entrada"), col("n_cargados"),
-          (col("n_entrada") - col("n_cargados")).as("n_rechazados"),
-          coalesce(col("n_adv"), lit(0L)).as("n_advertencias"))
+      entityCounts(input, loaded, warn).select(lit(paso).as("paso"),
+        lit(entity).as("entidad"), lit(modo).as("modo"), col("*"))
     val winIds = Tables.orders(spark, dir)
       .filter(col("o_orderdate") >= cutoffTs)
       .select(col("o_orderkey").as("id_documento"))
     stepRow(1L, "clientes", "completa", Tables.customer(spark, dir),
-        validateClients(spark, dir),
-        !(col("rut_valido") && col("email_valido") && col("saldo_ok")))
+        clientRows(spark, dir), ClientWarning)
       .unionByName(stepRow(2L, "productos", "completa",
-        Tables.part(spark, dir), validateProducts(spark, dir),
+        Tables.part(spark, dir), productRows(spark, dir),
         col("margen_negativo")))
       .unionByName(stepRow(3L, "documentos", "incremental", winIds,
-        validateDocuments(spark, dir)
+        documentRows(spark, dir)
           .filter(col("fecha_emision") >= cutoffTs.cast("date")),
         !col("montos_coherentes")))
       .unionByName(stepRow(4L, "detalles", "incremental",
         Feeds.details(spark, dir).join(winIds, Seq("id_documento"),
           "left_semi"),
-        validateDetails(spark, dir).join(winIds, Seq("id_documento"),
+        detailRows(spark, dir).join(winIds, Seq("id_documento"),
           "left_semi"),
         !col("linea_coherente")))
   }
@@ -615,16 +642,24 @@ object Etl {
     * Exactness: integer counts throughout; `paso_ok`/`run ok` are count
     * comparisons.
     *
-    * Scale: each step is a 1-row reduction off the validator plans (narrow
-    * codegen'd scans; the detail window is a semi-join on the week's doc
-    * ids — at 100 TB the window is days, not history, and the semi-join
-    * broadcasts it). The 4-row step relation is computed ONCE and cache()d
-    * — the TOTAL row re-reads the cache instead of replaying the validator
-    * subtrees (the C75 lesson: union branches do not share exchanges), so
-    * composing the total adds ZERO scans (PlanSpec-pinned). */
+    * Scale: each step is ONE 1-row aggregate over the tagged union of its
+    * loaded and input rows ([[entityCounts]] — the validator bodies go in
+    * unsorted, since a Sort under the union would survive as a range
+    * exchange plus a sampling job); narrow codegen'd scans; the detail
+    * window is a semi-join on the week's doc ids — at 100 TB the window is
+    * days, not history, and the semi-join broadcasts it. The 4-row step
+    * relation is computed ONCE and cache()d — the TOTAL row re-reads the
+    * cache instead of replaying the validator subtrees (the C75 lesson:
+    * union branches do not share exchanges), so composing the total adds
+    * ZERO scans (PlanSpec-pinned). The cache is matched by plan, and a
+    * plan names its files by path, not by content: each call first drops
+    * the entry an earlier call cached, so a report over grown or rewritten
+    * files never reads the old counts. */
   def dailyEtlReport(spark: SparkSession, dir: String): DataFrame = {
     val steps = dailyEtlSteps(spark, dir)
-      .withColumn("paso_ok", col("n_cargados") > 0).cache()
+      .withColumn("paso_ok", col("n_cargados") > 0)
+    steps.unpersist()
+    steps.cache()
     val total = steps.agg(sum("n_entrada").as("n_entrada"),
         sum("n_cargados").as("n_cargados"),
         sum("n_rechazados").as("n_rechazados"),

@@ -60,7 +60,8 @@ object Nightly {
     AnnArtifacts.recover(spark, annRoot): Unit
 
     def sliceRows(root: String, family: String, partCol: String): Long =
-      spark.read.parquet(s"$root/$family/$partCol=$dayEpoch").count()
+      graft.sources.Tables.readParquet(spark,
+        s"$root/$family/$partCol=$dayEpoch").count()
     def maxSliceCount(root: String, families: Seq[String],
         partCol: String): Long =
       families.map(f =>

@@ -55,7 +55,7 @@ object Export {
     // `_`-prefixed so a compaction of a partition dir never leaves a
     // sibling the table root's FileIndex would discover as data
     val tmp = new Path(target.getParent, "_" + target.getName + ".compact")
-    spark.read.parquet(path).repartition(nOut)
+    Tables.readParquet(spark, path).repartition(nOut)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     publish(fs, tmp, target)
     (parts.length, nOut)

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
+import org.apache.spark.sql.types.StructType
 
 /** Schema-stable loaders for the engine's table universe.
   *
@@ -11,7 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale note: these are plain parquet scans so Catalyst can push filters
   * and prune columns into the scan; callers should filter/select straight
   * off the returned DataFrame (never cache the raw scan) so PushedFilters /
-  * ReadSchema stay minimal at 100 TB.
+  * ReadSchema stay minimal at 100 TB. Building a loader's frame schedules
+  * no Spark job: [[readParquet]] reads the schema from one footer on the
+  * driver, where `spark.read.parquet` would run a one-task inference job.
   */
 object Tables {
   val fact: Seq[String] = Seq("orders", "lineitem", "events")
@@ -20,7 +26,43 @@ object Tables {
   val all: Seq[String] = dims ++ fact ++ corpus
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema read on the driver, so the
+    * read schedules no schema-inference job (about 65 ms each, most of a
+    * small call's cost). The schema comes from the file Spark's
+    * `ParquetUtils.inferSchema` would pick off the same `InMemoryFileIndex`
+    * listing — `_common_metadata`, else `_metadata`, else the first data
+    * file by path; every data footer under `spark.sql.parquet.mergeSchema`
+    * — converted by Spark's own reader ([[GraftFooters]]), with the
+    * inferred partition columns appended. Missing paths (and so globs),
+    * paths with no data file and data files that carry a partition column
+    * fall back to `spark.read.parquet`, so those keep Spark's own
+    * behaviour and errors. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return None
+    val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.filter(_.getPath.getName == n)
+    val (common, meta) = (named("_common_metadata"), named("_metadata"))
+    val data = files.diff(common ++ meta)
+    val conf = spark.sessionState.conf
+    val touch =
+      if (conf.isParquetSchemaMergingEnabled)
+        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ meta ++ common
+      else common.headOption.orElse(meta.headOption).orElse(data.headOption).toSeq
+    val parts = index.partitionSchema
+    if (data.isEmpty) None
+    else GraftFooters.schema(spark, touch)
+      .filterNot(_.fieldNames.exists(f => parts.fieldNames.exists(_.equalsIgnoreCase(f))))
+      .map(s => StructType(s.fields ++ parts.fields))
+  }
 
   def region(s: SparkSession, d: String)    = load(s, d, "region")
   def nation(s: SparkSession, d: String)    = load(s, d, "nation")

@@ -271,6 +271,19 @@ class KernelsSpec extends SparkSpec {
     assert(bad.count() == 0, bad.collect().take(5).mkString("\n"))
   }
 
+  test("graft_lev_capped decodes a truncated multi-byte tail as one code point") {
+    // binary casts keep any bytes: "abcde" + a 2-, 3- and 4-byte sequence
+    // cut one byte short (é, 界, U+1F642) — each tail is one code point
+    for (cut <- Seq("C3", "E795", "F09F99")) {
+      val s = s"cast(unhex('6162636465$cut') AS STRING)"
+      val r = spark.range(1).selectExpr(
+        s"graft_lev_capped($s, 'abcdef') AS sub",
+        s"graft_lev_capped($s, 'abcde') AS del",
+        s"graft_lev_capped($s, $s) AS same").head()
+      assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((1L, 1L, 0L)), cut)
+    }
+  }
+
   test("graft_band_sigs matches the transform/concat_ws/cast composition") {
     val mins = docs
       .withColumn("norm", lower(trim(col("text"))))

@@ -1085,6 +1085,39 @@ class OperatorsSpec extends SparkSpec {
     r.unpersist(): Unit
   }
 
+  test("sync and daily reports stay within their pinned job counts") {
+    // sf0.001 counts: 8 and 11. Each entity row is one aggregate over the
+    // loaded/input union; a Sort left under that union survives as a range
+    // exchange + sampling job per entity and breaks these bounds
+    spark.catalog.clearCache()
+    val sync = Audit.jobsOf(spark, operators.Etl.syncReport(spark, sf))
+    val daily = Audit.jobsOf(spark, operators.Etl.dailyEtlReport(spark, sf))
+    info(s"syncReport=$sync dailyEtlReport(cold)=$daily")
+    assert(sync <= 8, s"syncReport ran $sync jobs")
+    assert(daily <= 11, s"cold dailyEtlReport ran $daily jobs")
+    spark.catalog.clearCache()
+  }
+
+  test("daily report counts the current files, not an earlier call's cache") {
+    val dir = tmpDir("graft-daily-grow-")
+    for (t <- sources.Tables.all)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    def clients(df: org.apache.spark.sql.DataFrame): Long =
+      df.filter(col("entidad") === "clientes").head().getAs[Long]("n_entrada")
+    val n0 = clients(operators.Etl.dailyEtlReport(spark, dir))
+    // grow customer.parquet: every client again under a fresh key
+    val cust = spark.read.parquet(s"$dir/customer.parquet")
+    cust.unionByName(cust.withColumn("c_custkey", col("c_custkey") + 1000000L))
+      .write.parquet(s"$dir/customer_grown")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/customer.parquet"))
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/customer_grown"),
+      java.nio.file.Paths.get(s"$dir/customer.parquet"))
+    assert(clients(operators.Etl.syncReport(spark, dir)) == 2 * n0)
+    assert(clients(operators.Etl.dailyEtlReport(spark, dir)) == 2 * n0)
+    spark.catalog.clearCache()
+  }
+
   test("lang confusion: cells conserve docs, fractions sum to one per row") {
     val cm = operators.TextOps.langConfusion(spark, sf).cache()
     val total = sources.Tables.documents(spark, sf).count()
