@@ -222,30 +222,9 @@ object AnnArtifacts {
       if (DedupArtifacts.manifestMissing(spark, s"$root/$f"))
         sys.error(s"ANN index $root/$f has no manifest — store " +
           "half-built (a crashed compaction cannot leave this state: " +
-          "the manifest travels with its publish); rebuild the family, " +
-          "or — for a pre-manifest-travel store whose manifest was lost " +
-          "to the old publish-then-re-stamp crash window — run the " +
-          "one-shot restampMissingManifests migration")
+          "the manifest travels with its publish); rebuild the family")
       restored
     }.exists(identity)
-
-  /** ONE-SHOT MIGRATION for stores left by the PRE-round-15 release's
-    * compaction crash window (publish succeeded, re-stamp lost) — the
-    * [[StreamArtifacts.restampMissingManifests]] twin for the per-vector
-    * families: re-stamps exactly the families whose manifest is missing
-    * (stranded publishes restored first) with the caller's params — the
-    * explicit operator assertion [[recover]] deliberately refuses to
-    * make implicitly. Returns the re-stamped family names. */
-  def restampMissingManifests(spark: SparkSession, root: String,
-      k: Int = IvfK, pqK: Int = PqK): Seq[String] =
-    VectorFamilies.filter { f =>
-      DedupArtifacts.restoreStranded(spark, s"$root/$f"): Unit
-      val missing = DedupArtifacts.manifestMissing(spark, s"$root/$f")
-      if (missing)
-        DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
-          vectorFamilyParams(f, k, pqK), "ingest_day", identity)
-      missing
-    }
 
   /** The cadence policy for the per-vector relations — the
     * [[StreamArtifacts.compactIfNeeded]] device: an FS listing decides

@@ -203,15 +203,18 @@ object DedupArtifacts {
     * CONCURRENCY: compact reads the whole family and swaps the whole
     * directory, so it must be SERIALIZED with appends — a slice landing
     * between the read and the publish would be silently dropped by the
-    * swap. The nightly cadence ([[Nightly.runDay]]) runs
-    * append → re-stamp → compact sequentially in one driver, which is
-    * the deployment contract; the whole-directory swap is kept (over a
-    * slices-≤-upTo partial swap) because it is the only layout change
-    * readers observe atomically — a partial swap can expose a merged
-    * slice NEXT TO its unmerged sources mid-crash, double-counting
-    * summed counters (span_index). The trade is the usual LSM one: a
-    * merged day can no longer be RESTATED slice-wise (its rows lost
-    * their day identity) — compact behind the restatement horizon.
+    * swap. The serial order is PER FAMILY: the nightly cadence
+    * ([[Nightly.runDay]]) runs each store's append → re-stamp → compact
+    * in that order, while different stores — and the families of one
+    * store, which share no directory — run concurrently
+    * ([[concurrently]]). That is the deployment contract; the
+    * whole-directory swap is kept (over a slices-≤-upTo partial swap)
+    * because it is the only layout change readers observe atomically —
+    * a partial swap can expose a merged slice NEXT TO its unmerged
+    * sources mid-crash, double-counting summed counters (span_index).
+    * The trade is the usual LSM one: a merged day can no longer be
+    * RESTATED slice-wise (its rows lost their day identity) — compact
+    * behind the restatement horizon.
     * `sliceKey` co-partitions rows WITHIN slices (the cell-major layout
     * for IVF cells); without it each slice lands as one file (the
     * segment-sketch convention). */
@@ -306,6 +309,27 @@ object DedupArtifacts {
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName.stripPrefix(partCol + "=").toLong)
+  }
+
+  /** Run independent store steps concurrently; their results come back in
+    * step order. Each call makes its own fixed pool, one thread per step,
+    * and its threads start on the calling thread, so every step inherits
+    * the caller's SparkContext local properties (job group, scheduler
+    * pool) and active session, both `InheritableThreadLocal`s — and a
+    * step may call this again without waiting on a shared pool. Every
+    * step finishes before this returns or throws (no write is still
+    * running when the caller sees a failure); the first failing step's
+    * own exception is then rethrown. */
+  private[graft] def concurrently[A](steps: Seq[() => A]): Seq[A] = {
+    import java.util.concurrent.{ExecutionException, Executors}
+    val pool = Executors.newFixedThreadPool(steps.size max 1)
+    try {
+      val running = steps.map(step => pool.submit[A](() => step()))
+      running.map(f => scala.util.Try(f.get())).map {
+        case scala.util.Failure(e: ExecutionException) => throw e.getCause
+        case done => done.get
+      }
+    } finally pool.shutdown()
   }
 
   /** [[readVerified]] for log-structured stores: verifies the CANONICAL

@@ -10,13 +10,19 @@ import org.apache.spark.sql.functions._
   * Round 14: the pieces all existed (D37-D39 sketch day writers, the
   * stream-gate appendDay, the ANN appendDay, the compaction cadence
   * policy) — this is the ONE entrypoint a deployment actually schedules,
-  * sequencing them over a single ingest day and emitting the A15-style
+  * running them over a single ingest day and emitting the A15-style
   * per-step report row the morning operator reads.
   *
-  * Sequencing IS the concurrency contract: every append and the
-  * compaction policy run from one driver, one after another — exactly the
-  * serialization [[DedupArtifacts.compactSlices]] requires (a slice
-  * landing mid-compact would be dropped by the whole-family swap).
+  * Concurrency contract: serial order is PER FAMILY. The three stores
+  * share no directory, so after the recovery prologue their chains run
+  * concurrently ([[DedupArtifacts.concurrently]]), and inside the stream
+  * store the four families append, re-stamp and compact concurrently too.
+  * Within one store the chain keeps its order — append, re-stamp, then
+  * the compaction policy — exactly the serialization
+  * [[DedupArtifacts.compactSlices]] requires (a slice landing mid-compact
+  * would be dropped by the whole-family swap). Every chain finishes
+  * before runDay returns or throws, so a failed night leaves no write
+  * running behind it and a replay starts from a quiet store.
   *
   * Replay-idempotent end to end: a re-run of the same day replaces each
   * slice with identical content (the replaceSlice publish), re-stamps the
@@ -43,6 +49,10 @@ import org.apache.spark.sql.functions._
   * the steps already paid for — ≤ 8 rows, never a fact relation. */
 object Nightly {
 
+  /** One report row: (paso, componente, accion, n_entrada, n_filas,
+    * n_slices). */
+  private type Step = (Long, String, String, Long, Long, Long)
+
   /** One ingest day's maintenance across all three persisted stores.
     * `dayEvents` needs (ts, value, user_id); `dayDocs` (doc_id, text,
     * source) are the day's ADMITTED docs (NEW ids — the appendDay
@@ -58,10 +68,13 @@ object Nightly {
     // ---- recovery prologue (crashed previous run → consistent store)
     StreamArtifacts.recover(spark, streamRoot): Unit
     AnnArtifacts.recover(spark, annRoot): Unit
+    // once, before the chains fork, so no two of them race to register
+    graft.functions.Kernels.register(spark)
 
+    // the landed slice's rows, summed from its parquet footers (no job)
     def sliceRows(root: String, family: String, partCol: String): Long =
-      graft.sources.Tables.readParquet(spark,
-        s"$root/$family/$partCol=$dayEpoch").count()
+      graft.sources.Tables.footerRows(spark,
+        s"$root/$family/$partCol=$dayEpoch")
     def maxSliceCount(root: String, families: Seq[String],
         partCol: String): Long =
       families.map(f =>
@@ -75,65 +88,61 @@ object Nightly {
     // instead of poisoning the store on a quiet night.
 
     // ---- step 1-3: the day-grain sketch families (D37-D39's batch body)
-    val nEvents = dayEvents.count()
-    if (nEvents > 0L) {
-      SketchArtifacts.appendQsketchDay(spark, sketchRoot, dayEpoch, dayEvents)
-      SketchArtifacts.appendCmsDay(spark, sketchRoot, dayEpoch, dayEvents)
-      SketchArtifacts.appendHllDay(spark, sketchRoot, dayEpoch, dayEvents)
-    }
-    val sketchSteps = Seq("qsketch_day", "cms_day", "hll_day").zipWithIndex
-      .map { case (f, i) =>
-        (i + 1L, f, "append", nEvents,
-          if (nEvents > 0L) sliceRows(sketchRoot, f, "day_epoch") else 0L,
-          DedupArtifacts.sliceDays(spark, s"$sketchRoot/$f", "day_epoch")
-            .length.toLong)
+    def sketchChain(): Seq[Step] = {
+      val nEvents = dayEvents.count()
+      if (nEvents > 0L) {
+        SketchArtifacts.appendQsketchDay(spark, sketchRoot, dayEpoch, dayEvents)
+        SketchArtifacts.appendCmsDay(spark, sketchRoot, dayEpoch, dayEvents)
+        SketchArtifacts.appendHllDay(spark, sketchRoot, dayEpoch, dayEvents)
       }
+      Seq("qsketch_day", "cms_day", "hll_day").zipWithIndex
+        .map { case (f, i) =>
+          (i + 1L, f, "append", nEvents,
+            if (nEvents > 0L) sliceRows(sketchRoot, f, "day_epoch") else 0L,
+            DedupArtifacts.sliceDays(spark, s"$sketchRoot/$f", "day_epoch")
+              .length.toLong)
+        }
+    }
 
-    // ---- step 4: the stream-gate index (D18/D24/D34's standing state)
-    val nDocs = dayDocs.count()
-    if (nDocs > 0L)
-      StreamArtifacts.appendDay(spark, streamRoot, dayEpoch, dayDocs)
-    val streamRows =
-      if (nDocs > 0L) StreamArtifacts.Families
-        .map(f => sliceRows(streamRoot, f, "ingest_day")).sum
-      else 0L
-    val step4 = (4L, "stream_index", "append", nDocs, streamRows,
-      maxSliceCount(streamRoot, StreamArtifacts.Families, "ingest_day"))
+    // ---- step 4/6 and 5/7: an index store's append, then its compaction
+    // cadence (replay horizon = this day: a replayed runDay re-appends
+    // dayEpoch, so the merged slice must keep a label strictly below it)
+    def indexChain(paso: Long, component: String, root: String,
+        families: Seq[String], day: DataFrame, append: => Unit,
+        compactIfNeeded: => Boolean): Seq[Step] = {
+      val n = day.count()
+      if (n > 0L) append
+      val landed =
+        if (n > 0L) families.map(sliceRows(root, _, "ingest_day")).sum
+        else 0L
+      val before = maxSliceCount(root, families, "ingest_day")
+      val fired = compactIfNeeded
+      Seq((paso, component, "append", n, landed, before),
+        (paso + 2L, component, if (fired) "compact" else "compact_noop",
+          before, 0L, maxSliceCount(root, families, "ingest_day")))
+    }
+    // the stream-gate index (D18/D24/D34's standing state)
+    def streamChain(): Seq[Step] =
+      indexChain(4L, "stream_index", streamRoot, StreamArtifacts.Families,
+        dayDocs, StreamArtifacts.appendDay(spark, streamRoot, dayEpoch, dayDocs),
+        StreamArtifacts.compactIfNeeded(spark, streamRoot, maxSlices,
+          protectFrom = dayEpoch))
+    // the ANN index (D40's batch body)
+    def annChain(): Seq[Step] =
+      indexChain(5L, "ann_index", annRoot, Seq("flat", "ivf_cells", "pq_codes"),
+        dayVectors, AnnArtifacts.appendDay(spark, annRoot, dayEpoch, dayVectors),
+        AnnArtifacts.compactIfNeeded(spark, annRoot, maxSlices,
+          protectFrom = dayEpoch))
 
-    // ---- step 5: the ANN index (D40's batch body)
-    val nVecs = dayVectors.count()
-    if (nVecs > 0L)
-      AnnArtifacts.appendDay(spark, annRoot, dayEpoch, dayVectors)
-    val annFams = Seq("flat", "ivf_cells", "pq_codes")
-    val annRows =
-      if (nVecs > 0L) annFams.map(f => sliceRows(annRoot, f, "ingest_day")).sum
-      else 0L
-    val step5 = (5L, "ann_index", "append", nVecs, annRows,
-      maxSliceCount(annRoot, annFams, "ingest_day"))
-
-    // ---- step 6-7: the compaction cadence (replay horizon = this day:
-    // a replayed runDay re-appends dayEpoch, so the merged slice must
-    // keep a label strictly below it)
-    val streamBefore = maxSliceCount(streamRoot, StreamArtifacts.Families,
-      "ingest_day")
-    val streamFired = StreamArtifacts.compactIfNeeded(spark, streamRoot,
-      maxSlices, protectFrom = dayEpoch)
-    val step6 = (6L, "stream_index",
-      if (streamFired) "compact" else "compact_noop", streamBefore, 0L,
-      maxSliceCount(streamRoot, StreamArtifacts.Families, "ingest_day"))
-    val annBefore = maxSliceCount(annRoot, annFams, "ingest_day")
-    val annFired = AnnArtifacts.compactIfNeeded(spark, annRoot, maxSlices,
-      protectFrom = dayEpoch)
-    val step7 = (7L, "ann_index",
-      if (annFired) "compact" else "compact_noop", annBefore, 0L,
-      maxSliceCount(annRoot, annFams, "ingest_day"))
+    val stepRows = DedupArtifacts.concurrently(
+      Seq(() => sketchChain(), () => streamChain(), () => annChain())).flatten
 
     // ---- the A15-style report: per-step rows + the total row the
     // scheduler response summarizes (paso_ok = the step landed rows;
     // compact rows are policy outcomes, not failure modes)
     val sp = spark
     import sp.implicits._
-    val steps = (sketchSteps ++ Seq(step4, step5, step6, step7))
+    val steps = stepRows
       .toDF("paso", "componente", "accion", "n_entrada", "n_filas",
         "n_slices")
       .withColumn("ok",

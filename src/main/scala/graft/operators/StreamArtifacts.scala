@@ -165,6 +165,9 @@ object StreamArtifacts {
   /** The nightly cadence: day `dayEpoch`'s ADMITTED docs (doc_id, text,
     * source) append to all four families — an O(day) signature pass plus
     * one slice swap per family; the standing corpus is never re-read.
+    * Every family's manifest params are checked BEFORE any slice lands
+    * (the [[AnnArtifacts.appendDay]] rule), then the four slice swaps run
+    * concurrently — the families share no directory.
     * CONTRACT: an admitted doc is a NEW doc — its id must not already
     * exist in the store (the span counters sum per-slice distinct-doc
     * counts, which is exact only while ingest days partition the doc
@@ -189,16 +192,19 @@ object StreamArtifacts {
       if (rec != familyParams(f))
         sys.error(s"stream index $root/$f params mismatch: append " +
           s"expects ${familyParams(f)}, store records $rec")
-      Etl.replaceSlice(spark, s"$root/$f", "ingest_day", dayEpoch.toString,
-        slices(f, spark, dayDocs))
     }
+    DedupArtifacts.concurrently(Families.map(f => () =>
+      Etl.replaceSlice(spark, s"$root/$f", "ingest_day", dayEpoch.toString,
+        slices(f, spark, dayDocs)))): Unit
     if (restamp) this.restamp(spark, root)
   }
 
   /** The deferred canonical re-stamp for all four families — one narrow
-    * O(index) digest pass each (index bytes, never corpus text). */
+    * O(index) digest pass each (index bytes, never corpus text), the four
+    * run concurrently. */
   def restamp(spark: SparkSession, root: String): Unit =
-    Families.foreach(restampFamily(spark, root, _))
+    DedupArtifacts.concurrently(
+      Families.map(f => () => restampFamily(spark, root, f))): Unit
 
   /** SLICE COMPACTION (round 13 — the verdict's unbounded-slice-count
     * fix): merge every day slice with `ingest_day ≤ upToDay` into ONE
@@ -221,16 +227,16 @@ object StreamArtifacts {
     * manifest equality before/after compaction holds by construction,
     * and a compaction that ever broke the canonical merge would FAIL
     * the next verified read against the pre-compaction manifest
-    * instead of being silently adopted by a re-stamp. Must be
-    * SERIALIZED with appends (the whole-family swap would drop a slice
-    * landing mid-compact — see compactSlices's concurrency note);
-    * [[Nightly.runDay]] is the sequenced cadence. */
+    * instead of being silently adopted by a re-stamp. The four families
+    * compact concurrently, and the session cache is cleared once, after
+    * all of them. Must be SERIALIZED with appends (the whole-family swap
+    * would drop a slice landing mid-compact — see compactSlices's
+    * concurrency note); [[Nightly.runDay]] is the sequenced cadence. */
   def compact(spark: SparkSession, root: String, upToDay: Long): Unit =
-    Families.foreach { f =>
-      if (DedupArtifacts.compactSlices(spark, s"$root/$f", "ingest_day",
-          upToDay, canon(f)))
-        spark.catalog.clearCache()
-    }
+    if (DedupArtifacts.concurrently(Families.map(f => () =>
+        DedupArtifacts.compactSlices(spark, s"$root/$f", "ingest_day",
+          upToDay, canon(f)))).contains(true))
+      spark.catalog.clearCache()
 
   /** CRASH-RECOVERY PROLOGUE (round 14 — the advisor's findings made an
     * operation; TIGHTENED round 15): repair the one writer-crash state a
@@ -252,37 +258,9 @@ object StreamArtifacts {
       if (DedupArtifacts.manifestMissing(spark, s"$root/$f"))
         sys.error(s"stream index $root/$f has no manifest — store " +
           "half-built (a crashed compaction cannot leave this state: " +
-          "the manifest travels with its publish); rebuild the family, " +
-          "or — for a store written BEFORE manifests travelled with " +
-          "compaction, whose manifest was lost to that release's " +
-          "publish-then-re-stamp crash window — run the one-shot " +
-          "restampMissingManifests migration")
+          "the manifest travels with its publish); rebuild the family")
       restored
     }.exists(identity)
-
-  /** ONE-SHOT MIGRATION for stores left by the PRE-round-15 release's
-    * crash window. Under the old compaction (publish, THEN re-stamp), a
-    * crash between the two left a healthy, fully-published store with
-    * its manifest deleted — a state that release auto-repaired on the
-    * next run. Since manifests travel with compaction's publish, that
-    * state can no longer arise from this code, so [[recover]] reads a
-    * missing manifest as "half-built; rebuild". A legacy store upgraded
-    * mid-window would hit that error with rebuild as the only option —
-    * this tool is the documented alternative: it re-stamps EXACTLY the
-    * families whose manifest is missing (stranded publishes restored
-    * first), with THIS deployment's params. Calling it is the operator's
-    * explicit assertion that the store was written by a compatible
-    * deployment — the caller-blessing step [[recover]] deliberately
-    * refuses to perform implicitly. Families with a manifest are
-    * untouched. Returns the re-stamped family names (empty = nothing to
-    * migrate). */
-  def restampMissingManifests(spark: SparkSession, root: String): Seq[String] =
-    Families.filter { f =>
-      DedupArtifacts.restoreStranded(spark, s"$root/$f"): Unit
-      val missing = DedupArtifacts.manifestMissing(spark, s"$root/$f")
-      if (missing) restampFamily(spark, root, f)
-      missing
-    }
 
   /** Compact when the log has grown past `maxSlices` day slices — the
     * CADENCE POLICY (round 14; the verdict's "WHO triggers compaction is

@@ -43,26 +43,43 @@ object Tables {
     footerSchema(spark, path).fold(spark.read.parquet(path))(
       spark.read.schema(_).parquet(path))
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  /** The rows under a parquet path — what `readParquet(spark,
+    * path).count()` returns — summed from its data files' footers on the
+    * driver, so it schedules no Spark job. Files are listed as
+    * [[readParquet]] lists them; a missing path fails. */
+  private[graft] def footerRows(spark: SparkSession, path: String): Long = {
+    val index = listing(spark, path)
+      .getOrElse(sys.error(s"no parquet at $path"))
+    GraftFooters.rows(spark, index.allFiles()
+      .filterNot(f => SummaryFiles(f.getPath.getName)))
+  }
+
+  private val SummaryFiles = Set("_common_metadata", "_metadata")
+
+  private def listing(spark: SparkSession, path: String): Option[InMemoryFileIndex] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return None
-    val index = new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None)
-    val files = index.allFiles().sortBy(_.getPath.toString)
-    def named(n: String) = files.filter(_.getPath.getName == n)
-    val (common, meta) = (named("_common_metadata"), named("_metadata"))
-    val data = files.diff(common ++ meta)
-    val conf = spark.sessionState.conf
-    val touch =
-      if (conf.isParquetSchemaMergingEnabled)
-        (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ meta ++ common
-      else common.headOption.orElse(meta.headOption).orElse(data.headOption).toSeq
-    val parts = index.partitionSchema
-    if (data.isEmpty) None
-    else GraftFooters.schema(spark, touch)
-      .filterNot(_.fieldNames.exists(f => parts.fieldNames.exists(_.equalsIgnoreCase(f))))
-      .map(s => StructType(s.fields ++ parts.fields))
+    Option.when(fs.exists(root))(
+      new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None))
   }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    listing(spark, path).flatMap { index =>
+      val files = index.allFiles().sortBy(_.getPath.toString)
+      def named(n: String) = files.filter(_.getPath.getName == n)
+      val (common, meta) = (named("_common_metadata"), named("_metadata"))
+      val data = files.diff(common ++ meta)
+      val conf = spark.sessionState.conf
+      val touch =
+        if (conf.isParquetSchemaMergingEnabled)
+          (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ meta ++ common
+        else common.headOption.orElse(meta.headOption).orElse(data.headOption).toSeq
+      val parts = index.partitionSchema
+      if (data.isEmpty) None
+      else GraftFooters.schema(spark, touch)
+        .filterNot(_.fieldNames.exists(f => parts.fieldNames.exists(_.equalsIgnoreCase(f))))
+        .map(s => StructType(s.fields ++ parts.fields))
+    }
 
   def region(s: SparkSession, d: String)    = load(s, d, "region")
   def nation(s: SparkSession, d: String)    = load(s, d, "nation")

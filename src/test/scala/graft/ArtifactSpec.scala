@@ -938,44 +938,6 @@ class ArtifactSpec extends SparkSpec {
     spark.catalog.clearCache(): Unit
   }
 
-  test("legacy-store migration: restampMissingManifests re-stamps exactly " +
-      "the dropped family") {
-    // the PRE-round-15 crash window (publish succeeded, re-stamp lost)
-    // left a healthy store with a deleted manifest — a state the old
-    // release auto-repaired and the current recover() reads as
-    // half-built. The one-shot migration tool is the documented path:
-    // it re-stamps ONLY the missing-manifest families, with this
-    // deployment's params, under an explicit operator call.
-    import operators.StreamArtifacts
-    graft.functions.Kernels.register(spark)
-    val r = tmpDir("graft-migrate-")
-    StreamArtifacts.write(spark, sf, r)
-    val mPath = java.nio.file.Paths.get(s"$r/incr_hash/_graft_manifest.json")
-    val gPath = java.nio.file.Paths.get(s"$r/gram_index/_graft_manifest.json")
-    val m0 = java.nio.file.Files.readString(mPath)
-    val g0 = java.nio.file.Files.readString(gPath)
-    java.nio.file.Files.delete(mPath) // the legacy window's footprint
-    intercept[RuntimeException](StreamArtifacts.recover(spark, r))
-    // migration touches exactly the dropped family; same data + same
-    // params reproduce the manifest byte-for-byte, untouched families
-    // keep theirs
-    assert(StreamArtifacts.restampMissingManifests(spark, r)
-      == Seq("incr_hash"))
-    assert(java.nio.file.Files.readString(mPath) == m0,
-      "re-stamped manifest diverged from the pre-window one")
-    assert(java.nio.file.Files.readString(gPath) == g0,
-      "migration touched a family with a healthy manifest")
-    // the store is whole again: recover() passes, appends handshake
-    assert(!StreamArtifacts.recover(spark, r))
-    assert(StreamArtifacts.restampMissingManifests(spark, r).isEmpty)
-    val sp = spark
-    import sp.implicits._
-    StreamArtifacts.appendDay(spark, r, 2L,
-      Seq((92000000001L, (1 to 30).map(i => s"mgx$i").mkString(" "),
-        "synth")).toDF("doc_id", "text", "source"))
-    spark.catalog.clearCache(): Unit
-  }
-
   test("nightly runner: 3 composed days, sane report, crash-replay idempotent") {
     import operators.{AnnArtifacts, Nightly, SketchArtifacts, StreamArtifacts}
     graft.functions.Kernels.register(spark)
@@ -1056,5 +1018,210 @@ class ArtifactSpec extends SparkSpec {
     }
     assert(manifests() == after3, "an empty day mutated a store")
     spark.catalog.clearCache(): Unit
+  }
+
+  // ---- the concurrent night: Nightly.runDay runs its three store chains,
+  // and the stream store its four families, concurrently
+
+  private def nightEvents(d: Long) = sources.Tables.events(spark, sf)
+    .limit(200)
+    .select((lit(d) * 86400000000000L + col("ts") % 86400000000000L)
+      .as("ts"), col("value"), col("user_id"))
+  private def nightDocs(d: Long) = sources.Feeds.incomingDocs(spark, sf)
+    .select((col("doc_id") + lit(d * 80000000000L)).as("doc_id"),
+      col("text"), col("source"))
+  private def nightVectors(d: Long) = sources.Tables.embeddings(spark, sf)
+    .filter(col("vec_id") % 5 === 0)
+    .select((col("vec_id") + lit(d * 80000000000L)).as("vec_id"),
+      col("label"), col("embedding"))
+
+  /** Every job the listener bus delivers: its job group, and its end
+    * time as Spark stamped it. */
+  private final class JobLog
+      extends org.apache.spark.scheduler.SparkListener {
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      groups.put(e.jobId, Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse("<none>")): Unit
+    override def onJobEnd(
+        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      ends.put(e.jobId, e.time): Unit
+    def ids: Seq[Int] = groups.keySet.toArray.toSeq.map(_.asInstanceOf[Int])
+    def endedBy(id: Int, t: Long): Boolean =
+      ends.containsKey(id) && ends.get(id) <= t
+  }
+
+  /** Listen to the jobs `body` runs (events drained on both sides). */
+  private def logJobs[A](body: => A): (A, JobLog) = {
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, log)
+    } finally sc.removeSparkListener(log)
+  }
+
+  private val NightMaxSlices = 3 // base + 3 days: night 3 compacts
+
+  private final class Nights(val conc: (String, String, String),
+      val seq: (String, String, String),
+      val concReports: Seq[Seq[Seq[Any]]],
+      val seqReports: Seq[Seq[Seq[Any]]], val jobs: JobLog)
+
+  /** Three nights over two copies of one freshly built store set: `conc`
+    * through [[operators.Nightly.runDay]] under the caller's job group
+    * "g", `seq` through the same public calls made one after another on
+    * the test thread (its report assembled here, its slice rows counted
+    * by Spark). `seq` runs first, so a pool that outlived its call would
+    * already hold threads when `conc` runs. */
+  private lazy val nights: Nights = {
+    import operators.{AnnArtifacts, Nightly, SketchArtifacts, StreamArtifacts}
+    graft.functions.Kernels.register(spark)
+    val work = tmpDir("graft-concurrent-night-")
+    def roots(s: String) = (s"$work/$s/sk", s"$work/$s/st", s"$work/$s/an")
+    val (conc, seq) = (roots("conc"), roots("seq"))
+    SketchArtifacts.write(spark, sf, conc._1)
+    StreamArtifacts.write(spark, sf, conc._2)
+    AnnArtifacts.write(spark, sf, conc._3)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(s"$work/conc"), fs,
+      new org.apache.hadoop.fs.Path(s"$work/seq"), false, conf): Unit
+    val annFams = Seq("flat", "ivf_cells", "pq_codes")
+    def slices(root: String, fams: Seq[String], part: String): Long =
+      fams.map(f => DedupArtifacts.sliceDays(spark, s"$root/$f", part)
+        .length).max.toLong
+    def rows(root: String, f: String, part: String, d: Long): Long =
+      sources.Tables.readParquet(spark, s"$root/$f/$part=$d").count()
+    def sequentialNight(d: Long): Seq[Seq[Any]] = {
+      val (sk, st, an) = seq
+      StreamArtifacts.recover(spark, st): Unit
+      AnnArtifacts.recover(spark, an): Unit
+      val nEvents = nightEvents(d).count()
+      SketchArtifacts.appendQsketchDay(spark, sk, d, nightEvents(d))
+      SketchArtifacts.appendCmsDay(spark, sk, d, nightEvents(d))
+      SketchArtifacts.appendHllDay(spark, sk, d, nightEvents(d))
+      val sketchSteps = Seq("qsketch_day", "cms_day", "hll_day")
+        .zipWithIndex.map { case (f, i) =>
+          (i + 1L, f, "append", nEvents, rows(sk, f, "day_epoch", d),
+            slices(sk, Seq(f), "day_epoch"))
+        }
+      val nDocs = nightDocs(d).count()
+      StreamArtifacts.appendDay(spark, st, d, nightDocs(d))
+      val stBefore = slices(st, StreamArtifacts.Families, "ingest_day")
+      val step4 = (4L, "stream_index", "append", nDocs,
+        StreamArtifacts.Families.map(rows(st, _, "ingest_day", d)).sum,
+        stBefore)
+      val nVecs = nightVectors(d).count()
+      AnnArtifacts.appendDay(spark, an, d, nightVectors(d))
+      val anBefore = slices(an, annFams, "ingest_day")
+      val step5 = (5L, "ann_index", "append", nVecs,
+        annFams.map(rows(an, _, "ingest_day", d)).sum, anBefore)
+      val stFired = StreamArtifacts.compactIfNeeded(spark, st,
+        NightMaxSlices, protectFrom = d)
+      val step6 = (6L, "stream_index",
+        if (stFired) "compact" else "compact_noop", stBefore, 0L,
+        slices(st, StreamArtifacts.Families, "ingest_day"))
+      val anFired = AnnArtifacts.compactIfNeeded(spark, an,
+        NightMaxSlices, protectFrom = d)
+      val step7 = (7L, "ann_index",
+        if (anFired) "compact" else "compact_noop", anBefore, 0L,
+        slices(an, annFams, "ingest_day"))
+      val steps = (sketchSteps ++ Seq(step4, step5, step6, step7)).map(t =>
+        t.productIterator.toSeq :+ (t._3 != "append" || t._5 > 0L))
+      steps :+ Seq(8L, "total", "resumen", steps.map(_(3).asInstanceOf[Long]).sum,
+        steps.map(_(4).asInstanceOf[Long]).sum,
+        steps.map(_(5).asInstanceOf[Long]).max,
+        steps.forall(_(6).asInstanceOf[Boolean]))
+    }
+    val seqReports = (1L to 3L).map(sequentialNight)
+    val sc = spark.sparkContext
+    val (concReports, jobs) = logJobs {
+      sc.setJobGroup("g", "concurrent night")
+      try (1L to 3L).map { d =>
+        Nightly.runDay(spark, d, conc._1, conc._2, conc._3, nightEvents(d),
+          nightDocs(d), nightVectors(d), NightMaxSlices).collect()
+          .map(_.toSeq).toSeq
+      } finally sc.clearJobGroup()
+    }
+    new Nights(conc, seq, concReports, seqReports, jobs)
+  }
+
+  private def familyDirs(r: (String, String, String)): Seq[(String, String)] =
+    Seq("qsketch_day", "cms_day", "hll_day").map(f => (s"${r._1}/$f", "day_epoch")) ++
+      operators.StreamArtifacts.Families.map(f => (s"${r._2}/$f", "ingest_day")) ++
+      Seq("flat", "ivf_cells", "pq_codes").map(f => (s"${r._3}/$f", "ingest_day"))
+
+  test("concurrent night == the same calls in sequence; one job group; " +
+      "a failed chain throws its own error with no job left running") {
+    import operators.{AnnArtifacts, Nightly}
+    val n = nights
+    // night 3 compacted both index stores, so the compaction path ran
+    assert(n.concReports(2).count(_(2) == "compact") == 2,
+      n.concReports(2).mkString("; "))
+    assert(n.concReports == n.seqReports,
+      s"reports differ:\n${n.concReports}\n${n.seqReports}")
+    def manifest(dir: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/_graft_manifest.json"))
+    val fams = familyDirs(n.conc).map(_._1).zip(familyDirs(n.seq).map(_._1))
+    assert(fams.length == 10)
+    fams.foreach { case (c, s) =>
+      assert(manifest(c) == manifest(s), s"$c manifest differs from $s")
+    }
+    // every job the three runDay calls scheduled ran under the caller's
+    // job group: the chains' threads (and the stream families' threads
+    // inside them) inherit the caller's local properties
+    val groups = n.jobs.groups.values.toArray.toSeq
+    assert(groups.nonEmpty && groups.forall(_ == "g"),
+      s"${groups.count(_ != "g")} of ${groups.size} jobs outside group g")
+    // an ANN store built at another IVF k: the ANN chain fails its
+    // geometry handshake, the other chains run to the end, and runDay
+    // throws the ANN error itself once nothing is running
+    val badAnn = tmpDir("graft-ann-k-")
+    AnnArtifacts.write(spark, sf, badAnn, k = operators.EmbeddingOps.IvfK + 1)
+    val sc = spark.sparkContext
+    val ((thrown, thrownAt, active, unlanded), jobs) = logJobs {
+      val e = intercept[Exception](Nightly.runDay(spark, 4L, n.seq._1,
+        n.seq._2, badAnn, nightEvents(4L), nightDocs(4L), nightVectors(4L),
+        NightMaxSlices))
+      (e, System.currentTimeMillis(), sc.statusTracker.getActiveJobIds().toSeq,
+        // the sketch and stream chains' day-4 slices, missing at the throw
+        familyDirs(n.seq).filterNot(_._1.startsWith(n.seq._3))
+          .map { case (dir, part) => s"$dir/$part=4" }
+          .filterNot(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d))))
+    }
+    assert(!thrown.isInstanceOf[java.util.concurrent.ExecutionException],
+      s"runDay threw the pool's wrapper: $thrown")
+    assert(thrown.getMessage.contains("geometry mismatch"), thrown.getMessage)
+    assert(unlanded.isEmpty, s"runDay threw before these slices landed: $unlanded")
+    // the status tracker learns of a job's end through the listener bus,
+    // so an id it still listed at the throw must have ENDED (by Spark's
+    // own end time) before it; and no job the call started ended later
+    assert(active.forall(jobs.endedBy(_, thrownAt)),
+      s"jobs still active when runDay threw: $active")
+    assert(jobs.ids.forall(jobs.endedBy(_, thrownAt)),
+      "a job of the failed night ended after runDay threw")
+    assert(jobs.ids.size > 2, "the other chains did not run")
+    spark.catalog.clearCache(): Unit
+  }
+
+  test("landed slices: footer row count == Spark's count, every slice") {
+    val landed = familyDirs(nights.conc).flatMap { case (dir, part) =>
+      java.nio.file.Files.list(java.nio.file.Paths.get(dir)).toArray.toSeq
+        .map(_.toString).filter(_.split('/').last.startsWith(s"$part="))
+    }
+    // 10 families × (base + 3 days), less the slices night 3 compacted
+    assert(landed.size >= 20, landed.mkString(", "))
+    landed.foreach { slice =>
+      assert(sources.Tables.footerRows(spark, slice) ==
+        sources.Tables.readParquet(spark, slice).count(), slice)
+    }
   }
 }
