@@ -112,9 +112,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("graft_lev_capped",
       "edit distance when <= max(chars)/5 else -1 (prefix/suffix-stripped bit-parallel DP)",
       args => LevCapped(args(0), args(1))))
-    ext.injectFunction(fn("graft_band_sigs",
-      "':'-joined decimal band signatures of the minhash row minima",
-      args => BandSigs(args(0), litInt(args(1)), litInt(args(2)))))
     ext.injectFunction(fn("graft_word_grams",
       "' '-joined word n-grams of a token array (codegen'd concat_ws loop)",
       args => WordGrams(args(0), litInt(args(1)), distinct = false)))

@@ -115,49 +115,6 @@ object Kernels {
     new GenericArrayData(sigs)
   }
 
-  /** C93's per-config band signatures over an already-computed minima
-    * array: band b = ':'-joined decimal of minima[b·r .. b·r+r−1] —
-    * byte-identical to the old interpreted
-    * `transform(sequence, b -> concat_ws(':', transform(..., cast as
-    * string)))` lambda (decimal formatting of the nonnegative row minima),
-    * with the digits written straight into the output buffer instead of a
-    * java.lang.String per element (profiled: UTF8String.fromString +
-    * String.valueOf churn was ~17% of the sweep's samples). */
-  def bandSigs(mins: ArrayData, bands: Int, rowsPer: Int): ArrayData = {
-    val out = new Array[AnyRef](bands)
-    var b = 0
-    while (b < bands) {
-      var len = rowsPer - 1
-      var r = 0
-      while (r < rowsPer) {
-        val v = mins.getLong(b * rowsPer + r)
-        len += (if (v == 0L) 1 else {
-          var n = 0; var x = v; while (x > 0) { n += 1; x /= 10 }; n
-        })
-        r += 1
-      }
-      val buf = new Array[Byte](len)
-      var off = 0
-      r = 0
-      while (r < rowsPer) {
-        if (r > 0) { buf(off) = ':'; off += 1 }
-        val v = mins.getLong(b * rowsPer + r)
-        if (v == 0L) { buf(off) = '0'; off += 1 }
-        else {
-          var n = 0; var x = v; while (x > 0) { n += 1; x /= 10 }
-          var i = off + n - 1
-          x = v
-          while (x > 0) { buf(i) = ('0' + (x % 10).toInt).toByte; x /= 10; i -= 1 }
-          off += n
-        }
-        r += 1
-      }
-      out(b) = UTF8String.fromBytes(buf)
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
   /** Thread-local MD5 for the per-row digest loops (simhash votes one
     * digest per TOKEN, winnowing one per SHINGLE) — `getInstance` per row
     * was measurable allocation churn in full-corpus scans. */
@@ -1088,91 +1045,62 @@ object Kernels {
   /** Registers the kernels as SQL temp functions. Idempotent AND quiet: a
     * re-register on a session that already has them would log a "function
     * replaced" warning per kernel per query — noise in every bench/verify
-    * log — so short-circuit when the marker function exists. */
+    * log — so only the names the session does not have yet are registered
+    * (a membership check over every name, so a kernel added later is never
+    * skipped on a session registered by an older kernel set). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // geometry/width arguments must be foldable integer literals —
-    // evaluated at registration, never per row (shared by the sketch
-    // geometry functions below and the gram-width functions above)
+    // evaluated at registration, never per row; guard so a column argument
+    // fails with a clear analysis error instead of an opaque eval() NPE
     def litIntArg(e: Expression): Int = {
       require(e.foldable,
         s"width argument must be an integer literal, got: $e")
       e.eval().asInstanceOf[Number].intValue
     }
-    // the marker must be the NEWEST function: an older marker would
-    // short-circuit on sessions registered by a previous kernel set and
-    // silently skip the additions
-    if (reg.functionExists(
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_band_sigs")))
-      return
-    reg.createOrReplaceTempFunction("graft_minhash_sigs",
-      args => ShingleMinHashSigs(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_rows",
-      args => MinHashRows(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash32",
-      args => SimHash32(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow_fp",
-      args => WinnowFp(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      args => DotF(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm2",
-      args => Norm2F(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket",
-      args => LshBucket(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_buckets",
-      args => LshBuckets(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_str_hash",
-      args => StrHash(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_cells",
-      args => BloomCells(args.head,
-        if (args.length > 1) args(1) else Literal(BloomBits)), "built-in")
-    // geometry arguments must be foldable integer literals — evaluated at
-    // registration, never per row; guard so a column argument fails with a
-    // clear analysis error instead of an opaque eval() NPE
     def litInt(e: Expression): Int = {
       require(e.foldable,
         s"geometry argument must be an integer literal, got: $e")
       e.eval().asInstanceOf[Number].intValue
     }
-    reg.createOrReplaceTempFunction("graft_cms_cells",
-      args => CmsCells(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_cells_g",
-      args => CmsCellsG(args(0), litInt(args(1)), litInt(args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_sketch",
-      args => CountMinSketchAgg(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_sketch_g",
-      args => CountMinSketchAgg(args(0), litInt(args(1)), litInt(args(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_sketch",
-      args => HllSketchAgg(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hll_sketch_m",
-      args => HllSketchAgg(args(0), litInt(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_agg",
-      args => GramMatrixAgg(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_qsketch",
-      args => QuantileSketchAgg(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_qsketch_s",
-      args => QuantileSketchAgg(args(0), litInt(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_common_count",
-      args => CommonCount(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lev_capped",
-      args => LevCapped(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_band_sigs",
-      args => BandSigs(args(0), litIntArg(args(1)), litIntArg(args(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_word_grams",
-      args => WordGrams(args(0), litIntArg(args(1)), distinct = false),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_word_grams_distinct",
-      args => WordGrams(args(0), litIntArg(args(1)), distinct = true),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_km_argmin",
-      args => KmArgmin(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_ivf_argmax",
-      args => IvfArgmax(args(0), args(1), args(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_codes",
-      args => PqCodes(args(0), args(1), litIntArg(args(2)),
-        litIntArg(args(3))), "built-in")
+    val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+      ("graft_minhash_sigs", args => ShingleMinHashSigs(args.head)),
+      ("graft_minhash_rows", args => MinHashRows(args.head)),
+      ("graft_simhash32", args => SimHash32(args.head)),
+      ("graft_winnow_fp", args => WinnowFp(args.head)),
+      ("graft_dot", args => DotF(args(0), args(1))),
+      ("graft_norm2", args => Norm2F(args.head)),
+      ("graft_lsh_bucket", args => LshBucket(args.head)),
+      ("graft_lsh_buckets", args => LshBuckets(args.head)),
+      ("graft_str_hash", args => StrHash(args.head)),
+      ("graft_bloom_cells", args => BloomCells(args.head,
+        if (args.length > 1) args(1) else Literal(BloomBits))),
+      ("graft_cms_cells", args => CmsCells(args.head)),
+      ("graft_cms_cells_g", args =>
+        CmsCellsG(args(0), litInt(args(1)), litInt(args(2)))),
+      ("graft_cms_sketch", args => CountMinSketchAgg(args.head)),
+      ("graft_cms_sketch_g", args =>
+        CountMinSketchAgg(args(0), litInt(args(1)), litInt(args(2)))),
+      ("graft_hll_sketch", args => HllSketchAgg(args.head)),
+      ("graft_hll_sketch_m", args => HllSketchAgg(args(0), litInt(args(1)))),
+      ("graft_gram_agg", args => GramMatrixAgg(args.head)),
+      ("graft_qsketch", args => QuantileSketchAgg(args.head)),
+      ("graft_qsketch_s", args =>
+        QuantileSketchAgg(args(0), litInt(args(1)))),
+      ("graft_common_count", args => CommonCount(args(0), args(1))),
+      ("graft_lev_capped", args => LevCapped(args(0), args(1))),
+      ("graft_word_grams", args =>
+        WordGrams(args(0), litIntArg(args(1)), distinct = false)),
+      ("graft_word_grams_distinct", args =>
+        WordGrams(args(0), litIntArg(args(1)), distinct = true)),
+      ("graft_km_argmin", args => KmArgmin(args(0), args(1))),
+      ("graft_ivf_argmax", args => IvfArgmax(args(0), args(1), args(2))),
+      ("graft_pq_codes", args => PqCodes(args(0), args(1),
+        litIntArg(args(2)), litIntArg(args(3)))))
+    for ((name, builder) <- kernels
+         if !reg.functionExists(
+           new org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
   }
 }
 
@@ -1242,22 +1170,6 @@ case class WordGrams(child: Expression, n: Int, distinct: Boolean)
       if (distinct) s"graft.functions.Kernels.wordGramsDistinct($c, $n)"
       else s"graft.functions.Kernels.wordGrams($c, $n)")
   override protected def withNewChildInternal(newChild: Expression): WordGrams =
-    copy(child = newChild)
-}
-
-/** C93's per-config ':'-joined band signatures — see [[Kernels.bandSigs]]. */
-case class BandSigs(child: Expression, bands: Int, rowsPer: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(bands >= 1 && rowsPer >= 1 && bands * rowsPer <= 64,
-    s"banding geometry out of range: $bands x $rowsPer")
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(mins: Any): Any =
-    Kernels.bandSigs(mins.asInstanceOf[ArrayData], bands, rowsPer)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Kernels.bandSigs($c, $bands, $rowsPer)")
-  override protected def withNewChildInternal(newChild: Expression): BandSigs =
     copy(child = newChild)
 }
 

@@ -1833,13 +1833,12 @@ object DedupOps {
       // dev min at sf0.1; the sweep's million-pair self-joins favor the
       // single compact key), so this family deliberately keeps the r15
       // string shape while C2/C29/C58 moved to raw-minima keys.
-      // The interpreted transform lambda also STAYS: the codegen'd
-      // graft_band_sigs kernel (still registered + spec-pinned) measured
-      // consistently ~15% SLOWER on this query in two matched A/Bs
-      // (6-rep dev mins 6.19 vs 5.23 s; full-pair +0.8 s) — the sig
-      // build is not where this query's time goes, and the kernel's
-      // digit-division loops lose to the JIT-intrinsified Long.toString
-      // under the lambda. Recorded round-17 revert, the W5 pattern.
+      // The interpreted transform lambda also STAYS: a codegen'd band-sig
+      // kernel measured consistently ~15% SLOWER on this query in two
+      // matched A/Bs (6-rep dev mins 6.19 vs 5.23 s; full-pair +0.8 s) —
+      // the sig build is not where this query's time goes, and the
+      // kernel's digit-division loops lose to the JIT-intrinsified
+      // Long.toString under the lambda, so the kernel was deleted.
       val sigs = minima.select(col("doc_id"), posexplode(expr(
           s"""transform(sequence(0, ${bc - 1}), b ->
                 concat_ws(':', transform(sequence(0, ${r - 1}), rr ->

@@ -195,9 +195,11 @@ object Etl {
     *
     * Scale: each quarantine slice is a narrow filter off the SAME
     * validator plans the load runs (no second rule encoding that could
-    * drift); the per-reason window is rank ≤ k over a closed 4-reason key
-    * space, so Spark's WindowGroupLimit prunes to k rows per partition
-    * map-side before the single tiny shuffle. */
+    * drift), read as their unsorted bodies — the window and the final
+    * `orderBy` fix the order, so a validator's sort would only add a
+    * range-exchange job; the per-reason window is rank ≤ k over a closed
+    * 4-reason key space, so Spark's WindowGroupLimit prunes to k rows per
+    * partition map-side before the single tiny shuffle. */
   def quarantineSamples(spark: SparkSession, dir: String): DataFrame = {
     val noPrice = Tables.part(spark, dir)
       .select(col("p_partkey").as("id_producto"))
@@ -205,17 +207,17 @@ object Etl {
       .select(lit("producto").as("entidad"),
         lit("SIN_PRECIO_LISTA_2").as("motivo"),
         col("id_producto").as("id_registro"), lit(0).cast("int").as("id_detalle"))
-    val negMargin = validateProducts(spark, dir)
+    val negMargin = productRows(spark, dir)
       .filter(col("margen_negativo"))
       .select(lit("producto").as("entidad"),
         lit("MARGEN_NEGATIVO").as("motivo"),
         col("id_producto").as("id_registro"), lit(0).cast("int").as("id_detalle"))
-    val docsIncoherent = validateDocuments(spark, dir)
+    val docsIncoherent = documentRows(spark, dir)
       .filter(!col("montos_coherentes"))
       .select(lit("documento").as("entidad"),
         lit("MONTOS_INCOHERENTES").as("motivo"),
         col("id_documento").as("id_registro"), lit(0).cast("int").as("id_detalle"))
-    val linesIncoherent = validateDetails(spark, dir)
+    val linesIncoherent = detailRows(spark, dir)
       .filter(!col("linea_coherente"))
       .select(lit("detalle").as("entidad"),
         lit("LINEA_INCOHERENTE").as("motivo"),

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * {{{
   *   incr_hash/   h, doc_id                       (exact-dup occurrences)
   *   incr_sigs/   band, sig, doc_id               (LSH signature rows)
-  *   gram_index/  gram_hash                       (per-slice distinct)
+  *   gram_index/  gram_hash BINARY(16)            (per-slice distinct)
   *   span_index/  span_hash, n_occ, n_docs, first_doc, last_doc
   * }}}
   * Readers derive the gate views by a per-read merge (the LSM shape —
@@ -58,7 +58,14 @@ import org.apache.spark.sql.functions._
   * [[graft.streaming.DedupStream.incremental]] /
   * [[graft.streaming.CorpusStream.noveltyGate]] /
   * [[graft.streaming.MaskStream.plan]] take, so a replay day runs off
-  * the store unchanged (ReplaySpec pins artifact-fed ≡ in-session). */
+  * the store unchanged (ReplaySpec pins artifact-fed ≡ in-session).
+  *
+  * The gram family's params also record `schema_version=2`: v2 persists
+  * `gram_hash` as the 16-byte binary md5 the in-session gram plans key
+  * on, where v1 stored it as 32-char lowercase hex. A v1 family records
+  * no `schema_version`, so every verified reader, [[appendDay]] and
+  * [[restamp]] refuse it before reading or writing a byte; the fix is a
+  * rebuild ([[write]]), never a conversion. */
 object StreamArtifacts {
 
   val Families: Seq[String] =
@@ -75,11 +82,44 @@ object StreamArtifacts {
     "incr_mod" -> graft.sources.Feeds.IncrMod.toString,
     "incr_rem" -> graft.sources.Feeds.IncrRem.toString)
 
+  /** The gram family's persisted key encoding: 2 = binary md5. */
+  private val GramSchemaVersion = "2"
+
   // D34's span index is frozen over the WHOLE corpus (the span universe
   // masking is planned against), not the incremental split
   private def familyParams(family: String): Map[String, String] =
-    if (family == "span_index") Map("family" -> "span_index")
-    else splitParams(family)
+    family match {
+      case "span_index" => Map("family" -> "span_index")
+      case "gram_index" =>
+        splitParams(family) + ("schema_version" -> GramSchemaVersion)
+      case _ => splitParams(family)
+    }
+
+  /** The params handshake every verified read, append and re-stamp runs
+    * before touching a family: the manifest must exist and record exactly
+    * [[familyParams]]. A family whose `schema_version` differs (a v1 hex
+    * gram store records none) gets the one-line rebuild instruction. */
+  private def requireParams(spark: SparkSession, root: String,
+      family: String): Unit = {
+    val path = s"$root/$family"
+    // a MISSING manifest fails too (round 14, the AnnArtifacts.appendDay
+    // rule applied store-wide): absent manifest = half-built store or a
+    // crashed compaction before its re-stamp — never a license to skip
+    // the split handshake
+    val rec = DedupArtifacts.manifestParams(spark, path)
+      .getOrElse(sys.error(s"stream index $path has no manifest — " +
+        "store half-built or a compaction crashed before its re-stamp; " +
+        "run recover()"))
+    val want = familyParams(family)
+    if (rec.get("schema_version") != want.get("schema_version"))
+      sys.error(s"stream index $path schema_version mismatch: expects " +
+        s"schema_version=${want.getOrElse("schema_version", "none")}, " +
+        s"store records ${rec.getOrElse("schema_version", "none")}; " +
+        "rebuild the family (StreamArtifacts.write)")
+    if (rec != want)
+      sys.error(s"stream index $path params mismatch: expects $want, " +
+        s"store records $rec")
+  }
 
   // ---- the raw per-slice relations (an O(slice) signature pass each)
 
@@ -91,12 +131,10 @@ object StreamArtifacts {
     DedupOps.minhashSigsOf(spark, docs)
       .select("band", "sig", "doc_id")
 
+  // persisted as the 16-byte binary md5 the in-session gram plans key on
+  // (schema_version=2), so no read or write converts the key
   private def gramRows(docs: DataFrame): DataFrame =
-    // the in-session gram keys are 16-byte binary md5 since round 17; the
-    // PERSISTED slice keeps the original lowercase-hex string (the store
-    // schema is a cross-round artifact contract, the incr_sigs precedent)
     graft.operators.Pipeline.gramHashRows(docs)
-      .select(lower(hex(col("gram_hash"))).as("gram_hash"))
 
   private def spanRows(spark: SparkSession, docs: DataFrame): DataFrame = {
     graft.functions.Kernels.register(spark)
@@ -180,19 +218,7 @@ object StreamArtifacts {
     * replayed or restated day replaces its own slice. */
   def appendDay(spark: SparkSession, root: String, dayEpoch: Long,
       dayDocs: DataFrame, restamp: Boolean = true): Unit = {
-    Families.foreach { f =>
-      // a MISSING manifest fails too (round 14, the AnnArtifacts.appendDay
-      // rule applied store-wide): absent manifest = half-built store or a
-      // crashed compaction before its re-stamp — never a license to skip
-      // the split handshake
-      val rec = DedupArtifacts.manifestParams(spark, s"$root/$f")
-        .getOrElse(sys.error(s"stream index $root/$f has no manifest — " +
-          "store half-built or a compaction crashed before its re-stamp; " +
-          "run recover() before appending"))
-      if (rec != familyParams(f))
-        sys.error(s"stream index $root/$f params mismatch: append " +
-          s"expects ${familyParams(f)}, store records $rec")
-    }
+    Families.foreach(requireParams(spark, root, _))
     DedupArtifacts.concurrently(Families.map(f => () =>
       Etl.replaceSlice(spark, s"$root/$f", "ingest_day", dayEpoch.toString,
         slices(f, spark, dayDocs)))): Unit
@@ -201,10 +227,15 @@ object StreamArtifacts {
 
   /** The deferred canonical re-stamp for all four families — one narrow
     * O(index) digest pass each (index bytes, never corpus text), the four
-    * run concurrently. */
-  def restamp(spark: SparkSession, root: String): Unit =
+    * run concurrently. Every family's recorded params are checked first
+    * (the [[appendDay]] rule): re-stamping writes [[familyParams]], so a
+    * v1 gram family re-stamped unchecked would carry `schema_version=2`
+    * over hex rows, and every gram would then read novel. */
+  def restamp(spark: SparkSession, root: String): Unit = {
+    Families.foreach(requireParams(spark, root, _))
     DedupArtifacts.concurrently(
       Families.map(f => () => restampFamily(spark, root, f))): Unit
+  }
 
   /** SLICE COMPACTION (round 13 — the verdict's unbounded-slice-count
     * fix): merge every day slice with `ingest_day ≤ upToDay` into ONE
@@ -299,9 +330,11 @@ object StreamArtifacts {
   }
 
   private def rawVerified(spark: SparkSession, root: String,
-      family: String): DataFrame =
+      family: String): DataFrame = {
+    requireParams(spark, root, family)
     DedupArtifacts.readVerifiedCanonical(spark, s"$root/$family",
       familyParams(family), "ingest_day", canon(family))
+  }
 
   /** D18's exact-dup index (h, exact_partner), manifest- and
     * split-verified; the partner is the min admitted doc per hash across
@@ -328,13 +361,11 @@ object StreamArtifacts {
         split(col("sig"), ":").getItem(2).cast("long").as("k3"),
         col("doc_id").as("partner"))
 
-  /** D24's standing gram set, manifest- and split-verified. */
+  /** D24's standing gram set (16-byte binary `gram_hash`, the key the
+    * in-session gram plans join on), manifest-, split- and
+    * schema-verified. */
   def gramIndex(spark: SparkSession, root: String): DataFrame =
-    // unhex the persisted lowercase-hex key back to the 16-byte binary
-    // representation the in-session gram plans key on (hex is injective,
-    // so the conversion is exact both ways)
     rawVerified(spark, root, "gram_index")
-      .select(unhex(col("gram_hash")).as("gram_hash"))
       .distinct().withColumn("known", lit(1L))
 
   /** D34's duplicate-span index, manifest-verified: spans whose merged

@@ -194,7 +194,7 @@ object Tables {
       expected: org.apache.spark.sql.DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     graft.functions.Kernels.register(s)
-    val df = s.read.parquet(path)
+    val df = readParquet(s, path)
     val got = df
       .select(col("shard_id").cast("long").as("shard_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),

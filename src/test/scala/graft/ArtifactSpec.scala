@@ -753,6 +753,79 @@ class ArtifactSpec extends SparkSpec {
     spark.catalog.clearCache(): Unit
   }
 
+  test("gram store v2: 16-byte binary keys; a v1 hex family fails fast") {
+    import operators.StreamArtifacts
+    import org.apache.spark.sql.types.BinaryType
+    val r = tmpDir("graft-gram-v2-")
+    StreamArtifacts.write(spark, sf, r)
+    val gramDir = s"$r/gram_index"
+    val persisted = spark.read.parquet(gramDir)
+    assert(persisted.schema("gram_hash").dataType == BinaryType)
+    assert(persisted.filter(length(col("gram_hash")) =!= 16).count() == 0,
+      "every persisted gram_hash must be exactly 16 bytes")
+
+    // the same keys written as lowercase hex, in the same layout: the v1
+    // encoding's bytes
+    def dataBytes(dir: String): Long = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try files.filter(_.toString.endsWith(".parquet"))
+        .mapToLong(java.nio.file.Files.size(_)).sum()
+      finally files.close()
+    }
+    val hexDir = tmpDir("graft-gram-v1-") + "/gram_index"
+    persisted.select(lower(hex(col("gram_hash"))).as("gram_hash"),
+        col("ingest_day"))
+      .repartition(col("ingest_day"))
+      .write.partitionBy("ingest_day").parquet(hexDir)
+    val (bin, hx) = (dataBytes(gramDir), dataBytes(hexDir))
+    info(s"gram_index: binary $bin B, hex $hx B")
+    assert(bin < 0.65 * hx, s"binary $bin B vs hex $hx B")
+
+    // hand-make a v1 family in place: the hex rows plus the manifest the
+    // v1 code stamped (its params, no schema_version)
+    val v1Params = Map("family" -> "gram_index",
+      "incr_mod" -> sources.Feeds.IncrMod.toString,
+      "incr_rem" -> sources.Feeds.IncrRem.toString)
+    DedupArtifacts.refreshManifestCanonical(spark, hexDir, v1Params,
+      "ingest_day", _.distinct())
+    val famDir = java.nio.file.Paths.get(gramDir)
+    val files = java.nio.file.Files.walk(famDir)
+    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(java.nio.file.Files.delete(_))
+    finally files.close()
+    java.nio.file.Files.move(java.nio.file.Paths.get(hexDir), famDir)
+    spark.catalog.clearCache()
+    def manifest(f: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$r/$f/_graft_manifest.json"))
+    def slices(f: String) = new java.io.File(s"$r/$f").list()
+      .filter(_.startsWith("ingest_day=")).sorted.toSeq
+    val m1 = manifest("gram_index")
+    assert(!m1.contains("schema_version"))
+    val before = StreamArtifacts.Families.map(f => f -> slices(f)).toMap
+
+    val sp = spark
+    import sp.implicits._
+    val day = Seq((92000000001L, (1 to 30).map(i => s"gvx$i").mkString(" "),
+      "synth")).toDF("doc_id", "text", "source")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "gramIndex" -> (() => StreamArtifacts.gramIndex(spark, r).collect()),
+      "streamIndexStats" ->
+        (() => StreamArtifacts.streamIndexStats(spark, r).collect()),
+      "appendDay" -> (() => StreamArtifacts.appendDay(spark, r, 1L, day)),
+      "restamp" -> (() => StreamArtifacts.restamp(spark, r)))
+    for ((name, call) <- calls) {
+      val e = intercept[RuntimeException](call())
+      assert(e.getMessage.contains("schema_version") &&
+        e.getMessage.contains("rebuild the family"),
+        s"$name on a v1 family: wrong error: ${e.getMessage}")
+      assert(!e.getMessage.contains("\n"), s"$name: multi-line error")
+    }
+    assert(manifest("gram_index") == m1, "the v1 manifest was rewritten")
+    assert(StreamArtifacts.Families.map(f => f -> slices(f)).toMap == before,
+      "a slice landed on a store with a v1 family")
+    spark.catalog.clearCache(): Unit
+  }
+
   test("stream index store: slice compaction preserves the canonical view") {
     import operators.StreamArtifacts
     graft.functions.Kernels.register(spark)

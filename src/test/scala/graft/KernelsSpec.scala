@@ -284,24 +284,6 @@ class KernelsSpec extends SparkSpec {
     }
   }
 
-  test("graft_band_sigs matches the transform/concat_ws/cast composition") {
-    val mins = docs
-      .withColumn("norm", lower(trim(col("text"))))
-      .filter(length(col("norm")) >= 5)
-      .selectExpr("doc_id", "graft_minhash_rows(norm) AS mins")
-    for ((bc, r) <- operators.DedupOps.BandingSweep) {
-      val bad = mins
-        .withColumn("ker", expr(s"graft_band_sigs(mins, $bc, $r)"))
-        .withColumn("ref", expr(
-          s"""transform(sequence(0, ${bc - 1}), b ->
-                concat_ws(':', transform(sequence(0, ${r - 1}), rr ->
-                  cast(element_at(mins, b * $r + rr + 1) as string))))"""))
-        .filter(col("ker") =!= col("ref"))
-      assert(bad.count() == 0,
-        s"$bc x $r: " + bad.select("doc_id").take(3).mkString(","))
-    }
-  }
-
   test("graft_lev_capped matches the builtin on LONG cores (multi-block Myers)") {
     val sp = spark
     import sp.implicits._

@@ -1098,6 +1098,16 @@ class OperatorsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("quarantine samples stay within their pinned job count") {
+    // sf0.001 count: 8. The samples read the unsorted validator bodies; a
+    // validator's orderBy left under the union adds a range-exchange job
+    spark.catalog.clearCache()
+    val jobs = Audit.jobsOf(spark, operators.Etl.quarantineSamples(spark, sf))
+    info(s"quarantineSamples=$jobs")
+    assert(jobs <= 8, s"quarantineSamples ran $jobs jobs")
+    spark.catalog.clearCache()
+  }
+
   test("daily report counts the current files, not an earlier call's cache") {
     val dir = tmpDir("graft-daily-grow-")
     for (t <- sources.Tables.all)
