@@ -81,45 +81,60 @@ object AnnArtifacts {
     case "pq_codes"  => codeParams(pqK)
   }
 
-  /** Per-vector slice frames for a vector set under a FROZEN quantizer:
-    * norms (flat), nearest-centroid assignment (cells), subspace argmin
-    * codes (codes) — each an O(vectors) pass, never O(corpus). The slice
-    * key keeps cells CELL-MAJOR inside each ingest-day directory. */
-  private def sliceFrames(v: DataFrame, cents: DataFrame,
-      cb: DataFrame): Seq[(String, DataFrame, String)] = Seq(
-    ("flat", v, "vec_id"),
-    ("ivf_cells", EmbeddingOps.ivfAssigned(v, cents), "cent_id"),
-    ("pq_codes", EmbeddingOps.pqCodesWide(v, cb), "vec_id"))
+  /** A per-vector family's slice frame for a vector set under a FROZEN
+    * quantizer: norms (flat), nearest-centroid assignment (cells),
+    * subspace argmin codes (codes) — each an O(vectors) pass, never
+    * O(corpus). */
+  private def sliceFrame(family: String, v: DataFrame, cents: DataFrame,
+      cb: DataFrame): DataFrame = family match {
+    case "flat"      => v
+    case "ivf_cells" => EmbeddingOps.ivfAssigned(v, cents)
+    case "pq_codes"  => EmbeddingOps.pqCodesWide(v, cb)
+  }
+
+  /** The key rows co-partition on inside a slice: CELL-MAJOR for cells
+    * (the layout that lets a probe read only its nprobe cells' files),
+    * vec-keyed for flat and codes. */
+  private def sliceKey(family: String): String =
+    if (family == "ivf_cells") "cent_id" else "vec_id"
 
   /** Build the store from an explicit vector frame and a FROZEN quantizer
     * (centroids + PQ codebook) — the frame-parametric body [[write]] and
     * the append≡rebuild spec share: quantizer relations persist as plain
     * artifacts (they are the frozen model — appends never touch them);
     * the per-vector relations land as the `ingest_day=0` slice under the
-    * canonical-digest manifest. */
+    * canonical-digest manifest. The five families build concurrently
+    * ([[DedupArtifacts.concurrently]]): the quantizers are plans over the
+    * vector frame, so cells and codes never read the quantizer files
+    * being written. Each family builds its frame inside its own step and
+    * keeps its own order (write, then the digest from the files, then
+    * the manifest); the session cache is cleared once, after all five. */
   private[graft] def writeFrom(spark: SparkSession, v: DataFrame,
       cents: DataFrame, cb: DataFrame, root: String,
       k: Int = IvfK, pqK: Int = PqK): Unit = {
-    DedupArtifacts.writeArtifact(cents, s"$root/ivf_centroids", "cent_id",
-      centParams(k))
-    DedupArtifacts.writeArtifact(cb, s"$root/pq_codebook", "cent_id",
-      cbParams(pqK))
+    graft.functions.Kernels.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
-    sliceFrames(v, cents, cb).foreach { case (f, rows, key) =>
-      rows.withColumn("ingest_day", lit(0L))
-        .repartition(par, col(key))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("ingest_day").parquet(s"$root/$f")
-      DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
-        vectorFamilyParams(f, k, pqK), "ingest_day", identity)
-      spark.catalog.clearCache()
-    }
+    DedupArtifacts.concurrently(Seq(
+      () => DedupArtifacts.writeArtifact(cents, s"$root/ivf_centroids",
+        "cent_id", centParams(k)),
+      () => DedupArtifacts.writeArtifact(cb, s"$root/pq_codebook",
+        "cent_id", cbParams(pqK))) ++
+      VectorFamilies.map(f => () => {
+        sliceFrame(f, v, cents, cb).withColumn("ingest_day", lit(0L))
+          .repartition(par, col(sliceKey(f)))
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .partitionBy("ingest_day").parquet(s"$root/$f")
+        DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
+          vectorFamilyParams(f, k, pqK), "ingest_day", identity)
+      })): Unit
+    spark.catalog.clearCache()
   }
 
   /** The nightly index build: one norm pass (flat), one corpus × O(k)
     * assignment pass (cells), one corpus × O(pqK·sub) code pass (codes);
-    * centroid/codebook relations are O(k). Each artifact manifest records
-    * the geometry its rows are only meaningful under. */
+    * centroid/codebook relations are O(k). The five families build
+    * concurrently ([[writeFrom]]). Each artifact manifest records the
+    * geometry its rows are only meaningful under. */
   def write(spark: SparkSession, dir: String, root: String,
       k: Int = IvfK, pqK: Int = PqK): Unit = {
     val v = EmbeddingOps.vectors(spark, dir)
@@ -146,43 +161,46 @@ object AnnArtifacts {
   def appendDay(spark: SparkSession, root: String, dayEpoch: Long,
       dayVectors: DataFrame, k: Int = IvfK, pqK: Int = PqK,
       restamp: Boolean = true): Unit = {
+    // a MISSING manifest fails too (round 14, the advisor's finding): an
+    // absent manifest is a half-built store — silently skipping the check
+    // would let a wrong-geometry day land
     (Seq("ivf_centroids" -> centParams(k), "pq_codebook" -> cbParams(pqK)) ++
       VectorFamilies.map(f => f -> vectorFamilyParams(f, k, pqK)))
       .foreach { case (f, want) =>
-        // a MISSING manifest fails too (round 14, the advisor's finding):
-        // an absent manifest is a half-built store or a crashed
-        // compaction's un-restamped publish — silently skipping the check
-        // would let a wrong-geometry day land; the recovery for the
-        // crashed-compaction state is compact()/restamp(), not an append
-        val rec = DedupArtifacts.manifestParams(spark, s"$root/$f")
-          .getOrElse(sys.error(s"ANN index $root/$f has no manifest — " +
-            "store half-built or a compaction crashed before its " +
-            "re-stamp; run recover() before appending"))
-        if (rec != want)
-          sys.error(s"ANN index $root/$f geometry mismatch: append " +
-            s"expects $want, store records $rec")
+        DedupArtifacts.requireParams(spark, s"$root/$f", want, "ANN index",
+          "append")
       }
     graft.functions.Kernels.register(spark)
     val cents = centroids(spark, root, k)
     val cb = pqCodebook(spark, root, pqK)
     val v = dayVectors.select(col("vec_id"), col("label"), col("embedding"),
       expr("graft_norm2(embedding)").as("n2"))
-    sliceFrames(v, cents, cb).foreach { case (f, rows, _) =>
+    VectorFamilies.foreach { f =>
       Etl.replaceSlice(spark, s"$root/$f", "ingest_day",
-        dayEpoch.toString, rows)
+        dayEpoch.toString, sliceFrame(f, v, cents, cb))
     }
     if (restamp) this.restamp(spark, root, k, pqK)
   }
 
   /** The deferred canonical re-stamp for the three per-vector families —
     * one narrow O(index) digest pass each (index bytes, never
-    * embeddings). */
+    * embeddings). Every family's recorded geometry is checked first (the
+    * [[appendDay]] handshake): a missing manifest or one recording
+    * another k / pqK fails naming both sides and no manifest changes —
+    * re-stamping writes the caller's geometry, so unchecked it would
+    * relabel a store built at another geometry, or bless a half-built
+    * family. */
   def restamp(spark: SparkSession, root: String, k: Int = IvfK,
-      pqK: Int = PqK): Unit =
+      pqK: Int = PqK): Unit = {
+    VectorFamilies.foreach { f =>
+      DedupArtifacts.requireParams(spark, s"$root/$f",
+        vectorFamilyParams(f, k, pqK), "ANN index", "re-stamp")
+    }
     VectorFamilies.foreach { f =>
       DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
         vectorFamilyParams(f, k, pqK), "ingest_day", identity)
     }
+  }
 
   /** SLICE COMPACTION for the per-vector relations (the
     * [[DedupArtifacts.compactSlices]] device — vec ids are disjoint
@@ -202,9 +220,8 @@ object AnnArtifacts {
     * the sequenced cadence. */
   def compact(spark: SparkSession, root: String, upToDay: Long): Unit =
     VectorFamilies.foreach { f =>
-      val key = if (f == "ivf_cells") "cent_id" else "vec_id"
       if (DedupArtifacts.compactSlices(spark, s"$root/$f", "ingest_day",
-          upToDay, identity, Some(key)))
+          upToDay, identity, Some(sliceKey(f))))
         spark.catalog.clearCache()
     }
 

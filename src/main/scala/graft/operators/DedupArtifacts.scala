@@ -89,17 +89,17 @@ object DedupArtifacts {
     case "simhash_band"  => DedupOps.dedupSimhashBand(spark, dir)
   }
 
-  /** Write one artifact: key-partitioned parquet + manifest, then reclaim
-    * every cache the producing plan registered (the C29 contract) so the
-    * NEXT artifact's job starts with a clean store — this sequencing is
-    * exactly what caps peak memory at one generator. The manifest's
-    * (n_rows, checksum) is re-derived from the WRITTEN files, so a read
-    * that reverifies it proves file integrity end-to-end. `params` records
-    * the BUILD PARAMETERS the rows are only meaningful under (sketch
-    * geometry — m / depth·width / s): a reader that states its expected
-    * params fails fast on mismatch instead of silently reinterpreting
-    * registers under the wrong bucket map (the round-10 latent-defect
-    * class). */
+  /** Write one artifact: key-partitioned parquet + manifest. The
+    * manifest's (n_rows, checksum) is re-derived from the WRITTEN files, so
+    * a read that reverifies it proves file integrity end-to-end. `params`
+    * records the BUILD PARAMETERS the rows are only meaningful under
+    * (sketch geometry — m / depth·width / s): a reader that states its
+    * expected params fails fast on mismatch instead of silently
+    * reinterpreting registers under the wrong bucket map (the round-10
+    * latent-defect class). Reclaiming the caches the producing plan
+    * registered is the caller's: the pair generators reclaim after each
+    * artifact ([[writePairs]]), the store builds once after all of their
+    * concurrent families. */
   private[operators] def writeArtifact(df: DataFrame, path: String,
       key: String, params: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
@@ -107,7 +107,6 @@ object DedupArtifacts {
     df.repartition(par, col(key))
       .write.mode(SaveMode.Overwrite).parquet(path)
     refreshManifest(spark, path, params)
-    spark.catalog.clearCache()
   }
 
   /** Hive-layout variant of [[writeArtifact]]: rows land under
@@ -124,7 +123,6 @@ object DedupArtifacts {
     df.repartition(col(partCol))
       .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
     refreshManifest(spark, path, params)
-    spark.catalog.clearCache()
   }
 
   /** Recompute (n_rows, checksum) FROM THE FILES and rewrite the
@@ -406,6 +404,24 @@ object DedupArtifacts {
     }
   }
 
+  /** The params handshake a store runs before an append or a re-stamp
+    * touches a family: the manifest must exist (a family without one is
+    * half-built, and stamping it would bless unverified rows) and record
+    * exactly `want` (re-stamping writes `want`, so an unchecked re-stamp
+    * would relabel rows built at another geometry). Fails with one line
+    * naming both sides; nothing is written. `store` names the store in
+    * the error, `op` the operation. */
+  private[graft] def requireParams(spark: SparkSession, path: String,
+      want: Map[String, String], store: String, op: String): Unit = {
+    def show(ps: Map[String, String]) =
+      ps.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")
+    val rec = manifestParams(spark, path).getOrElse(sys.error(
+      s"$store $path has no manifest — store half-built; rebuild the family"))
+    if (rec != want)
+      sys.error(s"$store $path geometry mismatch: $op expects ${show(want)}, " +
+        s"manifest records ${show(rec)}")
+  }
+
   private def manifestPath(path: String) = s"$path/_graft_manifest.json"
 
   /** Param keys/values are interpolated into the manifest JSON verbatim
@@ -476,17 +492,23 @@ object DedupArtifacts {
 
   /** Write the three candidate pair sets, one generator job at a time;
     * each manifest records its generator's build geometry
-    * ([[pairParams]]). */
+    * ([[pairParams]]). Every cache a generator registered is reclaimed
+    * before the next one starts — this sequencing is exactly what caps
+    * peak memory at one generator's caches (the C29 contract). */
   def writePairs(spark: SparkSession, dir: String, root: String): Unit =
     PairMethods.foreach { m =>
       writeArtifact(generator(spark, dir, m), s"$root/pairs_$m", "doc_a",
         pairParams(m))
+      spark.catalog.clearCache()
     }
 
-  /** Write C18's component labels (one iterative job + one write). */
-  def writeComponents(spark: SparkSession, dir: String, root: String): Unit =
+  /** Write C18's component labels (one iterative job + one write), then
+    * reclaim the loop's caches. */
+  def writeComponents(spark: SparkSession, dir: String, root: String): Unit = {
     writeArtifact(DedupOps.dedupComponents(spark, dir),
       s"$root/components", "doc_id", componentParams)
+    spark.catalog.clearCache()
+  }
 
   /** Full artifact build — the once-a-day indexing job. */
   def write(spark: SparkSession, dir: String, root: String): Unit = {

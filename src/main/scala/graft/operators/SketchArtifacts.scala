@@ -61,7 +61,12 @@ object SketchArtifacts {
     * come off the SAME (month, customer) relation the inline B51 uses
     * (HLL updates are idempotent, so sketch(distinct) ≡ sketch(stream));
     * the CMS segments partition B50's key stream by event type. Each
-    * directory's manifest records the build geometry. */
+    * directory's manifest records the build geometry. The five families
+    * read only the source tables and share no directory, so they build
+    * concurrently ([[DedupArtifacts.concurrently]]), each in its own
+    * order (write, then the digest from the files, then the manifest);
+    * no family plan registers a cache, and the session cache is cleared
+    * once, after all five. */
   def write(spark: SparkSession, dir: String, root: String,
       m: Int = graft.functions.Kernels.HllM,
       depth: Int = Sketches.HhDepth, width: Int = Sketches.HhWidth,
@@ -70,31 +75,33 @@ object SketchArtifacts {
       dayDepth: Int = Sketches.WeekCmsDepth,
       dayWidth: Int = Sketches.WeekCmsWidth): Unit = {
     graft.functions.Kernels.register(spark)
-    DedupArtifacts.writeArtifact(
-      Sketches.monthCustomers(spark, dir)
-        .groupBy("mth")
-        .agg(expr(s"graft_hll_sketch_m(o_custkey, $m)").as("regs")),
-      s"$root/hll_month", "mth", hllParams(m))
-    DedupArtifacts.writeArtifact(
-      graft.sources.Tables.events(spark, dir)
-        .select(col("event_type"),
-          floor(col("value")).cast("long").cast("string").as("key"))
-        .groupBy("event_type")
-        .agg(expr(s"graft_cms_sketch_g(key, $depth, $width)").as("m"),
-          count(lit(1)).as("n")),
-      s"$root/cms_type", "event_type", cmsParams(depth, width))
-    // the DAY-grain families (round 11): each day's ingest leaves one
-    // fixed-size row per family behind, and any calendar roll-up (B56/
-    // B57/B58) is register arithmetic over the persisted rows — all
-    // three appendable slice-by-slice via the append* entries below
-    writeQsketchDays(spark, dir, root, s)
-    DedupArtifacts.writePartitionedArtifact(
-      Sketches.dayCmsSketchesOf(Sketches.dayValueKeys(spark, dir),
-        dayDepth, dayWidth),
-      s"$root/cms_day", "day_epoch", cmsParams(dayDepth, dayWidth))
-    DedupArtifacts.writePartitionedArtifact(
-      Sketches.dayHllSketchesOf(Sketches.dayUsers(spark, dir), dayM),
-      s"$root/hll_day", "day_epoch", hllParams(dayM))
+    DedupArtifacts.concurrently(Seq(
+      () => DedupArtifacts.writeArtifact(
+        Sketches.monthCustomers(spark, dir)
+          .groupBy("mth")
+          .agg(expr(s"graft_hll_sketch_m(o_custkey, $m)").as("regs")),
+        s"$root/hll_month", "mth", hllParams(m)),
+      () => DedupArtifacts.writeArtifact(
+        graft.sources.Tables.events(spark, dir)
+          .select(col("event_type"),
+            floor(col("value")).cast("long").cast("string").as("key"))
+          .groupBy("event_type")
+          .agg(expr(s"graft_cms_sketch_g(key, $depth, $width)").as("m"),
+            count(lit(1)).as("n")),
+        s"$root/cms_type", "event_type", cmsParams(depth, width)),
+      // the DAY-grain families (round 11): each day's ingest leaves one
+      // fixed-size row per family behind, and any calendar roll-up (B56/
+      // B57/B58) is register arithmetic over the persisted rows — all
+      // three appendable slice-by-slice via the append* entries below
+      () => writeQsketchFamily(spark, dir, root, s),
+      () => DedupArtifacts.writePartitionedArtifact(
+        Sketches.dayCmsSketchesOf(Sketches.dayValueKeys(spark, dir),
+          dayDepth, dayWidth),
+        s"$root/cms_day", "day_epoch", cmsParams(dayDepth, dayWidth)),
+      () => DedupArtifacts.writePartitionedArtifact(
+        Sketches.dayHllSketchesOf(Sketches.dayUsers(spark, dir), dayM),
+        s"$root/hll_day", "day_epoch", hllParams(dayM)))): Unit
+    spark.catalog.clearCache()
   }
 
   /** Just the qsketch_day family — for harnesses (ParamCheck's
@@ -103,10 +110,15 @@ object SketchArtifacts {
   def writeQsketchDays(spark: SparkSession, dir: String, root: String,
       s: Int = graft.functions.Kernels.QSketchS): Unit = {
     graft.functions.Kernels.register(spark)
+    writeQsketchFamily(spark, dir, root, s)
+    spark.catalog.clearCache()
+  }
+
+  private def writeQsketchFamily(spark: SparkSession, dir: String,
+      root: String, s: Int): Unit =
     DedupArtifacts.writePartitionedArtifact(
       Sketches.dayValueSketches(spark, dir, s),
       s"$root/qsketch_day", "day_epoch", qsketchParams(s))
-  }
 
   /** INCREMENTAL store maintenance (round 11): day N's ingest leaves ONLY
     * day N's 29 KiB sketch row behind — the deployment cadence B55's
@@ -130,20 +142,20 @@ object SketchArtifacts {
     * store would be silently unreadable), then the replaceSlice
     * write-new → rename publish, then the manifest re-stamp from the
     * files (order-free row-set digest: append-built ≡ single-pass
-    * rebuild by manifest equality). */
+    * rebuild by manifest equality). The first append into a family that
+    * does not exist yet stamps the EMPTY family's manifest (0 rows,
+    * digest 0, the append's geometry) before its slice lands, so a
+    * deferred re-stamp ([[restampQsketchDays]] & co.) finds the geometry
+    * it must match; a family directory WITHOUT a manifest is half-built
+    * and fails the handshake. */
   private def appendDaySlice(spark: SparkSession, root: String, sub: String,
       dayEpoch: Long, slice: DataFrame, params: Map[String, String],
       restamp: Boolean): Unit = {
     val path = s"$root/$sub"
-    DedupArtifacts.manifestParams(spark, path).foreach { rec =>
-      if (rec != params)
-        sys.error(s"sketch store $path geometry mismatch: append expects " +
-          params.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-            .mkString("(", ", ", ")") +
-          s" against a store recording " +
-          rec.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-            .mkString("(", ", ", ")"))
-    }
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      DedupArtifacts.writeManifest(spark, path, 0L, 0L, params)
+    DedupArtifacts.requireParams(spark, path, params, "sketch store", "append")
     Etl.replaceSlice(spark, path, "day_epoch", dayEpoch.toString, slice)
     if (restamp) DedupArtifacts.refreshManifest(spark, path, params)
   }
@@ -195,21 +207,31 @@ object SketchArtifacts {
 
   /** The deferred manifest re-stamps paired with `restamp = false`
     * appends — one per family, each ONE order-free O(store) digest pass
-    * (append-built ≡ rebuild stays pinned by manifest equality). */
+    * (append-built ≡ rebuild stays pinned by manifest equality). Each
+    * first runs the append's handshake: the family's manifest must exist
+    * and record exactly the caller's geometry, else the re-stamp fails
+    * naming both sides and leaves the manifest as it was — re-stamping
+    * unchecked would relabel registers built at another geometry, or
+    * bless a half-built family. */
   def restampQsketchDays(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS): Unit =
-    DedupArtifacts.refreshManifest(spark, s"$root/qsketch_day",
-      qsketchParams(s))
+    restampFamily(spark, s"$root/qsketch_day", qsketchParams(s))
 
   def restampCmsDays(spark: SparkSession, root: String,
       depth: Int = Sketches.WeekCmsDepth,
       width: Int = Sketches.WeekCmsWidth): Unit =
-    DedupArtifacts.refreshManifest(spark, s"$root/cms_day",
-      cmsParams(depth, width))
+    restampFamily(spark, s"$root/cms_day", cmsParams(depth, width))
 
   def restampHllDays(spark: SparkSession, root: String,
       m: Int = Sketches.WeekHllM): Unit =
-    DedupArtifacts.refreshManifest(spark, s"$root/hll_day", hllParams(m))
+    restampFamily(spark, s"$root/hll_day", hllParams(m))
+
+  private def restampFamily(spark: SparkSession, path: String,
+      params: Map[String, String]): Unit = {
+    DedupArtifacts.requireParams(spark, path, params, "sketch store",
+      "re-stamp")
+    DedupArtifacts.refreshManifest(spark, path, params)
+  }
 
   private def daySliceOf(spark: SparkSession, dir: String,
       dayEpoch: Long): DataFrame =

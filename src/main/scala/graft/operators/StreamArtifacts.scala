@@ -176,22 +176,29 @@ object StreamArtifacts {
   /** Build the store from explicit doc frames — `standingDocs` feeds the
     * split-scoped families, `spanDocs` the whole-corpus span universe
     * (the D34 convention). Everything lands as `ingest_day=0`; each
-    * family's manifest digests the canonical view. */
+    * family's manifest digests the canonical view. The four families
+    * share no directory and read only the doc frames, so they build
+    * concurrently ([[DedupArtifacts.concurrently]]), each in its own
+    * order (write, then the canonical digest from the files, then the
+    * manifest); the session cache is cleared once, after all four (the
+    * [[compact]] rule). */
   def writeFrom(spark: SparkSession, standingDocs: DataFrame,
-      spanDocs: DataFrame, root: String): Unit =
-    Families.foreach { f =>
+      spanDocs: DataFrame, root: String): Unit = {
+    graft.functions.Kernels.register(spark)
+    DedupArtifacts.concurrently(Families.map(f => () => {
       val docs = if (f == "span_index") spanDocs else standingDocs
       val rows = slices(f, spark, docs).withColumn("ingest_day", lit(0L))
       rows.repartition(col("ingest_day"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("ingest_day").parquet(s"$root/$f")
       restampFamily(spark, root, f)
-      spark.catalog.clearCache()
-    }
+    })): Unit
+    spark.catalog.clearCache()
+  }
 
   /** Build the store from a source dir: standing split for
-    * hash/sigs/grams, the whole corpus for spans. One indexing job per
-    * artifact (the one-generator residency sequencing). */
+    * hash/sigs/grams, the whole corpus for spans; the four families build
+    * concurrently ([[writeFrom]]). */
   def write(spark: SparkSession, dir: String, root: String): Unit = {
     val docs = graft.sources.Tables.documents(spark, dir)
     writeFrom(spark,

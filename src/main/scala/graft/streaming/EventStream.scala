@@ -37,14 +37,15 @@ object EventStream {
   /** File-source stream over a directory of events parquet files. Like
     * the batch loader, DISPATCHES on the file encoding (round-6 advice:
     * the stream used to hard-pin the new NTZ schema, so batch and
-    * streaming supported different input surfaces): one batch footer peek
-    * picks the schema — an empty/unreadable directory defaults to the
+    * streaming supported different input surfaces): one footer read on
+    * the driver ([[graft.sources.Tables.readParquet]], no Spark job) picks
+    * the schema — an empty/unreadable directory defaults to the
     * current NTZ encoding — and both paths surface `ts` as a session
     * TIMESTAMP (UTC by the session contract) so watermarks/windows behave
     * identically to the batch twins built on Tables.events' UTC nanos. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     val legacy = scala.util.Try(
-      spark.read.parquet(dir).schema("ts").dataType == LongType)
+      graft.sources.Tables.readParquet(spark, dir).schema("ts").dataType == LongType)
       .getOrElse(false)
     if (legacy)
       spark.readStream.schema(eventsSchemaLegacy).parquet(dir)

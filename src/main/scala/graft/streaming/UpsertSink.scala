@@ -35,7 +35,8 @@ object UpsertSink {
     val target = new Path(targetDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val merged =
-      if (fs.exists(target)) Etl.merge(spark.read.parquet(targetDir), dedupBatch, key)
+      if (fs.exists(target))
+        Etl.merge(graft.sources.Tables.readParquet(spark, targetDir), dedupBatch, key)
       else dedupBatch
     val tmp = new Path(targetDir + ".tmp")
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)

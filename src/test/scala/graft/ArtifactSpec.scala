@@ -83,6 +83,16 @@ class ArtifactSpec extends SparkSpec {
     root // force the shared build
     assert(spark.sharedState.cacheManager.isEmpty,
       "artifact build must reclaim every generator cache")
+    // the store builds, whose families run concurrently, reclaim too
+    for ((name, build) <- Seq[(String, String => Unit)](
+      ("sketch", operators.SketchArtifacts.write(spark, sf, _)),
+      ("stream", operators.StreamArtifacts.write(spark, sf, _)),
+      ("ann", operators.AnnArtifacts.write(spark, sf, _)))) {
+      spark.catalog.clearCache()
+      build(tmpDir(s"graft-residency-$name-"))
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name store build left a cached relation")
+    }
   }
 
   test("artifact-fed reports are byte-equal to the inline plans") {
@@ -289,17 +299,27 @@ class ArtifactSpec extends SparkSpec {
       "non-default store-fed B50 diverges from inline at the same geometry")
     spark.catalog.clearCache()
     // readers under SESSION DEFAULTS must fail fast NAMING the geometry —
-    // before round 11 they silently reinterpreted the registers
+    // before round 11 they silently reinterpreted the registers; so must
+    // re-stamps under another geometry, leaving every manifest as it was
+    def manifests() = Seq("hll_month", "cms_type", "qsketch_day", "cms_day",
+      "hll_day").map(f => java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$r/$f/_graft_manifest.json")))
+    val stamped = manifests()
     for ((label, bad) <- Seq[(String, () => Any)](
       ("qsketch s", () => SketchArtifacts.valueQuantileDrift(spark, r)),
       ("hll m", () => SketchArtifacts.monthOverlapEstimates(spark, r)),
-      ("cms depth/width", () => SketchArtifacts.heavyHitters(spark, sf, r))
+      ("cms depth/width", () => SketchArtifacts.heavyHitters(spark, sf, r)),
+      ("qsketch s re-stamp", () => SketchArtifacts.restampQsketchDays(spark, r)),
+      ("cms_day re-stamp", () =>
+        SketchArtifacts.restampCmsDays(spark, r, depth = 3, width = 64)),
+      ("hll_day re-stamp", () => SketchArtifacts.restampHllDays(spark, r, m = 32))
     )) {
       val e = intercept[RuntimeException](bad())
       assert(e.getMessage.contains("geometry mismatch") &&
         e.getMessage.contains("manifest records"),
         s"$label default-geometry read: wrong error: ${e.getMessage}")
     }
+    assert(manifests() == stamped, "a refused re-stamp changed a manifest")
     // a LEGACY manifest (no params) read by a geometry-stating reader
     // must also fail fast, pointing at the rebuild
     val mf = java.nio.file.Paths.get(s"$r/qsketch_day/_graft_manifest.json")
@@ -362,15 +382,35 @@ class ArtifactSpec extends SparkSpec {
     spark.catalog.clearCache()
 
     // geometry handshake: a reader stating a different k / pqK fails
-    // fast naming both sides
+    // fast naming both sides; so does a re-stamp under the defaults of a
+    // store built at another k, leaving every manifest as it was
+    val rk = tmpDir("graft-ann-k-")
+    AnnArtifacts.write(spark, sf, rk, k = EmbeddingOps.IvfK + 1)
+    def manifests(fams: Seq[String] = Seq("flat", "ivf_cells", "pq_codes")) =
+      fams.map(f => java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$rk/$f/_graft_manifest.json")))
+    val stamped = manifests()
     for ((label, bad) <- Seq[(String, () => Any)](
       ("ivf k", () => AnnArtifacts.centroids(spark, r, k = 7)),
       ("cells k", () => AnnArtifacts.cells(spark, r, k = 7)),
-      ("pq k", () => AnnArtifacts.pqCodes(spark, r, pqK = 7)))) {
+      ("pq k", () => AnnArtifacts.pqCodes(spark, r, pqK = 7)),
+      ("re-stamp k", () => AnnArtifacts.restamp(spark, rk)))) {
       val e = intercept[RuntimeException](bad())
       assert(e.getMessage.contains("geometry mismatch"),
         s"$label mismatched read: wrong error: ${e.getMessage}")
     }
+    assert(manifests() == stamped, "a refused re-stamp changed a manifest")
+    // a half-built family (no manifest) is refused before any re-stamp
+    val flatManifest = java.nio.file.Paths.get(s"$rk/flat/_graft_manifest.json")
+    java.nio.file.Files.delete(flatManifest)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$rk/flat/._graft_manifest.json.crc"))
+    val h = intercept[RuntimeException](
+      AnnArtifacts.restamp(spark, rk, k = EmbeddingOps.IvfK + 1))
+    assert(h.getMessage.contains("half-built"), h.getMessage)
+    assert(!java.nio.file.Files.exists(flatManifest) &&
+      manifests(Seq("ivf_cells", "pq_codes")) == stamped.tail,
+      "a refused re-stamp wrote a manifest")
 
     // the router bootstrap reads only the centroid artifact (FLAT in
     // corpus size — the ScaleProbe ann_index_route claim's plan shape)
@@ -1296,5 +1336,34 @@ class ArtifactSpec extends SparkSpec {
       assert(sources.Tables.footerRows(spark, slice) ==
         sources.Tables.readParquet(spark, slice).count(), slice)
     }
+  }
+
+  test("concurrent store build: a failed family throws its own error after " +
+      "its siblings land, under the caller's job group, no job left running") {
+    import operators.SketchArtifacts
+    val r = tmpDir("graft-sketch-fail-")
+    val sc = spark.sparkContext
+    // m = 24 is not a power of two: only hll_month fails
+    val ((thrown, thrownAt, active), jobs) = logJobs {
+      sc.setJobGroup("b", "store build")
+      try {
+        val e = intercept[Exception](SketchArtifacts.write(spark, sf, r, m = 24))
+        (e, System.currentTimeMillis(), sc.statusTracker.getActiveJobIds().toSeq)
+      } finally sc.clearJobGroup()
+    }
+    assert(thrown.isInstanceOf[IllegalArgumentException],
+      s"the build threw $thrown, not the family's own error")
+    val unlanded = Seq("cms_type", "qsketch_day", "cms_day", "hll_day")
+      .filterNot(f => java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$r/$f/_graft_manifest.json")))
+    assert(unlanded.isEmpty, s"the build threw before these landed: $unlanded")
+    val groups = jobs.groups.values.toArray.toSeq
+    assert(groups.nonEmpty && groups.forall(_ == "b"),
+      s"${groups.count(_ != "b")} of ${groups.size} jobs outside group b")
+    assert(active.forall(jobs.endedBy(_, thrownAt)),
+      s"jobs still active when the build threw: $active")
+    assert(jobs.ids.forall(jobs.endedBy(_, thrownAt)),
+      "a job of the failed build ended after it threw")
+    spark.catalog.clearCache(): Unit
   }
 }

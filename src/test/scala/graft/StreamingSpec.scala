@@ -85,6 +85,14 @@ class StreamingSpec extends SparkSpec {
       s"streamed encodings diverge:\n ntz=$a\n long=$b")
   }
 
+  test("D1 readEvents builds its frame with zero Spark jobs") {
+    // the encoding peek reads one footer on the driver, not an inference job
+    Audit.JobCount.ensure(spark)
+    Audit.JobCount.reset()
+    EventStream.readEvents(spark, s"$sf/events.parquet")
+    assert(Audit.JobCount.value() == 0)
+  }
+
   test("D1 end-to-end legacy-encoded events stream equals batch B8") {
     // round-7 advice: the dispatch test pins row parity, but the legacy
     // encoding had never been driven THROUGH a windowed aggregate. Stream
