@@ -67,12 +67,13 @@ object AnnArtifacts {
 
   /** The three PER-VECTOR relations are LOG-STRUCTURED since round 13
     * (the StreamArtifacts day-slice device applied to the vector index):
-    * hive-partitioned by `ingest_day` (0 = the initial build; day N's
-    * admitted vectors land as their own slice via
-    * [[graft.operators.Etl.replaceSlice]]). Their canonical view is the
-    * raw union — vec ids are disjoint across ingest days (the appendDay
-    * contract), so no read-side merge is needed and slices simply add. */
-  private val VectorFamilies = Seq("flat", "ivf_cells", "pq_codes")
+    * a [[SliceLog]] hive-partitioned by `ingest_day` (0 = the initial
+    * build; day N's admitted vectors land as their own slice). Their
+    * canonical view is the raw union without the label — vec ids are
+    * disjoint across ingest days (the appendDay contract), so no
+    * read-side merge is needed and slices simply add. Quantizer relations
+    * are the frozen model and stay single artifacts. */
+  private[graft] val VectorFamilies = Seq("flat", "ivf_cells", "pq_codes")
 
   private def vectorFamilyParams(family: String, k: Int,
       pqK: Int): Map[String, String] = family match {
@@ -92,11 +93,14 @@ object AnnArtifacts {
     case "pq_codes"  => EmbeddingOps.pqCodesWide(v, cb)
   }
 
-  /** The key rows co-partition on inside a slice: CELL-MAJOR for cells
-    * (the layout that lets a probe read only its nprobe cells' files),
-    * vec-keyed for flat and codes. */
-  private def sliceKey(family: String): String =
-    if (family == "ivf_cells") "cent_id" else "vec_id"
+  /** The per-vector slice log at geometry (k, pqK) — the geometry only
+    * matters to the params handshake. Rows co-partition inside a slice on
+    * their key: CELL-MAJOR for cells (the layout that lets a probe read
+    * only its nprobe cells' files), vec-keyed for flat and codes. */
+  private def log(root: String, k: Int, pqK: Int): SliceLog =
+    SliceLog(root, "ingest_day", VectorFamilies.map(f => SliceLog.Family(f,
+      vectorFamilyParams(f, k, pqK), _.drop("ingest_day"),
+      Some(if (f == "ivf_cells") "cent_id" else "vec_id"))))
 
   /** Build the store from an explicit vector frame and a FROZEN quantizer
     * (centroids + PQ codebook) — the frame-parametric body [[write]] and
@@ -104,29 +108,21 @@ object AnnArtifacts {
     * artifacts (they are the frozen model — appends never touch them);
     * the per-vector relations land as the `ingest_day=0` slice under the
     * canonical-digest manifest. The five families build concurrently
-    * ([[DedupArtifacts.concurrently]]): the quantizers are plans over the
-    * vector frame, so cells and codes never read the quantizer files
-    * being written. Each family builds its frame inside its own step and
-    * keeps its own order (write, then the digest from the files, then
-    * the manifest); the session cache is cleared once, after all five. */
+    * ([[DedupArtifacts.concurrently]], [[SliceLog.write]]): the
+    * quantizers are plans over the vector frame, so cells and codes never
+    * read the quantizer files being written. The session cache is cleared
+    * once, after all five. */
   private[graft] def writeFrom(spark: SparkSession, v: DataFrame,
       cents: DataFrame, cb: DataFrame, root: String,
       k: Int = IvfK, pqK: Int = PqK): Unit = {
     graft.functions.Kernels.register(spark)
-    val par = spark.sessionState.conf.numShufflePartitions
     DedupArtifacts.concurrently(Seq(
       () => DedupArtifacts.writeArtifact(cents, s"$root/ivf_centroids",
         "cent_id", centParams(k)),
       () => DedupArtifacts.writeArtifact(cb, s"$root/pq_codebook",
-        "cent_id", cbParams(pqK))) ++
-      VectorFamilies.map(f => () => {
-        sliceFrame(f, v, cents, cb).withColumn("ingest_day", lit(0L))
-          .repartition(par, col(sliceKey(f)))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("ingest_day").parquet(s"$root/$f")
-        DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
-          vectorFamilyParams(f, k, pqK), "ingest_day", identity)
-      })): Unit
+        "cent_id", cbParams(pqK)),
+      () => log(root, k, pqK).write(spark, f =>
+        sliceFrame(f, v, cents, cb).withColumn("ingest_day", lit(0L))))): Unit
     spark.catalog.clearCache()
   }
 
@@ -147,130 +143,79 @@ object AnnArtifacts {
     * gap): day `dayEpoch`'s admitted vectors (vec_id, label, embedding)
     * append to the three per-vector relations, assigned via the
     * PERSISTED FROZEN quantizer — an O(day) norm/assign/code pass plus
-    * one slice swap per family; the standing corpus is never re-read and
-    * the quantizer is never retrained (C117's code-usage panel is the
-    * report that says when it must be). CONTRACT: an admitted vector is
-    * a NEW vector — its id must not already exist in the store (slices
-    * add; a restated day replaces its own slice, run-twice ≡ run-once).
-    * Geometry is verified against every family manifest BEFORE any slice
-    * lands. `restamp = false` defers the canonical re-stamp (the
-    * sketch-store batch device); until the re-stamp, verified readers
-    * fail fast — never a silent misread. Append-built ≡ a one-pass
-    * rebuild over the union under the SAME frozen quantizer, pinned by
-    * manifest equality (ArtifactSpec). */
+    * one slice swap per family, the three concurrently; the standing
+    * corpus is never re-read and the quantizer is never retrained (C117's
+    * code-usage panel is the report that says when it must be).
+    * CONTRACT: an admitted vector is a NEW vector — its id must not
+    * already exist in the store (slices add; a restated day replaces its
+    * own slice, run-twice ≡ run-once). The quantizer's geometry is
+    * checked by its verified reads, the per-vector families' by the
+    * log's handshake — all before any slice lands (a missing manifest
+    * fails too: a half-built store must not take a wrong-geometry day).
+    * `restamp = false` defers the canonical re-stamp (the sketch-store
+    * batch device); until the re-stamp, verified readers fail fast —
+    * never a silent misread. Append-built ≡ a one-pass rebuild over the
+    * union under the SAME frozen quantizer, pinned by manifest equality
+    * (ArtifactSpec). */
   def appendDay(spark: SparkSession, root: String, dayEpoch: Long,
       dayVectors: DataFrame, k: Int = IvfK, pqK: Int = PqK,
       restamp: Boolean = true): Unit = {
-    // a MISSING manifest fails too (round 14, the advisor's finding): an
-    // absent manifest is a half-built store — silently skipping the check
-    // would let a wrong-geometry day land
-    (Seq("ivf_centroids" -> centParams(k), "pq_codebook" -> cbParams(pqK)) ++
-      VectorFamilies.map(f => f -> vectorFamilyParams(f, k, pqK)))
-      .foreach { case (f, want) =>
-        DedupArtifacts.requireParams(spark, s"$root/$f", want, "ANN index",
-          "append")
-      }
     graft.functions.Kernels.register(spark)
     val cents = centroids(spark, root, k)
     val cb = pqCodebook(spark, root, pqK)
     val v = dayVectors.select(col("vec_id"), col("label"), col("embedding"),
       expr("graft_norm2(embedding)").as("n2"))
-    VectorFamilies.foreach { f =>
-      Etl.replaceSlice(spark, s"$root/$f", "ingest_day",
-        dayEpoch.toString, sliceFrame(f, v, cents, cb))
-    }
-    if (restamp) this.restamp(spark, root, k, pqK)
+    log(root, k, pqK).append(spark, dayEpoch, sliceFrame(_, v, cents, cb),
+      restamp)
   }
 
   /** The deferred canonical re-stamp for the three per-vector families —
     * one narrow O(index) digest pass each (index bytes, never
-    * embeddings). Every family's recorded geometry is checked first (the
-    * [[appendDay]] handshake): a missing manifest or one recording
-    * another k / pqK fails naming both sides and no manifest changes —
-    * re-stamping writes the caller's geometry, so unchecked it would
-    * relabel a store built at another geometry, or bless a half-built
-    * family. */
+    * embeddings), after the params handshake ([[SliceLog.restamp]]): a
+    * missing manifest or one recording another k / pqK fails naming both
+    * sides and no manifest changes — re-stamping writes the caller's
+    * geometry, so unchecked it would relabel a store built at another
+    * geometry, or bless a half-built family. */
   def restamp(spark: SparkSession, root: String, k: Int = IvfK,
-      pqK: Int = PqK): Unit = {
-    VectorFamilies.foreach { f =>
-      DedupArtifacts.requireParams(spark, s"$root/$f",
-        vectorFamilyParams(f, k, pqK), "ANN index", "re-stamp")
-    }
-    VectorFamilies.foreach { f =>
-      DedupArtifacts.refreshManifestCanonical(spark, s"$root/$f",
-        vectorFamilyParams(f, k, pqK), "ingest_day", identity)
-    }
-  }
+      pqK: Int = PqK): Unit =
+    log(root, k, pqK).restamp(spark)
 
-  /** SLICE COMPACTION for the per-vector relations (the
-    * [[DedupArtifacts.compactSlices]] device — vec ids are disjoint
-    * across days, so the canonical merge is the raw union): merge every
-    * slice ≤ `upToDay` into one, preserving the CELL-MAJOR layout inside
-    * the merged `ivf_cells` slice (rows co-partitioned on cent_id — the
-    * layout that lets a probe read only its nprobe cells' files) and the
-    * vec-keyed layout for flat/codes. The canonical digest — and with it
-    * the manifest — is invariant (spec-pinned), so the manifest TRAVELS
-    * WITH the swap (round 15: compactSlices copies it into the staged
-    * layout — no post-publish re-stamp, no missing-manifest crash
-    * window, and a canon-breaking compaction would fail the next
-    * verified read instead of being re-stamped over); quantizer
-    * relations are single artifacts and never compact. Crashed runs are
-    * repaired by re-running compact() (stranded publishes restored on
-    * entry); must be serialized with appendDay — [[Nightly.runDay]] is
+  /** SLICE COMPACTION for the per-vector relations
+    * ([[SliceLog.compact]] — vec ids are disjoint across days, so the
+    * canonical merge is the raw union): merge every slice ≤ `upToDay`
+    * into one, keeping the CELL-MAJOR layout inside the merged
+    * `ivf_cells` slice and the vec-keyed layout for flat/codes. The
+    * canonical digest — and with it the manifest — is invariant
+    * (spec-pinned); quantizer relations are single artifacts and never
+    * compact. Must be serialized with appendDay — [[Nightly.runDay]] is
     * the sequenced cadence. */
   def compact(spark: SparkSession, root: String, upToDay: Long): Unit =
-    VectorFamilies.foreach { f =>
-      if (DedupArtifacts.compactSlices(spark, s"$root/$f", "ingest_day",
-          upToDay, identity, Some(sliceKey(f))))
-        spark.catalog.clearCache()
-    }
+    log(root, IvfK, PqK).compact(spark, upToDay)
 
-  /** The [[StreamArtifacts.recover]] prologue for the per-vector
-    * relations: restore mid-publish strandings so a replayed
-    * maintenance run starts consistent. A MISSING manifest FAILS
-    * (round 15): the manifest travels with compaction's publish, so
-    * absence means a half-built store that a caller-params re-stamp
-    * would wrongly bless — the repair is a rebuild. FS checks only, no
-    * Spark job. Quantizer relations never publish-swap (plain
+  /** The crash-recovery prologue for the per-vector relations
+    * ([[SliceLog.recover]]): restores mid-publish strandings, FAILS on a
+    * half-built family. Quantizer relations never publish-swap (plain
     * writeArtifact stamps inline), so they need no recovery path. */
   def recover(spark: SparkSession, root: String): Boolean =
-    VectorFamilies.map { f =>
-      val restored = DedupArtifacts.restoreStranded(spark, s"$root/$f")
-      if (DedupArtifacts.manifestMissing(spark, s"$root/$f"))
-        sys.error(s"ANN index $root/$f has no manifest — store " +
-          "half-built (a crashed compaction cannot leave this state: " +
-          "the manifest travels with its publish); rebuild the family")
-      restored
-    }.exists(identity)
+    log(root, IvfK, PqK).recover(spark)
 
-  /** The cadence policy for the per-vector relations — the
-    * [[StreamArtifacts.compactIfNeeded]] device: an FS listing decides
-    * (no Spark job below the threshold), only slices strictly below the
-    * `protectFrom` replay horizon merge (a replayed appendDay REPLACES
-    * its slice — merging the log into a replayable day's label would
-    * let the replay overwrite history; see the StreamArtifacts scaladoc),
-    * and under a steady daily feed the slice count stays bounded at
-    * `maxSlices + 1` forever. The D40 maintainer invokes this from its
-    * foreachBatch epilogue with its batch's min day — the single-writer
-    * cadence that already serializes appends, so the compactSlices
-    * concurrency contract holds by construction. */
+  /** The cadence policy for the per-vector relations
+    * ([[SliceLog.compactIfNeeded]]). The D40 maintainer invokes this from
+    * its foreachBatch epilogue with its batch's min day as the replay
+    * horizon — the single-writer cadence that already serializes
+    * appends, so the compactSlices concurrency contract holds by
+    * construction. */
   def compactIfNeeded(spark: SparkSession, root: String,
-      maxSlices: Int = StreamArtifacts.DefaultMaxSlices,
-      protectFrom: Long = Long.MaxValue): Boolean = {
-    val days = VectorFamilies.map(f =>
-      DedupArtifacts.sliceDays(spark, s"$root/$f", "ingest_day"))
-    val mergeable = days.flatten.distinct.filter(_ < protectFrom)
-    if (days.map(_.length).max <= maxSlices || mergeable.size <= 1) false
-    else { compact(spark, root, mergeable.max); true }
-  }
+      maxSlices: Int = SliceLog.DefaultMaxSlices,
+      protectFrom: Long = Long.MaxValue): Boolean =
+    log(root, IvfK, PqK).compactIfNeeded(spark, maxSlices, protectFrom)
 
   // ---- manifest- and geometry-verified readers
 
   /** The serving snapshot (vec_id, label, embedding, n2) — the union of
     * all ingest-day slices, canonical-digest-verified. */
   def flat(spark: SparkSession, root: String): DataFrame =
-    DedupArtifacts.readVerifiedCanonical(spark, s"$root/flat", flatParams,
-        "ingest_day", identity)
+    log(root, IvfK, PqK).read(spark, "flat")
       .select("vec_id", "label", "embedding", "n2")
 
   /** The coarse quantizer, built at `k`. */
@@ -281,8 +226,7 @@ object AnnArtifacts {
 
   /** The cell-major corpus (vec_id, embedding, n2, cent_id), built at `k`. */
   def cells(spark: SparkSession, root: String, k: Int = IvfK): DataFrame =
-    DedupArtifacts.readVerifiedCanonical(spark, s"$root/ivf_cells",
-        cellParams(k), "ingest_day", identity)
+    log(root, k, PqK).read(spark, "ivf_cells")
       .select("vec_id", "embedding", "n2", "cent_id")
 
   /** The PQ codebook (cent_id, c_emb), built at `pqK`. */
@@ -293,8 +237,7 @@ object AnnArtifacts {
 
   /** The compressed corpus (vec_id, code_0..code_3), built at `pqK`. */
   def pqCodes(spark: SparkSession, root: String, pqK: Int = PqK): DataFrame =
-    DedupArtifacts.readVerifiedCanonical(spark, s"$root/pq_codes",
-        codeParams(pqK), "ingest_day", identity)
+    log(root, IvfK, pqK).read(spark, "pq_codes")
       .select(col("vec_id") +:
         (0 until PqSub).map(s => col(s"code_$s")): _*)
 

@@ -106,74 +106,67 @@ object DedupArtifacts {
     val par = spark.sessionState.conf.numShufflePartitions
     df.repartition(par, col(key))
       .write.mode(SaveMode.Overwrite).parquet(path)
-    refreshManifest(spark, path, params)
+    refreshManifest(spark, path, params, identity)
   }
 
-  /** Hive-layout variant of [[writeArtifact]]: rows land under
-    * `partCol=<value>/` directories, so a later restatement can swap ONE
-    * slice ([[graft.operators.Etl.replaceSlice]]) and re-stamp the
-    * manifest without rewriting the rest — the incremental-append story
-    * for per-segment sketch stores. */
-  private[operators] def writePartitionedArtifact(df: DataFrame,
-      path: String, partCol: String,
-      params: Map[String, String] = Map.empty): Unit = {
-    val spark = df.sparkSession
-    // co-locate each slice's rows so every partCol=… directory holds one
-    // file (segment-sketch slices are one row each; no small-file spray)
-    df.repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
-    refreshManifest(spark, path, params)
+  /** Write `rows` hive-partitioned by `partCol` under `path` — the slice
+    * layout a [[SliceLog]] build and [[compactSlices]] share. `sliceKey`
+    * co-partitions rows WITHIN slices (the cell-major layout for IVF
+    * cells); without it each slice lands as one file (segment-sketch
+    * slices are one row each; no small-file spray). */
+  private[operators] def writeSlices(rows: DataFrame, path: String,
+      partCol: String, sliceKey: Option[String]): Unit = {
+    val laid = sliceKey match {
+      case Some(k) => rows.repartition(
+        rows.sparkSession.sessionState.conf.numShufflePartitions,
+        col(partCol), col(k))
+      case None => rows.repartition(col(partCol))
+    }
+    laid.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
+  }
+
+  /** (n_rows, checksum) of a frame: an order-free row-set digest (bit_xor
+    * of per-row xxhash64), so a family assembled slice by slice digests
+    * the SAME as one written in a single pass — append ≡ rebuild is
+    * checkable by manifest equality alone. One narrow pass. */
+  private def digest(df: DataFrame): (Long, Long) = {
+    val row = df.agg(count(lit(1)).as("n"),
+      coalesce(expr(s"bit_xor(xxhash64(${df.columns.mkString(", ")}))"),
+        lit(0L)).as("ck")).head()
+    (row.getLong(0), row.getLong(1))
   }
 
   /** Recompute (n_rows, checksum) FROM THE FILES and rewrite the
-    * manifest. The checksum is an order-free row-set digest
-    * (bit_xor of per-row xxhash64), so an artifact assembled slice by
-    * slice carries the SAME manifest as one written in a single pass —
-    * append ≡ rebuild is checkable by manifest equality alone. Cost is
-    * one narrow O(artifact) pass (tiny for sketch stores: one row per
-    * segment). */
-  private[operators] def refreshManifest(spark: SparkSession, path: String,
-      params: Map[String, String] = Map.empty): Unit = {
-    val back = Tables.readParquet(spark, path)
-    val row = back.agg(count(lit(1)).as("n"),
-      coalesce(expr(s"bit_xor(xxhash64(${back.columns.mkString(", ")}))"),
-        lit(0L)).as("ck")).head()
-    writeManifest(spark, path, row.getLong(0), row.getLong(1), params)
+    * manifest. The digest is over `canon` of the rows as read (partition
+    * columns included): the identity for a plain artifact, a slice log's
+    * canonical view for its families ([[SliceLog.Family]]). One narrow
+    * O(artifact) pass (tiny for sketch stores: one row per segment). */
+  private[graft] def refreshManifest(spark: SparkSession, path: String,
+      params: Map[String, String], canon: DataFrame => DataFrame): Unit = {
+    val (n, ck) = digest(canon(Tables.readParquet(spark, path)))
+    writeManifest(spark, path, n, ck, params)
   }
 
-  /** [[refreshManifest]] for LOG-STRUCTURED stores (round 12 — the
-    * StreamArtifacts day-slice layout): the digest is computed over the
-    * CANONICALIZED view (`canon` of the raw read, partition column
-    * dropped first), not the raw rows. A store assembled as day slices
-    * carries raw rows a single-pass rebuild would merge (per-slice
-    * distincts, per-slice partial aggregates); canonicalizing before the
-    * digest makes append-built ≡ rebuild checkable by manifest EQUALITY
-    * — the same logical index, regardless of how many slices delivered
-    * it. The integrity contract correspondingly covers the canonical
-    * view (what every consumer reads), not raw-slice bytes. One narrow
-    * O(store) pass. */
+  /** [[refreshManifest]] over the canonical view of a log whose slices
+    * merge on read: `canon` of the rows with the partition column
+    * `dropCol` dropped first (the stream-store convention). */
   private[graft] def refreshManifestCanonical(spark: SparkSession,
       path: String, params: Map[String, String],
-      dropCol: String, canon: DataFrame => DataFrame): Unit = {
-    val back = canon(Tables.readParquet(spark, path).drop(dropCol))
-    val row = back.agg(count(lit(1)).as("n"),
-      coalesce(expr(s"bit_xor(xxhash64(${back.columns.mkString(", ")}))"),
-        lit(0L)).as("ck")).head()
-    writeManifest(spark, path, row.getLong(0), row.getLong(1), params)
-  }
+      dropCol: String, canon: DataFrame => DataFrame): Unit =
+    refreshManifest(spark, path, params, raw => canon(raw.drop(dropCol)))
 
   /** SLICE COMPACTION for log-structured stores (round 13): merge every
     * slice with `partCol ≤ upTo` into ONE slice holding the CANONICAL
     * merge of their rows, labeled `partCol = upTo`; slices above `upTo`
     * are untouched, so the nightly append cadence continues against the
-    * compacted base. Every store `canon` is associative and idempotent,
-    * so compacting a prefix of the log preserves the overall canonical
-    * view — and with it the canonical DIGEST — exactly; the caller
-    * re-stamps after the swap (the publish replaces the directory the
-    * manifest lived in) and manifest equality before/after is the spec's
+    * compacted base. `canon` takes the rows as read and drops `partCol`
+    * (a family whose slice label is data cannot compact). Every store
+    * `canon` is associative and idempotent, so compacting a prefix of the
+    * log preserves the overall canonical view — and with it the canonical
+    * DIGEST — exactly, and manifest equality before/after is the spec's
     * pin that compaction touched layout, never meaning. This is what
-    * keeps [[readVerifiedCanonical]]'s per-read merge bounded after a
-    * year of day appends: O(compactions-since) slices, not 365.
+    * keeps [[SliceLog.read]]'s per-read merge bounded after a year of day
+    * appends: O(compactions-since) slices, not 365.
     *
     * Crash recovery (round 14, the advisor's finding — the round-13
     * docstring over-claimed "crash-safe by construction"): the new
@@ -212,13 +205,10 @@ object DedupArtifacts {
     * sources mid-crash, double-counting summed counters (span_index).
     * The trade is the usual LSM one: a merged day can no longer be
     * RESTATED slice-wise (its rows lost their day identity) — compact
-    * behind the restatement horizon.
-    * `sliceKey` co-partitions rows WITHIN slices (the cell-major layout
-    * for IVF cells); without it each slice lands as one file (the
-    * segment-sketch convention). */
+    * behind the restatement horizon. */
   private[graft] def compactSlices(spark: SparkSession, path: String,
       partCol: String, upTo: Long, canon: DataFrame => DataFrame,
-      sliceKey: Option[String] = None): Boolean = {
+      sliceKey: Option[String]): Boolean = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -228,31 +218,19 @@ object DedupArtifacts {
     // a missing manifest is a half-built store (crash between the
     // initial family write and its first stamp) — compacting it would
     // launder unstamped data into a published layout
-    if (!fs.exists(new Path(manifestPath(path))))
-      sys.error(s"$path has no manifest — store half-built; rebuild the " +
-        "family (the manifest travels with compaction's publish, so a " +
-        "crashed compaction cannot leave this state)")
+    if (!fs.exists(new Path(manifestPath(path)))) noManifest(path)
     val raw = Tables.readParquet(spark, path)
     // distinct slice labels, never index rows — the bounded collect
     val nMerge = raw.select(partCol).distinct()
       .filter(col(partCol) <= upTo).count()
     if (nMerge <= 1) false
     else {
-      val merged = canon(raw.filter(col(partCol) <= upTo).drop(partCol))
+      val merged = canon(raw.filter(col(partCol) <= upTo))
         .withColumn(partCol, lit(upTo))
       val keep = raw.filter(col(partCol) > upTo)
         .withColumn(partCol, col(partCol).cast("long"))
-      val all = merged.unionByName(keep)
-      val repart = sliceKey match {
-        case Some(k) => all.repartition(
-          spark.sessionState.conf.numShufflePartitions, col(partCol), col(k))
-        case None => all.repartition(col(partCol))
-      }
-      val target = new Path(path)
-      val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tmp = new Path(target.getParent, "_" + target.getName + ".compact")
-      repart.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(tmp.toString)
+      writeSlices(merged.unionByName(keep), tmp.toString, partCol, sliceKey)
       // the canonical digest is invariant under compaction, so the
       // manifest is valid for the new layout — copy it INTO the staged
       // directory so the publish swap carries it atomically (underscore
@@ -269,8 +247,8 @@ object DedupArtifacts {
     * data parked under `_<name>.old` (the state a crash between
     * [[graft.sources.Export.publish]]'s two renames leaves). Returns
     * whether a restore happened; errors if the rename back fails. Shared
-    * by [[compactSlices]]'s entry and the store `recover()` prologues
-    * (round 14 — the advisor's recovery findings). */
+    * by [[compactSlices]]'s entry and [[SliceLog.recover]] (round 14 —
+    * the advisor's recovery findings). */
   private[graft] def restoreStranded(spark: SparkSession,
       path: String): Boolean = {
     import org.apache.hadoop.fs.Path
@@ -283,9 +261,10 @@ object DedupArtifacts {
     else true
   }
 
-  /** Whether a family is missing its `_graft_manifest.json` — the state a
-    * crash between a compaction's publish and its re-stamp leaves. An FS
-    * existence check, no Spark job. */
+  /** Whether a family directory exists without its `_graft_manifest.json`
+    * — a HALF-BUILT family (a crash between its initial write and its
+    * first stamp; compaction's publish carries the manifest, so it cannot
+    * leave this state). An FS existence check, no Spark job. */
   private[graft] def manifestMissing(spark: SparkSession,
       path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(manifestPath(path))
@@ -296,9 +275,8 @@ object DedupArtifacts {
   /** The slice labels present under a log-structured family — parsed
     * from the hive directory names (`partCol=N/`), an O(directories) FS
     * listing that schedules NO Spark job. This is the cadence policy's
-    * whole input ([[StreamArtifacts.compactIfNeeded]] /
-    * [[AnnArtifacts.compactIfNeeded]]): deciding whether to compact must
-    * stay free on the 364 nights it answers "no". */
+    * whole input ([[SliceLog.compactIfNeeded]]): deciding whether to
+    * compact must stay free on the 364 nights it answers "no". */
   private[graft] def sliceDays(spark: SparkSession, path: String,
       partCol: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -330,62 +308,27 @@ object DedupArtifacts {
     } finally pool.shutdown()
   }
 
-  /** [[readVerified]] for log-structured stores: verifies the CANONICAL
-    * digest (see [[refreshManifestCanonical]]) and hands back the RAW
-    * frame (partition column dropped) for the caller's view derivation. */
+  /** [[readVerified]] over a canonical view: verifies the digest of
+    * `canon` of the rows as read (see [[refreshManifest]]) and hands back
+    * the RAW rows, partition columns included, for the caller's view
+    * derivation. */
   private[graft] def readVerifiedCanonical(spark: SparkSession,
       path: String, expectParams: Map[String, String],
-      dropCol: String, canon: DataFrame => DataFrame): DataFrame = {
-    val (wantN, wantCk) = checkManifest(spark, path, expectParams)
-    val raw = Tables.readParquet(spark, path).drop(dropCol)
-    val c = canon(raw)
-    val row = c.agg(count(lit(1)).as("n"),
-      coalesce(expr(s"bit_xor(xxhash64(${c.columns.mkString(", ")}))"),
-        lit(0L)).as("ck")).head()
-    if (row.getLong(0) != wantN || row.getLong(1) != wantCk)
+      canon: DataFrame => DataFrame): DataFrame = {
+    val want = requireParams(spark, path, expectParams, "read")
+    val raw = Tables.readParquet(spark, path)
+    val got = digest(canon(raw))
+    if (got != want)
       sys.error(s"artifact $path failed verification: manifest says " +
-        s"(n_rows=$wantN, checksum=$wantCk), canonical view says " +
-        s"(n_rows=${row.getLong(0)}, checksum=${row.getLong(1)})")
+        s"(n_rows=${want._1}, checksum=${want._2}), files say " +
+        s"(n_rows=${got._1}, checksum=${got._2})")
     raw
   }
 
-  /** Parse the manifest and enforce `expectParams`; returns the recorded
-    * (n_rows, checksum). Shared by [[readVerified]] and
-    * [[readVerifiedCanonical]]. */
-  private def checkManifest(spark: SparkSession, path: String,
-      expectParams: Map[String, String]): (Long, Long) = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val (wantN, wantCk, recorded) = txt.trim match {
-      case manifestRe(n, c, ps) =>
-        val params = Option(ps).toSeq
-          .flatMap(s => paramRe.findAllMatchIn(s)
-            .map(m => m.group(1) -> m.group(2)))
-          .toMap
-        (n.toLong, c.toLong, params)
-      case other => sys.error(s"unparseable artifact manifest at $path: $other")
-    }
-    val mismatched = expectParams.filter { case (k, v) =>
-      !recorded.get(k).contains(v)
-    }
-    if (mismatched.nonEmpty)
-      sys.error(s"artifact $path geometry mismatch: reader expects " +
-        mismatched.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-          .mkString("(", ", ", ")") +
-        s", manifest records " +
-        (if (recorded.isEmpty) "no params (legacy manifest — rebuild the store)"
-         else recorded.toSeq.sorted.map { case (k, v) => s"$k=$v" }
-           .mkString("(", ", ", ")")))
-    (wantN, wantCk)
-  }
-
-  /** The manifest's recorded params, or None when no manifest exists yet
-    * (a store being initialized by its first append). */
-  private[graft] def manifestParams(spark: SparkSession,
-      path: String): Option[Map[String, String]] = {
+  /** The manifest, parsed: (n_rows, checksum, params), or None when the
+    * family has no manifest. The one reader of the manifest format. */
+  private def readManifest(spark: SparkSession,
+      path: String): Option[(Long, Long, Map[String, String])] = {
     val p = new org.apache.hadoop.fs.Path(manifestPath(path))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -394,33 +337,46 @@ object DedupArtifacts {
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       txt.trim match {
-        case manifestRe(_, _, ps) => Some(Option(ps).toSeq
-          .flatMap(s => paramRe.findAllMatchIn(s)
-            .map(m => m.group(1) -> m.group(2)))
-          .toMap)
+        case manifestRe(n, c, ps) => Some((n.toLong, c.toLong,
+          Option(ps).toSeq.flatMap(s => paramRe.findAllMatchIn(s)
+            .map(m => m.group(1) -> m.group(2))).toMap))
         case other =>
           sys.error(s"unparseable artifact manifest at $path: $other")
       }
     }
   }
 
-  /** The params handshake a store runs before an append or a re-stamp
-    * touches a family: the manifest must exist (a family without one is
-    * half-built, and stamping it would bless unverified rows) and record
-    * exactly `want` (re-stamping writes `want`, so an unchecked re-stamp
-    * would relabel rows built at another geometry). Fails with one line
-    * naming both sides; nothing is written. `store` names the store in
-    * the error, `op` the operation. */
+  /** The manifest's recorded params, or None when no manifest exists. */
+  private[graft] def manifestParams(spark: SparkSession,
+      path: String): Option[Map[String, String]] =
+    readManifest(spark, path).map(_._3)
+
+  /** The params HANDSHAKE every verified read, append and re-stamp runs
+    * before touching a family: the manifest must exist (a family without
+    * one is half-built, and stamping it would bless unverified rows) and,
+    * when `want` is non-empty, record exactly `want` (re-stamping writes
+    * `want`, so an unchecked re-stamp would relabel rows built at another
+    * geometry, and a read would reinterpret them). Fails with one line
+    * naming both sides and the fix; nothing is written. `op` names the
+    * operation. Returns the recorded (n_rows, checksum). */
   private[graft] def requireParams(spark: SparkSession, path: String,
-      want: Map[String, String], store: String, op: String): Unit = {
+      want: Map[String, String], op: String): (Long, Long) = {
     def show(ps: Map[String, String]) =
       ps.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")
-    val rec = manifestParams(spark, path).getOrElse(sys.error(
-      s"$store $path has no manifest — store half-built; rebuild the family"))
-    if (rec != want)
-      sys.error(s"$store $path geometry mismatch: $op expects ${show(want)}, " +
-        s"manifest records ${show(rec)}")
+    val (n, ck, rec) = readManifest(spark, path).getOrElse(noManifest(path))
+    if (want.nonEmpty && rec != want)
+      sys.error(s"artifact $path geometry mismatch: $op expects ${show(want)}" +
+        ", manifest records " +
+        (if (rec.isEmpty) "no params (legacy manifest)" else show(rec)) +
+        "; rebuild the family")
+    (n, ck)
   }
+
+  /** A family directory without a manifest is half-built: fail naming
+    * the fix. */
+  private[graft] def noManifest(path: String): Nothing =
+    sys.error(s"artifact $path has no manifest — store half-built; " +
+      "rebuild the family")
 
   private def manifestPath(path: String) = s"$path/_graft_manifest.json"
 
@@ -472,23 +428,13 @@ object DedupArtifacts {
     * the files and compare before handing the frame out — ONE narrow
     * O(artifact) pass, no shuffle; skipping it would let a lost part file
     * read as a clean smaller pair set. `expectParams` (when non-empty)
-    * must ALL be recorded in the manifest with the same values — a store
-    * built at one sketch geometry read under another is a silent
-    * wrong-answer path, so the mismatch (or a legacy manifest recording
-    * no params at all) fails fast naming both sides. */
+    * must be exactly the params the manifest records ([[requireParams]])
+    * — a store built at one sketch geometry read under another is a
+    * silent wrong-answer path, so the mismatch (or a legacy manifest
+    * recording no params at all) fails fast naming both sides. */
   def readVerified(spark: SparkSession, path: String,
-      expectParams: Map[String, String] = Map.empty): DataFrame = {
-    val (wantN, wantCk) = checkManifest(spark, path, expectParams)
-    val df = Tables.readParquet(spark, path)
-    val row = df.agg(count(lit(1)).as("n"),
-      coalesce(expr(s"bit_xor(xxhash64(${df.columns.mkString(", ")}))"),
-        lit(0L)).as("ck")).head()
-    if (row.getLong(0) != wantN || row.getLong(1) != wantCk)
-      sys.error(s"dedup artifact $path failed verification: manifest says " +
-        s"(n_rows=$wantN, checksum=$wantCk), files say " +
-        s"(n_rows=${row.getLong(0)}, checksum=${row.getLong(1)})")
-    df
-  }
+      expectParams: Map[String, String] = Map.empty): DataFrame =
+    readVerifiedCanonical(spark, path, expectParams, identity)
 
   /** Write the three candidate pair sets, one generator job at a time;
     * each manifest records its generator's build geometry

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Concurrency contract: serial order is PER FAMILY. The three stores
   * share no directory, so after the recovery prologue their chains run
   * concurrently ([[DedupArtifacts.concurrently]]), and inside the stream
-  * store the four families append, re-stamp and compact concurrently too.
+  * and ANN stores the families append, re-stamp and compact concurrently
+  * too (one [[SliceLog]] policy for both).
   * Within one store the chain keeps its order — append, re-stamp, then
   * the compaction policy — exactly the serialization
   * [[DedupArtifacts.compactSlices]] requires (a slice landing mid-compact
@@ -63,7 +64,7 @@ object Nightly {
   def runDay(spark: SparkSession, dayEpoch: Long,
       sketchRoot: String, streamRoot: String, annRoot: String,
       dayEvents: DataFrame, dayDocs: DataFrame, dayVectors: DataFrame,
-      maxSlices: Int = StreamArtifacts.DefaultMaxSlices): DataFrame = {
+      maxSlices: Int = SliceLog.DefaultMaxSlices): DataFrame = {
 
     // ---- recovery prologue (crashed previous run → consistent store)
     StreamArtifacts.recover(spark, streamRoot): Unit
@@ -95,7 +96,7 @@ object Nightly {
         SketchArtifacts.appendCmsDay(spark, sketchRoot, dayEpoch, dayEvents)
         SketchArtifacts.appendHllDay(spark, sketchRoot, dayEpoch, dayEvents)
       }
-      Seq("qsketch_day", "cms_day", "hll_day").zipWithIndex
+      SketchArtifacts.DayFamilies.zipWithIndex
         .map { case (f, i) =>
           (i + 1L, f, "append", nEvents,
             if (nEvents > 0L) sliceRows(sketchRoot, f, "day_epoch") else 0L,
@@ -129,7 +130,7 @@ object Nightly {
           protectFrom = dayEpoch))
     // the ANN index (D40's batch body)
     def annChain(): Seq[Step] =
-      indexChain(5L, "ann_index", annRoot, Seq("flat", "ivf_cells", "pq_codes"),
+      indexChain(5L, "ann_index", annRoot, AnnArtifacts.VectorFamilies,
         dayVectors, AnnArtifacts.appendDay(spark, annRoot, dayEpoch, dayVectors),
         AnnArtifacts.compactIfNeeded(spark, annRoot, maxSlices,
           protectFrom = dayEpoch))

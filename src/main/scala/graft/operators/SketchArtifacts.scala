@@ -31,10 +31,13 @@ import org.apache.spark.sql.functions._
   *   cms_day/        day_epoch, m        1/day × d·w         (B57's)
   *   hll_day/        day_epoch, regs     1/day × m longs     (B58's)
   * }}}
-  * The three day-grain families share the per-day APPEND path
-  * ([[appendQsketchDay]]/[[appendCmsDay]]/[[appendHllDay]]): day N's
-  * ingest swaps in only day N's slice, and append-built ≡ single-pass
-  * rebuild holds by manifest equality (ArtifactSpec).
+  * The three day-grain families are [[SliceLog]] families partitioned by
+  * `day_epoch`: their build, per-day APPEND
+  * ([[appendQsketchDay]]/[[appendCmsDay]]/[[appendHllDay]]), re-stamps
+  * and verified reads are the log's. Day N's ingest swaps in only day
+  * N's slice, and append-built ≡ single-pass rebuild holds by manifest
+  * equality (ArtifactSpec). Their digest keeps `day_epoch`, so they
+  * never compact.
   *
   * The registered B50/B51 queries stay inline (they measure the one-pass
   * build); the store is the deployment path for REPEAT consumers, its
@@ -56,6 +59,27 @@ object SketchArtifacts {
       "width" -> width.toString)
   private def qsketchParams(s: Int) =
     Map("family" -> "qsketch", "s" -> s.toString)
+
+  /** The three DAY-GRAIN families (round 11): each day's ingest leaves
+    * one fixed-size row per family behind, and any calendar roll-up
+    * (B56/B57/B58) is register arithmetic over the persisted rows. */
+  private[graft] val DayFamilies = Seq("qsketch_day", "cms_day", "hll_day")
+
+  /** A day family's [[SliceLog]] at the caller's geometry — one family
+    * per log, because each append, re-stamp and read states the geometry
+    * of its own family only. The canonical view is the rows as read,
+    * `day_epoch` included: the day label is data, so dropping it would
+    * let two days with equal registers cancel in the XOR digest. */
+  private def dayLog(root: String, family: String,
+      params: Map[String, String]): SliceLog =
+    SliceLog(root, "day_epoch",
+      Seq(SliceLog.Family(family, params, identity, None)))
+  private def qsketchLog(root: String, s: Int) =
+    dayLog(root, "qsketch_day", qsketchParams(s))
+  private def cmsDayLog(root: String, depth: Int, width: Int) =
+    dayLog(root, "cms_day", cmsParams(depth, width))
+  private def hllDayLog(root: String, m: Int) =
+    dayLog(root, "hll_day", hllParams(m))
 
   /** Build the store: one narrow pass per sketch family. The HLL segments
     * come off the SAME (month, customer) relation the inline B51 uses
@@ -89,18 +113,12 @@ object SketchArtifacts {
           .agg(expr(s"graft_cms_sketch_g(key, $depth, $width)").as("m"),
             count(lit(1)).as("n")),
         s"$root/cms_type", "event_type", cmsParams(depth, width)),
-      // the DAY-grain families (round 11): each day's ingest leaves one
-      // fixed-size row per family behind, and any calendar roll-up (B56/
-      // B57/B58) is register arithmetic over the persisted rows — all
-      // three appendable slice-by-slice via the append* entries below
       () => writeQsketchFamily(spark, dir, root, s),
-      () => DedupArtifacts.writePartitionedArtifact(
+      () => cmsDayLog(root, dayDepth, dayWidth).write(spark, _ =>
         Sketches.dayCmsSketchesOf(Sketches.dayValueKeys(spark, dir),
-          dayDepth, dayWidth),
-        s"$root/cms_day", "day_epoch", cmsParams(dayDepth, dayWidth)),
-      () => DedupArtifacts.writePartitionedArtifact(
-        Sketches.dayHllSketchesOf(Sketches.dayUsers(spark, dir), dayM),
-        s"$root/hll_day", "day_epoch", hllParams(dayM)))): Unit
+          dayDepth, dayWidth)),
+      () => hllDayLog(root, dayM).write(spark, _ =>
+        Sketches.dayHllSketchesOf(Sketches.dayUsers(spark, dir), dayM)))): Unit
     spark.catalog.clearCache()
   }
 
@@ -116,9 +134,26 @@ object SketchArtifacts {
 
   private def writeQsketchFamily(spark: SparkSession, dir: String,
       root: String, s: Int): Unit =
-    DedupArtifacts.writePartitionedArtifact(
-      Sketches.dayValueSketches(spark, dir, s),
-      s"$root/qsketch_day", "day_epoch", qsketchParams(s))
+    qsketchLog(root, s).write(spark, _ =>
+      Sketches.dayValueSketches(spark, dir, s))
+
+  /** The per-day slice swap shared by all three day-grain families
+    * ([[SliceLog.append]]: geometry handshake, then the replaceSlice
+    * write-new → rename publish, then the manifest re-stamp from the
+    * files). The first append into a family that does not exist yet
+    * stamps the EMPTY family's manifest (0 rows, digest 0, the append's
+    * geometry) before its slice lands, so the handshake — and a deferred
+    * re-stamp ([[restampQsketchDays]] & co.) — finds the geometry it must
+    * match; a family directory WITHOUT a manifest is half-built and fails
+    * the handshake. */
+  private def appendDaySlice(spark: SparkSession, log: SliceLog,
+      dayEpoch: Long, slice: DataFrame, restamp: Boolean): Unit = {
+    val family = log.families.head
+    val p = new org.apache.hadoop.fs.Path(s"${log.root}/${family.name}")
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      DedupArtifacts.writeManifest(spark, p.toString, 0L, 0L, family.params)
+    log.append(spark, dayEpoch, _ => slice, restamp)
+  }
 
   /** INCREMENTAL store maintenance (round 11): day N's ingest leaves ONLY
     * day N's 29 KiB sketch row behind — the deployment cadence B55's
@@ -136,31 +171,9 @@ object SketchArtifacts {
     * (a mixed-geometry store would be silently unreadable).
     *
     * `dayEvents` needs (ts, value); rows outside `dayEpoch` are filtered
-    * out by the slice swap (a mislabeled row can never leak in). */
-  /** The per-day slice swap shared by all three day-grain families:
-    * geometry handshake (fail fast BEFORE writing — a mixed-geometry
-    * store would be silently unreadable), then the replaceSlice
-    * write-new → rename publish, then the manifest re-stamp from the
-    * files (order-free row-set digest: append-built ≡ single-pass
-    * rebuild by manifest equality). The first append into a family that
-    * does not exist yet stamps the EMPTY family's manifest (0 rows,
-    * digest 0, the append's geometry) before its slice lands, so a
-    * deferred re-stamp ([[restampQsketchDays]] & co.) finds the geometry
-    * it must match; a family directory WITHOUT a manifest is half-built
-    * and fails the handshake. */
-  private def appendDaySlice(spark: SparkSession, root: String, sub: String,
-      dayEpoch: Long, slice: DataFrame, params: Map[String, String],
-      restamp: Boolean): Unit = {
-    val path = s"$root/$sub"
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      DedupArtifacts.writeManifest(spark, path, 0L, 0L, params)
-    DedupArtifacts.requireParams(spark, path, params, "sketch store", "append")
-    Etl.replaceSlice(spark, path, "day_epoch", dayEpoch.toString, slice)
-    if (restamp) DedupArtifacts.refreshManifest(spark, path, params)
-  }
-
-  /** `restamp = false` defers the manifest re-stamp: between the slice
+    * out by the slice swap (a mislabeled row can never leak in).
+    *
+    * `restamp = false` defers the manifest re-stamp: between the slice
     * swap and the re-stamp the store's data is ahead of its manifest, so
     * VERIFIED readers reject it (fail fast — never a wrong answer). A
     * caller appending SEVERAL days (the D37-39 streaming writers' one
@@ -173,8 +186,8 @@ object SketchArtifacts {
       s: Int = graft.functions.Kernels.QSketchS,
       restamp: Boolean = true): Unit = {
     graft.functions.Kernels.register(spark)
-    appendDaySlice(spark, root, "qsketch_day", dayEpoch,
-      Sketches.dayValueSketchesOf(dayEvents, s), qsketchParams(s), restamp)
+    appendDaySlice(spark, qsketchLog(root, s), dayEpoch,
+      Sketches.dayValueSketchesOf(dayEvents, s), restamp)
   }
 
   /** [[appendQsketchDay]]'s sibling for the per-day CMS matrices
@@ -185,12 +198,12 @@ object SketchArtifacts {
       width: Int = Sketches.WeekCmsWidth,
       restamp: Boolean = true): Unit = {
     graft.functions.Kernels.register(spark)
-    appendDaySlice(spark, root, "cms_day", dayEpoch,
+    appendDaySlice(spark, cmsDayLog(root, depth, width), dayEpoch,
       Sketches.dayCmsSketchesOf(dayEvents.select(
         expr("ts div 86400000000000").as("day_epoch"),
         floor(col("value")).cast("long").cast("string").as("key")),
         depth, width),
-      cmsParams(depth, width), restamp)
+      restamp)
   }
 
   /** [[appendQsketchDay]]'s sibling for the per-day HLL register vectors
@@ -199,39 +212,32 @@ object SketchArtifacts {
       dayEvents: DataFrame, m: Int = Sketches.WeekHllM,
       restamp: Boolean = true): Unit = {
     graft.functions.Kernels.register(spark)
-    appendDaySlice(spark, root, "hll_day", dayEpoch,
+    appendDaySlice(spark, hllDayLog(root, m), dayEpoch,
       Sketches.dayHllSketchesOf(dayEvents.select(
         expr("ts div 86400000000000").as("day_epoch"), col("user_id")), m),
-      hllParams(m), restamp)
+      restamp)
   }
 
   /** The deferred manifest re-stamps paired with `restamp = false`
     * appends — one per family, each ONE order-free O(store) digest pass
     * (append-built ≡ rebuild stays pinned by manifest equality). Each
-    * first runs the append's handshake: the family's manifest must exist
-    * and record exactly the caller's geometry, else the re-stamp fails
-    * naming both sides and leaves the manifest as it was — re-stamping
-    * unchecked would relabel registers built at another geometry, or
-    * bless a half-built family. */
+    * first runs the append's handshake ([[SliceLog.restamp]]): the
+    * family's manifest must exist and record exactly the caller's
+    * geometry, else the re-stamp fails naming both sides and leaves the
+    * manifest as it was — re-stamping unchecked would relabel registers
+    * built at another geometry, or bless a half-built family. */
   def restampQsketchDays(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS): Unit =
-    restampFamily(spark, s"$root/qsketch_day", qsketchParams(s))
+    qsketchLog(root, s).restamp(spark)
 
   def restampCmsDays(spark: SparkSession, root: String,
       depth: Int = Sketches.WeekCmsDepth,
       width: Int = Sketches.WeekCmsWidth): Unit =
-    restampFamily(spark, s"$root/cms_day", cmsParams(depth, width))
+    cmsDayLog(root, depth, width).restamp(spark)
 
   def restampHllDays(spark: SparkSession, root: String,
       m: Int = Sketches.WeekHllM): Unit =
-    restampFamily(spark, s"$root/hll_day", hllParams(m))
-
-  private def restampFamily(spark: SparkSession, path: String,
-      params: Map[String, String]): Unit = {
-    DedupArtifacts.requireParams(spark, path, params, "sketch store",
-      "re-stamp")
-    DedupArtifacts.refreshManifest(spark, path, params)
-  }
+    hllDayLog(root, m).restamp(spark)
 
   private def daySliceOf(spark: SparkSession, dir: String,
       dayEpoch: Long): DataFrame =
@@ -265,8 +271,7 @@ object SketchArtifacts {
     * n) surface. */
   def qsketchDays(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS): DataFrame =
-    DedupArtifacts.readVerified(spark, s"$root/qsketch_day",
-        qsketchParams(s))
+    qsketchLog(root, s).read(spark, "qsketch_day")
       .select(col("day_epoch").cast("long").as("day_epoch"),
         col("regs"), col("n"))
 
@@ -321,14 +326,13 @@ object SketchArtifacts {
   def cmsDays(spark: SparkSession, root: String,
       depth: Int = Sketches.WeekCmsDepth,
       width: Int = Sketches.WeekCmsWidth): DataFrame =
-    DedupArtifacts.readVerified(spark, s"$root/cms_day",
-        cmsParams(depth, width))
+    cmsDayLog(root, depth, width).read(spark, "cms_day")
       .select(col("day_epoch").cast("long").as("day_epoch"), col("m"))
 
   /** Manifest-verified per-day HLL register vectors (built at `m`). */
   def hllDays(spark: SparkSession, root: String,
       m: Int = Sketches.WeekHllM): DataFrame =
-    DedupArtifacts.readVerified(spark, s"$root/hll_day", hllParams(m))
+    hllDayLog(root, m).read(spark, "hll_day")
       .select(col("day_epoch").cast("long").as("day_epoch"), col("regs"))
 
   /** B57 answered FROM THE STORE: the merged week matrices come from the

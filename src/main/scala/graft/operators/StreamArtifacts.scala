@@ -34,10 +34,13 @@ import org.apache.spark.sql.functions._
   * span counters summed across slices (doc sets are disjoint across
   * ingest days, so per-slice distinct-doc counts ADD exactly).
   *
-  * Manifest contract: the digest is over the CANONICAL view
-  * ([[DedupArtifacts.refreshManifestCanonical]]), so an append-built
-  * store is MANIFEST-EQUAL to a single-pass rebuild over the union
-  * corpus — append ≡ rebuild pinned by manifest equality (ArtifactSpec),
+  * The store is a [[SliceLog]] of these four families: it declares
+  * them and delegates append, re-stamp, compaction, recovery and the
+  * verified read. Manifest contract: the digest is over the CANONICAL
+  * view (each family's `canon` drops `ingest_day` and merges), so an
+  * append-built store is MANIFEST-EQUAL to a single-pass rebuild over
+  * the union corpus — append ≡ rebuild pinned by manifest equality
+  * (ArtifactSpec),
   * exactly the sketch store's contract. The hot append path
   * (`restamp = false`) is O(day): slice signatures + one slice swap; the
   * nightly re-stamp is one narrow O(index) digest pass — index bytes,
@@ -71,12 +74,6 @@ object StreamArtifacts {
   val Families: Seq[String] =
     Seq("incr_hash", "incr_sigs", "gram_index", "span_index")
 
-  /** [[compactIfNeeded]]'s default slice-count threshold — see its
-    * scaladoc for the measured derivation. Shared with
-    * [[AnnArtifacts.compactIfNeeded]] (the ANN curve's knee is the same
-    * order: 17 slices read 1.7×). */
-  val DefaultMaxSlices: Int = 16
-
   private def splitParams(family: String) = Map(
     "family" -> family,
     "incr_mod" -> graft.sources.Feeds.IncrMod.toString,
@@ -94,32 +91,6 @@ object StreamArtifacts {
         splitParams(family) + ("schema_version" -> GramSchemaVersion)
       case _ => splitParams(family)
     }
-
-  /** The params handshake every verified read, append and re-stamp runs
-    * before touching a family: the manifest must exist and record exactly
-    * [[familyParams]]. A family whose `schema_version` differs (a v1 hex
-    * gram store records none) gets the one-line rebuild instruction. */
-  private def requireParams(spark: SparkSession, root: String,
-      family: String): Unit = {
-    val path = s"$root/$family"
-    // a MISSING manifest fails too (round 14, the AnnArtifacts.appendDay
-    // rule applied store-wide): absent manifest = half-built store or a
-    // crashed compaction before its re-stamp — never a license to skip
-    // the split handshake
-    val rec = DedupArtifacts.manifestParams(spark, path)
-      .getOrElse(sys.error(s"stream index $path has no manifest — " +
-        "store half-built or a compaction crashed before its re-stamp; " +
-        "run recover()"))
-    val want = familyParams(family)
-    if (rec.get("schema_version") != want.get("schema_version"))
-      sys.error(s"stream index $path schema_version mismatch: expects " +
-        s"schema_version=${want.getOrElse("schema_version", "none")}, " +
-        s"store records ${rec.getOrElse("schema_version", "none")}; " +
-        "rebuild the family (StreamArtifacts.write)")
-    if (rec != want)
-      sys.error(s"stream index $path params mismatch: expects $want, " +
-        s"store records $rec")
-  }
 
   // ---- the raw per-slice relations (an O(slice) signature pass each)
 
@@ -168,31 +139,25 @@ object StreamArtifacts {
     case "span_index" => spanRows(spark, docs)
   }
 
-  private def restampFamily(spark: SparkSession, root: String,
-      family: String): Unit =
-    DedupArtifacts.refreshManifestCanonical(spark, s"$root/$family",
-      familyParams(family), "ingest_day", canon(family))
+  /** The store's slice log: every family drops `ingest_day` before its
+    * canonical merge, so an append-built family digests as a rebuild. */
+  private def log(root: String): SliceLog = SliceLog(root, "ingest_day",
+    Families.map(f => SliceLog.Family(f, familyParams(f),
+      raw => canon(f)(raw.drop("ingest_day")), None)))
 
   /** Build the store from explicit doc frames — `standingDocs` feeds the
     * split-scoped families, `spanDocs` the whole-corpus span universe
     * (the D34 convention). Everything lands as `ingest_day=0`; each
     * family's manifest digests the canonical view. The four families
     * share no directory and read only the doc frames, so they build
-    * concurrently ([[DedupArtifacts.concurrently]]), each in its own
-    * order (write, then the canonical digest from the files, then the
-    * manifest); the session cache is cleared once, after all four (the
-    * [[compact]] rule). */
+    * concurrently ([[SliceLog.write]]); the session cache is cleared
+    * once, after all four. */
   def writeFrom(spark: SparkSession, standingDocs: DataFrame,
       spanDocs: DataFrame, root: String): Unit = {
     graft.functions.Kernels.register(spark)
-    DedupArtifacts.concurrently(Families.map(f => () => {
-      val docs = if (f == "span_index") spanDocs else standingDocs
-      val rows = slices(f, spark, docs).withColumn("ingest_day", lit(0L))
-      rows.repartition(col("ingest_day"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("ingest_day").parquet(s"$root/$f")
-      restampFamily(spark, root, f)
-    })): Unit
+    log(root).write(spark, f =>
+      slices(f, spark, if (f == "span_index") spanDocs else standingDocs)
+        .withColumn("ingest_day", lit(0L)))
     spark.catalog.clearCache()
   }
 
@@ -209,139 +174,57 @@ object StreamArtifacts {
 
   /** The nightly cadence: day `dayEpoch`'s ADMITTED docs (doc_id, text,
     * source) append to all four families — an O(day) signature pass plus
-    * one slice swap per family; the standing corpus is never re-read.
-    * Every family's manifest params are checked BEFORE any slice lands
-    * (the [[AnnArtifacts.appendDay]] rule), then the four slice swaps run
-    * concurrently — the families share no directory.
+    * one slice swap per family, after the params handshake over all four
+    * ([[SliceLog.append]]); the standing corpus is never re-read.
     * CONTRACT: an admitted doc is a NEW doc — its id must not already
     * exist in the store (the span counters sum per-slice distinct-doc
     * counts, which is exact only while ingest days partition the doc
     * universe; a re-ingested doc belongs in its original day's restated
-    * slice, not a new day).
-    * `restamp = false` defers the canonical re-stamp (the sketch-store
-    * device: a multi-day batch re-stamps once at the end via
-    * [[restamp]]); until the re-stamp, verified readers fail fast
-    * (data ahead of manifest — never a silent misread). Idempotent: a
-    * replayed or restated day replaces its own slice. */
+    * slice, not a new day). `restamp = false` defers the canonical
+    * re-stamp to one [[restamp]] per batch. */
   def appendDay(spark: SparkSession, root: String, dayEpoch: Long,
-      dayDocs: DataFrame, restamp: Boolean = true): Unit = {
-    Families.foreach(requireParams(spark, root, _))
-    DedupArtifacts.concurrently(Families.map(f => () =>
-      Etl.replaceSlice(spark, s"$root/$f", "ingest_day", dayEpoch.toString,
-        slices(f, spark, dayDocs)))): Unit
-    if (restamp) this.restamp(spark, root)
-  }
+      dayDocs: DataFrame, restamp: Boolean = true): Unit =
+    log(root).append(spark, dayEpoch, slices(_, spark, dayDocs), restamp)
 
   /** The deferred canonical re-stamp for all four families — one narrow
-    * O(index) digest pass each (index bytes, never corpus text), the four
-    * run concurrently. Every family's recorded params are checked first
-    * (the [[appendDay]] rule): re-stamping writes [[familyParams]], so a
-    * v1 gram family re-stamped unchecked would carry `schema_version=2`
-    * over hex rows, and every gram would then read novel. */
-  def restamp(spark: SparkSession, root: String): Unit = {
-    Families.foreach(requireParams(spark, root, _))
-    DedupArtifacts.concurrently(
-      Families.map(f => () => restampFamily(spark, root, f))): Unit
-  }
+    * O(index) digest pass each (index bytes, never corpus text), after
+    * the params handshake ([[SliceLog.restamp]]): re-stamping writes
+    * [[familyParams]], so a v1 gram family re-stamped unchecked would
+    * carry `schema_version=2` over hex rows, and every gram would then
+    * read novel. */
+  def restamp(spark: SparkSession, root: String): Unit =
+    log(root).restamp(spark)
 
   /** SLICE COMPACTION (round 13 — the verdict's unbounded-slice-count
     * fix): merge every day slice with `ingest_day ≤ upToDay` into ONE
     * slice holding the CANONICAL merge of their rows (min-partner per
     * hash, distinct grams, summed span counters — each family's `canon`
-    * is associative, so compacting a prefix of the log preserves the
-    * overall canonical view exactly), labeled `ingest_day = upToDay`.
-    * Slices above `upToDay` are untouched, so the nightly append cadence
-    * continues against the compacted base. After a year of appends this
-    * is what keeps [[DedupArtifacts.readVerifiedCanonical]]'s per-read
+    * is associative, so the canonical view and its manifest are
+    * invariant). After a year of appends this is what keeps the per-read
     * merge bounded: it re-merges O(compactions-since) slices, not 365.
-    *
-    * Readers see the old slices or the new, never a mix (the rename
-    * publish), and a CRASHED run is repaired by re-running compact():
-    * [[DedupArtifacts.compactSlices]] restores a family stranded
-    * mid-publish on entry. The manifest TRAVELS WITH the swap (round 15
-    * — compactSlices copies it into the staged layout, valid because
-    * the canonical digest is invariant under compaction), so there is
-    * no post-publish re-stamp and no missing-manifest crash window:
-    * manifest equality before/after compaction holds by construction,
-    * and a compaction that ever broke the canonical merge would FAIL
-    * the next verified read against the pre-compaction manifest
-    * instead of being silently adopted by a re-stamp. The four families
-    * compact concurrently, and the session cache is cleared once, after
-    * all of them. Must be SERIALIZED with appends (the whole-family swap
-    * would drop a slice landing mid-compact — see compactSlices's
-    * concurrency note); [[Nightly.runDay]] is the sequenced cadence. */
+    * See [[SliceLog.compact]] for the publish, crash and serialization
+    * contract. */
   def compact(spark: SparkSession, root: String, upToDay: Long): Unit =
-    if (DedupArtifacts.concurrently(Families.map(f => () =>
-        DedupArtifacts.compactSlices(spark, s"$root/$f", "ingest_day",
-          upToDay, canon(f)))).contains(true))
-      spark.catalog.clearCache()
+    log(root).compact(spark, upToDay)
 
-  /** CRASH-RECOVERY PROLOGUE (round 14 — the advisor's findings made an
-    * operation; TIGHTENED round 15): repair the one writer-crash state a
-    * maintenance run can leave — a directory stranded mid-publish
-    * (target gone, data under `_<family>.old`) is renamed back. A
-    * MISSING manifest is no longer repairable here: the manifest
-    * travels with compaction's publish (compactSlices copies it into
-    * the staged layout), so absence unambiguously means a HALF-BUILT
-    * store — a crash between the initial family write and its first
-    * stamp, possibly under DIFFERENT params than this deployment
-    * asserts — and re-stamping it with the caller's params would bless
-    * unverified data (the round-14 advisor's exact concern). recover()
-    * FAILS on that state; the repair is a rebuild. FS operations only,
-    * no Spark job. Returns whether anything was restored.
-    * [[Nightly.runDay]] and the D40 epilogue run this first. */
+  /** The crash-recovery prologue ([[SliceLog.recover]]): restores a
+    * family stranded mid-publish, FAILS on a half-built one.
+    * [[Nightly.runDay]] runs this first. */
   def recover(spark: SparkSession, root: String): Boolean =
-    Families.map { f =>
-      val restored = DedupArtifacts.restoreStranded(spark, s"$root/$f")
-      if (DedupArtifacts.manifestMissing(spark, s"$root/$f"))
-        sys.error(s"stream index $root/$f has no manifest — store " +
-          "half-built (a crashed compaction cannot leave this state: " +
-          "the manifest travels with its publish); rebuild the family")
-      restored
-    }.exists(identity)
+    log(root).recover(spark)
 
-  /** Compact when the log has grown past `maxSlices` day slices — the
-    * CADENCE POLICY (round 14; the verdict's "WHO triggers compaction is
-    * still the operator" gap). The default threshold sits under
-    * SliceProbe's measured read-cost knee (SCALING_r13.md: 33 slices read
-    * 2.1× a single pass; 16 keeps the per-read merge comfortably below
-    * 2× while letting ~2 weeks of nightly appends ride between
-    * compactions — compaction itself is an O(index) rewrite, so firing
-    * it nightly would pay more than the reads it saves). The DECISION is
-    * an FS directory listing per family ([[DedupArtifacts.sliceDays]]) —
-    * no Spark job on the nights it answers "no". Compacts every family
-    * past the threshold and returns whether anything ran. Callers
-    * serialize it with appends ([[Nightly.runDay]]'s epilogue — the
-    * compactSlices concurrency contract). Under a steady daily feed this
-    * bounds the slice count at `maxSlices + 1` forever (the ScaleProbe
-    * `stream_index_cadence` pin).
-    *
-    * `protectFrom` is the REPLAY HORIZON — the oldest day the caller's
-    * crash-replay could re-append; only slices STRICTLY BELOW it merge.
-    * This matters: a replayed `appendDay(d)` REPLACES slice `d`, so if
-    * compaction had merged the whole log into slice `d`, the replay
-    * would overwrite the merged history with one day's rows. Batch
-    * maintainers pass their current day ([[Nightly.runDay]]); streaming
-    * maintainers pass their micro-batch's min day (a dropped commit
-    * replays exactly the uncommitted epoch, never earlier ones —
-    * [[graft.streaming.AnnStoreStream]]). The compacted slice then keeps
-    * a label no replay can touch. */
+  /** Compact when the log has grown past `maxSlices` day slices, merging
+    * only slices below the `protectFrom` replay horizon — the cadence
+    * policy ([[SliceLog.compactIfNeeded]]). */
   def compactIfNeeded(spark: SparkSession, root: String,
-      maxSlices: Int = DefaultMaxSlices,
-      protectFrom: Long = Long.MaxValue): Boolean = {
-    val days = Families.map(f =>
-      DedupArtifacts.sliceDays(spark, s"$root/$f", "ingest_day"))
-    val mergeable = days.flatten.distinct.filter(_ < protectFrom)
-    if (days.map(_.length).max <= maxSlices || mergeable.size <= 1) false
-    else { compact(spark, root, mergeable.max); true }
-  }
+      maxSlices: Int = SliceLog.DefaultMaxSlices,
+      protectFrom: Long = Long.MaxValue): Boolean =
+    log(root).compactIfNeeded(spark, maxSlices, protectFrom)
 
+  // every reader merges the slices itself, so the label is dropped
   private def rawVerified(spark: SparkSession, root: String,
-      family: String): DataFrame = {
-    requireParams(spark, root, family)
-    DedupArtifacts.readVerifiedCanonical(spark, s"$root/$family",
-      familyParams(family), "ingest_day", canon(family))
-  }
+      family: String): DataFrame =
+    log(root).read(spark, family).drop("ingest_day")
 
   /** D18's exact-dup index (h, exact_partner), manifest- and
     * split-verified; the partner is the min admitted doc per hash across

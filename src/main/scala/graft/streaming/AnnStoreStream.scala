@@ -57,7 +57,7 @@ object AnnStoreStream {
       k: Int = graft.operators.EmbeddingOps.IvfK,
       pqK: Int = graft.operators.EmbeddingOps.PqK,
       trigger: Trigger = Trigger.AvailableNow(),
-      maxSlices: Int = graft.operators.StreamArtifacts.DefaultMaxSlices)
+      maxSlices: Int = graft.operators.SliceLog.DefaultMaxSlices)
       : StreamingQuery =
     vectors.writeStream
       .outputMode("append")

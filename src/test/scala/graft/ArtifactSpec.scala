@@ -1002,53 +1002,67 @@ class ArtifactSpec extends SparkSpec {
   }
 
   test("store recovery: stranded publish restored, missing manifest FAILS") {
-    import operators.StreamArtifacts
+    import operators.{AnnArtifacts, StreamArtifacts}
     graft.functions.Kernels.register(spark)
-    val r = tmpDir("graft-recover-")
-    StreamArtifacts.write(spark, sf, r)
-    val mPath = java.nio.file.Paths.get(s"$r/incr_hash/_graft_manifest.json")
     val sp = spark
     import sp.implicits._
     val day = Seq((91000000001L, (1 to 30).map(i => s"rrx$i").mkString(" "),
       "synth")).toDF("doc_id", "text", "source")
-    // nothing to repair on a healthy store
-    assert(!StreamArtifacts.recover(spark, r))
-    // the manifest TRAVELS WITH compaction's publish (round 15): after a
-    // real multi-slice compaction the manifest is present and byte-equal
-    // IMMEDIATELY after the swap — there is no re-stamp window a crash
-    // could land in
-    StreamArtifacts.appendDay(spark, r, 1L, day)
-    val m1 = java.nio.file.Files.readString(mPath)
-    StreamArtifacts.compact(spark, r, 1L)
-    assert(java.nio.file.Files.readString(mPath) == m1,
-      "compaction's publish did not carry the manifest through")
-    // a missing manifest is now unambiguously a HALF-BUILT store (crash
-    // between the initial family write and its first stamp, params
-    // unknown): the append handshake fails fast, recover() REFUSES to
-    // bless it with caller-asserted params (the round-14 advisor's
-    // finding), and compact() refuses to launder it into a publish
-    java.nio.file.Files.delete(mPath)
-    val e = intercept[RuntimeException](
-      StreamArtifacts.appendDay(spark, r, 9L, day))
-    assert(e.getMessage.contains("no manifest"), e.getMessage)
-    val e2 = intercept[RuntimeException](StreamArtifacts.recover(spark, r))
-    assert(e2.getMessage.contains("half-built"), e2.getMessage)
-    val e3 = intercept[RuntimeException](
-      StreamArtifacts.compact(spark, r, 9L))
-    assert(e3.getMessage.contains("no manifest"), e3.getMessage)
-    // the rebuild-analog for the test: restore the known-good manifest
-    java.nio.file.Files.writeString(mPath, m1): Unit
-    // crash-mid-publish: the family dir is staged out under _<f>.old —
-    // recover() renames it back, manifest intact inside
-    val famDir = java.nio.file.Paths.get(s"$r/incr_hash")
-    val oldDir = java.nio.file.Paths.get(s"$r/_incr_hash.old")
-    java.nio.file.Files.move(famDir, oldDir)
-    assert(StreamArtifacts.recover(spark, r))
-    assert(java.nio.file.Files.exists(mPath) &&
-      java.nio.file.Files.readString(mPath) == m1,
-      "stranded family not restored")
-    assert(!StreamArtifacts.recover(spark, r))
-    spark.catalog.clearCache(): Unit
+    val dayVectors = sources.Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 7 === 0)
+      .select((col("vec_id") + 91000000000L).as("vec_id"), col("label"),
+        col("embedding"))
+    // every slice-log store takes the same scenario: (store, the family
+    // the crash hits, build, day append, compact, recover)
+    val stores = Seq[(String, String, String => Unit, (String, Long) => Unit,
+        (String, Long) => Unit, String => Boolean)](
+      ("stream", "incr_hash", StreamArtifacts.write(spark, sf, _),
+        (r, d) => StreamArtifacts.appendDay(spark, r, d, day),
+        StreamArtifacts.compact(spark, _, _), StreamArtifacts.recover(spark, _)),
+      ("ann", "flat", AnnArtifacts.write(spark, sf, _),
+        (r, d) => AnnArtifacts.appendDay(spark, r, d, dayVectors),
+        AnnArtifacts.compact(spark, _, _), AnnArtifacts.recover(spark, _)))
+    for ((store, fam, build, appendDay, compact, recover) <- stores) {
+      val r = tmpDir(s"graft-recover-$store-")
+      build(r)
+      val mPath = java.nio.file.Paths.get(s"$r/$fam/_graft_manifest.json")
+      // nothing to repair on a healthy store
+      assert(!recover(r), store)
+      // the manifest TRAVELS WITH compaction's publish (round 15): after a
+      // real multi-slice compaction the manifest is present and byte-equal
+      // IMMEDIATELY after the swap — there is no re-stamp window a crash
+      // could land in
+      appendDay(r, 1L)
+      val m1 = java.nio.file.Files.readString(mPath)
+      compact(r, 1L)
+      assert(java.nio.file.Files.readString(mPath) == m1,
+        s"$store: compaction's publish did not carry the manifest through")
+      // a missing manifest is now unambiguously a HALF-BUILT store (crash
+      // between the initial family write and its first stamp, params
+      // unknown): the append handshake fails fast, recover() REFUSES to
+      // bless it with caller-asserted params (the round-14 advisor's
+      // finding), and compact() refuses to launder it into a publish
+      java.nio.file.Files.delete(mPath)
+      val e = intercept[RuntimeException](appendDay(r, 9L))
+      assert(e.getMessage.contains("no manifest"), s"$store: ${e.getMessage}")
+      val e2 = intercept[RuntimeException](recover(r))
+      assert(e2.getMessage.contains("half-built"), s"$store: ${e2.getMessage}")
+      val e3 = intercept[RuntimeException](compact(r, 9L))
+      assert(e3.getMessage.contains("no manifest"), s"$store: ${e3.getMessage}")
+      // the rebuild-analog for the test: restore the known-good manifest
+      java.nio.file.Files.writeString(mPath, m1): Unit
+      // crash-mid-publish: the family dir is staged out under _<f>.old —
+      // recover() renames it back, manifest intact inside
+      val famDir = java.nio.file.Paths.get(s"$r/$fam")
+      val oldDir = java.nio.file.Paths.get(s"$r/_$fam.old")
+      java.nio.file.Files.move(famDir, oldDir)
+      assert(recover(r), store)
+      assert(java.nio.file.Files.exists(mPath) &&
+        java.nio.file.Files.readString(mPath) == m1,
+        s"$store: stranded family not restored")
+      assert(!recover(r), store)
+      spark.catalog.clearCache()
+    }
   }
 
   test("nightly runner: 3 composed days, sane report, crash-replay idempotent") {

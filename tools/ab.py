@@ -15,8 +15,12 @@ Per end-to-end metric of the change's BENCHMARK.json it prints each side's
 median and q1-q3, the pairs the change wins and loses, the median pair ratio
 (change / parent), whether the gain rule holds (at least 9 of 10 pairs won,
 at least 10 pairs, and a median gap larger than the parent's q1-q3 spread),
-and whether the change's median stays inside the metric's bound. Every run
-that reports `correct: false` or `failed > 0`, or exits non-zero, is listed.
+and whether the change's median stays inside the metric's bound. A metric
+whose parent q1-q3 spread, relative to the parent's median, is wider than its
+bound is reported as unresolved instead, unless every change run beats every
+parent run: such a spread cannot tell a change inside the bound from one
+outside it. Every run that reports `correct: false` or `failed > 0`, or exits
+non-zero, is listed.
 """
 import argparse
 import json
@@ -67,11 +71,21 @@ def summarize(metric, pairs):
     gap = (pq[1] - cq[1]) if lower else (cq[1] - pq[1])
     gain = len(both) >= 10 and wins >= 0.9 * len(both) and gap > pq[2] - pq[0]
     worse = (cq[1] / pq[1] - 1 if lower else 1 - cq[1] / pq[1]) if pq[1] else 0.0
+    spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else 0.0
+    beats_all = max(chg) < min(par) if lower else min(chg) > max(par)
     return {"metric": name, "pairs": len(both), "parent": pq, "change": cq,
             "wins": wins, "losses": losses,
             "median_ratio": statistics.median(ratios) if ratios else None,
             "gain_rule": gain, "worse_frac": worse,
-            "in_bound": worse <= metric["bound"], "bound": metric["bound"]}
+            "in_bound": worse <= metric["bound"], "bound": metric["bound"],
+            "spread": spread,
+            "unresolved": spread > metric["bound"] and not beats_all}
+
+
+def verdict(s):
+    if s["unresolved"]:
+        return "unresolved: the parent's q1-q3 spread is wider than the bound"
+    return f"{'inside' if s['in_bound'] else 'OUTSIDE'} its bound"
 
 
 def main():
@@ -116,9 +130,10 @@ def main():
               f"change won {s['wins']}, lost {s['losses']}; "
               f"median pair ratio {fmt(s['median_ratio']) if s['median_ratio'] else 'n/a'}; "
               f"gain rule {'holds' if s['gain_rule'] else 'does not hold'}; "
-              f"{'inside' if s['in_bound'] else 'OUTSIDE'} its bound "
+              f"{verdict(s)} "
               f"(median {fmt(abs(100 * s['worse_frac']))}% "
               f"{'worse' if s['worse_frac'] > 0 else 'better or equal'}, "
+              f"parent spread {fmt(100 * s['spread'])}%, "
               f"bound {fmt(100 * s['bound'])}%)")
     for seed, side, r in bad:
         what = r.get("error") or f"correct={r['correct']} failed={r['failed']}"
