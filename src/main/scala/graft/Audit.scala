@@ -428,8 +428,8 @@ object Audit {
     * components, ∝ fixed iters for k-means/PCA). Nothing in a PLAN pins
     * that: a convergence regression (a loop that stops shrinking its
     * frontier, an iters constant accidentally scaled with the data) shows
-    * up ONLY as job count. The gate EXECUTES each listed query under a
-    * job-counting listener and flags when the count exceeds its vetted
+    * up ONLY as job count. The gate EXECUTES each listed query, counts its
+    * jobs with [[jobsOf]] and flags when the count exceeds its vetted
     * bound (measured at sf0.01 + headroom for AQE's runtime re-plans; the
     * loop structure, not the data volume, drives these counts). */
   val iterativeJobBounds: Map[String, Int] = Map(
@@ -452,42 +452,16 @@ object Audit {
     // q_dedup_components; the length-bias roll-up adds its own few jobs)
     "q_dup_length_bias" -> 110)
 
-  /** Count Spark jobs spawned by materializing `df` through the noop
-    * sink (the deployment action shape). Listener delivery is async —
-    * spin-settle like SkewProbe's MaxTask. */
-  private[graft] object JobCount
-      extends org.apache.spark.scheduler.SparkListener {
-    private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile private var registered = false
-    def ensure(spark: SparkSession): Unit = synchronized {
-      if (!registered) {
-        spark.sparkContext.addSparkListener(this); registered = true
-      }
-    }
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      n.incrementAndGet()
-    private def settle(): Int = {
-      var prev = -1; var cur = n.get(); var spins = 0
-      while (cur != prev && spins < 20) {
-        Thread.sleep(50); prev = cur; cur = n.get(); spins += 1
-      }
-      cur
-    }
-    def reset(): Unit = { settle(); n.set(0) }
-    def value(): Int = settle()
-  }
-
-  /** `mk` is BY-NAME: an iterative operator runs its driver loop while
-    * CONSTRUCTING the frame (each round an action), so the count must
-    * bracket construction + materialization, not materialization alone. */
+  /** Count the Spark jobs of constructing `mk` and materializing it
+    * through the noop sink (the deployment action shape), exactly, with
+    * [[graft.obs.Meter]]. `mk` is BY-NAME: an iterative operator runs its
+    * driver loop while CONSTRUCTING the frame (each round an action), so
+    * the count must bracket construction + materialization, not
+    * materialization alone. */
   private[graft] def jobsOf(spark: SparkSession,
-      mk: => org.apache.spark.sql.DataFrame): Int = {
-    JobCount.ensure(spark)
-    JobCount.reset()
-    mk.write.format("noop").mode("overwrite").save()
-    JobCount.value()
-  }
+      mk: => org.apache.spark.sql.DataFrame): Int =
+    graft.obs.Meter.measure(spark)(
+      mk.write.format("noop").mode("overwrite").save()).jobs
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

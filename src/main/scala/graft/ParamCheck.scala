@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-import graft.operators.EmbeddingOps
+import graft.operators.{DedupArtifacts, EmbeddingOps}
 
 /** Dev tool: proves the operator ↔ oracle PARAMETER coupling on
   * NON-DEFAULT arguments (the ANN family plus every later parameterized
@@ -209,14 +209,7 @@ object ParamCheck {
       spark.catalog.clearCache()
       // a variant's staged stores are dead once its output parquet is
       // written — reclaim instead of accumulating one per run
-      tempRoots.foreach { r =>
-        import scala.jdk.CollectionConverters._
-        val p = java.nio.file.Paths.get(r)
-        if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      tempRoots.foreach(DedupArtifacts.deleteRoot)
       tempRoots.clear()
     }
     def q(s: String): String = "\"" + s.flatMap {

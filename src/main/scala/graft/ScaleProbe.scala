@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import graft.operators.DedupArtifacts.deleteRoot
 
 /** Scaling-curve harness (dev main): MEASURE the 100 TB story instead of
   * arguing it from plan shapes. Inflates the corpus tables 2×/4×/8× into
@@ -159,7 +160,7 @@ object ScaleProbe {
   val FloorSec = 0.3
   /** Work (aggregate task-time) gate: 2× headroom over linear, 2 s floor —
     * the work curve is the honest signal on local[32], where idle cores
-    * absorb growing work without moving wall time (see [[Work]]). */
+    * absorb growing work without moving wall time (see [[timeOnce]]). */
   val WorkMaxRatio: Double = 2.0 * Scales.last.toDouble / Scales.head
   val WorkFloorSec = 2.0
 
@@ -220,14 +221,14 @@ object ScaleProbe {
       col("c_name"), col("c_nationkey"), col("c_acctbal"),
       col("c_mktsegment"))
 
-  /** Write the k×-inflated corpus under `outDir`. Raw `spark.read` (not the
-    * normalizing loaders) so the events ts column round-trips in its file
-    * encoding and the inflated dir presents the same surface as a driver
-    * dir. */
+  /** Write the k×-inflated corpus under `outDir`. Raw reads
+    * ([[graft.sources.Tables.readParquet]], not the normalizing loaders) so
+    * the events ts column round-trips in its file encoding and the
+    * inflated dir presents the same surface as a driver dir. */
   def inflate(spark: SparkSession, baseDir: String, outDir: String,
       k: Int): Unit = {
     def write(name: String, rep: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$baseDir/$name.parquet")
+      val base = graft.sources.Tables.readParquet(spark, s"$baseDir/$name.parquet")
       (0 until k).map(rep(base, _)).reduce(_ unionAll _)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     }
@@ -243,70 +244,35 @@ object ScaleProbe {
     // (B45's per-part window partitions, B44's per-type revenue), which
     // is exactly the hard direction the probes should measure.
     for (name <- Seq("part", "supplier", "nation", "region")) {
-      spark.read.parquet(s"$baseDir/$name.parquet")
+      graft.sources.Tables.readParquet(spark, s"$baseDir/$name.parquet")
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    }
-  }
-
-  /** Aggregate executor task time, collected by listener. Wall time alone
-    * is a DISHONEST scale signal on local[32]: at the base scale the 32
-    * cores are mostly idle, so a work curve growing faster than the data
-    * hides behind filling cores until they saturate — a quadratic would
-    * only surface in wall time past that point. Task time measures the
-    * WORK curve directly. */
-  private object Work extends org.apache.spark.scheduler.SparkListener {
-    private val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    @volatile private var registered = false
-    def ensure(spark: SparkSession): Unit = synchronized {
-      if (!registered) { spark.sparkContext.addSparkListener(this); registered = true }
-    }
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) taskMs.addAndGet(m.executorRunTime)
-    }
-    /** Listener delivery is asynchronous — poll until the counter stops
-      * moving (bounded) so a snapshot never splits a query's tasks. */
-    def settled(): Long = {
-      var prev = -1L; var cur = taskMs.get(); var spins = 0
-      while (cur != prev && spins < 20) {
-        Thread.sleep(50); prev = cur; cur = taskMs.get(); spins += 1
-      }
-      cur
     }
   }
 
   /** One timed execution through the noop sink (the Bench contract:
     * materialize everything the query declares, start cache-cold).
-    * Returns (wall seconds, aggregate task seconds). */
+    * Returns (wall seconds, aggregate task seconds). Wall time alone is a
+    * DISHONEST scale signal on local[32]: at the base scale the 32 cores
+    * are mostly idle, so a work curve growing faster than the data hides
+    * behind filling cores until they saturate — a quadratic would only
+    * surface in wall time past that point. Aggregate task time measures
+    * the WORK curve directly. */
   private def timeOnce(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
       dir: String): (Double, Double) = {
-    Work.ensure(spark)
-    val w0 = Work.settled()
-    val t0 = System.nanoTime()
-    fn(spark, dir).write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val r = graft.obs.Meter.measure(spark)(
+      fn(spark, dir).write.format("noop").mode("overwrite").save())
     spark.catalog.clearCache()
     // build probes stage a fresh store per timed call — reclaim it the
     // moment its readout has materialized (the ParamCheck temp-root rule;
     // an 8x-corpus index dir per sample otherwise outlives the whole run)
     while (!scratchRoots.isEmpty) deleteRoot(scratchRoots.poll())
-    (wall, (Work.settled() - w0) / 1e3)
+    (r.wallSec, r.taskSec)
   }
 
   /** Per-timed-call store roots, drained (deleted) by [[timeOnce]] after
     * the measurement's readout materializes. */
   private val scratchRoots =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def deleteRoot(r: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(r)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-  }
 
   /** One persisted sketch store per probed dir (the consumer/build split:
     * `sketch_store_read`'s min-of-2 measures the artifact READ path). */
@@ -582,7 +548,7 @@ object ScaleProbe {
           ((s: SparkSession, d: String) => {
             graft.operators.AnnArtifacts.appendDay(s, annRootOf(s, d),
               SynthIngestDay, synthVecDay(s), restamp = false)
-            s.read.parquet(s"${annRootOf(s, d)}/flat")
+            graft.sources.Tables.readParquet(s, s"${annRootOf(s, d)}/flat")
               .filter(col("ingest_day") === SynthIngestDay)
               .groupBy().count()
           })) :+
@@ -590,7 +556,7 @@ object ScaleProbe {
           ((s: SparkSession, d: String) => {
             graft.operators.AnnArtifacts.appendDay(s, annRootOf(s, d),
               SynthIngestDay, synthVecDay(s), restamp = true)
-            s.read.parquet(s"${annRootOf(s, d)}/flat")
+            graft.sources.Tables.readParquet(s, s"${annRootOf(s, d)}/flat")
               .filter(col("ingest_day") === SynthIngestDay)
               .groupBy().count()
           })) :+
@@ -647,7 +613,7 @@ object ScaleProbe {
             val r = streamRootOf(s, d)
             graft.operators.StreamArtifacts.appendDay(s, r, SynthIngestDay,
               synthDay(s), restamp = false)
-            s.read.parquet(s"$r/incr_hash")
+            graft.sources.Tables.readParquet(s, s"$r/incr_hash")
               .filter(col("ingest_day") === SynthIngestDay)
               .groupBy().count()
           })) :+
@@ -656,7 +622,7 @@ object ScaleProbe {
             val r = streamRootOf(s, d)
             graft.operators.StreamArtifacts.appendDay(s, r, SynthIngestDay,
               synthDay(s), restamp = true)
-            s.read.parquet(s"$r/incr_hash")
+            graft.sources.Tables.readParquet(s, s"$r/incr_hash")
               .filter(col("ingest_day") === SynthIngestDay)
               .groupBy().count()
           })) :+
@@ -683,7 +649,7 @@ object ScaleProbe {
                 synthDayAt(s, base + j), restamp = false)
             }
             graft.operators.StreamArtifacts.compact(s, r, base + 2L)
-            s.read.parquet(s"$r/gram_index")
+            graft.sources.Tables.readParquet(s, s"$r/gram_index")
               .select("ingest_day").distinct()
           })) :+
         // COMPACTION CADENCE (round 14): a 40-day simulated nightly feed

@@ -42,45 +42,18 @@ object SegmentProbe {
   val Headroom: Double = 1.5
   val WorkFloorSec: Double = 2.0
 
-  private object Work extends org.apache.spark.scheduler.SparkListener {
-    private val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val shufBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    /** Listener delivery is asynchronous — poll until both counters stop
-      * moving so a snapshot never splits a query's tasks. */
-    def settled(): (Long, Long) = {
-      var prev = (-1L, -1L); var cur = (taskMs.get(), shufBytes.get())
-      var spins = 0
-      while (cur != prev && spins < 20) {
-        Thread.sleep(50); prev = cur
-        cur = (taskMs.get(), shufBytes.get()); spins += 1
-      }
-      cur
-    }
-  }
-
   private case class Sample(wall: Double, workSec: Double, shufMb: Double,
       rows: Long)
 
   private def timeOnce(spark: SparkSession, dir: String,
       segMul: Int): Sample = {
-    val (w0, b0) = Work.settled()
-    val t0 = System.nanoTime()
-    val df = graft.operators.Sketches
+    lazy val df = graft.operators.Sketches
       .valueQuantilesBySyntheticSegments(spark, dir, segMul)
-    df.write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val (w1, b1) = Work.settled()
+    val r = graft.obs.Meter.measure(spark)(
+      df.write.format("noop").mode("overwrite").save())
     val rows = df.count() // off both clocks (cached sketch: recount cheap)
     spark.catalog.clearCache()
-    Sample(wall, (w1 - w0) / 1e3, (b1 - b0) / 1e6, rows)
+    Sample(r.wallSec, r.taskSec, r.shuffleWriteMb, rows)
   }
 
   def main(args: Array[String]): Unit = {
@@ -88,7 +61,6 @@ object SegmentProbe {
     val spark = GraftSession.builder("local[32]", 32)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(Work)
 
     timeOnce(spark, dir, 1) // warmup: codegen + parquet footers
     val samples: Map[Int, Sample] = SegMuls.map { k =>

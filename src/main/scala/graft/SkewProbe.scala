@@ -50,30 +50,6 @@ object SkewProbe {
     * k is the hot key's reduce step (the straggler under test). */
   val RowsPerPart: Long = 100000L
 
-  private object MaxTask extends org.apache.spark.scheduler.SparkListener {
-    private val maxMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    @volatile private var registered = false
-    def ensure(spark: SparkSession): Unit = synchronized {
-      if (!registered) {
-        spark.sparkContext.addSparkListener(this); registered = true
-      }
-    }
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) maxMs.getAndAccumulate(m.executorRunTime, math.max)
-    }
-    def reset(): Unit = { settle(); maxMs.set(0L) }
-    /** Listener delivery is async — wait until the stream drains. */
-    private def settle(): Unit = {
-      var prev = -1L; var cur = maxMs.get(); var spins = 0
-      while (cur != prev && spins < 20) {
-        Thread.sleep(50); prev = cur; cur = maxMs.get(); spins += 1
-      }
-    }
-    def value(): Long = { settle(); maxMs.get() }
-  }
-
   /** Base events + one bot user (user_id −1, distinct event ids above every
     * real id) with n deterministic rows. */
   private def withBot(spark: SparkSession, dir: String, n: Long): DataFrame = {
@@ -105,13 +81,10 @@ object SkewProbe {
 
   /** (wall seconds, max single-task seconds) of one cache-cold run. */
   private def timeOnce(spark: SparkSession, df: => DataFrame): (Double, Double) = {
-    MaxTask.ensure(spark)
-    MaxTask.reset()
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val r = graft.obs.Meter.measure(spark)(
+      df.write.format("noop").mode("overwrite").save())
     spark.catalog.clearCache()
-    (wall, MaxTask.value() / 1e3)
+    (r.wallSec, r.maxTaskSec)
   }
 
   def main(args: Array[String]): Unit = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.DedupArtifacts
 
 /** Read-cost-vs-slice-count harness for BOTH log-structured stores —
   * the stream gate index and the ANN per-vector relations (dev main;
@@ -65,14 +66,13 @@ object SliceProbe {
     n
   }
 
-  private def timeOnce(s: SparkSession, root: String): Double = {
-    val t0 = System.nanoTime()
-    readAll(s, root)
-    (System.nanoTime() - t0) / 1e9
-  }
+  /** Wall seconds of one `read`. */
+  private def wall(s: SparkSession)(read: => Any): Double =
+    graft.obs.Meter.measure(s)(read).wallSec
 
-  private def timeRead(s: SparkSession, root: String): Double =
-    (1 to Samples).map(_ => timeOnce(s, root)).min
+  /** The fastest of [[Samples]] reads. */
+  private def minWall(s: SparkSession)(read: => Any): Double =
+    (1 to Samples).map(_ => wall(s)(read)).min
 
   /** The reclaim gate as a PER-PAIR statistic (round 15 — the advisor's
     * point on the round-14 "paired" sampling: two independent mins over
@@ -132,7 +132,7 @@ object SliceProbe {
     readAll(spark, rootA); readAll(spark, rootB)
     val nA = readAll(spark, rootA)
     val nB = readAll(spark, rootB)
-    val tSliced = timeRead(spark, rootB)
+    val tSliced = minWall(spark)(readAll(spark, rootB))
     StreamArtifacts.compact(spark, rootB, Days.toLong)
     readAll(spark, rootB) // warm the new file layout
     val nC = readAll(spark, rootB)
@@ -140,7 +140,7 @@ object SliceProbe {
     // baseline/compacted pair runs back-to-back and is judged against
     // ITSELF; the majority of pairs decides
     val pairs = (1 to Samples).map { _ =>
-      (timeOnce(spark, rootA), timeOnce(spark, rootB))
+      (wall(spark)(readAll(spark, rootA)), wall(spark)(readAll(spark, rootB)))
     }
     val tA = pairs.map(_._1).min
     val tCompacted = pairs.map(_._2).min
@@ -162,7 +162,7 @@ object SliceProbe {
     // identical content, 1 slice vs AnnDays+1 slices, then compacted
     val annOk = annAxis(spark, dir)
 
-    Seq(rootA, rootB).foreach(deleteRoot)
+    Seq(rootA, rootB).foreach(DedupArtifacts.deleteRoot)
     spark.stop()
     if (!(manifestsEqual && viewsEqual && reclaimed && annOk)) {
       System.err.println("[sliceprobe] gate failure")
@@ -227,22 +227,16 @@ object SliceProbe {
       spark.catalog.clearCache()
       n
     }
-    def timeOnce(r: String): Double = {
-      val t0 = System.nanoTime()
-      readAll(r)
-      (System.nanoTime() - t0) / 1e9
-    }
-    def timeRead(r: String): Double =
-      (1 to Samples).map(_ => timeOnce(r)).min
     readAll(rootA); readAll(rootB)
     val nA = readAll(rootA)
     val nB = readAll(rootB)
-    val tSliced = timeRead(rootB)
+    val tSliced = minWall(spark)(readAll(rootB))
     AnnArtifacts.compact(spark, rootB, AnnDays.toLong)
     readAll(rootB)
     val nC = readAll(rootB)
     // per-pair reclaim gate — see [[reclaimGate]]
-    val pairs = (1 to Samples).map(_ => (timeOnce(rootA), timeOnce(rootB)))
+    val pairs = (1 to Samples).map(_ =>
+      (wall(spark)(readAll(rootA)), wall(spark)(readAll(rootB))))
     val tA = pairs.map(_._1).min
     val tCompacted = pairs.map(_._2).min
 
@@ -258,16 +252,7 @@ object SliceProbe {
       s"(rows ${nA.mkString("/")}); " +
       s"per-pair reclaim (ratios ${pairRatios(pairs)}, majority <=1.25x " +
       s"or <=0.3s) ${if (reclaimed) "PASS" else "FAIL"}")
-    Seq(rootA, rootB).foreach(deleteRoot)
+    Seq(rootA, rootB).foreach(DedupArtifacts.deleteRoot)
     manifestsEqual && viewsEqual && reclaimed
-  }
-
-  private def deleteRoot(r: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(r)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
   }
 }

@@ -217,7 +217,8 @@ object StreamProbe {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .toSeq
     def persisted(df: org.apache.spark.sql.DataFrame, path: String) = {
-      df.write.mode("overwrite").parquet(path); sp.read.parquet(path)
+      df.write.mode("overwrite").parquet(path)
+      graft.sources.Tables.readParquet(sp, path)
     }
     def timeGate(run: () => Unit): Double = {
       run() // warmup: codegen + sink open

@@ -3,8 +3,9 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1042,65 +1043,119 @@ object Kernels {
                   ELSE CAST(-1 AS BIGINT) END),
       acc -> acc.b)"""
 
-  /** Registers the kernels as SQL temp functions. Idempotent AND quiet: a
-    * re-register on a session that already has them would log a "function
-    * replaced" warning per kernel per query — noise in every bench/verify
-    * log — so only the names the session does not have yet are registered
-    * (a membership check over every name, so a kernel added later is never
-    * skipped on a session registered by an older kernel set). */
+  /** One SQL kernel: its name, the usage string the session catalog
+    * reports, and its expression builder. */
+  final case class Kernel(name: String, usage: String,
+      builder: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(
+      Kernels.getClass.getName.stripSuffix("$"), null, name, usage,
+      "", "", "", "", "", "", "")
+  }
+
+  /** Geometry and width arguments must be foldable integer literals,
+    * evaluated once when the expression is built; a column argument fails
+    * analysis with this message instead of an opaque eval() NPE. */
+  private def litInt(e: Expression): Int = {
+    require(e.foldable, s"geometry argument must be an integer literal, got: $e")
+    e.eval().asInstanceOf[Number].intValue
+  }
+
+  /** Every SQL kernel, once: [[graft.GraftExtensions]] injects this table
+    * into sessions built with the extension, and [[register]] adds it to
+    * sessions built without. */
+  val catalog: Seq[Kernel] = Seq(
+    Kernel("graft_minhash_sigs",
+      "4-band x 3-row MinHash band signatures of a normalized string",
+      args => ShingleMinHashSigs(args.head)),
+    Kernel("graft_minhash_rows",
+      "the 12 raw MinHash row minima behind graft_minhash_sigs",
+      args => MinHashRows(args.head)),
+    Kernel("graft_simhash32",
+      "32-bit SimHash of a token array (md5 nibble majority votes)",
+      args => SimHash32(args.head)),
+    Kernel("graft_winnow_fp",
+      "winnowing fingerprint: min md5 hex over 5-char shingles",
+      args => WinnowFp(args.head)),
+    Kernel("graft_dot",
+      "sequential-fold double dot product of two float vectors",
+      args => DotF(args(0), args(1))),
+    Kernel("graft_norm2",
+      "sequential-fold squared norm of a float vector",
+      args => Norm2F(args.head)),
+    Kernel("graft_lsh_bucket",
+      "8-plane sign-LSH bucket id of a 64-dim float vector",
+      args => LshBucket(args.head)),
+    Kernel("graft_lsh_buckets",
+      "per-table sign-LSH bucket ids (multi-table LSH) of a 64-dim float vector",
+      args => LshBuckets(args.head)),
+    Kernel("graft_str_hash",
+      "deterministic polynomial string hash mod 2^31-1 (codepoint fold)",
+      args => StrHash(args.head)),
+    Kernel("graft_bloom_cells",
+      "bloom-filter bit positions of a gram string (k rows over m bits)",
+      args => BloomCells(args.head,
+        if (args.length > 1) args(1) else Literal(BloomBits))),
+    Kernel("graft_cms_cells",
+      "flat count-min-sketch cell indices of a string key",
+      args => CmsCells(args.head)),
+    Kernel("graft_cms_cells_g",
+      "count-min cell indices at an explicit depth x width geometry",
+      args => CmsCellsG(args(0), litInt(args(1)), litInt(args(2)))),
+    Kernel("graft_cms_sketch",
+      "count-min sketch aggregate of a string column (flat depth x width matrix)",
+      args => CountMinSketchAgg(args.head)),
+    Kernel("graft_cms_sketch_g",
+      "count-min sketch aggregate at an explicit depth x width geometry",
+      args => CountMinSketchAgg(args(0), litInt(args(1)), litInt(args(2)))),
+    Kernel("graft_hll_sketch",
+      "HyperLogLog register-vector aggregate of a long column (m=64)",
+      args => HllSketchAgg(args.head)),
+    Kernel("graft_hll_sketch_m",
+      "HyperLogLog register-vector aggregate at an explicit register count",
+      args => HllSketchAgg(args(0), litInt(args(1)))),
+    Kernel("graft_gram_agg",
+      "quantized Gram/covariance matrix aggregate of an embedding column",
+      args => GramMatrixAgg(args.head)),
+    Kernel("graft_qsketch",
+      "log2-linear quantile-sketch bucket counts of a long column (s=6)",
+      args => QuantileSketchAgg(args.head)),
+    Kernel("graft_qsketch_s",
+      "quantile-sketch bucket counts at an explicit subdivision s",
+      args => QuantileSketchAgg(args(0), litInt(args(1)))),
+    Kernel("graft_common_count",
+      "exact |set(a) ∩ set(b)| of two long arrays (allocation-free)",
+      args => CommonCount(args(0), args(1))),
+    Kernel("graft_lev_capped",
+      "edit distance when <= max(chars)/5 else -1 (prefix/suffix-stripped bit-parallel DP)",
+      args => LevCapped(args(0), args(1))),
+    Kernel("graft_word_grams",
+      "' '-joined word n-grams of a token array (codegen'd concat_ws loop)",
+      args => WordGrams(args(0), litInt(args(1)), distinct = false)),
+    Kernel("graft_word_grams_distinct",
+      "first-occurrence-distinct word n-grams of a token array",
+      args => WordGrams(args(0), litInt(args(1)), distinct = true)),
+    Kernel("graft_km_argmin",
+      "nearest-centroid (cluster, dist) over a cluster-sorted codebook",
+      args => KmArgmin(args(0), args(1))),
+    Kernel("graft_ivf_argmax",
+      "IVF nearest-cell id: argmax cosine over a cent_id-sorted codebook",
+      args => IvfArgmax(args(0), args(1), args(2))),
+    Kernel("graft_pq_codes",
+      "per-subspace (cent_id, dist) argmins over a cent_id-sorted codebook",
+      args => PqCodes(args(0), args(1), litInt(args(2)), litInt(args(3)))))
+
+  /** Registers the [[catalog]] as SQL temp functions. Idempotent AND
+    * quiet: a re-register on a session that already has them would log a
+    * "function replaced" warning per kernel per query — noise in every
+    * bench/verify log — so only the names the session does not have yet
+    * are registered (a membership check over every name, so a kernel
+    * added later is never skipped on a session registered by an older
+    * kernel set). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    // geometry/width arguments must be foldable integer literals —
-    // evaluated at registration, never per row; guard so a column argument
-    // fails with a clear analysis error instead of an opaque eval() NPE
-    def litIntArg(e: Expression): Int = {
-      require(e.foldable,
-        s"width argument must be an integer literal, got: $e")
-      e.eval().asInstanceOf[Number].intValue
-    }
-    def litInt(e: Expression): Int = {
-      require(e.foldable,
-        s"geometry argument must be an integer literal, got: $e")
-      e.eval().asInstanceOf[Number].intValue
-    }
-    val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
-      ("graft_minhash_sigs", args => ShingleMinHashSigs(args.head)),
-      ("graft_minhash_rows", args => MinHashRows(args.head)),
-      ("graft_simhash32", args => SimHash32(args.head)),
-      ("graft_winnow_fp", args => WinnowFp(args.head)),
-      ("graft_dot", args => DotF(args(0), args(1))),
-      ("graft_norm2", args => Norm2F(args.head)),
-      ("graft_lsh_bucket", args => LshBucket(args.head)),
-      ("graft_lsh_buckets", args => LshBuckets(args.head)),
-      ("graft_str_hash", args => StrHash(args.head)),
-      ("graft_bloom_cells", args => BloomCells(args.head,
-        if (args.length > 1) args(1) else Literal(BloomBits))),
-      ("graft_cms_cells", args => CmsCells(args.head)),
-      ("graft_cms_cells_g", args =>
-        CmsCellsG(args(0), litInt(args(1)), litInt(args(2)))),
-      ("graft_cms_sketch", args => CountMinSketchAgg(args.head)),
-      ("graft_cms_sketch_g", args =>
-        CountMinSketchAgg(args(0), litInt(args(1)), litInt(args(2)))),
-      ("graft_hll_sketch", args => HllSketchAgg(args.head)),
-      ("graft_hll_sketch_m", args => HllSketchAgg(args(0), litInt(args(1)))),
-      ("graft_gram_agg", args => GramMatrixAgg(args.head)),
-      ("graft_qsketch", args => QuantileSketchAgg(args.head)),
-      ("graft_qsketch_s", args =>
-        QuantileSketchAgg(args(0), litInt(args(1)))),
-      ("graft_common_count", args => CommonCount(args(0), args(1))),
-      ("graft_lev_capped", args => LevCapped(args(0), args(1))),
-      ("graft_word_grams", args =>
-        WordGrams(args(0), litIntArg(args(1)), distinct = false)),
-      ("graft_word_grams_distinct", args =>
-        WordGrams(args(0), litIntArg(args(1)), distinct = true)),
-      ("graft_km_argmin", args => KmArgmin(args(0), args(1))),
-      ("graft_ivf_argmax", args => IvfArgmax(args(0), args(1), args(2))),
-      ("graft_pq_codes", args => PqCodes(args(0), args(1),
-        litIntArg(args(2)), litIntArg(args(3)))))
-    for ((name, builder) <- kernels
-         if !reg.functionExists(
-           new org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    for (k <- catalog if !reg.functionExists(k.id))
+      reg.registerFunction(k.id, k.info, k.builder)
   }
 }
 

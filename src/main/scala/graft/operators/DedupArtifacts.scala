@@ -490,6 +490,16 @@ object DedupArtifacts {
   def funnel(spark: SparkSession, dir: String, root: String): DataFrame =
     DedupOps.funnelFrom(spark, dir, components(spark, root))
 
+  /** Delete a local directory tree, deepest paths first; a missing root
+    * is a no-op. */
+  private[graft] def deleteRoot(root: String): Unit = {
+    val p = java.nio.file.Paths.get(root)
+    if (java.nio.file.Files.exists(p))
+      scala.util.Using.resource(java.nio.file.Files.walk(p))(
+        _.sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => java.nio.file.Files.deleteIfExists(f): Unit))
+  }
+
   /** Staged roots live until JVM exit: the registered queries RETURN a
     * lazy plan over the staged files, so the root must outlive this call
     * (the action runs later, in Verify/Bench), but a long-running session
@@ -499,13 +509,8 @@ object DedupArtifacts {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       stagedRoots.forEach { r =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(r)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () } // best-effort; exit anyway
+        try deleteRoot(r)
+        catch { case _: Throwable => () } // best-effort; exit anyway
       }))
   }
 

@@ -147,7 +147,7 @@ object Nightly {
       .toDF("paso", "componente", "accion", "n_entrada", "n_filas",
         "n_slices")
       .withColumn("ok",
-        col("accion") =!= "append" || col("n_filas") > 0).cache()
+        col("accion") =!= "append" || col("n_filas") > 0)
     val total = steps.agg(sum("n_entrada").as("n_entrada"),
         sum("n_filas").as("n_filas"), max("n_slices").as("n_slices"),
         bool_and(col("ok")).as("ok"))

@@ -1184,12 +1184,12 @@ class ArtifactSpec extends SparkSpec {
   /** Listen to the jobs `body` runs (events drained on both sides). */
   private def logJobs[A](body: => A): (A, JobLog) = {
     val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
+    org.apache.spark.GraftBus.drain(sc)
     val log = new JobLog
     sc.addSparkListener(log)
     try {
       val out = body
-      org.apache.spark.TestBus.drain(sc)
+      org.apache.spark.GraftBus.drain(sc)
       (out, log)
     } finally sc.removeSparkListener(log)
   }
@@ -1289,7 +1289,10 @@ class ArtifactSpec extends SparkSpec {
   test("concurrent night == the same calls in sequence; one job group; " +
       "a failed chain throws its own error with no job left running") {
     import operators.{AnnArtifacts, Nightly}
+    spark.catalog.clearCache()
     val n = nights
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the nights left a cached relation behind")
     // night 3 compacted both index stores, so the compaction path ran
     assert(n.concReports(2).count(_(2) == "compact") == 2,
       n.concReports(2).mkString("; "))

@@ -477,4 +477,24 @@ class KernelsSpec extends SparkSpec {
     // total mass equals the row count
     assert(regs(1).sum == 5000L)
   }
+
+  test("Kernels.register and the session extension register the same catalog") {
+    // name -> (description, class) as the session catalog reports them
+    def described(s: org.apache.spark.sql.SparkSession) =
+      s.catalog.listFunctions().collect().map(_.name)
+        .filter(_.startsWith("graft_")).map { n =>
+          val f = s.catalog.getFunction(n)
+          n -> (f.description, f.className)
+        }.toMap
+    val viaExtension = described(spark)
+    assert(viaExtension.size == 26 && viaExtension.values.forall {
+      case (d, _) => d != null && d.nonEmpty && d != "N/A." }, viaExtension)
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    viaExtension.keys.foreach(n => reg.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(described(fresh).isEmpty)
+    graft.functions.Kernels.register(fresh)
+    assert(described(fresh) == viaExtension)
+  }
 }

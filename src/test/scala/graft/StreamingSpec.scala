@@ -87,10 +87,8 @@ class StreamingSpec extends SparkSpec {
 
   test("D1 readEvents builds its frame with zero Spark jobs") {
     // the encoding peek reads one footer on the driver, not an inference job
-    Audit.JobCount.ensure(spark)
-    Audit.JobCount.reset()
-    EventStream.readEvents(spark, s"$sf/events.parquet")
-    assert(Audit.JobCount.value() == 0)
+    assert(graft.obs.Meter.measure(spark)(
+      EventStream.readEvents(spark, s"$sf/events.parquet")).jobs == 0)
   }
 
   test("D1 end-to-end legacy-encoded events stream equals batch B8") {

@@ -56,11 +56,10 @@ class TablesReadSpec extends SparkSpec {
   }
 
   test("building a table loader's frame schedules zero Spark jobs") {
-    Audit.JobCount.ensure(spark)
-    Audit.JobCount.reset()
-    Tables.orders(spark, sf)
-    Tables.events(spark, sf)
-    assert(Audit.JobCount.value() == 0)
+    assert(graft.obs.Meter.measure(spark) {
+      Tables.orders(spark, sf)
+      Tables.events(spark, sf)
+    }.jobs == 0)
   }
 
   test("an empty directory and a missing path raise spark.read.parquet's errors") {
