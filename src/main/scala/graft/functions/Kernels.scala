@@ -1173,12 +1173,16 @@ case class IvfArgmax(first: Expression, second: Expression, third: Expression)
   override protected def nullSafeEval(emb: Any, n2: Any, cb: Any): Any =
     Kernels.ivfArgmax(emb.asInstanceOf[ArrayData],
       n2.asInstanceOf[Double], cb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // non-nullable children get no null-check block, so the local must be
+    // unique within the generated function
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, (emb, n2, cb) => s"""
-      Object r = graft.functions.Kernels.ivfArgmax($emb, $n2, $cb);
-      ${ev.isNull} = r == null;
-      ${ev.value} = ${ev.isNull} ? -1L : ((java.lang.Long) r).longValue();
+      Object $r = graft.functions.Kernels.ivfArgmax($emb, $n2, $cb);
+      ${ev.isNull} = $r == null;
+      ${ev.value} = ${ev.isNull} ? -1L : ((java.lang.Long) $r).longValue();
     """)
+  }
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): IvfArgmax =
     copy(first = newFirst, second = newSecond, third = newThird)

@@ -1212,7 +1212,8 @@ object Pipeline {
       .filter(col("doc_id") % Feeds.IncrMod =!= Feeds.IncrRem))
 
   /** [[standingGramIndex]] of an ARBITRARY (source, text) frame — DF-
-    * parametric so StreamProbe's standing-index axis can size it. */
+    * parametric so the `stream` sweep of [[graft.ScaleProbe]] can size
+    * its standing index. */
   private[graft] def standingGramIndexOf(docs: DataFrame): DataFrame =
     gramHashRows(docs).withColumn("known", lit(1L))
 

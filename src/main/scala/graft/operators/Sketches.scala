@@ -763,10 +763,10 @@ object Sketches {
     valueQuantilesByTypeSqlFor(graft.functions.Kernels.QSketchS)
 
   /** B54's grouped path with a SYNTHETIC segment explosion — probe-only
-    * device for [[graft.SegmentProbe]] (round 11): the segment key is
-    * event_type × (event_id mod segMul), so the SAME corpus builds
-    * |types|·segMul fixed-size sketches instead of |types|. This measures
-    * the granularity contract documented on
+    * device for the `segment` sweep of [[graft.ScaleProbe]] (round 11):
+    * the segment key is event_type × (event_id mod segMul), so the SAME
+    * corpus builds |types|·segMul fixed-size sketches instead of |types|.
+    * This measures the granularity contract documented on
     * [[graft.functions.QuantileSketchAgg]] — per-group state is a fixed
     * (64−s)·2^s longs, so total aggregation-map state grows ∝ segment
     * count while the build stays ONE corpus pass and the readout stays

@@ -51,9 +51,9 @@ object Skew {
   }
 
   /** Salt fan-out for the registered C113 run — at 100 TB the deployment
-    * rule is factor ∝ hot-key depth / per-task budget (the SkewProbe
-    * measures exactly that curve); the RESULT is factor-invariant, which
-    * is what the shared oracle row proves. */
+    * rule is factor ∝ hot-key depth / per-task budget (the `skew` sweep
+    * of [[graft.ScaleProbe]] measures exactly that curve); the RESULT is
+    * factor-invariant, which is what the shared oracle row proves. */
   val SaltedAggFactor: Int = 8
 
   /** Per-key exact top-k carried through the salted two-phase. */
@@ -76,8 +76,8 @@ object Skew {
     * The oracle row is the UNSALTED plain GROUP BY: the salted plan must
     * be bit-identical at any factor (ParamCheck re-runs it at factor 3
     * against the SAME SQL; SkewSpec pins factor-invariance on real data;
-    * the SkewProbe measures the straggler curve the salt exists to
-    * flatten).
+    * the `skew` sweep of [[graft.ScaleProbe]] measures the straggler curve
+    * the salt exists to flatten).
     *
     * Exactness: integer cents throughout; top-k are picked values, not
     * arithmetic; ties among equal cents collapse (values equal). */

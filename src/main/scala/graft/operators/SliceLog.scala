@@ -155,9 +155,9 @@ object SliceLog {
       canon: DataFrame => DataFrame, sliceKey: Option[String])
 
   /** [[SliceLog.compactIfNeeded]]'s default slice-count threshold for the
-    * stream and ANN stores. It sits under SliceProbe's measured read-cost
-    * knee (SCALING_r13.md: 33 slices read 2.1× a single pass, the ANN
-    * curve 1.7× at 17): 16 keeps the per-read merge below 2× while
+    * stream and ANN stores. It sits under the `slice` sweep's measured
+    * read-cost knee (SCALING_r13.md: 33 slices read 2.1× a single pass,
+    * the ANN curve 1.7× at 17): 16 keeps the per-read merge below 2× while
     * letting ~2 weeks of nightly appends ride between compactions —
     * compaction is an O(index) rewrite, so firing it nightly would pay
     * more than the reads it saves. */

@@ -365,6 +365,30 @@ class KernelsSpec extends SparkSpec {
     assert(joined.filter(col("c_old") =!= col("c_ker")).count() == 0)
   }
 
+  test("two graft_ivf_argmax calls compile into one generated function") {
+    // non-nullable children: nullSafeCodeGen wraps neither call in a
+    // null-check block, so both calls' locals share one Java scope
+    val in = spark.range(64).selectExpr("id",
+      "array(CAST(id AS FLOAT), CAST(id * 3 + 1 AS FLOAT)) AS emb",
+      "CAST(id * id * 10 + 1 AS DOUBLE) AS n2",
+      """array(
+           named_struct('cent_id', id + 1, 'c_emb', array(1.0D, 0.0D), 'c_n2', 1.0D),
+           named_struct('cent_id', 0L, 'c_emb', array(0.0D, 1.0D), 'c_n2', 1.0D)) AS cb""")
+    assert(!in.schema.exists(_.nullable))
+    def argmaxes(conf: Map[String, String]): Seq[(Long, Long, Long)] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try in.selectExpr("id", "graft_ivf_argmax(emb, n2, cb) AS a",
+          "graft_ivf_argmax(emb, n2 * 2.0D, cb) AS b")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        .sortBy(_._1)
+      finally conf.keys.foreach(spark.conf.unset)
+    }
+    val compiled = argmaxes(Map("spark.sql.codegen.fallback" -> "false"))
+    val interpreted = argmaxes(Map("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    assert(compiled.size == 64 && compiled == interpreted)
+  }
+
   test("graft_pq_codes matches the exploded crossJoin + struct-MIN argmins") {
     val v = embs.select(col("vec_id"), col("embedding"))
     val cents = embs.filter(col("vec_id") % 100 === 50)

@@ -80,7 +80,7 @@ class ScaleProbeSpec extends SparkSpec {
   }
 
   test("slice probe reclaim gate judges pairs, not independent mins") {
-    import graft.SliceProbe.reclaimGate
+    import graft.ScaleProbe.reclaimGate
     // every pair within ratio: pass
     assert(reclaimGate(Seq((2.0, 2.2), (2.0, 2.4), (2.1, 2.5))))
     // uniform 1.4x slowdown on 2s reads: every pair fails both the
@@ -92,5 +92,58 @@ class ScaleProbeSpec extends SparkSpec {
     assert(!reclaimGate(Seq((2.0, 0.5), (2.0, 3.5), (2.0, 3.6))))
     // sub-noise absolute gaps pass on short reads regardless of ratio
     assert(reclaimGate(Seq((0.2, 0.45), (0.2, 0.4), (0.2, 0.48))))
+  }
+
+  test("every scale-probe name resolves, and an unknown name is rejected before any work") {
+    assert(ScaleProbe.Probes.forall(SparkEntry.queries.contains))
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def listing() = scala.util.Using.resource(java.nio.file.Files.list(tmp))(
+      _.toArray.map(_.toString).toSet)
+    val before = listing()
+    val e = intercept[IllegalArgumentException](
+      ScaleProbe.main(Array(sf, "slice,no_such_probe")))
+    assert(e.getMessage.contains("no_such_probe") &&
+      ScaleProbe.Sweeps.forall(e.getMessage.contains) &&
+      e.getMessage.contains("q_dedup_exact"))
+    assert(listing() === before)
+    // a probe name selects the `scale` sweep with that probe alone
+    val p = ScaleProbe.plan(Seq("slice", "q_dedup_exact"))
+    assert(p.sweeps === Seq("scale", "slice") && p.probes.map(_._1) === Seq("q_dedup_exact"))
+    assert(ScaleProbe.plan(Nil).sweeps === ScaleProbe.Sweeps)
+    assert(ScaleProbe.plan(Seq("skew")).probes.isEmpty)
+  }
+
+  test("each former probe gate keeps its floor and bound: at the bound passes, just over fails") {
+    import ScaleProbe._
+    if (sys.env.get("SPARK_GRAFT_SCALE_FACTORS").isEmpty)
+      assert(Scales === Seq(1, 2, 4, 8))
+    // (gate, floor, bound, grows)
+    val rows = Seq(
+      (ScaleWall, 0.3, 1.5 * Scales.last / Scales.head, false),
+      (ScaleWork, 2.0, 2.0 * Scales.last / Scales.head, false),
+      (StreamVolume, 0.3, 1.5 * 8, false),
+      (StreamIndex, 0.3, 2.0, false),
+      (SegmentWork, 2.0, 1.5 * 16, false),
+      (SegmentShuffle, 1.0, 1.5 * 16, false),
+      (SkewSalted, 0.05, 3.0, false),
+      (SkewControl, 0.05, 3.0, true))
+    for ((gate, floor, bound, grows) <- rows) {
+      assert(gate === Gate(floor, bound, grows))
+      // a first point above every floor; x4 is exact in binary
+      val first = 4.0
+      val at = first * bound
+      assert(gate.pass(first, at), gate)
+      if (grows) {
+        assert(!gate.pass(first, math.nextDown(at)), gate)
+        // the floor applies: a tiny base cannot fake the growth
+        assert(!gate.pass(floor / 4, floor * bound * (1 - 1e-9)), gate)
+        assert(growsAtLeast(floor / 4, floor * bound * (1 - 1e-9), 0.0, bound))
+      } else {
+        assert(!gate.pass(first, math.nextUp(at)), gate)
+        // the floor applies: a tiny base cannot fake a breach
+        assert(gate.pass(floor / 4, floor * bound * (1 - 1e-9)), gate)
+        assert(!nearLinear(floor / 4, floor * bound * (1 - 1e-9), 0.0, bound))
+      }
+    }
   }
 }
