@@ -43,6 +43,20 @@ import graft.streaming._
   * also writes the table to that file. Exits nonzero if any curve fails
   * its gate.
   *
+  * WHAT A STORE-READ TIMING MEASURES. A verified store read digests a
+  * family only on the first read of its snapshot in the JVM
+  * ([[graft.operators.DedupArtifacts.readVerifiedCanonical]]), so a timed
+  * read excludes the digest of every family unchanged since an earlier
+  * read. The `slice` sweep reads each layout before timing it, and the
+  * families `sketch_store_read` and `ann_index_route` read are never
+  * appended to: those timings are the params handshake, the listing and
+  * the consumer's own scan and merge, without the digest. In each round
+  * of the `scale` sweep the append probes run after `ann_index_search`
+  * and `stream_index_read`, so each of their timed reads is the first read
+  * of the appended families' new snapshot and still includes its digest,
+  * as do the `*_build`, `*_append_*`, `*_compact` and `nightly_*` probes,
+  * which write the store first.
+  *
   * Every directory the harness makes lives under one scratch root
   * (`graft-scale-*` in the JVM temp dir), deleted when the run ends,
   * however it ends. Per-sample build roots are deleted after each sample,
@@ -671,8 +685,9 @@ object ScaleProbe {
       }),
       // The streaming frozen-model index store's cost curves: BUILD is
       // the admission pipeline's indexing job, linear by construction.
-      // READ is a verified gate-view read (canonical re-digest + LSM
-      // merge): O(index), linear. APPEND_SLICE is the nightly hot path — a
+      // READ is a verified gate-view read (canonical digest of the
+      // snapshot the previous round's appends left + LSM merge):
+      // O(index), linear. APPEND_SLICE is the nightly hot path — a
       // CONSTRUCTED fixed-volume day signatured and slice-swapped with the
       // re-stamp deferred — and must be FLAT in corpus size (the standing
       // corpus is never re-read). APPEND_FIXEDDAY adds the canonical
@@ -841,8 +856,10 @@ object ScaleProbe {
     * not data volume. B is then COMPACTED, and the compacted read must
     * fall back to the single-slice cost ([[reclaimGate]]): verified reads
     * re-merge O(compactions-since) slices, not 365. The timed read is the
-    * verified materialization of every read family, canonical re-digest
-    * included — what a deployment's bootstrap pays. */
+    * verified materialization of every read family; each layout is read
+    * once before it is timed, so the timed reads skip the canonical
+    * digest of a snapshot already verified and measure the read-side
+    * merge itself. */
   private def sliceAxis(h: Harness, store: String, days: Int,
       families: Seq[String], single: String => Unit, base: String => Unit,
       append: (String, Long) => Unit, restamp: String => Unit,

@@ -39,6 +39,19 @@ import graft.sources.Tables
   * flipped byte) — same contract as
   * [[graft.sources.Tables.readShardedVerified]].
   *
+  * THE INTEGRITY CONTRACT of every verified read (these artifacts, the
+  * quantizers, the sketch month/type artifacts and every [[SliceLog]]
+  * family), all through [[readVerifiedCanonical]]: the params handshake
+  * runs on every read, and the digest runs once per snapshot — the
+  * manifest plus the (path, length, modification time) of every data
+  * file the read scans. A later read of a snapshot this JVM already
+  * verified skips the digest; any append, restatement, compaction
+  * publish or re-stamp changes the snapshot and is verified again.
+  * Failed reads record nothing: a read that failed verification fails
+  * again on the same files. The one gap: an out-of-band rewrite that
+  * keeps a file's length and modification time, made in this JVM after
+  * a verified read, is not re-checked.
+  *
   * At 100 TB the write is a once-a-day indexing job (bucketed catalog
   * tables via [[graft.sources.Export.bucketedTable]] if the joins repeat);
   * the registered queries stage into a fresh temp root per call because
@@ -311,18 +324,66 @@ object DedupArtifacts {
   /** [[readVerified]] over a canonical view: verifies the digest of
     * `canon` of the rows as read (see [[refreshManifest]]) and hands back
     * the RAW rows, partition columns included, for the caller's view
-    * derivation. */
+    * derivation. This is the one verified read: every [[SliceLog.read]]
+    * and every [[readVerified]] lands here.
+    *
+    * VERIFY ONCE PER SNAPSHOT. The params handshake ([[requireParams]])
+    * runs on every read. The digest runs only when the returned frame's
+    * [[Snapshot]] (the manifest's recorded (n_rows, checksum, params) and
+    * the sorted (path, length, modification time) of every data file the
+    * frame scans, taken from its own file index, no second listing)
+    * differs from the last snapshot verified at `path`. Only a digest
+    * that matched records its snapshot, so a failed read records nothing
+    * and the same read retried fails again. An append, a restatement
+    * (new part files), a compaction publish or a re-stamp changes the
+    * listing or the manifest, so the next read verifies again. A frame
+    * whose index cannot list its files is verified every time.
+    *
+    * The one gap: an out-of-band rewrite that keeps a file's length and
+    * modification time, made in this JVM after a verified read of its
+    * snapshot, is not re-checked. */
   private[graft] def readVerifiedCanonical(spark: SparkSession,
       path: String, expectParams: Map[String, String],
       canon: DataFrame => DataFrame): DataFrame = {
-    val want = requireParams(spark, path, expectParams, "read")
+    val manifest = requireParams(spark, path, expectParams, "read")
     val raw = Tables.readParquet(spark, path)
-    val got = digest(canon(raw))
-    if (got != want)
-      sys.error(s"artifact $path failed verification: manifest says " +
-        s"(n_rows=${want._1}, checksum=${want._2}), files say " +
-        s"(n_rows=${got._1}, checksum=${got._2})")
+    val snapshot = filesOf(raw).map(Snapshot(manifest, _))
+    if (!snapshot.contains(verified.get(path))) {
+      val want = (manifest._1, manifest._2)
+      val got = digest(canon(raw))
+      if (got != want)
+        sys.error(s"artifact $path failed verification: manifest says " +
+          s"(n_rows=${want._1}, checksum=${want._2}), files say " +
+          s"(n_rows=${got._1}, checksum=${got._2})")
+      snapshot.foreach(verified.put(path, _))
+    }
     raw
+  }
+
+  /** What one verified read checked: the manifest as parsed and the
+    * sorted (path, length, modification time) of the data files. */
+  private final case class Snapshot(manifest: (Long, Long, Map[String, String]),
+      files: Seq[(String, Long, Long)])
+
+  /** The last snapshot verified per family path — one entry per path,
+    * replaced by each verifying read, so a long-lived maintainer's memo
+    * stays as large as its set of families. */
+  private val verified =
+    new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
+
+  /** The data files `df` scans, from its one file index, or None when the
+    * frame is not a single listed file relation. */
+  private def filesOf(df: DataFrame): Option[Seq[(String, Long, Long)]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    } match {
+      case Seq(index: PartitioningAwareFileIndex) =>
+        Some(index.allFiles().map(f =>
+          (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
+      case _ => None
+    }
   }
 
   /** The manifest, parsed: (n_rows, checksum, params), or None when the
@@ -358,18 +419,19 @@ object DedupArtifacts {
     * `want`, so an unchecked re-stamp would relabel rows built at another
     * geometry, and a read would reinterpret them). Fails with one line
     * naming both sides and the fix; nothing is written. `op` names the
-    * operation. Returns the recorded (n_rows, checksum). */
+    * operation. Returns the manifest: (n_rows, checksum, params). */
   private[graft] def requireParams(spark: SparkSession, path: String,
-      want: Map[String, String], op: String): (Long, Long) = {
+      want: Map[String, String], op: String): (Long, Long, Map[String, String]) = {
     def show(ps: Map[String, String]) =
       ps.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")
-    val (n, ck, rec) = readManifest(spark, path).getOrElse(noManifest(path))
+    val manifest = readManifest(spark, path).getOrElse(noManifest(path))
+    val rec = manifest._3
     if (want.nonEmpty && rec != want)
       sys.error(s"artifact $path geometry mismatch: $op expects ${show(want)}" +
         ", manifest records " +
         (if (rec.isEmpty) "no params (legacy manifest)" else show(rec)) +
         "; rebuild the family")
-    (n, ck)
+    manifest
   }
 
   /** A family directory without a manifest is half-built: fail naming
@@ -427,8 +489,10 @@ object DedupArtifacts {
   /** Manifest-verified artifact read: recompute (n_rows, checksum) from
     * the files and compare before handing the frame out — ONE narrow
     * O(artifact) pass, no shuffle; skipping it would let a lost part file
-    * read as a clean smaller pair set. `expectParams` (when non-empty)
-    * must be exactly the params the manifest records ([[requireParams]])
+    * read as a clean smaller pair set. The pass runs once per snapshot;
+    * [[readVerifiedCanonical]] states that contract and its one gap.
+    * `expectParams` (when non-empty) must be exactly the params the
+    * manifest records ([[requireParams]])
     * — a store built at one sketch geometry read under another is a
     * silent wrong-answer path, so the mismatch (or a legacy manifest
     * recording no params at all) fails fast naming both sides. */

@@ -34,7 +34,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    fail fast (data ahead of manifest, never a silent misread);
   *  - [[compact]] / [[compactIfNeeded]] merge old slices
   *    ([[DedupArtifacts.compactSlices]]), [[recover]] repairs a crashed
-  *    publish, and [[read]] is the manifest-verified read.
+  *    publish, and [[read]] is the manifest-verified read, which digests
+  *    each snapshot once per JVM.
   * Append and re-stamp first run the params HANDSHAKE over every family
   * ([[DedupArtifacts.requireParams]]), so nothing is written to a store
   * with a half-built family or one built at other params. The families
@@ -137,7 +138,14 @@ final case class SliceLog(root: String, partCol: String,
 
   /** Family `name`'s raw rows (partition column included), after the
     * handshake and a digest of its canonical view against the manifest
-    * ([[DedupArtifacts.readVerifiedCanonical]]). */
+    * ([[DedupArtifacts.readVerifiedCanonical]]). The digest runs once per
+    * snapshot: a re-read of a family whose manifest and data files
+    * (path, length, modification time) are unchanged since a verified
+    * read in this JVM skips it, while an [[append]], restatement,
+    * [[compact]] or [[restamp]] changes the snapshot, so the next read
+    * verifies again. A read that failed verification records nothing.
+    * An out-of-band rewrite that keeps a file's length and modification
+    * time after a verified read is not re-checked. */
   def read(spark: SparkSession, name: String): DataFrame = {
     val f = families.find(_.name == name)
       .getOrElse(sys.error(s"$root has no slice-log family $name"))

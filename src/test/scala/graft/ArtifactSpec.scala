@@ -793,6 +793,62 @@ class ArtifactSpec extends SparkSpec {
     spark.catalog.clearCache(): Unit
   }
 
+  test("snapshot memo: a re-read skips the digest; append and compaction re-verify (exact job pins)") {
+    import operators.StreamArtifacts
+    val r = tmpDir("graft-stream-stats-memo-")
+    StreamArtifacts.write(spark, sf, r)
+    def read(): (Int, Seq[org.apache.spark.sql.Row]) = {
+      var rows = Seq.empty[org.apache.spark.sql.Row]
+      val jobs = graft.obs.Meter.measure(spark) {
+        rows = StreamArtifacts.streamIndexStats(spark, r).collect().toSeq
+      }.jobs
+      (jobs, rows)
+    }
+    // the first read digests all four families; a re-read of the same
+    // snapshot runs the handshake and the stats alone
+    val (first, rows0) = read()
+    assert((first, read()) == (26, (15, rows0)), "first and second read")
+    // an appended day changes every family's listing and manifest
+    val sp = spark
+    import sp.implicits._
+    StreamArtifacts.appendDay(spark, r, 1L,
+      Seq((92000000001L, (1 to 30).map(i => s"mmz$i").mkString(" "), "synth"))
+        .toDF("doc_id", "text", "source"), restamp = true)
+    val (afterAppend, rows1) = read()
+    assert(afterAppend == first && rows1 != rows0, "first read after the append")
+    assert(read() == (15, rows1))
+    // compaction publishes new part files under the same manifest
+    StreamArtifacts.compact(spark, r, 1L)
+    assert(read() == (first, rows1), "first read after the compaction")
+    assert(read() == (15, rows1))
+    spark.catalog.clearCache(): Unit
+  }
+
+  test("snapshot memo: a file rewritten after a verified read fails; failures record nothing") {
+    val r2 = tmpDir("graft-artifacts-rewrite-")
+    DedupArtifacts.writeComponents(spark, sf, r2)
+    val path = s"$r2/components"
+    DedupArtifacts.readVerified(spark, path).count(): Unit
+    // one data file replaced out of band by another part's bytes: valid
+    // parquet, different rows (its checksum sidecar goes too, so the
+    // local FS reads the new bytes unchecked)
+    val parts = new java.io.File(path).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(parts.length >= 2)
+    java.nio.file.Files.copy(parts(1).toPath, parts(0).toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    new java.io.File(path, s".${parts(0).getName}.crc").delete(): Unit
+    // the same read, twice on the same files: a failed read records
+    // nothing, so the retry digests and fails again
+    for (attempt <- 1 to 2) {
+      val e = intercept[RuntimeException](
+        DedupArtifacts.readVerified(spark, path).count())
+      assert(e.getMessage.contains("failed verification"),
+        s"read $attempt: ${e.getMessage}")
+    }
+    spark.catalog.clearCache(): Unit
+  }
+
   test("gram store v2: 16-byte binary keys; a v1 hex family fails fast") {
     import operators.StreamArtifacts
     import org.apache.spark.sql.types.BinaryType

@@ -263,7 +263,7 @@ class OperatorsSpec extends SparkSpec {
   test("stop-gram df cap keeps hot grams out of the pair join") {
     val sp = spark
     import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hotgram").toString
+    val dir = tmpDir("graft_hotgram")
     // MaxGramDf+5 docs share ONE hot gram (plus unique fillers) — without
     // the cap that bucket alone yields ~(df²/2) pairs; with it, zero. Two
     // extra docs share only rare grams and must still pair.

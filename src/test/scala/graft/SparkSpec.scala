@@ -16,11 +16,29 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Every [[SparkSpec.tmpDir]] directory, deleted by one shutdown hook
+    * when the test JVM exits (a spec's lazy plans may still read them
+    * until then). */
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      tmpDirs.forEach { d =>
+        try operators.DedupArtifacts.deleteRoot(d)
+        catch { case _: Throwable => () } // best-effort; exit anyway
+      }))
+  }
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    tmpDirs.add(d)
+    d
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory in the JVM temp dir, deleted when the JVM exits. */
+  def tmpDir(prefix: String): String = TestSpark.tmpDir(prefix)
 }
