@@ -15,20 +15,24 @@ import graft.functions._
 object DotSelfToNorm extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case DotF(a, b) if a.semanticEquals(b) => Norm2F(a)
+      case KernelCall("graft_dot", Seq(a, b)) if a.semanticEquals(b) =>
+        KernelCall("graft_norm2", Seq(a))
     }
 }
 
-/** Session extension that registers graft's native expression kernels, so a
-  * user gets them in every session (SQL and `expr(...)`) via
+/** Session extension that installs graft's kernels, the whole
+  * [[graft.functions.Kernels.catalog]], so a user gets them in every session
+  * (SQL and `expr(...)`) via
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * or programmatically with [[GraftSession.builder]]. Both it and
-  * [[graft.functions.Kernels.register]], which serves sessions created
-  * without the extension, register the one [[graft.functions.Kernels.catalog]].
+  * or programmatically with [[GraftSession.builder]]. This is the install
+  * every engine session gets; a session cloned from it (as streaming
+  * queries do) copies its function registry, so operators never register
+  * kernels themselves. [[graft.functions.Kernels.register]] installs the
+  * same catalog into a session built without the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -40,7 +44,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** Opinionated session factory with the engine's scale defaults: AQE with
   * coalescing and skew-join handling on, shuffle partitions sized for the
   * deployment (32 for the local[32] test rig; a 1000-executor cluster would
-  * set cores*executors*2-3), and the graft extensions installed. */
+  * set cores*executors*2-3), and the graft extensions installed. The
+  * session contract: every main, spec and harness builds its session here,
+  * so every kernel is installed once, when the session is built, and every
+  * session cloned from it inherits them. */
 object GraftSession {
   def builder(master: String = "local[32]",
               shufflePartitions: Int = 32): SparkSession.Builder =

@@ -3,9 +3,10 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -149,19 +150,6 @@ object Kernels {
   }
 
   private val hexChars = "0123456789abcdef".toCharArray
-
-  private def md5Hex(md: MessageDigest, bytes: Array[Byte]): String = {
-    md.reset()
-    val dig = md.digest(bytes)
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexChars((dig(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexChars(dig(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   /** Winnowing fingerprint: lexicographic min over 5-codepoint shingles of
     * md5 hex (= numeric min over fixed-width hex). Shingle positions are
@@ -1044,64 +1032,126 @@ object Kernels {
       acc -> acc.b)"""
 
   /** One SQL kernel: its name, the usage string the session catalog
-    * reports, and its expression builder. */
+    * reports, its expression builder and, for a scalar kernel, the
+    * contract every [[KernelCall]] of that name evaluates. */
   final case class Kernel(name: String, usage: String,
-      builder: Seq[Expression] => Expression) {
+      builder: Seq[Expression] => Expression, scalar: Option[Scalar] = None) {
     def id: FunctionIdentifier = FunctionIdentifier(name)
     def info: ExpressionInfo = new ExpressionInfo(
       Kernels.getClass.getName.stripSuffix("$"), null, name, usage,
       "", "", "", "", "", "", "")
   }
 
-  /** Geometry and width arguments must be foldable integer literals,
-    * evaluated once when the expression is built; a column argument fails
-    * analysis with this message instead of an opaque eval() NPE. */
+  /** A scalar kernel's contract: its input types (checked, never cast),
+    * its result type, whether the result itself can be null (beyond a
+    * null argument), the static method generated code calls, and the
+    * interpreted body, a direct call of that same method. */
+  final case class Scalar(inputs: Seq[DataType], result: DataType,
+      nullResult: Boolean, method: String, body: Array[Any] => Any)
+
+  /** Geometry and width arguments must be integer literals, evaluated
+    * once when the call is built; any other argument fails analysis with
+    * this message instead of an opaque eval() NPE. */
   private def litInt(e: Expression): Int = {
-    require(e.foldable, s"geometry argument must be an integer literal, got: $e")
-    e.eval().asInstanceOf[Number].intValue
+    require(e.foldable && e.dataType == IntegerType && e.eval() != null,
+      s"geometry argument must be an integer literal, got: $e")
+    e.eval().asInstanceOf[Int]
   }
+
+  /** The count-min geometry every CMS kernel accepts: depth rows share
+    * the 1..12 quadratic hash family. */
+  def requireCmsGeometry(depth: Int, width: Int): Unit =
+    require(depth >= 1 && depth <= 12 && width >= 1,
+      s"CMS geometry out of range: ${depth}x$width (depth rows share the " +
+        "1..12 quadratic hash family)")
+
+  /** Checks a call's trailing `n` arguments as integer literals and
+    * passes them on as plain int literals. */
+  private def geometry(n: Int)(check: Seq[Int] => Unit)(
+      args: Seq[Expression]): Seq[Expression] = {
+    val (data, geo) = args.splitAt(args.length - n)
+    val ints = geo.map(litInt)
+    check(ints)
+    data ++ ints.map(Literal(_))
+  }
+
+  /** A scalar catalog entry: a call fills the trailing `default` if it is
+    * one argument short, checks its arity and geometry, and becomes a
+    * [[KernelCall]]. */
+  private def scalar(name: String, usage: String, inputs: Seq[DataType],
+      result: DataType, method: String, nullResult: Boolean = false,
+      default: Option[Expression] = None,
+      geometry: Seq[Expression] => Seq[Expression] = identity)(
+      body: Array[Any] => Any): Kernel =
+    Kernel(name, usage, { given =>
+      val args = if (given.length == inputs.length - 1) given ++ default else given
+      require(args.length == inputs.length,
+        s"$name takes ${inputs.length} arguments, got ${given.length}")
+      KernelCall(name, geometry(args))
+    }, Some(Scalar(inputs, result, nullResult, method, body)))
+
+  private def str(v: Any) = v.asInstanceOf[UTF8String]
+  private def arr(v: Any) = v.asInstanceOf[ArrayData]
+  private def int(v: Any) = v.asInstanceOf[Int]
+  private val floats = ArrayType(FloatType)
+  private val strings = ArrayType(StringType)
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val grams = ArrayType(StringType, containsNull = false)
+  private def codebook(id: String, norm: Boolean) = ArrayType(StructType(
+    Seq(StructField(id, LongType), StructField("c_emb", ArrayType(DoubleType))) ++
+      (if (norm) Seq(StructField("c_n2", DoubleType)) else Nil)))
+  private def argmin(id: String) = StructType(Seq(
+    StructField(id, LongType, nullable = false),
+    StructField("dist", DoubleType, nullable = false)))
+  private val gramWidth = geometry(1) { case Seq(n) =>
+    require(n >= 1 && n <= 16, s"gram width out of range: $n") } _
 
   /** Every SQL kernel, once: [[graft.GraftExtensions]] injects this table
     * into sessions built with the extension, and [[register]] adds it to
-    * sessions built without. */
+    * sessions built without. Adding a scalar kernel is one entry here. */
   val catalog: Seq[Kernel] = Seq(
-    Kernel("graft_minhash_sigs",
+    scalar("graft_minhash_sigs",
       "4-band x 3-row MinHash band signatures of a normalized string",
-      args => ShingleMinHashSigs(args.head)),
-    Kernel("graft_minhash_rows",
+      Seq(StringType), grams, "shingleMinHash")(a => shingleMinHash(str(a(0)))),
+    scalar("graft_minhash_rows",
       "the 12 raw MinHash row minima behind graft_minhash_sigs",
-      args => MinHashRows(args.head)),
-    Kernel("graft_simhash32",
+      Seq(StringType), longs, "minhashRowsArray")(a => minhashRowsArray(str(a(0)))),
+    scalar("graft_simhash32",
       "32-bit SimHash of a token array (md5 nibble majority votes)",
-      args => SimHash32(args.head)),
-    Kernel("graft_winnow_fp",
+      Seq(strings), LongType, "simHash32")(a => simHash32(arr(a(0)))),
+    scalar("graft_winnow_fp",
       "winnowing fingerprint: min md5 hex over 5-char shingles",
-      args => WinnowFp(args.head)),
-    Kernel("graft_dot",
+      Seq(StringType), StringType, "winnowFp")(a => winnowFp(str(a(0)))),
+    scalar("graft_dot",
       "sequential-fold double dot product of two float vectors",
-      args => DotF(args(0), args(1))),
-    Kernel("graft_norm2",
+      Seq(floats, floats), DoubleType, "dotF")(a => dotF(arr(a(0)), arr(a(1)))),
+    scalar("graft_norm2",
       "sequential-fold squared norm of a float vector",
-      args => Norm2F(args.head)),
-    Kernel("graft_lsh_bucket",
+      Seq(floats), DoubleType, "norm2F")(a => norm2F(arr(a(0)))),
+    scalar("graft_lsh_bucket",
       "8-plane sign-LSH bucket id of a 64-dim float vector",
-      args => LshBucket(args.head)),
-    Kernel("graft_lsh_buckets",
+      Seq(floats), IntegerType, "lshBucket")(a => lshBucket(arr(a(0)))),
+    scalar("graft_lsh_buckets",
       "per-table sign-LSH bucket ids (multi-table LSH) of a 64-dim float vector",
-      args => LshBuckets(args.head)),
-    Kernel("graft_str_hash",
+      Seq(floats), ArrayType(IntegerType, containsNull = false), "lshBuckets")(
+      a => lshBuckets(arr(a(0)))),
+    scalar("graft_str_hash",
       "deterministic polynomial string hash mod 2^31-1 (codepoint fold)",
-      args => StrHash(args.head)),
-    Kernel("graft_bloom_cells",
+      Seq(StringType), LongType, "cmsBaseHash")(a => cmsBaseHash(str(a(0)))),
+    scalar("graft_bloom_cells",
       "bloom-filter bit positions of a gram string (k rows over m bits)",
-      args => BloomCells(args.head,
-        if (args.length > 1) args(1) else Literal(BloomBits))),
-    Kernel("graft_cms_cells",
+      Seq(StringType, IntegerType), longs, "bloomCells",
+      default = Some(Literal(BloomBits)), geometry = geometry(1) { case Seq(m) =>
+        require(m >= 1, s"bloom filter size must be a positive bit count, got $m") })(
+      a => bloomCells(str(a(0)), int(a(1)))),
+    scalar("graft_cms_cells",
       "flat count-min-sketch cell indices of a string key",
-      args => CmsCells(args.head)),
-    Kernel("graft_cms_cells_g",
+      Seq(StringType), longs, "cmsCells")(a => cmsCells(str(a(0)))),
+    scalar("graft_cms_cells_g",
       "count-min cell indices at an explicit depth x width geometry",
-      args => CmsCellsG(args(0), litInt(args(1)), litInt(args(2)))),
+      Seq(StringType, IntegerType, IntegerType), longs, "cmsCellsG",
+      geometry = geometry(2) { case Seq(d, w) => requireCmsGeometry(d, w) })(
+      a => cmsCellsG(str(a(0)), int(a(1)), int(a(2)))),
     Kernel("graft_cms_sketch",
       "count-min sketch aggregate of a string column (flat depth x width matrix)",
       args => CountMinSketchAgg(args.head)),
@@ -1123,35 +1173,48 @@ object Kernels {
     Kernel("graft_qsketch_s",
       "quantile-sketch bucket counts at an explicit subdivision s",
       args => QuantileSketchAgg(args(0), litInt(args(1)))),
-    Kernel("graft_common_count",
+    scalar("graft_common_count",
       "exact |set(a) ∩ set(b)| of two long arrays (allocation-free)",
-      args => CommonCount(args(0), args(1))),
-    Kernel("graft_lev_capped",
+      Seq(longs, longs), LongType, "commonCount")(a => commonCount(arr(a(0)), arr(a(1)))),
+    scalar("graft_lev_capped",
       "edit distance when <= max(chars)/5 else -1 (prefix/suffix-stripped bit-parallel DP)",
-      args => LevCapped(args(0), args(1))),
-    Kernel("graft_word_grams",
+      Seq(StringType, StringType), LongType, "levCapped")(a => levCapped(str(a(0)), str(a(1)))),
+    scalar("graft_word_grams",
       "' '-joined word n-grams of a token array (codegen'd concat_ws loop)",
-      args => WordGrams(args(0), litInt(args(1)), distinct = false)),
-    Kernel("graft_word_grams_distinct",
+      Seq(strings, IntegerType), grams, "wordGrams", geometry = gramWidth)(
+      a => wordGrams(arr(a(0)), int(a(1)))),
+    scalar("graft_word_grams_distinct",
       "first-occurrence-distinct word n-grams of a token array",
-      args => WordGrams(args(0), litInt(args(1)), distinct = true)),
-    Kernel("graft_km_argmin",
+      Seq(strings, IntegerType), grams, "wordGramsDistinct", geometry = gramWidth)(
+      a => wordGramsDistinct(arr(a(0)), int(a(1)))),
+    scalar("graft_km_argmin",
       "nearest-centroid (cluster, dist) over a cluster-sorted codebook",
-      args => KmArgmin(args(0), args(1))),
-    Kernel("graft_ivf_argmax",
+      Seq(floats, codebook("cluster", norm = false)), argmin("cluster"),
+      "kmArgmin", nullResult = true)(a => kmArgmin(arr(a(0)), arr(a(1)))),
+    scalar("graft_ivf_argmax",
       "IVF nearest-cell id: argmax cosine over a cent_id-sorted codebook",
-      args => IvfArgmax(args(0), args(1), args(2))),
-    Kernel("graft_pq_codes",
+      Seq(floats, DoubleType, codebook("cent_id", norm = true)), LongType,
+      "ivfArgmax", nullResult = true)(
+      a => ivfArgmax(arr(a(0)), a(1).asInstanceOf[Double], arr(a(2)))),
+    scalar("graft_pq_codes",
       "per-subspace (cent_id, dist) argmins over a cent_id-sorted codebook",
-      args => PqCodes(args(0), args(1), litInt(args(2)), litInt(args(3)))))
+      Seq(floats, codebook("cent_id", norm = false), IntegerType, IntegerType),
+      ArrayType(argmin("cent_id"), containsNull = false), "pqCodes",
+      nullResult = true, geometry = geometry(2) { case Seq(nSub, subDim) =>
+        require(nSub >= 1 && nSub <= 64 && subDim >= 1, s"PQ geometry: $nSub x $subDim") })(
+      a => pqCodes(arr(a(0)), arr(a(1)), int(a(2)), int(a(3)))))
 
-  /** Registers the [[catalog]] as SQL temp functions. Idempotent AND
-    * quiet: a re-register on a session that already has them would log a
-    * "function replaced" warning per kernel per query — noise in every
-    * bench/verify log — so only the names the session does not have yet
-    * are registered (a membership check over every name, so a kernel
-    * added later is never skipped on a session registered by an older
-    * kernel set). */
+  /** Each scalar kernel's contract by name, as [[KernelCall]] reads it. */
+  val scalars: Map[String, Scalar] = catalog.flatMap(k => k.scalar.map(k.name -> _)).toMap
+
+  /** Installs the [[catalog]] as SQL temp functions into a session built
+    * without [[graft.GraftExtensions]], the one installer such a session
+    * needs: a session built by [[graft.GraftSession]] (or with
+    * `spark.sql.extensions=graft.GraftExtensions`) already has every
+    * kernel, and so has every session cloned from it, so operators never
+    * call this. Idempotent and quiet: only the names the session lacks
+    * are registered, so a re-register logs no "function replaced"
+    * warning and a kernel added later is never skipped. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     for (k <- catalog if !reg.functionExists(k.id))
@@ -1159,258 +1222,59 @@ object Kernels {
   }
 }
 
-/** IVF nearest-cell argmax — see [[Kernels.ivfArgmax]]. */
-case class IvfArgmax(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(FloatType), DoubleType,
-    ArrayType(StructType(Seq(
-      StructField("cent_id", LongType),
-      StructField("c_emb", ArrayType(DoubleType)),
-      StructField("c_n2", DoubleType)))))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(emb: Any, n2: Any, cb: Any): Any =
-    Kernels.ivfArgmax(emb.asInstanceOf[ArrayData],
-      n2.asInstanceOf[Double], cb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // non-nullable children get no null-check block, so the local must be
-    // unique within the generated function
-    val r = ctx.freshName("r")
-    nullSafeCodeGen(ctx, ev, (emb, n2, cb) => s"""
-      Object $r = graft.functions.Kernels.ivfArgmax($emb, $n2, $cb);
-      ${ev.isNull} = $r == null;
-      ${ev.value} = ${ev.isNull} ? -1L : ((java.lang.Long) $r).longValue();
-    """)
+/** A call of one scalar kernel: the [[Kernels.catalog]] entry named
+  * `name` declares its types and both of its bodies, so every scalar
+  * kernel is this one expression and plans print its SQL name. Null in,
+  * null out; input types are checked, never cast (`ExpectsInputTypes`);
+  * generated code is one static call into [[Kernels]]. */
+case class KernelCall(name: String, children: Seq[Expression])
+    extends Expression with ExpectsInputTypes {
+  @transient private lazy val k: Kernels.Scalar = Kernels.scalars(name)
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override def inputTypes: Seq[DataType] = k.inputs
+  override def dataType: DataType = k.result
+  override def nullable: Boolean = k.nullResult || children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[Any](children.length)
+    var i = 0
+    while (i < args.length) {
+      args(i) = children(i).eval(input)
+      if (args(i) == null) return null
+      i += 1
+    }
+    k.body(args)
   }
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): IvfArgmax =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
 
-/** Per-subspace PQ code argmins — see [[Kernels.pqCodes]]. */
-case class PqCodes(left: Expression, right: Expression, nSub: Int, subDim: Int)
-    extends BinaryExpression with ExpectsInputTypes {
-  require(nSub >= 1 && nSub <= 64 && subDim >= 1, s"PQ geometry: $nSub x $subDim")
-  override def inputTypes = Seq(ArrayType(FloatType),
-    ArrayType(StructType(Seq(
-      StructField("cent_id", LongType),
-      StructField("c_emb", ArrayType(DoubleType))))))
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("cent_id", LongType, nullable = false),
-    StructField("dist", DoubleType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(emb: Any, cb: Any): Any =
-    Kernels.pqCodes(emb.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData],
-      nSub, subDim)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (emb, cb) => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-        graft.functions.Kernels.pqCodes($emb, $cb, $nSub, $subDim);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = children.map(_.genCode(ctx))
+    val call =
+      s"graft.functions.Kernels.${k.method}(${args.map(_.value).mkString(", ")})"
+    val assign = if (!k.nullResult) s"${ev.value} = $call;" else {
+      val r = ctx.freshName("r") // two calls can share one generated scope
+      s"""Object $r = $call;
+        ${ev.isNull} = $r == null;
+        if (!${ev.isNull}) ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $r;"""
+    }
+    val init = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (!nullable) {
+      ev.copy(code = code"${args.map(_.code).mkString("\n")}\n$init\n$assign",
+        isNull = FalseLiteral)
+    } else {
+      // short-circuits like nullSafeCodeGen: a null argument skips the rest
+      val guarded = args.zip(children).foldRight(s"${ev.isNull} = false;\n$assign") {
+        case ((a, c), inner) =>
+          s"${a.code}\n" + ctx.nullSafeExec(c.nullable, a.isNull.toString)(inner)
+      }
+      ev.copy(code = code"boolean ${ev.isNull} = true;\n$init\n$guarded")
+    }
+  }
+
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqCodes =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Word n-grams (optionally first-occurrence-distinct) — see
-  * [[Kernels.wordGrams]] / [[Kernels.wordGramsDistinct]]. */
-case class WordGrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(n >= 1 && n <= 16, s"gram width out of range: $n")
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(toks: Any): Any =
-    if (distinct) Kernels.wordGramsDistinct(toks.asInstanceOf[ArrayData], n)
-    else Kernels.wordGrams(toks.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      if (distinct) s"graft.functions.Kernels.wordGramsDistinct($c, $n)"
-      else s"graft.functions.Kernels.wordGrams($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordGrams =
-    copy(child = newChild)
-}
-
-/** C45's capped edit distance — see [[Kernels.levCapped]]. */
-case class LevCapped(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType, StringType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.levCapped(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Kernels.levCapped($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LevCapped =
-    copy(left = newLeft, right = newRight)
-}
-
-/** |set(a) ∩ set(b)| of two long arrays — see [[Kernels.commonCount]]. */
-case class CommonCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.commonCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.Kernels.commonCount($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CommonCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Nearest-centroid argmin over a broadcast codebook array — see
-  * [[Kernels.kmArgmin]]. Null on an empty codebook, hence the custom
-  * codegen (defineCodeGen assumes a non-null result). */
-case class KmArgmin(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(FloatType),
-    ArrayType(StructType(Seq(
-      StructField("cluster", LongType),
-      StructField("c_emb", ArrayType(DoubleType))))))
-  override def dataType: DataType = StructType(Seq(
-    StructField("cluster", LongType, nullable = false),
-    StructField("dist", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(emb: Any, cb: Any): Any =
-    Kernels.kmArgmin(emb.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (emb, cb) => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.functions.Kernels.kmArgmin($emb, $cb);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KmArgmin =
-    copy(left = newLeft, right = newRight)
-}
-
-case class ShingleMinHashSigs(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.shingleMinHash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.shingleMinHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleMinHashSigs =
-    copy(child = newChild)
-}
-
-case class MinHashRows(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.minhashRowsArray(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.minhashRowsArray($c)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashRows =
-    copy(child = newChild)
-}
-
-case class SimHash32(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(StringType))
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.simHash32(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simHash32($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash32 =
-    copy(child = newChild)
-}
-
-case class WinnowFp(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.winnowFp(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.winnowFp($c)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowFp =
-    copy(child = newChild)
-}
-
-case class DotF(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Kernels.dotF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.dotF($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotF =
-    copy(left = newLeft, right = newRight)
-}
-
-case class Norm2F(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.norm2F(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.norm2F($c)")
-  override protected def withNewChildInternal(newChild: Expression): Norm2F =
-    copy(child = newChild)
-}
-
-case class LshBucket(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.lshBucket(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.lshBucket($c)")
-  override protected def withNewChildInternal(newChild: Expression): LshBucket =
-    copy(child = newChild)
-}
-
-case class LshBuckets(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(ArrayType(FloatType))
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.lshBuckets(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.lshBuckets($c)")
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
-}
-
-case class StrHash(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.cmsBaseHash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.cmsBaseHash($c)")
-  override protected def withNewChildInternal(newChild: Expression): StrHash =
-    copy(child = newChild)
-}
-
-case class BloomCells(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(gram: Any, mBits: Any): Any =
-    Kernels.bloomCells(gram.asInstanceOf[UTF8String],
-      mBits.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (g, m) => s"graft.functions.Kernels.bloomCells($g, $m)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): BloomCells = copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
 }
 
 /** Bloom membership probe with the built filter bound as a reference
@@ -1432,32 +1296,6 @@ case class BloomHitExpr(child: Expression, words: Array[Long])
     copy(child = newChild)
 }
 
-case class CmsCells(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.cmsCells(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.cmsCells($c)")
-  override protected def withNewChildInternal(newChild: Expression): CmsCells =
-    copy(child = newChild)
-}
-
-/** [[CmsCells]] at an explicit depth×width geometry (the C-sweep probe). */
-case class CmsCellsG(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Kernels.cmsCellsG(input.asInstanceOf[UTF8String], depth, width)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Kernels.cmsCellsG($c, $depth, $width)")
-  override protected def withNewChildInternal(newChild: Expression): CmsCellsG =
-    copy(child = newChild)
-}
-
 /** Count-min sketch of a string column as a custom Catalyst aggregate —
   * buffer is the flat depth×width cell matrix; update adds 1 to one cell
   * per hash row, merge is cellwise addition (commutative + associative, so
@@ -1473,9 +1311,7 @@ case class CountMinSketchAgg(
   extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Long]]
   with ExpectsInputTypes {
 
-  require(depth >= 1 && depth <= 12 && width >= 1,
-    s"CMS geometry out of range: ${depth}x$width (depth rows share the " +
-      "1..12 quadratic hash family)")
+  Kernels.requireCmsGeometry(depth, width)
   private val size = depth * width
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -115,7 +115,6 @@ object AnnArtifacts {
   private[graft] def writeFrom(spark: SparkSession, v: DataFrame,
       cents: DataFrame, cb: DataFrame, root: String,
       k: Int = IvfK, pqK: Int = PqK): Unit = {
-    graft.functions.Kernels.register(spark)
     DedupArtifacts.concurrently(Seq(
       () => DedupArtifacts.writeArtifact(cents, s"$root/ivf_centroids",
         "cent_id", centParams(k)),
@@ -160,7 +159,6 @@ object AnnArtifacts {
   def appendDay(spark: SparkSession, root: String, dayEpoch: Long,
       dayVectors: DataFrame, k: Int = IvfK, pqK: Int = PqK,
       restamp: Boolean = true): Unit = {
-    graft.functions.Kernels.register(spark)
     val cents = centroids(spark, root, k)
     val cb = pqCodebook(spark, root, pqK)
     val v = dayVectors.select(col("vec_id"), col("label"), col("embedding"),
@@ -248,7 +246,6 @@ object AnnArtifacts {
     * fetch touches `documents`. */
   def annServe(spark: SparkSession, dir: String, root: String,
       probeBatch: Int = ProbeBatch, probeLo: Int = 0): DataFrame = {
-    graft.functions.Kernels.register(spark)
     EmbeddingOps.serveJoin(spark, dir,
       EmbeddingOps.bruteforceHits(flat(spark, root), probeBatch, probeLo))
   }
@@ -258,7 +255,6 @@ object AnnArtifacts {
   def annIvf(spark: SparkSession, root: String, k: Int = IvfK,
       probeBatch: Int = ProbeBatch, probeLo: Int = 0,
       nprobe: Int = IvfNprobe): DataFrame = {
-    graft.functions.Kernels.register(spark)
     EmbeddingOps.ivfSearch(flat(spark, root), centroids(spark, root, k),
       cells(spark, root, k), probeBatch, probeLo, nprobe)
   }
@@ -267,7 +263,6 @@ object AnnArtifacts {
     * probes off the flat index. The search never recomputes a code. */
   def annPqAdc(spark: SparkSession, root: String, pqK: Int = PqK,
       probeBatch: Int = ProbeBatch, probeLo: Int = 0): DataFrame = {
-    graft.functions.Kernels.register(spark)
     EmbeddingOps.adcSearch(flat(spark, root), pqCodes(spark, root, pqK),
       pqCodebook(spark, root, pqK), probeBatch, probeLo)
   }
@@ -297,7 +292,6 @@ object AnnArtifacts {
     * 4-int rows, no embeddings, no distance folds. */
   def pqCodeUsage(spark: SparkSession, root: String,
       pqK: Int = PqK): DataFrame = {
-    graft.functions.Kernels.register(spark)
     pqCodeUsageOf(pqCodes(spark, root, pqK))
   }
 
@@ -310,7 +304,6 @@ object AnnArtifacts {
   def routeProbes(spark: SparkSession, root: String, probes: DataFrame,
       k: Int = IvfK, nprobe: Int = IvfNprobe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Kernels.register(spark)
     val cents = centroids(spark, root, k)
     probes.select(col("probe_id"), col("embedding").as("p_emb"),
         expr("graft_norm2(embedding)").as("p_n2"))

@@ -91,7 +91,6 @@ object DedupOps {
     * The heavy in-memory bucket paths (C2/C18/C29/C93) key on the raw long
     * minima instead — see [[minhashMinsOf]]. */
   private[graft] def minhashSigsOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
     docs
       .withColumn("norm", lower(trim(col("text"))))
@@ -112,7 +111,6 @@ object DedupOps {
     * consumers that persist or export sigs (C58's index, the stream-gate
     * store). */
   private[graft] def minhashMinsOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
     docs
       .withColumn("norm", lower(trim(col("text"))))
@@ -230,7 +228,6 @@ object DedupOps {
     * narrow pass; grouping by signature gives the dup classes. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Kernels.register(spark)
     val sig = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
@@ -285,7 +282,6 @@ object DedupOps {
     * (C45's edit-distance verifier, C75's agreement matrix, C93's radius
     * sweep); see [[minhashPairs]] for the rationale. */
   private[graft] def simhashBandPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
     // Same single-split hazard as C2: spread signature rows across cores
     // before the band explode + pair expansion.
@@ -906,7 +902,6 @@ object DedupOps {
     * The gram stream is cache()d: its two consumers prune different
     * columns, which defeats ReuseExchange (same lesson as C4). */
   def docNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val grams = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
@@ -1607,7 +1602,6 @@ object DedupOps {
     * a 31-bit collision merges the same two grams on BOTH engines, so
     * parity is unconditional. */
   private[graft] def gramSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
@@ -1814,7 +1808,6 @@ object DedupOps {
     * (the DedupArtifacts contract) — here they cache per run (C29
     * ownership). */
   def dedupBandingSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val par = spark.sessionState.conf.numShufflePartitions
     val minima = Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
@@ -1989,7 +1982,6 @@ object DedupOps {
     * Scale: C14's bucket-capped self-join is the only heavy stage; the
     * sweep adds 4 tiny aggregates over cached bounded relations. */
   def simhashRadiusSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val pairs = simhashBandPairs(spark, dir)
       .select("doc_a", "doc_b", "hamming").cache()
     val gsets = gramSets(spark, dir)
@@ -2210,7 +2202,6 @@ object DedupOps {
     * tail at the aggregate. No pair join anywhere — a boilerplate span
     * repeated a million times is ONE grid row, not 10¹² pairs. */
   def substrDupSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     anchoredSpans(Tables.documents(spark, dir))
       .select(col("doc_id"), col("span_hash"))
       .groupBy("span_hash")
@@ -2274,12 +2265,9 @@ object DedupOps {
   def spanMaskPlan(spark: SparkSession, dir: String): DataFrame =
     spanMaskRows(spark, dir).orderBy("doc_id", "span_start", "span_hash")
 
-  /** C106 core (unsorted): shared with C107, which re-partitions by doc
-    * for the interval merge — inheriting C106's output sort would pay a
-    * global range exchange only to immediately hash-repartition. */
   /** The C73/C106 anchored-span relation of an arbitrary (doc_id, text)
     * frame: one row per anchored [[SpanTok]]-token span occurrence —
-    * (doc_id, pos, span_hash). Callers must have Kernels registered.
+    * (doc_id, pos, span_hash).
     * Batch-parametric so D34 can run it per micro-batch. */
   private[graft] def anchoredSpans(docs: DataFrame): DataFrame = {
     val els = (1 to SpanTok)
@@ -2313,8 +2301,10 @@ object DedupOps {
       .select(col("doc_id"), col("pos").as("span_start"),
         lit(SpanTok.toLong).as("span_tokens"), col("span_hash"))
 
+  /** C106 core (unsorted): shared with C107, which re-partitions by doc
+    * for the interval merge — inheriting C106's output sort would pay a
+    * global range exchange only to immediately hash-repartition. */
   private def spanMaskRows(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val occ = anchoredSpans(Tables.documents(spark, dir)).cache()
     val dup = occ.groupBy("span_hash")
       .agg(countDistinct("doc_id").as("n_docs"))
@@ -2592,7 +2582,6 @@ object DedupOps {
     * to detect — the C101/C103 constructed-degeneracy pattern). */
   private[graft] def lshRecallOf(spark: SparkSession, dir: String,
       candidates: DataFrame, mod: Int): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val gs = gramSets(spark, dir)
       .filter(expr(
         s"graft_str_hash(concat('rcl|', cast(doc_id as string))) % $mod = 0"))
@@ -2636,7 +2625,6 @@ object DedupOps {
   private[graft] def bandedCandidates(spark: SparkSession, dir: String,
       bands: Int, rowsPer: Int): DataFrame = {
     require(bands * rowsPer <= 12, s"banding ${bands}x$rowsPer exceeds 12 rows")
-    graft.functions.Kernels.register(spark)
     val sigs = Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)
@@ -2922,7 +2910,6 @@ object DedupOps {
     * divisions of exact longs (sum(min) ≤ n_docs·P stays in a long up to
     * ~4·10⁹ docs; past that the grid would carry decimal partial sums). */
   def minhashRowHealth(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val grid = Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)
@@ -3022,7 +3009,6 @@ object DedupOps {
     * no joins, no extra shuffle beyond the grid's. Exactness: integer
     * counts, one division per cell. */
   def minhashCrossRowAgreement(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)

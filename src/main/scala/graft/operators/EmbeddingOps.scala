@@ -71,7 +71,6 @@ object EmbeddingOps {
     s"graft_dot($a, $b)"
 
   private[graft] def vectors(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"),
         expr("graft_norm2(embedding)").as("n2"))
@@ -363,7 +362,6 @@ object EmbeddingOps {
     * window, which shuffled k rows per vector; round 16). Shared by C13
     * (IVF search) and C35 (semantic dedup). */
   private[operators] def ivfAssigned(v: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(v.sparkSession)
     val cb = cents
       .select(col("cent_id"), col("c_emb").cast("array<double>").as("c_emb"),
         col("c_n2"))
@@ -1146,7 +1144,6 @@ object EmbeddingOps {
       CAST(0 AS DOUBLE), (acc, d) -> acc + d)""")
 
   def embedPq(spark: SparkSession, dir: String, k: Int = PqK): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val v = vectors(spark, dir)
     val cb = ivfCentroids(v, k).select("cent_id", "c_emb")
     // all PqSub subspace argmins in one kernel call per vector — same
@@ -1251,7 +1248,6 @@ object EmbeddingOps {
     * `pq_codes`. One aggregate: the per-subspace argmins land map-side
     * as conditional struct-MINs. */
   private[graft] def pqCodesWide(v: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(v.sparkSession)
     v.crossJoin(broadcast(pqCodebookRow(cb)))
       .select(col("vec_id"),
         expr(s"graft_pq_codes(embedding, pcb, $PqSub, $PqSubDim)").as("pq"))
@@ -1261,8 +1257,8 @@ object EmbeddingOps {
   }
 
   /** The PQ codebook collapsed to ONE broadcastable cent_id-sorted row —
-    * [[graft.functions.PqCodes]]'s input shape (the float→double cast of
-    * the centroid components is exact). */
+    * [[graft.functions.Kernels.pqCodes]]'s input shape (the float→double
+    * cast of the centroid components is exact). */
   private def pqCodebookRow(cb: DataFrame): DataFrame =
     cb.select(col("cent_id"), col("c_emb").cast("array<double>").as("c_emb"))
       .agg(expr("sort_array(collect_list(struct(cent_id, c_emb)))").as("pcb"))
@@ -1380,9 +1376,10 @@ object EmbeddingOps {
   val KmScale: Long = 10000000L
 
   /** The codebook collapsed to ONE broadcastable row: (cluster, c_emb
-    * double[64]) structs sorted by cluster id — [[graft.functions.KmArgmin]]'s
-    * input shape. The float→double cast of seed centroids is exact, and the
-    * cluster sort makes the kernel's strict-< keep-first rule reproduce
+    * double[64]) structs sorted by cluster id —
+    * [[graft.functions.Kernels.kmArgmin]]'s input shape. The float→double
+    * cast of seed centroids is exact, and the cluster sort makes the
+    * kernel's strict-< keep-first rule reproduce
     * `min(struct(dist, cluster))`'s smallest-cluster tie-break. */
   private def kmCodebook(cents: DataFrame): DataFrame =
     cents.select(col("cluster"), col("c_emb").cast("array<double>").as("c_emb"))
@@ -1395,7 +1392,6 @@ object EmbeddingOps {
     * of the corpus at all (round-16 optimization, guide §2.4). Shared with
     * D19's per-micro-batch serving path. */
   private[graft] def kmAssign(v: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(v.sparkSession)
     v.crossJoin(broadcast(kmCodebook(cents)))
       .select(col("vec_id"), expr("graft_km_argmin(embedding, cb)").as("m"))
       .filter(col("m").isNotNull)
@@ -1410,7 +1406,6 @@ object EmbeddingOps {
     * ≤ k·64-group partial-agg shuffle (round-16: was a 64×-exploded join
     * shuffle + an N-row argmin shuffle per round). */
   private def kmUpdate(v: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(v.sparkSession)
     v.crossJoin(broadcast(kmCodebook(cents)))
       .select(expr("graft_km_argmin(embedding, cb)").as("m"), col("embedding"))
       .filter(col("m").isNotNull)
@@ -1898,7 +1893,6 @@ object EmbeddingOps {
   def retrievalRrfServe(corpus: DataFrame, probes: DataFrame,
       k: Int = IvfK, nprobe: Int = IvfNprobe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Kernels.register(corpus.sparkSession)
     val v = corpus.select(col("vec_id"), col("embedding"),
       expr("graft_norm2(embedding)").as("n2"))
     val p = probes.select(col("probe_id"), col("embedding").as("p_emb"),
@@ -1993,7 +1987,6 @@ object EmbeddingOps {
     * is ADDITIVE over disjoint row sets (cellwise long sums), which is
     * what makes the streaming twin's per-epoch grids composable. */
   private[graft] def gramGrid(embeds: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(embeds.sparkSession)
     val k = graft.functions.Kernels
     val d2 = k.GramDims * k.GramDims
     val g = embeds.agg(expr("graft_gram_agg(embedding)").as("g"))

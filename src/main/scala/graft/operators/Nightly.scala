@@ -69,8 +69,6 @@ object Nightly {
     // ---- recovery prologue (crashed previous run → consistent store)
     StreamArtifacts.recover(spark, streamRoot): Unit
     AnnArtifacts.recover(spark, annRoot): Unit
-    // once, before the chains fork, so no two of them race to register
-    graft.functions.Kernels.register(spark)
 
     // the landed slice's rows, summed from its parquet footers (no job)
     def sliceRows(root: String, family: String, partCol: String): Long =

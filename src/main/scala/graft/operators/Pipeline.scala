@@ -54,7 +54,6 @@ object Pipeline {
     * into eval. Narrow codegen'd pass
     * ([[graft.functions.Kernels.cmsBaseHash]] fold), zero shuffle. */
   def corpusSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .filter(length(lower(trim(col("text")))) > 0)
       .select(col("doc_id"), col("source"),
@@ -94,7 +93,6 @@ object Pipeline {
     * unsalted hash — sampling doesn't bias the split. Narrow codegen'd
     * pass, zero shuffle, at any corpus size. */
   def corpusSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val rate = SampleRates.foldLeft(when(lit(false), lit(0))) {
       case (acc, (l, r)) => acc.when(col("lang") === l, lit(r))
     }.otherwise(lit(SampleDefaultRate))
@@ -157,7 +155,6 @@ object Pipeline {
   /** Distinct [[DecontamGram]]-token shingles per doc off [[decontamBase]]:
     * (doc_id, gram). */
   private[graft] def decontamGrams(base: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(base.sparkSession)
     base.filter(size(col("toks")) >= DecontamGram)
       .select(col("doc_id"), explode(expr(
         s"graft_word_grams_distinct(toks, $DecontamGram)")).as("gram"))
@@ -215,7 +212,6 @@ object Pipeline {
     * back over a second narrow pass; no fact-side shuffle at any corpus
     * size. */
   def corpusMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
@@ -269,7 +265,6 @@ object Pipeline {
     * pass, 20-row cached source totals, broadcast back; no fact-side
     * shuffle at any corpus size. */
   def corpusMixTemp(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
@@ -325,7 +320,6 @@ object Pipeline {
   def corpusSampleStratified(spark: SparkSession, dir: String,
       k: Int = StratumK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .filter(length(lower(trim(col("text")))) > 0)
       .select(col("doc_id"), col("source"), col("lang"),
@@ -570,7 +564,6 @@ object Pipeline {
     * Hash ties break on doc_id; the salt keeps the selection independent
     * of C19/C20's hashes. */
   def corpusBottomK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .filter(length(lower(trim(col("text")))) > 0)
       .select(col("doc_id"), col("source"), col("lang"),
@@ -718,7 +711,6 @@ object Pipeline {
     * Cache ownership: caller reclaims via `spark.catalog.clearCache()`
     * after its action (the C29 contract; Bench/Verify already do). */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val grams = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"), split(lower(trim(col("text"))), "\\s+").as("toks"))
@@ -974,7 +966,6 @@ object Pipeline {
     * rows. Cache ownership: callers reclaim via
     * `spark.catalog.clearCache()` (the C29 contract). */
   def gramMemorization(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val occ = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"), split(lower(trim(col("text"))), "\\s+").as("toks"))
@@ -1069,7 +1060,6 @@ object Pipeline {
     * scan (no token re-read). Callers reclaim the grid cache via
     * `spark.catalog.clearCache()` (the C29 contract). */
   def noveltyCurve(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val B = NoveltyBuckets
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
@@ -1195,7 +1185,6 @@ object Pipeline {
 
   /** The (source, gram_hash) explode shared by the C76 family. */
   private def sourceGramsOf(df: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(df.sparkSession)
     df.filter(length(trim(col("text"))) > 0)
       .select(col("source"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= MemGram)
@@ -1339,7 +1328,6 @@ object Pipeline {
     * size (the export itself pays the one full shuffle; the manifest
     * never does). */
   def corpusShard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(
@@ -1396,7 +1384,6 @@ object Pipeline {
     * fact-scaled shuffle — then re-keyed onto (policy, hash) and
     * collapsed to a 2-row report. */
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     def splitOf(h: org.apache.spark.sql.Column) =
       when(h < SplitTrainPct, "train")
         .when(h < SplitValPct, "val").otherwise("test")
@@ -1882,7 +1869,7 @@ object Pipeline {
     *   1. BUILD: benchmark grams → 32 KiB Bloom filter (one bounded job,
     *      [[bloomBuild]]);
     *   2. SCREEN: every training gram probes the filter INSIDE the scan —
-    *      [[graft.functions.Kernels.BloomHitExpr]] is a codegen'd static
+    *      [[graft.functions.BloomHitExpr]] is a codegen'd static
     *      call, so the non-contaminated bulk (at 100 TB, ~everything) dies
     *      in the narrow pass with NO join and NO shuffle;
     *   3. CONFIRM: only Bloom survivors (true hits + a bounded
@@ -1922,7 +1909,6 @@ object Pipeline {
 
   def bloomDecontaminate(spark: SparkSession, dir: String,
       mBits: Int = graft.functions.Kernels.BloomBits): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val base = decontamBase(spark, dir)
     val benchGrams = decontamGrams(base)
       .filter(col("doc_id") % BenchMod === BenchRem).select("gram").distinct()
@@ -2093,7 +2079,6 @@ object Pipeline {
     * with i the 0-based start-token index — shared by batch C87 and its
     * streaming twin. */
   private[graft] def positionedGrams(base: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(base.sparkSession)
     base.filter(size(col("toks")) >= DecontamGram)
       .select(col("doc_id"), posexplode(expr(
         s"graft_word_grams(toks, $DecontamGram)")))

@@ -98,7 +98,6 @@ object SketchArtifacts {
       dayM: Int = Sketches.WeekHllM,
       dayDepth: Int = Sketches.WeekCmsDepth,
       dayWidth: Int = Sketches.WeekCmsWidth): Unit = {
-    graft.functions.Kernels.register(spark)
     DedupArtifacts.concurrently(Seq(
       () => DedupArtifacts.writeArtifact(
         Sketches.monthCustomers(spark, dir)
@@ -127,7 +126,6 @@ object SketchArtifacts {
     * and should not pay the other four families' build passes. */
   def writeQsketchDays(spark: SparkSession, dir: String, root: String,
       s: Int = graft.functions.Kernels.QSketchS): Unit = {
-    graft.functions.Kernels.register(spark)
     writeQsketchFamily(spark, dir, root, s)
     spark.catalog.clearCache()
   }
@@ -185,7 +183,6 @@ object SketchArtifacts {
       dayEvents: DataFrame,
       s: Int = graft.functions.Kernels.QSketchS,
       restamp: Boolean = true): Unit = {
-    graft.functions.Kernels.register(spark)
     appendDaySlice(spark, qsketchLog(root, s), dayEpoch,
       Sketches.dayValueSketchesOf(dayEvents, s), restamp)
   }
@@ -197,7 +194,6 @@ object SketchArtifacts {
       depth: Int = Sketches.WeekCmsDepth,
       width: Int = Sketches.WeekCmsWidth,
       restamp: Boolean = true): Unit = {
-    graft.functions.Kernels.register(spark)
     appendDaySlice(spark, cmsDayLog(root, depth, width), dayEpoch,
       Sketches.dayCmsSketchesOf(dayEvents.select(
         expr("ts div 86400000000000").as("day_epoch"),
@@ -211,7 +207,6 @@ object SketchArtifacts {
   def appendHllDay(spark: SparkSession, root: String, dayEpoch: Long,
       dayEvents: DataFrame, m: Int = Sketches.WeekHllM,
       restamp: Boolean = true): Unit = {
-    graft.functions.Kernels.register(spark)
     appendDaySlice(spark, hllDayLog(root, m), dayEpoch,
       Sketches.dayHllSketchesOf(dayEvents.select(
         expr("ts div 86400000000000").as("day_epoch"), col("user_id")), m),
@@ -281,7 +276,6 @@ object SketchArtifacts {
     * geometry handshake: the read rejects a store built at any other s. */
   def valueQuantileDrift(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Sketches.quantileDriftAssemble(qsketchDays(spark, root, s), s)
   }
 
@@ -291,7 +285,6 @@ object SketchArtifacts {
     * calendar grain gets for free once the days persist. */
   def valueQuantileWeek(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Sketches.weekQuantileAssemble(qsketchDays(spark, root, s), s)
   }
 
@@ -309,7 +302,6 @@ object SketchArtifacts {
   def qsketchWeekEstimates(spark: SparkSession, root: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val nb = graft.functions.Kernels.qsketchBuckets(s)
     val wk = qsketchDays(spark, root, s)
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
@@ -343,7 +335,6 @@ object SketchArtifacts {
   def cmsWeekMerge(spark: SparkSession, dir: String, root: String,
       depth: Int = Sketches.WeekCmsDepth,
       width: Int = Sketches.WeekCmsWidth): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val kc = Sketches.dayValueKeys(spark, dir)
       .groupBy(expr("day_epoch div 7").as("week_epoch"), col("key"))
       .agg(count(lit(1)).as("n_true"))
@@ -356,7 +347,6 @@ object SketchArtifacts {
     * reads events once. Byte-equal to the inline B58 (ArtifactSpec). */
   def hllWeekActives(spark: SparkSession, dir: String, root: String,
       m: Int = Sketches.WeekHllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ex = Sketches.dayUsers(spark, dir)
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
       .agg(countDistinct("user_id").as("n_exact"))
@@ -377,7 +367,6 @@ object SketchArtifacts {
       width: Int = Sketches.WeekCmsWidth,
       keys: Seq[String] = Sketches.CmsProbeKeys): DataFrame = {
     keys.foreach(DedupArtifacts.requireSafeToken("CMS probe key", _))
-    graft.functions.Kernels.register(spark)
     val cells = depth * width
     val wk = cmsDays(spark, root, depth, width)
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
@@ -400,7 +389,6 @@ object SketchArtifacts {
     * scans, plan-pinned. */
   def hllWeekEstimates(spark: SparkSession, root: String,
       m: Int = Sketches.WeekHllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val am2 = graft.functions.Kernels.hllAlphaM2Of(m)
     hllDays(spark, root, m)
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
@@ -472,7 +460,6 @@ object SketchArtifacts {
     * 12 artifact rows. Byte-equal to the inline B51 (ArtifactSpec). */
   def monthOverlap(spark: SparkSession, dir: String, root: String,
       m: Int = graft.functions.Kernels.HllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Sketches.overlapAssemble(hllMonths(spark, root, m),
       Sketches.monthCustomers(spark, dir).cache(), m)
   }
@@ -481,7 +468,6 @@ object SketchArtifacts {
     * the persisted registers — zero fact-table scans (plan-pinned). */
   def monthOverlapEstimates(spark: SparkSession, root: String,
       m: Int = graft.functions.Kernels.HllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = hllMonths(spark, root, m)
     val am2 = graft.functions.Kernels.hllAlphaM2Of(m)
     def estOf(regs: String) =
@@ -508,7 +494,6 @@ object SketchArtifacts {
   def heavyHitters(spark: SparkSession, dir: String, root: String,
       denom: Long = Sketches.HhSupportDenom,
       depth: Int = Sketches.HhDepth, width: Int = Sketches.HhWidth): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val cells = depth * width
     val sk = cmsTypes(spark, root, depth, width)
       .agg(

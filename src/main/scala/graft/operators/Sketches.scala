@@ -22,7 +22,6 @@ object Sketches {
     * 4×64 longs regardless of corpus size: at 100 TB the aggregate moves
     * 2 KiB per partition where an exact groupBy moves the key space. */
   def eventsCms(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ev = Tables.events(spark, dir)
     val sketch = ev.agg(expr("graft_cms_sketch(event_type)").as("m"))
     ev.groupBy("event_type").agg(count(lit(1)).as("n_events"))
@@ -66,7 +65,6 @@ object Sketches {
     * exact-double territory (powers of two, one division, no ln), so the
     * oracle reproduces it bit-for-bit in closed form. */
   def eventsHll(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val am2 = graft.functions.Kernels.HllAlphaM2
     Tables.events(spark, dir)
       .groupBy("event_type")
@@ -150,7 +148,6 @@ object Sketches {
     * subtraction + one division on bit-identical inputs. */
   def hllMSweep(spark: SparkSession, dir: String,
       ms: Seq[Int] = HllSweepMs): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sketchAggs =
       ms.map(m => expr(s"graft_hll_sketch_m(event_id, $m)").as(s"regs_$m"))
     val one = Tables.events(spark, dir)
@@ -229,7 +226,6 @@ object Sketches {
     * max rollups) except the one final share division. */
   def cmsGeometrySweep(spark: SparkSession, dir: String,
       geoms: Seq[(Int, Int)] = CmsSweepGeoms): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ev = Tables.events(spark, dir)
       .select(concat(col("event_type"), lit(":"),
         col("user_id").cast("string")).as("key"))
@@ -341,7 +337,6 @@ object Sketches {
   def cmsHeavyHitters(spark: SparkSession, dir: String,
       denom: Long = HhSupportDenom,
       depth: Int = HhDepth, width: Int = HhWidth): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ev = hhKeys(spark, dir)
     val sk = ev.agg(
       expr(s"graft_cms_sketch_g(key, $depth, $width)").as("m"),
@@ -425,7 +420,6 @@ object Sketches {
     * raw estimator's documented behavior, reported as-is). */
   def hllMonthOverlap(spark: SparkSession, dir: String,
       m: Int = graft.functions.Kernels.HllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val mc = monthCustomers(spark, dir).cache()
     val sk = mc.groupBy("mth")
       .agg(expr(s"graft_hll_sketch_m(o_custkey, $m)").as("regs"))
@@ -589,7 +583,6 @@ object Sketches {
   def valueQuantileSketch(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = eventCents(spark, dir)
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
         count(lit(1)).as("n")).cache()
@@ -647,7 +640,6 @@ object Sketches {
   def qsketchSSweep(spark: SparkSession, dir: String,
       ss: Seq[Int] = QSketchSweepSs,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val aggs = count(lit(1)).as("n") +:
       ss.map(s => expr(s"graft_qsketch_s(cents, $s)").as(s"regs_$s"))
     val one = eventCents(spark, dir).agg(aggs.head, aggs.tail: _*).cache()
@@ -716,7 +708,6 @@ object Sketches {
   def valueQuantilesByType(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = eventCents(spark, dir)
       .groupBy("event_type")
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
@@ -775,7 +766,6 @@ object Sketches {
       dir: String, segMul: Int,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = Tables.events(spark, dir)
       .select(
         concat_ws("_", col("event_type"),
@@ -839,7 +829,6 @@ object Sketches {
   def valueQuantileWeek(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     weekQuantileAssemble(dayValueSketches(spark, dir, s), s, qPms)
   }
 
@@ -1007,7 +996,6 @@ object Sketches {
 
   def cmsWeekMerge(spark: SparkSession, dir: String,
       depth: Int = WeekCmsDepth, width: Int = WeekCmsWidth): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ev = dayValueKeys(spark, dir)
     val kc = ev.groupBy(expr("day_epoch div 7").as("week_epoch"), col("key"))
       .agg(count(lit(1)).as("n_true"))
@@ -1118,7 +1106,6 @@ object Sketches {
 
   def hllWeekActives(spark: SparkSession, dir: String,
       m: Int = WeekHllM): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val ev = dayUsers(spark, dir)
     val ex = ev.groupBy(expr("day_epoch div 7").as("week_epoch"))
       .agg(countDistinct("user_id").as("n_exact"))
@@ -1305,7 +1292,6 @@ object Sketches {
   def orderValueQuantilesByMonth(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = Tables.orders(spark, dir)
       .select((year(col("o_orderdate")) * lit(100) + month(col("o_orderdate")))
           .cast("long").as("ym"),
@@ -1366,7 +1352,6 @@ object Sketches {
   def doclenQuantilesBySource(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val sk = Tables.documents(spark, dir)
       .select(col("source"), col("n_chars"))
       .groupBy("source")
@@ -1449,7 +1434,6 @@ object Sketches {
     * lag window orders one row per calendar day above the aggregate. */
   def valueQuantileDrift(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS): DataFrame = {
-    graft.functions.Kernels.register(spark)
     quantileDriftAssemble(dayValueSketches(spark, dir, s), s)
   }
 

@@ -108,7 +108,6 @@ object StreamArtifacts {
     graft.operators.Pipeline.gramHashRows(docs)
 
   private def spanRows(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(spark)
     DedupOps.anchoredSpans(docs)
       .select(col("doc_id"), col("span_hash"))
       .groupBy("span_hash")
@@ -154,7 +153,6 @@ object StreamArtifacts {
     * once, after all four. */
   def writeFrom(spark: SparkSession, standingDocs: DataFrame,
       spanDocs: DataFrame, root: String): Unit = {
-    graft.functions.Kernels.register(spark)
     log(root).write(spark, f =>
       slices(f, spark, if (f == "span_index") spanDocs else standingDocs)
         .withColumn("ingest_day", lit(0L)))

@@ -776,7 +776,6 @@ object TextOps {
     * same exact doubles on both engines, so it is oracle-stable whatever
     * the thresholds. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
@@ -895,7 +894,6 @@ object TextOps {
     * fixed-width hex == numeric min, and min is order-independent so the
     * distributed agg is exact). */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .select(col("doc_id"),
@@ -970,7 +968,6 @@ object TextOps {
     * word), never corpus-sized. */
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.Kernels.register(spark)
     // bigrams via the codegen'd gram kernel (W6), not the interpreted
     // struct-building transform lambda; tokens come from a \s+ split, so
     // they contain no spaces and "w1 w2" ↔ (w1, w2) is bijective — the
@@ -1049,7 +1046,6 @@ object TextOps {
     * INCOMING docs against a model trained on yesterday's corpus) is the
     * same audited plan, batch or per micro-batch. */
   def scoreAgainstLm(docs: DataFrame, lm: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(docs.sparkSession)
     // same W6 gram-kernel shape as [[bigramLm]]: the corpus side explodes
     // "w1 w2" strings (codegen'd, no interpreted struct lambda) and the
     // join keys on that ONE string; the vocabulary-scaled LM side rebuilds
@@ -1604,7 +1600,6 @@ object TextOps {
     * corpus pass at any scale; docs shorter than 3 tokens carry no
     * defined trigram share and are excluded by contract. */
   def docRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Kernels.register(spark)
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))

@@ -99,7 +99,6 @@ object Export {
   def shardedCorpus(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions._
-    graft.functions.Kernels.register(spark)
     val routed = docs.filter(length(trim(col("text"))) > 0)
       .withColumn("shard_id",
         expr("graft_str_hash(concat('shard|', lower(trim(text))))")

@@ -193,7 +193,6 @@ object Tables {
   def readShardedVerified(s: SparkSession, path: String,
       expected: org.apache.spark.sql.DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.Kernels.register(s)
     val df = readParquet(s, path)
     val got = df
       .select(col("shard_id").cast("long").as("shard_id"),

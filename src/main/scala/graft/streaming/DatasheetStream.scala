@@ -27,7 +27,6 @@ object DatasheetStream {
     * the same rows and compare results row-for-row (the sketch algebra is
     * deterministic, so even `hll_distintos` matches bit-for-bit). */
   def runningDatasheet(docs: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(docs.sparkSession)
     val am2 = graft.functions.Kernels.HllAlphaM2
     docs.filter(length(trim(col("text"))) > 0)
       .select(col("source"), col("lang"),
@@ -98,7 +97,6 @@ object DatasheetStream {
     * State is keyed on `source` — a tiny closed key space. Two-micro-batch
     * ≡ one-batch equality is spec-pinned bit-for-bit, estimate included. */
   def runningSourceHealth(docs: DataFrame): DataFrame = {
-    graft.functions.Kernels.register(docs.sparkSession)
     val am2 = graft.functions.Kernels.HllAlphaM2
     docs.filter(length(trim(col("text"))) > 0)
       .select(col("source"),

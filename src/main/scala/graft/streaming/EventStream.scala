@@ -109,7 +109,6 @@ object EventStream {
   def hourlyValueQuantiles(events: DataFrame,
       watermark: String = "1 hour"): DataFrame = {
     import graft.functions.Kernels
-    Kernels.register(events.sparkSession)
     val s = Kernels.QSketchS
     def pickLower(qPm: Int, out: String): Seq[(String, String)] = Seq(
       s"r_$qPm" -> s"(($qPm * n_valores) + 999) div 1000",
@@ -130,7 +129,6 @@ object EventStream {
   }
 
   def dailyActive(events: DataFrame, watermark: String = "1 day"): DataFrame = {
-    graft.functions.Kernels.register(events.sparkSession)
     val am2 = graft.functions.Kernels.HllAlphaM2
     events
       .withWatermark("ts", watermark)

@@ -34,8 +34,7 @@ object MaskStream {
   /** Start the planner: screens `docs` (doc_id, text) micro-batches
     * against `spanIndex` (1 column `span_hash`), appends mask rows
     * (doc_id, span_start, span_tokens, span_hash, batch_id) under
-    * `targetDir`. Callers register Kernels once up front (the anchored
-    * explode uses `graft_str_hash`). */
+    * `targetDir`. */
   def plan(docs: DataFrame, spanIndex: DataFrame,
            targetDir: String, checkpointDir: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =

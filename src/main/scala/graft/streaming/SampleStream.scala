@@ -52,7 +52,6 @@ object SampleStream {
   /** Shared column prep: the batch twin's salted hash over the normalized
     * text, so stream and batch sample IDENTICAL keys. */
   def docHashes(docs: DataFrame): Dataset[DocHash] = {
-    graft.functions.Kernels.register(docs.sparkSession)
     implicit val enc = Encoders.product[DocHash]
     docs.filter(length(lower(trim(col("text")))) > 0)
       .select(col("source"), col("lang"), col("doc_id"),

@@ -39,7 +39,6 @@ object ShardStream {
   /** The batch C65 routing projection — narrow, codegen'd, stateless —
     * applicable to a static OR streaming documents frame. */
   def route(docs: DataFrame): Dataset[ShardIn] = {
-    graft.functions.Kernels.register(docs.sparkSession)
     docs.filter(length(trim(col("text"))) > 0)
       .select(
         (expr("graft_str_hash(concat('shard|', lower(trim(text))))")

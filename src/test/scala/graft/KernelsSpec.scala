@@ -102,20 +102,20 @@ class KernelsSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites self dot product to squared norm") {
-    import graft.functions.{DotF, Norm2F}
+    import graft.functions.KernelCall
     def exprsOf[T](df: org.apache.spark.sql.DataFrame)(
         pf: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, T]): Seq[T] =
       df.queryExecution.optimizedPlan
         .collect { case p => p.expressions.flatMap(_.collect(pf)) }.flatten
     val df = embs.selectExpr("graft_dot(embedding, embedding) AS d",
       "graft_norm2(embedding) AS n")
-    assert(exprsOf(df) { case e: DotF => e }.isEmpty,
+    assert(exprsOf(df) { case e @ KernelCall("graft_dot", _) => e }.isEmpty,
       "self dot product survived optimization")
-    assert(exprsOf(df) { case e: Norm2F => e }.size == 2)
+    assert(exprsOf(df) { case e @ KernelCall("graft_norm2", _) => e }.size == 2)
     // and a genuine two-vector dot is left alone
     val df2 = embs.as("a").crossJoin(embs.as("b")).limit(1)
       .selectExpr("graft_dot(a.embedding, b.embedding) AS d")
-    assert(exprsOf(df2) { case e: DotF => e }.nonEmpty)
+    assert(exprsOf(df2) { case e @ KernelCall("graft_dot", _) => e }.nonEmpty)
     assert(df.filter(col("d") =!= col("n")).count() == 0)
   }
 
@@ -426,12 +426,201 @@ class KernelsSpec extends SparkSpec {
       col("d_old") =!= col("d_ker")).count() == 0)
   }
 
+  /** Deepest cause: a kernel's own exception, whichever task or analysis
+    * wrapper carried it out of Spark. */
+  private def rootCause(t: Throwable): Throwable =
+    if (t.getCause == null || (t.getCause eq t)) t else rootCause(t.getCause)
+
+  /** One scalar kernel's rows: the calls over argument columns a0..an,
+    * the argument rows that evaluate (one SQL literal per argument), and
+    * the rows that must fail with the same one-line error on both paths. */
+  private case class KernelRows(calls: Seq[String],
+      ok: Seq[Seq[String]], fail: Seq[Seq[String]] = Nil)
+
+  /** Every scalar kernel on adversarial rows: null, empty, malformed and
+    * truncated UTF-8, 4-byte code points, long edit-distance cores,
+    * extreme longs, NaN/±Inf vectors, empty codebooks. */
+  private def adversarialRows: Map[String, KernelRows] = {
+    val smile = new String(Character.toChars(0x1F642))
+    val strs = Seq("NULL", "''", "'abcd'", "'the quick brown fox jumps'",
+      "CAST(X'61C3FF62E282' AS STRING)", // bad continuation + cut 3-byte tail
+      "CAST(X'6162636465F09F99' AS STRING)", // cut 4-byte tail
+      s"'x${smile}y${smile}z${smile}w${smile}v'")
+    def one(rows: Seq[String]) = rows.map(Seq(_))
+    val toks = one(Seq("NULL", "CAST(array() AS ARRAY<STRING>)", "array('a')",
+      "split('a b a b c a b c d e f g h i j k l m n o', ' ')",
+      s"array('', CAST(X'C3' AS STRING), '$smile', CAST(X'FFFE' AS STRING), '$smile')"))
+    def fv(xs: String*) = xs.map(x => s"CAST($x AS FLOAT)").mkString("array(", ", ", ")")
+    val vecs = Seq("NULL", "CAST(array() AS ARRAY<FLOAT>)", fv("1.5", "-2", "0.25"),
+      fv("'NaN'", "1"), fv("'Infinity'", "'-Infinity'", "2"), fv("'Infinity'", "3"))
+    val vec64 = one(Seq("NULL", "array_repeat(CAST(0.5 AS FLOAT), 64)",
+      "CAST(sequence(-30, 33) AS ARRAY<FLOAT>)",
+      "array_repeat(CAST('NaN' AS FLOAT), 64)",
+      "concat(array(CAST('Infinity' AS FLOAT)), array_repeat(CAST(-1 AS FLOAT), 63))",
+      "concat(array(CAST('-Infinity' AS FLOAT), CAST('Infinity' AS FLOAT)), " +
+        "array_repeat(CAST(0 AS FLOAT), 62))"))
+    val short64 = one(Seq("CAST(array() AS ARRAY<FLOAT>)",
+      "array_repeat(CAST(1 AS FLOAT), 63)"))
+    val (lo, hi) = ("CAST('-9223372036854775808' AS BIGINT)", "9223372036854775807L")
+    val longs = Seq("NULL", "CAST(array() AS ARRAY<BIGINT>)",
+      "CAST(array(1, 1, 2, 3) AS ARRAY<BIGINT>)",
+      s"array($lo, $hi, 0L, -1L)", s"array($hi, $hi, $lo)")
+    def cb(field: String, n2: Boolean, rows: (Long, Seq[String])*) =
+      rows.map { case (id, xs) =>
+        val ds = xs.map(x => s"CAST($x AS DOUBLE)")
+        s"named_struct('$field', ${id}L, 'c_emb', ${ds.mkString("array(", ", ", ")")}" +
+          (if (n2) ds.map(d => s"$d * $d").mkString(", 'c_n2', ", " + ", "") else "") + ")"
+      }.mkString("array(", ", ", ")")
+    def emptyCb(field: String, n2: Boolean) =
+      s"CAST(array() AS ARRAY<STRUCT<$field: BIGINT, c_emb: ARRAY<DOUBLE>" +
+        (if (n2) ", c_n2: DOUBLE" else "") + ">>)"
+    def cbs(field: String, n2: Boolean) = Seq(
+      cb(field, n2, 1L -> Seq("0", "1"), 2L -> Seq("1", "0"), 3L -> Seq("1", "0")),
+      emptyCb(field, n2),
+      cb(field, n2, 1L -> Seq("'NaN'", "0"), 2L -> Seq("1", "1")),
+      cb(field, n2, 5L -> Seq("'Infinity'", "2", "3", "4"), 6L -> Seq("0", "0", "0", "0")))
+    val embs = Seq(fv("1", "2", "3", "4"), fv("'NaN'", "1", "0", "2"),
+      fv("'Infinity'", "'-Infinity'", "1", "1"), "CAST(array() AS ARRAY<FLOAT>)", fv("0.5"))
+    def against(cbs: Seq[String], extra: Seq[String] = Nil) =
+      Seq("NULL" +: cbs.head +: extra) ++
+        (for (e <- embs; c <- cbs) yield (e +: c +: extra))
+    val grams = Seq("graft_word_grams(a0, 1)", "graft_word_grams(a0, 2)",
+      "graft_word_grams(a0, 16)")
+    Map(
+      "graft_minhash_sigs" -> KernelRows(Seq("graft_minhash_sigs(a0)"), one(strs)),
+      "graft_minhash_rows" -> KernelRows(Seq("graft_minhash_rows(a0)"), one(strs)),
+      "graft_simhash32" -> KernelRows(Seq("graft_simhash32(a0)"), toks),
+      "graft_winnow_fp" -> KernelRows(Seq("graft_winnow_fp(a0)"), one(strs)),
+      "graft_dot" -> KernelRows(Seq("graft_dot(a0, a1)"),
+        for (a <- vecs; b <- vecs) yield Seq(a, b)),
+      "graft_norm2" -> KernelRows(Seq("graft_norm2(a0)"), one(vecs)),
+      "graft_lsh_bucket" -> KernelRows(Seq("graft_lsh_bucket(a0)"), vec64, short64),
+      "graft_lsh_buckets" -> KernelRows(Seq("graft_lsh_buckets(a0)"), vec64, short64),
+      "graft_str_hash" -> KernelRows(Seq("graft_str_hash(a0)"), one(strs)),
+      "graft_bloom_cells" -> KernelRows(Seq("graft_bloom_cells(a0)",
+        "graft_bloom_cells(a0, 1)", "graft_bloom_cells(a0, 2147483647)"), one(strs)),
+      "graft_cms_cells" -> KernelRows(Seq("graft_cms_cells(a0)"), one(strs)),
+      "graft_cms_cells_g" -> KernelRows(Seq("graft_cms_cells_g(a0, 4, 64)",
+        "graft_cms_cells_g(a0, 12, 1)", "graft_cms_cells_g(a0, 1, 2147483647)"),
+        one(strs)),
+      "graft_common_count" -> KernelRows(Seq("graft_common_count(a0, a1)"),
+        for (a <- longs; b <- longs) yield Seq(a, b)),
+      "graft_lev_capped" -> KernelRows(Seq("graft_lev_capped(a0, a1)"),
+        (for (a <- strs; b <- strs) yield Seq(a, b)) ++ Seq(
+          Seq("repeat('ab', 70)", "repeat('ba', 70)"),
+          Seq("concat('pre', repeat('abcdefgh', 12), 'post')",
+            "concat('pre', repeat('abcdefhg', 12), 'post')"),
+          Seq(s"repeat('a$smile', 40)", s"repeat('${smile}a', 41)"),
+          Seq("repeat(CAST(X'C3FF' AS STRING), 50)", "repeat('a', 80)"))),
+      "graft_word_grams" -> KernelRows(grams, toks),
+      "graft_word_grams_distinct" -> KernelRows(
+        grams.map(_.replace("graft_word_grams(", "graft_word_grams_distinct(")), toks),
+      "graft_km_argmin" -> KernelRows(Seq("graft_km_argmin(a0, a1)"),
+        against(cbs("cluster", n2 = false))),
+      "graft_ivf_argmax" -> KernelRows(Seq("graft_ivf_argmax(a0, a2, a1)"),
+        against(cbs("cent_id", n2 = true), Seq("1.0D")) ++ Seq(
+          Seq(fv("1", "2"), cbs("cent_id", n2 = true).head, "NULL"),
+          Seq(fv("1", "2"), cbs("cent_id", n2 = true).head, "0.0D"),
+          Seq(fv("1", "2"), cbs("cent_id", n2 = true)(2), "CAST('NaN' AS DOUBLE)"))),
+      "graft_pq_codes" -> KernelRows(Seq("graft_pq_codes(a0, a1, 2, 2)",
+        "graft_pq_codes(a0, a1, 1, 4)", "graft_pq_codes(a0, a1, 3, 1)"),
+        against(cbs("cent_id", n2 = false))))
+  }
+
+  /** One frame with a row per argument row: each argument column is a
+    * CASE over `id`, so no call is foldable and every row runs through
+    * the projection under test (a local relation would be evaluated by
+    * the optimizer instead). */
+  private def argFrame(rows: Seq[Seq[String]]): org.apache.spark.sql.DataFrame = {
+    val cols = rows.head.indices.map { j =>
+      val whens = rows.zipWithIndex.map { case (r, i) => s"WHEN $i THEN ${r(j)}" }
+      val body = if (rows.size == 1) whens.head
+        else whens.init.mkString(" ") + s" ELSE ${rows.last(j)}"
+      s"CASE id $body END AS a$j"
+    }
+    spark.range(rows.size).selectExpr("id" +: cols: _*)
+  }
+
+  private val compiledConf = Map("spark.sql.codegen.fallback" -> "false")
+  private val interpretedConf = Map("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** The calls' rendered results, sorted by row, or the root error. */
+  private def runUnder(conf: Map[String, String], calls: Seq[String],
+      rows: Seq[Seq[String]]): Either[String, Seq[String]] = {
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try Right(argFrame(rows).selectExpr("id" +: calls: _*).collect()
+      .sortBy(_.getLong(0)).map(_.toString).toSeq)
+    catch { case t: Throwable => Left(String.valueOf(rootCause(t).getMessage)) }
+    finally conf.keys.foreach(spark.conf.unset)
+  }
+
   test("kernels survive null inputs") {
-    val sp = spark
-    import sp.implicits._
-    val row = Seq(Tuple1(Option.empty[String])).toDF("norm")
-    assert(row.selectExpr("graft_winnow_fp(norm)").head.isNullAt(0))
-    assert(row.selectExpr("graft_minhash_sigs(norm)").head.isNullAt(0))
+    val table = adversarialRows
+    val missing = graft.functions.Kernels.scalars.keys.toSeq.sorted.filterNot(table.contains)
+    assert(missing.isEmpty, s"scalar kernels without rows: $missing")
+    for ((name, kr) <- table.toSeq.sortBy(_._1)) {
+      assert(kr.ok.exists(_.contains("NULL")), s"$name: no null row")
+      val built = argFrame(kr.ok).selectExpr(kr.calls: _*).queryExecution.analyzed
+        .expressions.flatMap(_.collect { case c: graft.functions.KernelCall => c.name })
+      assert(built.size == kr.calls.size && built.forall(_ == name), s"$name: $built")
+      val compiled = runUnder(compiledConf, kr.calls, kr.ok)
+      val interpreted = runUnder(interpretedConf, kr.calls, kr.ok)
+      assert(compiled.isRight, s"$name: $compiled")
+      assert(compiled == interpreted, s"$name: $compiled != $interpreted")
+      // a null argument row yields a null result in every call
+      kr.ok.zip(compiled.toOption.get).filter(_._1.contains("NULL")).foreach {
+        case (_, r) => assert(r.split(",").tail.forall(_.startsWith("null")), s"$name: $r")
+      }
+      for (row <- kr.fail) {
+        val c = runUnder(compiledConf, kr.calls, Seq(row))
+        val i = runUnder(interpretedConf, kr.calls, Seq(row))
+        assert(c.isLeft && c == i && !c.swap.toOption.get.contains("\n"),
+          s"$name $row: $c vs $i")
+      }
+    }
+  }
+
+  test("kernel geometry is checked when the call is built, before any job runs") {
+    val in = spark.range(4).selectExpr("id", "CAST(id AS STRING) AS key",
+      "CAST(id AS INT) AS n", "split('a b c', ' ') AS toks",
+      "CAST(array(1, 2) AS ARRAY<FLOAT>) AS emb",
+      "CAST(array() AS ARRAY<STRUCT<cent_id: BIGINT, c_emb: ARRAY<DOUBLE>>>) AS cb")
+    val lit = "geometry argument must be an integer literal"
+    val guards = Seq(
+      "graft_cms_cells_g(key, 4, 0)" -> "CMS geometry out of range: 4x0",
+      "graft_cms_cells_g(key, -1, 64)" -> "CMS geometry out of range: -1x64",
+      "graft_cms_cells_g(key, 13, 64)" -> "CMS geometry out of range: 13x64",
+      "graft_cms_cells_g(key, n, 64)" -> lit,
+      "graft_bloom_cells(key, 0)" -> "bloom filter size must be a positive bit count, got 0",
+      "graft_bloom_cells(key, -64)" -> "bloom filter size must be a positive bit count, got -64",
+      "graft_bloom_cells(key, n)" -> lit,
+      "graft_bloom_cells(key, CAST(NULL AS INT))" -> lit,
+      "graft_word_grams(toks, 0)" -> "gram width out of range: 0",
+      "graft_word_grams_distinct(toks, 17)" -> "gram width out of range: 17",
+      "graft_word_grams(toks, n)" -> lit,
+      "graft_pq_codes(emb, cb, 0, 2)" -> "PQ geometry: 0 x 2",
+      "graft_pq_codes(emb, cb, 65, 1)" -> "PQ geometry: 65 x 1",
+      "graft_pq_codes(emb, cb, 2, 0)" -> "PQ geometry: 2 x 0",
+      "graft_pq_codes(emb, cb, n, 2)" -> lit,
+      "graft_cms_sketch_g(key, 4, 0)" -> "CMS geometry out of range: 4x0",
+      "graft_cms_sketch_g(key, 0, 64)" -> "CMS geometry out of range: 0x64",
+      "graft_cms_sketch_g(key, n, 64)" -> lit,
+      "graft_hll_sketch_m(id, 48)" -> "HLL m must be a power of two in [16, 2^20], got 48",
+      "graft_hll_sketch_m(id, 8)" -> "HLL m must be a power of two in [16, 2^20], got 8",
+      "graft_hll_sketch_m(id, n)" -> lit,
+      "graft_qsketch_s(id, 0)" -> "qsketch subdivision must be in [1,16], got 0",
+      "graft_qsketch_s(id, 17)" -> "qsketch subdivision must be in [1,16], got 17",
+      "graft_qsketch_s(id, n)" -> lit)
+    for ((call, msg) <- guards) {
+      var err: Throwable = null
+      val r = graft.obs.Meter.measure(spark) {
+        err = intercept[Throwable](in.selectExpr(call))
+      }
+      val m = String.valueOf(rootCause(err).getMessage)
+      assert(m.contains(msg) && !m.contains("\n"), s"$call: $m")
+      assert(r.jobs == 0, s"$call ran ${r.jobs} jobs")
+    }
   }
 
   test("qsketch bucket map: monotone, bracketing, exact inverse on bounds") {
