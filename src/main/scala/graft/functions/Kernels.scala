@@ -626,30 +626,6 @@ object Kernels {
     s
   }
 
-  /** 8-plane sign-LSH bucket: plane p has integer weights
-    * w_j = ((p·31 + j·17) mod 13) − 6 over dims 0..63; bit p of the bucket is
-    * set when the sequential-fold dot with plane p is > 0.
-    * Requires ≥64 dims — UnsafeArrayData reads past numElements are silent
-    * garbage, not exceptions, so the guard must be explicit. */
-  def lshBucket(a: ArrayData): Int = {
-    if (a.numElements() < 64)
-      throw new IllegalArgumentException(
-        s"graft_lsh_bucket requires >= 64 dims, got ${a.numElements()}")
-    var acc = 0
-    var p = 0
-    while (p < 8) {
-      var s = 0.0
-      var j = 0
-      while (j < 64) {
-        s += a.getFloat(j).toDouble * planeW(p, j).toDouble
-        j += 1
-      }
-      if (s > 0.0) acc |= 1 << p
-      p += 1
-    }
-    acc
-  }
-
   /** Multi-table LSH: number of independent hash tables. Single-table
     * sign-LSH recall decays fast with bucket granularity (measured 0.02-0.08
     * recall@10 on the test corpus); OR-ing [[LshTables]] independent tables
@@ -658,8 +634,8 @@ object Kernels {
   val LshTables: Int = 16
 
   /** Planes (bucket bits) per LSH table — 2^4 = 16 buckets per table;
-    * fewer planes than the single-table kernel on purpose: wider buckets
-    * raise per-table recall, the table union multiplies it. Measured
+    * few planes on purpose: wider buckets raise per-table recall, the
+    * table union multiplies it. Measured
     * recall@10 at 16×4: 0.84 at sf0.001 / 0.78 at sf0.01 (was 0.46 at the
     * round-6 8×5 sizing) vs 0.08 single-table, at ~60% of the brute-force
     * candidate volume on this corpus. The test corpus is too small for the
@@ -671,9 +647,12 @@ object Kernels {
   val LshPlanes: Int = 4
 
   /** One sign-LSH bucket per table: table t uses planes with GLOBAL index
-    * g = t·[[LshPlanes]]+p, weights [[planeW]](g, j) over dims 0..63 — the
-    * same plane family as [[lshBucket]], so the DuckDB twin is the same
-    * closed-form arithmetic. */
+    * g = t·[[LshPlanes]]+p, weights [[planeW]](g, j) over dims 0..63; bit
+    * p of table t's bucket is set when the sequential-fold dot with plane
+    * g is > 0. The weights are closed-form integers, so the DuckDB twin is
+    * the same arithmetic. Requires ≥64 dims — UnsafeArrayData reads past
+    * numElements are silent garbage, not exceptions, so the guard must be
+    * explicit. */
   def lshBuckets(a: ArrayData): ArrayData = {
     if (a.numElements() < 64)
       throw new IllegalArgumentException(
@@ -1128,9 +1107,6 @@ object Kernels {
     scalar("graft_norm2",
       "sequential-fold squared norm of a float vector",
       Seq(floats), DoubleType, "norm2F")(a => norm2F(arr(a(0)))),
-    scalar("graft_lsh_bucket",
-      "8-plane sign-LSH bucket id of a 64-dim float vector",
-      Seq(floats), IntegerType, "lshBucket")(a => lshBucket(arr(a(0)))),
     scalar("graft_lsh_buckets",
       "per-table sign-LSH bucket ids (multi-table LSH) of a 64-dim float vector",
       Seq(floats), ArrayType(IntegerType, containsNull = false), "lshBuckets")(

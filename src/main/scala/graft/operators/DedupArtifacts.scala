@@ -160,14 +160,6 @@ object DedupArtifacts {
     writeManifest(spark, path, n, ck, params)
   }
 
-  /** [[refreshManifest]] over the canonical view of a log whose slices
-    * merge on read: `canon` of the rows with the partition column
-    * `dropCol` dropped first (the stream-store convention). */
-  private[graft] def refreshManifestCanonical(spark: SparkSession,
-      path: String, params: Map[String, String],
-      dropCol: String, canon: DataFrame => DataFrame): Unit =
-    refreshManifest(spark, path, params, raw => canon(raw.drop(dropCol)))
-
   /** SLICE COMPACTION for log-structured stores (round 13): merge every
     * slice with `partCol ≤ upTo` into ONE slice holding the CANONICAL
     * merge of their rows, labeled `partCol = upTo`; slices above `upTo`
@@ -227,7 +219,7 @@ object DedupArtifacts {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // recovery: restore a family stranded mid-publish (target gone,
     // data parked under _<name>.old) so the retry reads the old slices
-    restoreStranded(spark, path): Unit
+    graft.sources.Export.restoreStranded(fs, target): Unit
     // a missing manifest is a half-built store (crash between the
     // initial family write and its first stamp) — compacting it would
     // launder unstamped data into a published layout
@@ -254,24 +246,6 @@ object DedupArtifacts {
       graft.sources.Export.publish(fs, tmp, target)
       true
     }
-  }
-
-  /** Restore a family directory stranded mid-publish — target absent,
-    * data parked under `_<name>.old` (the state a crash between
-    * [[graft.sources.Export.publish]]'s two renames leaves). Returns
-    * whether a restore happened; errors if the rename back fails. Shared
-    * by [[compactSlices]]'s entry and [[SliceLog.recover]] (round 14 —
-    * the advisor's recovery findings). */
-  private[graft] def restoreStranded(spark: SparkSession,
-      path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(target.getParent, "_" + target.getName + ".old")
-    if (fs.exists(target) || !fs.exists(old)) false
-    else if (!fs.rename(old, target))
-      sys.error(s"could not restore stranded $old to $target")
-    else true
   }
 
   /** Whether a family directory exists without its `_graft_manifest.json`

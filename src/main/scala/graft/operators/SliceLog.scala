@@ -130,7 +130,9 @@ final case class SliceLog(root: String, partCol: String,
     * only, no Spark job. Returns whether anything was restored. */
   def recover(spark: SparkSession): Boolean =
     families.map { f =>
-      val restored = DedupArtifacts.restoreStranded(spark, path(f))
+      val dir = new org.apache.hadoop.fs.Path(path(f))
+      val restored = graft.sources.Export.restoreStranded(
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
       if (DedupArtifacts.manifestMissing(spark, path(f)))
         DedupArtifacts.noManifest(path(f))
       restored

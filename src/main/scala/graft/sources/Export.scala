@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Export sinks (SURVEY.md §2 E) — the Spark-first analog of the reference's
@@ -39,15 +40,17 @@ object Export {
     * KB-sized files; scans then pay one task + one open per file). Sizes
     * the rewrite from the ACTUAL bytes on disk: output file count =
     * ceil(total / targetFileBytes), repartitioned round-robin so files come
-    * out even, then published with the same write-new → rename swap as
-    * [[graft.streaming.UpsertSink]] (Hadoop FileSystem API — local, HDFS,
-    * S3A alike). Returns (files before, files after). At 100 TB this runs
-    * per partition directory, not whole-table — pass the partition path. */
+    * out even, then published with [[publish]]'s write-new → rename swap
+    * (Hadoop FileSystem API — local, HDFS, S3A alike). A target stranded
+    * by an earlier crashed publish is restored first
+    * ([[restoreStranded]]). Returns (files before, files after). At
+    * 100 TB this runs per partition directory, not whole-table — pass the
+    * partition path. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    restoreStranded(fs, target): Unit
     val parts = fs.listStatus(target)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     val totalBytes = parts.map(_.getLen).sum
@@ -65,7 +68,8 @@ object Export {
     * atomic-ish on rename-capable filesystems (local, HDFS; S3A via its
     * committers): stage the old dir out, rename the new one in, drop the
     * old. Readers see the old contents or the new, never a mix. Shared by
-    * [[compact]] and [[graft.operators.Etl.replaceSlice]].
+    * [[compact]], [[graft.operators.Etl.replaceSlice]], slice-log
+    * compaction and [[graft.streaming.UpsertSink]].
     *
     * The staged-out dir is `_`-PREFIXED (`_<name>.old`): when the target
     * is a hive partition dir (`key=value`) inside a table root, a
@@ -76,17 +80,31 @@ object Export {
     * the two renames leaves the root readable (old slice absent, swap
     * retriable) instead of corrupted. Same reasoning as
     * [[graft.operators.Etl.replaceSlice]]'s `_`-prefixed staging dir. */
-  private[graft] def publish(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    val old = new Path(target.getParent, "_" + target.getName + ".old")
+  private[graft] def publish(fs: FileSystem, tmp: Path, target: Path): Unit = {
+    val old = stagedOut(target)
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(target) && !fs.rename(target, old))
       sys.error(s"could not stage out $target")
     if (!fs.rename(tmp, target)) sys.error(s"could not publish $tmp")
     fs.delete(old, true): Unit
   }
+
+  /** Restore a directory stranded mid-[[publish]] — target absent, data
+    * parked under `_<name>.old` (the state a crash between publish's two
+    * renames leaves). Returns whether a restore happened; errors if the
+    * rename back fails. Every publisher runs it before reading its
+    * target, so a retry starts from the old contents. */
+  private[graft] def restoreStranded(fs: FileSystem,
+      target: Path): Boolean = {
+    val old = stagedOut(target)
+    if (fs.exists(target) || !fs.exists(old)) false
+    else if (!fs.rename(old, target))
+      sys.error(s"could not restore stranded $old to $target")
+    else true
+  }
+
+  private def stagedOut(target: Path) =
+    new Path(target.getParent, "_" + target.getName + ".old")
 
   /** Sharded corpus export — the C65 plan EXECUTED: every kept doc routes
     * to its content-keyed shard (`graft_str_hash('shard|…') % NumShards`,

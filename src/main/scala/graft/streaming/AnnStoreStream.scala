@@ -59,31 +59,25 @@ object AnnStoreStream {
       trigger: Trigger = Trigger.AvailableNow(),
       maxSlices: Int = graft.operators.SliceLog.DefaultMaxSlices)
       : StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // recovery prologue: a crash inside the previous epoch's
-        // compaction can leave a stranded publish — repair it before
-        // appendDay's handshake would fail fast (a missing manifest is
-        // NOT repairable: half-built store, recover() fails by design)
-        graft.operators.AnnArtifacts.recover(batch.sparkSession,
-          root): Unit
-        val days = batch.select("ingest_day").distinct()
-          .collect().map(_.getLong(0)).sorted
-        days.foreach { d =>
-          graft.operators.AnnArtifacts.appendDay(batch.sparkSession, root, d,
-            batch.filter(col("ingest_day") === lit(d))
-              .select("vec_id", "label", "embedding"),
-            k, pqK, restamp = false)
-        }
-        if (days.nonEmpty) {
-          graft.operators.AnnArtifacts.restamp(batch.sparkSession, root,
-            k, pqK)
-          graft.operators.AnnArtifacts.compactIfNeeded(batch.sparkSession,
-            root, maxSlices, protectFrom = days.min): Unit
-        }
+    BatchSink.start(vectors, checkpointDir, trigger, "append") { (batch, _) =>
+      // recovery prologue: a crash inside the previous epoch's
+      // compaction can leave a stranded publish — repair it before
+      // appendDay's handshake would fail fast (a missing manifest is
+      // NOT repairable: half-built store, recover() fails by design)
+      graft.operators.AnnArtifacts.recover(batch.sparkSession, root): Unit
+      val days = batch.select("ingest_day").distinct()
+        .collect().map(_.getLong(0)).sorted
+      days.foreach { d =>
+        graft.operators.AnnArtifacts.appendDay(batch.sparkSession, root, d,
+          batch.filter(col("ingest_day") === lit(d))
+            .select("vec_id", "label", "embedding"),
+          k, pqK, restamp = false)
       }
-      .start()
+      if (days.nonEmpty) {
+        graft.operators.AnnArtifacts.restamp(batch.sparkSession, root,
+          k, pqK)
+        graft.operators.AnnArtifacts.compactIfNeeded(batch.sparkSession,
+          root, maxSlices, protectFrom = days.min): Unit
+      }
+    }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D32: streaming RRF retrieval serving — C96's continuous-query shape:
@@ -19,11 +18,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * outlives the batch. Index refresh is a batch-side rebuild + corpus
   * swap, exactly as D19 models codebook retraining.
   *
-  * Idempotence: `foreachBatch` is AT-LEAST-ONCE, so the write is
-  * `batch_id`-partitioned with dynamic partition overwrite (the D24
-  * pattern): a replayed epoch rewrites exactly its own `batch_id=N`
-  * directory — replay ≡ first write, pinned by a dropped-commit-marker
-  * recovery spec. */
+  * Idempotent per-epoch writes through [[BatchSink.epochParquet]]. */
 object AnnStream {
 
   /** Continuous fused-top-10 serving of a probe stream (probe_id,
@@ -31,17 +26,6 @@ object AnnStream {
   def serve(probes: DataFrame, corpus: DataFrame, targetDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    probes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.EmbeddingOps.retrievalRrfServe(corpus, batch)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(probes, targetDir, checkpointDir, trigger)(
+      graft.operators.EmbeddingOps.retrievalRrfServe(corpus, _))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D27: streaming decontamination gate — C84's Bloom screen in its DEPLOYED
@@ -16,11 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * reach the stream-static confirm join, and every verdict completes inside
   * its micro-batch. No state store entry outlives the batch (state O(0)).
   *
-  * Vehicle: `foreachBatch` running the SAME `Pipeline.bloomScreen` plan as
-  * batch C84 (single-batch union ≡ batch verdicts is spec-pinned).
-  * Idempotence: the per-epoch write is partitioned by `batch_id` with
-  * dynamic partition overwrite scoped to this writer (the D24 pattern) —
-  * an at-least-once replay rewrites exactly its own epoch directory.
+  * Vehicle: [[BatchSink.epochParquet]] running the SAME
+  * `Pipeline.bloomScreen` plan as batch C84 (single-batch union ≡ batch
+  * verdicts is spec-pinned).
   */
 object BloomGateStream {
 
@@ -30,17 +27,6 @@ object BloomGateStream {
   def gate(docs: DataFrame, benchGrams: DataFrame, words: Array[Long],
            targetDir: String, checkpointDir: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.Pipeline.bloomScreen(batch, benchGrams, words)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.Pipeline.bloomScreen(_, benchGrams, words))
 }

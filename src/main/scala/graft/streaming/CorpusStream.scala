@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.TextOps
@@ -70,34 +70,15 @@ object CorpusStream {
     * "novel" never depends on earlier batches, the integer occurrence
     * columns are ADDITIVE across any micro-batch split (spec-pinned
     * against batch C76, along with single-batch ≡ batch equality).
-    * Vehicle: `foreachBatch` running the SAME `noveltyReport` plan as
-    * batch C76, with the batch epoch recorded per row.
-    *
-    * Idempotence (round-6 advice): `foreachBatch` is AT-LEAST-ONCE — a
-    * crash between the sink write and the checkpoint commit replays the
-    * micro-batch with the SAME epoch id, and a blind Append would then
-    * double that epoch's rows, breaking the additive-exact report. The
-    * write is therefore partitioned by `batch_id` with DYNAMIC partition
-    * overwrite scoped to this writer: a replayed epoch rewrites exactly
-    * its own `batch_id=N` directory and every other epoch's output is
-    * untouched — replay ≡ first write, spec-pinned by a
-    * dropped-commit-marker recovery test like D22/D26's. */
+    * Vehicle: [[BatchSink.epochParquet]] running the SAME `noveltyReport`
+    * plan as batch C76, with the batch epoch recorded per row; the
+    * epoch write keeps a replayed micro-batch from doubling the
+    * additive-exact report. */
   def noveltyGate(docs: DataFrame, standing: DataFrame, targetDir: String,
                   checkpointDir: String,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.Pipeline.noveltyReport(batch, standing)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.Pipeline.noveltyReport(_, standing))
 
   /** D16: streaming LM-coverage scoring — C51's quality filter in its
     * DEPLOYED shape: incoming documents scored per micro-batch against a
@@ -108,31 +89,13 @@ object CorpusStream {
     * per-doc aggregate completes inside the micro-batch, and no state
     * store entry outlives the batch (state O(0), vs the unbounded
     * O(docs-seen) a naive streaming groupBy(doc_id) would accrete).
-    * Vehicle: `foreachBatch` running [[TextOps.scoreAgainstLm]] — the
-    * SAME audited plan as batch C51 — written to a parquet sink.
-    * Batch-union ≡ C51 equivalence is spec-pinned across a two-batch
-    * feed.
-    *
-    * Idempotence: `foreachBatch` is AT-LEAST-ONCE, so the write is
-    * `batch_id`-partitioned with dynamic partition overwrite (the D24
-    * pattern): a micro-batch replayed after a crash between the sink
-    * write and the checkpoint commit rewrites exactly its own
-    * `batch_id=N` directory — replay ≡ first write, pinned by a
-    * dropped-commit-marker recovery spec. */
+    * Vehicle: [[BatchSink.epochParquet]] running
+    * [[TextOps.scoreAgainstLm]] — the SAME audited plan as batch C51 —
+    * written to a parquet sink. Batch-union ≡ C51 equivalence is
+    * spec-pinned across a two-batch feed. */
   def lmScore(docs: DataFrame, lm: DataFrame, targetDir: String,
               checkpointDir: String,
               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        TextOps.scoreAgainstLm(batch, lm)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      TextOps.scoreAgainstLm(_, lm))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -42,30 +42,12 @@ object DedupStream {
     * ITSELF and must hold watermark state), scoring against a frozen
     * index is STATELESS: every verdict completes inside its micro-batch
     * via two static-side joins, no state store entry outlives the batch
-    * — the D16 pattern. Vehicle: `foreachBatch` running the SAME
-    * `incrementalTriage` plan as batch C58, written to a parquet sink;
-    * two-batch union ≡ batch C58 is spec-pinned.
-    *
-    * Idempotence: `foreachBatch` is AT-LEAST-ONCE, so the write is
-    * `batch_id`-partitioned with dynamic partition overwrite (the D24
-    * pattern): a replayed epoch rewrites exactly its own `batch_id=N`
-    * directory — replay ≡ first write, pinned by a
-    * dropped-commit-marker recovery spec. */
+    * — the D16 pattern. Vehicle: [[BatchSink.epochParquet]] (idempotent
+    * per-epoch writes) running the SAME `incrementalTriage` plan as batch
+    * C58; two-batch union ≡ batch C58 is spec-pinned. */
   def incremental(docs: DataFrame, indexHash: DataFrame,
       coldIndexSigs: DataFrame, targetDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.DedupOps.incrementalTriage(batch,
-          indexHash, coldIndexSigs)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.DedupOps.incrementalTriage(_, indexHash, coldIndexSigs))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D19: streaming vector→codebook assignment — C62's SERVING shape: the
@@ -16,15 +15,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * completes inside each micro-batch, and no state store entry outlives
   * the batch — unlike a streaming re-TRAINING loop, which would need
   * cross-batch centroid state (production retrains batch-side and swaps
-  * the codebook, exactly as modeled here). Vehicle: `foreachBatch`
-  * running the SAME `kmAssign` plan as batch C62, written to a parquet
-  * sink; two-batch union ≡ batch C62's assignment is spec-pinned.
-  *
-  * Idempotence: `foreachBatch` is AT-LEAST-ONCE, so the write is
-  * `batch_id`-partitioned with dynamic partition overwrite (the D24
-  * pattern): a replayed epoch rewrites exactly its own `batch_id=N`
-  * directory — replay ≡ first write, pinned by a dropped-commit-marker
-  * recovery spec. */
+  * the codebook, exactly as modeled here). Vehicle:
+  * [[BatchSink.epochParquet]] (idempotent per-epoch writes) running the
+  * SAME `kmAssign` plan as batch C62; two-batch union ≡ batch C62's
+  * assignment is spec-pinned. */
 object EmbedStream {
 
   /** Continuous assignment of an embedding stream (vec_id, embedding)
@@ -32,17 +26,6 @@ object EmbedStream {
   def assign(vectors: DataFrame, cents: DataFrame, targetDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.EmbeddingOps.kmAssign(batch, cents)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(vectors, targetDir, checkpointDir, trigger)(
+      graft.operators.EmbeddingOps.kmAssign(_, cents))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D29: streaming second-moment monitor — C88's embedding-covariance audit
@@ -17,10 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * outlives a batch; the heavy lifting is the same 33 KiB-state
   * distributive aggregate the batch audit uses.
   *
-  * Vehicle: `foreachBatch` running the SAME `EmbeddingOps.gramGrid` plan
-  * as batch C88 (cellwise sum of epoch grids ≡ batch grid is spec-pinned,
-  * exact integers); per-epoch writes are batch_id-partitioned with dynamic
-  * overwrite (the D24/D27/D28 idempotence pattern).
+  * Vehicle: [[BatchSink.epochParquet]] running the SAME
+  * `EmbeddingOps.gramGrid` plan as batch C88 (cellwise sum of epoch grids
+  * ≡ batch grid is spec-pinned, exact integers).
   */
 object GramStream {
 
@@ -29,17 +27,6 @@ object GramStream {
     * s_j, n_vecs, batch_id) under `targetDir`. */
   def monitor(embeds: DataFrame, targetDir: String, checkpointDir: String,
               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embeds.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.EmbeddingOps.gramGrid(batch)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(embeds, targetDir, checkpointDir, trigger)(
+      graft.operators.EmbeddingOps.gramGrid)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D34: streaming span-mask planning — C106 in its INCREMENTAL deployment:
@@ -21,13 +20,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * three text screens per row but the only one needing the span index
   * resident, so the cheap gates shed volume first.
   *
-  * Vehicle: `foreachBatch` running the SAME `DedupOps.spanMaskAgainst`
-  * plan as batch C106's incremental form (union-of-batches ≡ one batch
-  * run over the whole feed is spec-pinned, as is the self-indexed
-  * reconciliation against C106 + C79); the per-epoch write is partitioned
-  * by `batch_id` with dynamic partition overwrite (the D24/D27
-  * idempotence pattern — a replayed epoch overwrites its own partition
-  * instead of duplicating it).
+  * Vehicle: [[BatchSink.epochParquet]] running the SAME
+  * `DedupOps.spanMaskAgainst` plan as batch C106's incremental form
+  * (union-of-batches ≡ one batch run over the whole feed is spec-pinned,
+  * as is the self-indexed reconciliation against C106 + C79).
   */
 object MaskStream {
 
@@ -38,19 +34,8 @@ object MaskStream {
   def plan(docs: DataFrame, spanIndex: DataFrame,
            targetDir: String, checkpointDir: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.DedupOps.spanMaskAgainst(batch, spanIndex)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.DedupOps.spanMaskAgainst(_, spanIndex))
 
   /** D35: streaming twin of C108 — the per-source masking ACCOUNTING
     * maintained continuously: each micro-batch of (doc_id, source, text)
@@ -62,21 +47,10 @@ object MaskStream {
     * D29/D31 convention). The running read `SUM(...) GROUP BY source`
     * over the sink answers "which feed is shipping us boilerplate spans
     * TODAY" while the batch C108 report is a day away. Idempotent
-    * batch_id-partitioned writes (the D24/D27 pattern). */
+    * per-epoch writes through [[BatchSink.epochParquet]]. */
   def runningDatasheet(docs: DataFrame, spanIndex: DataFrame,
            targetDir: String, checkpointDir: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.DedupOps.maskDatasheetAgainst(batch, spanIndex)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.DedupOps.maskDatasheetAgainst(_, spanIndex))
 }

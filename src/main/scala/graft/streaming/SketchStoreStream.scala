@@ -45,19 +45,14 @@ object SketchStoreStream {
       trigger: Trigger,
       appendDay: (DataFrame, Long) => Unit,
       restamp: org.apache.spark.sql.SparkSession => Unit): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val days = batch.select(expr("ts div 86400000000000").as("d"))
-          .distinct().collect().map(_.getLong(0)).sorted
-        days.foreach { d =>
-          appendDay(batch.filter(expr("ts div 86400000000000") === lit(d)), d)
-        }
-        if (days.nonEmpty) restamp(batch.sparkSession)
+    BatchSink.start(events, checkpointDir, trigger, "append") { (batch, _) =>
+      val days = batch.select(expr("ts div 86400000000000").as("d"))
+        .distinct().collect().map(_.getLong(0)).sorted
+      days.foreach { d =>
+        appendDay(batch.filter(expr("ts div 86400000000000") === lit(d)), d)
       }
-      .start()
+      if (days.nonEmpty) restamp(batch.sparkSession)
+    }
 
   /** D37: append each micro-batch's calendar days to the qsketch_day
     * store at `root`. Input needs (ts: long nanos, value: double). */

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D30: streaming crawl-refresh diff — C83's differ in its ARRIVAL shape:
@@ -21,11 +20,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * outlives the batch, and the per-source counters are ADDITIVE over any
   * micro-batch split (spec-pinned against batch C83's observed columns).
   *
-  * Idempotence: `foreachBatch` is AT-LEAST-ONCE, so the write is
-  * `batch_id`-partitioned with dynamic partition overwrite (the D24
-  * pattern): a replayed epoch rewrites exactly its own `batch_id=N`
-  * directory — replay ≡ first write, pinned by a dropped-commit-marker
-  * recovery spec. */
+  * Idempotent per-epoch writes through [[BatchSink.epochParquet]]. */
 object SnapshotDiffStream {
 
   /** Continuous observed-diff of an arriving page stream (doc_id, source,
@@ -33,17 +28,6 @@ object SnapshotDiffStream {
   def diff(pages: DataFrame, oldSigs: DataFrame, targetDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    pages.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.Pipeline.snapshotDiffObserved(batch, oldSigs)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(pages, targetDir, checkpointDir, trigger)(
+      graft.operators.Pipeline.snapshotDiffObserved(_, oldSigs))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** D28: streaming span-level decontamination — C87's surgical screen in its
@@ -15,10 +14,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * gate: the cheap filter drops the clean bulk, only flagged docs reach
   * the positioned-gram join here.
   *
-  * Vehicle: `foreachBatch` running the SAME `Pipeline.spanScreen` plan as
-  * batch C87 (union-of-batches ≡ batch spans is spec-pinned); the
-  * per-epoch write is partitioned by `batch_id` with dynamic partition
-  * overwrite (the D24/D27 idempotence pattern).
+  * Vehicle: [[BatchSink.epochParquet]] running the SAME
+  * `Pipeline.spanScreen` plan as batch C87 (union-of-batches ≡ batch
+  * spans is spec-pinned).
   */
 object SpanGateStream {
 
@@ -28,17 +26,6 @@ object SpanGateStream {
   def gate(docs: DataFrame, benchGrams: DataFrame,
            targetDir: String, checkpointDir: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        graft.operators.Pipeline.spanScreen(batch, benchGrams)
-          .withColumn("batch_id", lit(epoch))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(targetDir)
-      }
-      .start()
+    BatchSink.epochParquet(docs, targetDir, checkpointDir, trigger)(
+      graft.operators.Pipeline.spanScreen(_, benchGrams))
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Etl
+import graft.sources.Export
 
 /** D3: keyed-merge streaming sink — the reference's batched BigQuery MERGE
   * (/root/reference/app/services/etl_service.py:252-293) applied per
@@ -13,13 +14,21 @@ import graft.operators.Etl
   * `versionCol`, deterministic), then merged latest-wins into the parquet
   * target with Etl.merge — one shuffle on the key per batch.
   *
-  * The swap is write-new → directory rename through the Hadoop `FileSystem`
-  * API, so the sink works on any supported filesystem (local, HDFS, S3A…).
-  * Rename is atomic on HDFS/local; on S3A it is copy-based, which is one of
-  * the reasons the production shape of this sink is a lakehouse MERGE
-  * (Delta/Iceberg row-level merge with file pruning) — full-snapshot rewrite
-  * is the portable, dependency-free stand-in; the per-batch dedup + keyed
-  * merge logic is identical either way.
+  * The merged table is staged under a `_`-prefixed sibling and swapped in
+  * with [[graft.sources.Export.publish]]'s write-new → rename publish
+  * (Hadoop `FileSystem` API — local, HDFS, S3A alike). Rename is atomic on
+  * HDFS/local; on S3A it is copy-based, which is one of the reasons the
+  * production shape of this sink is a lakehouse MERGE (Delta/Iceberg
+  * row-level merge with file pruning) — full-snapshot rewrite is the
+  * portable, dependency-free stand-in; the per-batch dedup + keyed merge
+  * logic is identical either way.
+  *
+  * Crash recovery: `foreachBatch` is AT-LEAST-ONCE, and a crash between
+  * the publish's two renames leaves the target absent with the previous
+  * table parked under `_<name>.old`. Each batch first restores such a
+  * stranded target ([[graft.sources.Export.restoreStranded]]), so the
+  * replayed batch merges into the full table; latest-wins by version
+  * makes the replay ≡ the first write.
   */
 object UpsertSink {
 
@@ -34,31 +43,21 @@ object UpsertSink {
       .filter(col("_vrn") === 1).drop("_vrn")
     val target = new Path(targetDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Export.restoreStranded(fs, target): Unit
     val merged =
       if (fs.exists(target))
         Etl.merge(graft.sources.Tables.readParquet(spark, targetDir), dedupBatch, key)
       else dedupBatch
-    val tmp = new Path(targetDir + ".tmp")
+    val tmp = new Path(target.getParent, "_" + target.getName + ".staging")
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val old = new Path(targetDir + ".old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(target) && !fs.rename(target, old))
-      sys.error(s"could not stage out $targetDir")
-    if (!fs.rename(tmp, target))
-      sys.error(s"could not publish $tmp")
-    fs.delete(old, true): Unit
+    Export.publish(fs, tmp, target)
   }
 
   /** Start the streaming upsert: every micro-batch merges into targetDir. */
   def start(updates: DataFrame, key: String, versionCol: String,
             targetDir: String, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    updates.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, key, versionCol, targetDir)
-      }
-      .start()
+    BatchSink.start(updates, checkpointDir, trigger, "update") { (batch, _) =>
+      mergeBatch(batch, key, versionCol, targetDir)
+    }
 }

@@ -882,8 +882,8 @@ class ArtifactSpec extends SparkSpec {
     val v1Params = Map("family" -> "gram_index",
       "incr_mod" -> sources.Feeds.IncrMod.toString,
       "incr_rem" -> sources.Feeds.IncrRem.toString)
-    DedupArtifacts.refreshManifestCanonical(spark, hexDir, v1Params,
-      "ingest_day", _.distinct())
+    DedupArtifacts.refreshManifest(spark, hexDir, v1Params,
+      raw => raw.drop("ingest_day").distinct())
     val famDir = java.nio.file.Paths.get(gramDir)
     val files = java.nio.file.Files.walk(famDir)
     try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

@@ -241,6 +241,13 @@ class ExportSpec extends SparkSpec {
     // identical content modulo order
     val after = sp.read.parquet(dir).as[(Long, Long)].collect().toSeq.sorted
     assert(after == expect)
+    // a crash between an earlier publish's two renames left the table
+    // staged out under _<name>.old: compact restores it, then compacts
+    val stranded = new org.apache.hadoop.fs.Path(parent, "_" + base + ".old")
+    assert(fs.rename(new org.apache.hadoop.fs.Path(dir), stranded))
+    assert(Export.compact(sp, dir, targetFileBytes = 1L << 30) == ((1, 1)))
+    assert(!fs.exists(stranded))
+    assert(sp.read.parquet(dir).as[(Long, Long)].collect().toSeq.sorted == expect)
   }
 
   test("raw text-corpus ingest: one doc per file, ids from names") {

@@ -75,18 +75,6 @@ class KernelsSpec extends SparkSpec {
     assert(norms.filter(col("hof") =!= col("ker")).count() == 0)
   }
 
-  test("graft_lsh_bucket matches the HOF sign-plane formulation") {
-    val b = embs
-      .withColumn("hof", expr(
-        s"""aggregate(sequence(0, 7), 0, (acc, p) ->
-             acc + CASE WHEN aggregate(sequence(0, 63), cast(0 as double), (s, j) ->
-                 s + cast(element_at(embedding, j + 1) as double) *
-                     cast(${graft.functions.Kernels.planeWSql("p", "j")} as double)) > cast(0 as double)
-               THEN shiftleft(1, p) ELSE 0 END)"""))
-      .withColumn("ker", expr("graft_lsh_bucket(embedding)"))
-    assert(b.filter(col("hof") =!= col("ker")).count() == 0)
-  }
-
   test("graft_lsh_buckets matches the HOF per-table sign-plane formulation") {
     import graft.functions.Kernels.{LshPlanes, LshTables}
     val b = embs
@@ -494,7 +482,6 @@ class KernelsSpec extends SparkSpec {
       "graft_dot" -> KernelRows(Seq("graft_dot(a0, a1)"),
         for (a <- vecs; b <- vecs) yield Seq(a, b)),
       "graft_norm2" -> KernelRows(Seq("graft_norm2(a0)"), one(vecs)),
-      "graft_lsh_bucket" -> KernelRows(Seq("graft_lsh_bucket(a0)"), vec64, short64),
       "graft_lsh_buckets" -> KernelRows(Seq("graft_lsh_buckets(a0)"), vec64, short64),
       "graft_str_hash" -> KernelRows(Seq("graft_str_hash(a0)"), one(strs)),
       "graft_bloom_cells" -> KernelRows(Seq("graft_bloom_cells(a0)",
@@ -700,7 +687,7 @@ class KernelsSpec extends SparkSpec {
           n -> (f.description, f.className)
         }.toMap
     val viaExtension = described(spark)
-    assert(viaExtension.size == 26 && viaExtension.values.forall {
+    assert(viaExtension.size == 25 && viaExtension.values.forall {
       case (d, _) => d != null && d.nonEmpty && d != "N/A." }, viaExtension)
     val fresh = spark.newSession()
     val reg = fresh.sessionState.functionRegistry

@@ -18,18 +18,6 @@ import graft.streaming._
   * artifacts byte-identical to a week that never crashed. */
 class ReplaySpec extends SparkSpec {
 
-  /** Delete the newest checkpoint commit marker — the process died after
-    * the sink write, before the commit; the restart replays that epoch
-    * with the SAME batch id (StreamingSpec's crash device). */
-  private def dropNewestCommit(ckpt: String): Unit = {
-    val commitDir = new java.io.File(ckpt + "/commits")
-    val newest = commitDir.listFiles()
-      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-    val crc = new java.io.File(commitDir, s".${newest.getName}.crc")
-    assert(newest.delete())
-    if (crc.exists()) assert(crc.delete())
-  }
-
   private val Days = 7
   private val CrashAfterDay = 4
 

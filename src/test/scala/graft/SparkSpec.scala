@@ -41,4 +41,18 @@ abstract class SparkSpec extends AnyFunSuite {
   def sf: String = TestSpark.sf
   /** A fresh directory in the JVM temp dir, deleted when the JVM exits. */
   def tmpDir(prefix: String): String = TestSpark.tmpDir(prefix)
+
+  /** Crash simulation for the at-least-once replay pins: delete the newest
+    * checkpoint commit marker (= the process died after the sink write but
+    * before the commit), plus its local ChecksumFs .crc sidecar which would
+    * otherwise block the re-commit. The next restart replays that epoch
+    * through foreachBatch with the SAME batch id. */
+  def dropNewestCommit(ckpt: String): Unit = {
+    val commitDir = new java.io.File(ckpt + "/commits")
+    val newest = commitDir.listFiles()
+      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    val crc = new java.io.File(commitDir, s".${newest.getName}.crc")
+    assert(newest.delete())
+    if (crc.exists()) assert(crc.delete())
+  }
 }

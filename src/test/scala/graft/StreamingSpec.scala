@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Encoder, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.sql.Timestamp
 import graft.streaming._
 
@@ -11,20 +12,6 @@ import graft.streaming._
 class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
-
-  /** Crash simulation for the at-least-once replay pins: delete the newest
-    * checkpoint commit marker (= the process died after the sink write but
-    * before the commit), plus its local ChecksumFs .crc sidecar which would
-    * otherwise block the re-commit. The next restart replays that epoch
-    * through foreachBatch with the SAME batch id. */
-  private def dropNewestCommit(ckpt: String): Unit = {
-    val commitDir = new java.io.File(ckpt + "/commits")
-    val newest = commitDir.listFiles()
-      .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
-    val crc = new java.io.File(commitDir, s".${newest.getName}.crc")
-    assert(newest.delete())
-    if (crc.exists()) assert(crc.delete())
-  }
 
   test("D1 EventStream.hourlyAgg windows by hour and event_type") {
     val sp = spark
@@ -707,6 +694,39 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Seq((1L, "a", 1L), (2L, "B", 3L), (3L, "c", 1L)))
   }
 
+  test("D3 UpsertSink replay after a crash mid-publish keeps every key") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    implicit val sqlCtx = sp.sqlContext
+    val target = new Path(tmpDir("upsert_replay") + "/t")
+    val fs = target.getFileSystem(sp.sparkContext.hadoopConfiguration)
+    val ckpt = tmpDir("upsert_replay_ckpt")
+    val in = MemoryStream[(Long, String, Long)]
+    def run(): Unit = UpsertSink.start(in.toDF().toDF("k", "v", "ver"),
+      "k", "ver", target.toString, ckpt, Trigger.AvailableNow())
+      .awaitTermination()
+    in.addData((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
+    run()
+    val keys1to3 = new Path(tmpDir("upsert_replay_prev"), "t")
+    assert(FileUtil.copy(fs, target, fs, keys1to3, false,
+      sp.sparkContext.hadoopConfiguration))
+    in.addData((3L, "C", 2L), (4L, "d", 1L))
+    run()
+    // the crash: the process died between the publish's two renames, so
+    // the batch is uncommitted, the target is absent and the keys-1-3
+    // table is parked under _t.old
+    dropNewestCommit(ckpt)
+    val stagedOut = new Path(target.getParent, "_t.old")
+    assert(fs.delete(target, true) && fs.rename(keys1to3, stagedOut))
+    run() // replays the uncommitted batch
+    val rows = sp.read.parquet(target.toString).orderBy("k")
+      .as[(Long, String, Long)].collect().toSeq
+    assert(rows == Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "C", 2L),
+      (4L, "d", 1L)))
+    assert(!fs.exists(stagedOut))
+  }
+
   test("D14 runningSourceHealth: stream equals batch, exact columns match C47") {
     val sp = spark
     import sp.implicits._
@@ -1068,106 +1088,131 @@ class StreamingSpec extends SparkSpec {
     sp.catalog.clearCache(): Unit
   }
 
-  test("D16 replayed micro-batch is idempotent (crash before commit)") {
-    // the D24 replay pin applied to the LM-scoring sink: drop the newest
-    // commit marker and restart — the replayed epoch must rewrite ONLY its
-    // own batch_id partition, leaving the total score set byte-identical
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val lm = graft.operators.TextOps.bigramLm(sp, sf).cache()
-    val rows = graft.sources.Tables.documents(sp, sf)
-      .orderBy("doc_id").select("doc_id", "text")
-      .as[(Long, String)].collect().toSeq
-    val (b1, b2) = rows.splitAt(rows.size / 2)
-    val target = tmpDir("d16r_target") + "/scores"
-    val ckpt = tmpDir("d16r_ckpt")
-    val in = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = CorpusStream.lmScore(in.toDF().toDF("doc_id", "text"),
-        lm, target, ckpt)
-      q.awaitTermination()
-    }
+  /** The at-least-once replay pin, one per epoch writer: stream `feed`
+    * through `start` (input, target, checkpoint) in two micro-batches,
+    * drop the newest commit marker (a crash after the sink write, before
+    * the commit) and restart. The replayed epoch must rewrite only its
+    * own `batch_id` partition, leaving the sink byte-identical. */
+  private def replayIsIdempotent[T: Encoder](feed: Seq[T], cols: String*)(
+      start: (DataFrame, String, String) => StreamingQuery): Unit = {
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    val (b1, b2) = feed.splitAt(feed.size / 2)
+    val target = tmpDir("replay_target") + "/out"
+    val ckpt = tmpDir("replay_ckpt")
+    val in = MemoryStream[T]
+    def run(): Unit =
+      start(in.toDF().toDF(cols: _*), target, ckpt).awaitTermination()
+    def contents = spark.read.parquet(target).collect()
+      .map(_.toSeq).sortBy(_.toString).toSeq
     in.addData(b1: _*); run()
     in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
+    val before = contents
     dropNewestCommit(ckpt)
     run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the scores (append instead of overwrite?)")
-    lm.unpersist()
-    sp.catalog.clearCache(): Unit
+    assert(contents == before,
+      "replayed epoch changed the sink (append instead of overwrite?)")
   }
 
-  test("D18 replayed micro-batch is idempotent (crash before commit)") {
-    // same pin for the incremental-dedup verdict sink
-    val sp = spark
+  private lazy val sp = spark
+
+  /** Every [[BatchSink.epochParquet]] writer with its static inputs. */
+  private def epochWriters: Seq[(String, () => Unit)] = {
     import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val standing = graft.sources.Tables.documents(sp, sf)
-      .filter(col("doc_id") % graft.sources.Feeds.IncrMod =!=
-        graft.sources.Feeds.IncrRem)
-    val (indexHash, coldSigs) =
-      graft.operators.DedupOps.buildIncrementalIndex(sp, standing)
-    val rows = graft.sources.Feeds.incomingDocs(sp, sf)
-      .orderBy("doc_id").select("doc_id", "text")
-      .as[(Long, String)].collect().toSeq
-    val (b1, b2) = rows.splitAt(rows.size / 2)
-    val target = tmpDir("d18r_target") + "/verdicts"
-    val ckpt = tmpDir("d18r_ckpt")
-    val in = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = DedupStream.incremental(in.toDF().toDF("doc_id", "text"),
-        indexHash, coldSigs, target, ckpt)
-      q.awaitTermination()
+    import graft.operators.{DedupOps, EmbeddingOps, Pipeline, TextOps}
+    import graft.sources.{Feeds, Tables}
+    def docText = Tables.documents(sp, sf).orderBy("doc_id")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    def docSourceText(docs: DataFrame) = docs
+      .select("doc_id", "source", "text")
+      .as[(Long, String, String)].collect().toSeq
+    // the decontamination gates' feed and benchmark grams (C84/C87)
+    def benchSplit(grams: DataFrame => DataFrame) = {
+      val docs = Tables.documents(sp, sf)
+      val bench = col("doc_id") % Pipeline.BenchMod === Pipeline.BenchRem
+      (grams(Pipeline.decontamBaseOf(docs)).filter(bench)
+        .select("gram").distinct().cache(),
+        docSourceText(docs.filter(!bench)))
     }
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the verdicts (append instead of overwrite?)")
-    sp.catalog.clearCache(): Unit
+    def vectors = Tables.embeddings(sp, sf).orderBy("vec_id")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSeq
+    Seq(
+      "D16" -> { () =>
+        val lm = TextOps.bigramLm(sp, sf).cache()
+        replayIsIdempotent(docText, "doc_id", "text")(
+          CorpusStream.lmScore(_, lm, _, _))
+      },
+      "D18" -> { () =>
+        val (indexHash, coldSigs) = DedupOps.buildIncrementalIndex(sp,
+          Tables.documents(sp, sf)
+            .filter(col("doc_id") % Feeds.IncrMod =!= Feeds.IncrRem))
+        val feed = Feeds.incomingDocs(sp, sf).orderBy("doc_id")
+          .select("doc_id", "text").as[(Long, String)].collect().toSeq
+        replayIsIdempotent(feed, "doc_id", "text")(
+          DedupStream.incremental(_, indexHash, coldSigs, _, _))
+      },
+      "D19" -> { () =>
+        val cents = EmbeddingOps.kmeansCentroids(sp, sf).cache()
+        cents.count() // materialize the training before the stream starts
+        replayIsIdempotent(vectors, "vec_id", "embedding")(
+          EmbedStream.assign(_, cents, _, _))
+      },
+      "D24" -> { () =>
+        val standing = Pipeline.standingGramIndex(sp, sf).cache()
+        val feed = Feeds.incomingDocs(sp, sf)
+          .select("source", "text").as[(String, String)].collect().toSeq
+        replayIsIdempotent(feed, "source", "text")(
+          CorpusStream.noveltyGate(_, standing, _, _))
+      },
+      "D27" -> { () =>
+        val (benchGrams, feed) = benchSplit(Pipeline.decontamGrams)
+        val words = Pipeline.bloomBuild(benchGrams)
+        replayIsIdempotent(feed, "doc_id", "source", "text")(
+          BloomGateStream.gate(_, benchGrams, words, _, _))
+      },
+      "D28" -> { () =>
+        val (benchGrams, feed) = benchSplit(Pipeline.positionedGrams)
+        replayIsIdempotent(feed, "doc_id", "source", "text")(
+          SpanGateStream.gate(_, benchGrams, _, _))
+      },
+      "D29" -> { () =>
+        replayIsIdempotent(vectors, "vec_id", "embedding")(
+          GramStream.monitor(_, _, _))
+      },
+      "D30" -> { () =>
+        val oldSigs = Pipeline.snapshotSig(Tables.documents(sp, sf)).cache()
+        val feed = docSourceText(Feeds.recrawlSnapshot(sp, sf))
+        replayIsIdempotent(feed, "doc_id", "source", "text")(
+          SnapshotDiffStream.diff(_, oldSigs, _, _))
+      },
+      "D32" -> { () =>
+        val corpus = Tables.embeddings(sp, sf)
+          .select("vec_id", "embedding").cache()
+        corpus.count()
+        val probes = corpus
+          .filter(col("vec_id") % 100 === 0 && col("vec_id") < 6400L)
+          .orderBy("vec_id").as[(Long, Seq[Float])].collect().toSeq
+        replayIsIdempotent(probes, "probe_id", "embedding")(
+          AnnStream.serve(_, corpus, _, _))
+      },
+      "D34" -> { () =>
+        val spanIndex = DedupOps.substrDupSpans(sp, sf)
+          .select("span_hash").cache()
+        replayIsIdempotent(docText, "doc_id", "text")(
+          MaskStream.plan(_, spanIndex, _, _))
+      },
+      "D35" -> { () =>
+        val spanIndex = DedupOps.substrDupSpans(sp, sf)
+          .select("span_hash").cache()
+        val feed = docSourceText(Tables.documents(sp, sf).orderBy("doc_id"))
+        replayIsIdempotent(feed, "doc_id", "source", "text")(
+          MaskStream.runningDatasheet(_, spanIndex, _, _))
+      })
   }
 
-  test("D19 replayed micro-batch is idempotent (crash before commit)") {
-    // same pin for the codebook-assignment sink
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val cents = graft.operators.EmbeddingOps.kmeansCentroids(sp, sf).cache()
-    cents.count() // materialize the training before the stream starts
-    val rows = graft.sources.Tables.embeddings(sp, sf)
-      .orderBy("vec_id").select("vec_id", "embedding")
-      .as[(Long, Seq[Float])].collect().toSeq
-    val (b1, b2) = rows.splitAt(rows.size / 2)
-    val target = tmpDir("d19r_target") + "/cells"
-    val ckpt = tmpDir("d19r_ckpt")
-    val in = MemoryStream[(Long, Seq[Float])]
-    def run(): Unit = {
-      val q = EmbedStream.assign(in.toDF().toDF("vec_id", "embedding"),
-        cents, target, ckpt)
-      q.awaitTermination()
+  for ((id, pin) <- epochWriters)
+    test(s"$id replayed micro-batch is idempotent (crash before commit)") {
+      try pin() finally spark.catalog.clearCache()
     }
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the cells (append instead of overwrite?)")
-    sp.catalog.clearCache(): Unit
-  }
 
   test("D32 streamed RRF serve over two batches equals the batch fusion") {
     val sp = spark
@@ -1199,39 +1244,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.count() == batch.count())
     assert(streamed.except(batch).count() == 0)
     assert(batch.except(streamed).count() == 0)
-    sp.catalog.clearCache(): Unit
-  }
-
-  test("D32 replayed micro-batch is idempotent (crash before commit)") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val corpus = graft.sources.Tables.embeddings(sp, sf)
-      .select("vec_id", "embedding").cache()
-    corpus.count()
-    val probes = corpus
-      .filter(col("vec_id") % 100 === 0 && col("vec_id") < 6400L)
-      .withColumnRenamed("vec_id", "probe_id")
-      .orderBy("probe_id").as[(Long, Seq[Float])].collect().toSeq
-    val (b1, b2) = probes.splitAt(probes.size / 2)
-    val target = tmpDir("d32r_target") + "/hits"
-    val ckpt = tmpDir("d32r_ckpt")
-    val in = MemoryStream[(Long, Seq[Float])]
-    def run(): Unit = {
-      val q = AnnStream.serve(in.toDF().toDF("probe_id", "embedding"),
-        corpus, target, ckpt)
-      q.awaitTermination()
-    }
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the hits (append instead of overwrite?)")
     sp.catalog.clearCache(): Unit
   }
 
@@ -1543,40 +1555,6 @@ class StreamingSpec extends SparkSpec {
     sp.catalog.clearCache(): Unit
   }
 
-  test("D24 replayed micro-batch is idempotent (crash before commit)") {
-    // foreachBatch is at-least-once: drop the newest checkpoint commit
-    // marker (= crash after the sink write, before the commit) and
-    // restart — the replayed epoch must rewrite ONLY its own batch_id
-    // partition, leaving the total report byte-identical
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val standing = graft.operators.Pipeline.standingGramIndex(sp, sf).cache()
-    val feed = graft.sources.Feeds.incomingDocs(sp, sf)
-      .select("source", "text").as[(String, String)].collect().toSeq
-    val (b1, b2) = feed.splitAt(feed.size / 2)
-    val target = tmpDir("d24r_target") + "/novelty"
-    val ckpt = tmpDir("d24r_ckpt")
-    val in = MemoryStream[(String, String)]
-    def run(): Unit = {
-      val q = CorpusStream.noveltyGate(in.toDF().toDF("source", "text"),
-        standing, target, ckpt)
-      q.awaitTermination()
-    }
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the report (append instead of overwrite?)")
-    standing.unpersist()
-    sp.catalog.clearCache(): Unit
-  }
-
   test("D30 streaming snapshot diff: additive across batches, reconciles C83") {
     val sp = spark
     import sp.implicits._
@@ -1626,38 +1604,6 @@ class StreamingSpec extends SparkSpec {
       .filter(col("s_delta") - coalesce(col("rm_len"), lit(0L))
         =!= col("chars_delta"))
     assert(rec.count() == 0)
-    oldSigs.unpersist()
-    sp.catalog.clearCache(): Unit
-  }
-
-  test("D30 replayed micro-batch is idempotent (crash before commit)") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val oldSigs = graft.operators.Pipeline.snapshotSig(
-      graft.sources.Tables.documents(sp, sf)).cache()
-    val feed = graft.sources.Feeds.recrawlSnapshot(sp, sf)
-      .select("doc_id", "source", "text")
-      .as[(Long, String, String)].collect().toSeq
-    val (b1, b2) = feed.splitAt(feed.size / 2)
-    val target = tmpDir("d30r_target") + "/diff"
-    val ckpt = tmpDir("d30r_ckpt")
-    val in = MemoryStream[(Long, String, String)]
-    def run(): Unit = {
-      val q = SnapshotDiffStream.diff(
-        in.toDF().toDF("doc_id", "source", "text"), oldSigs, target, ckpt)
-      q.awaitTermination()
-    }
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the diff (append instead of overwrite?)")
     oldSigs.unpersist()
     sp.catalog.clearCache(): Unit
   }
@@ -1780,43 +1726,6 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() == 0)
     assert(streamed.filter(col("contaminated")).count() > 0,
       "fixture must exercise real contamination through the stream")
-    benchGrams.unpersist()
-    sp.catalog.clearCache(): Unit
-  }
-
-  test("D27 replayed micro-batch is idempotent (crash before commit)") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx = sp.sqlContext
-    val docs = graft.sources.Tables.documents(sp, sf)
-    val benchGrams = graft.operators.Pipeline.decontamGrams(
-        graft.operators.Pipeline.decontamBaseOf(docs))
-      .filter(col("doc_id") % graft.operators.Pipeline.BenchMod ===
-        graft.operators.Pipeline.BenchRem)
-      .select("gram").distinct().cache()
-    val words = graft.operators.Pipeline.bloomBuild(benchGrams)
-    val feed = docs
-      .filter(col("doc_id") % graft.operators.Pipeline.BenchMod =!=
-        graft.operators.Pipeline.BenchRem)
-      .select("doc_id", "source", "text")
-      .as[(Long, String, String)].collect().toSeq
-    val (b1, b2) = feed.splitAt(feed.size / 2)
-    val target = tmpDir("d27r_target") + "/verdicts"
-    val ckpt = tmpDir("d27r_ckpt")
-    val in = MemoryStream[(Long, String, String)]
-    def run(): Unit =
-      BloomGateStream.gate(in.toDF().toDF("doc_id", "source", "text"),
-        benchGrams, words, target, ckpt).awaitTermination()
-    in.addData(b1: _*); run()
-    in.addData(b2: _*); run()
-    val before = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    dropNewestCommit(ckpt)
-    run() // replays the uncommitted epoch through foreachBatch
-    val after = sp.read.parquet(target).collect()
-      .map(_.toSeq).sortBy(_.toString).toSeq
-    assert(after == before,
-      "replayed epoch changed the verdicts (append instead of overwrite?)")
     benchGrams.unpersist()
     sp.catalog.clearCache(): Unit
   }
