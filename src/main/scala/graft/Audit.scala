@@ -453,15 +453,15 @@ object Audit {
     "q_dup_length_bias" -> 110)
 
   /** Count the Spark jobs of constructing `mk` and materializing it
-    * through the noop sink (the deployment action shape), exactly, with
-    * [[graft.obs.Meter]]. `mk` is BY-NAME: an iterative operator runs its
-    * driver loop while CONSTRUCTING the frame (each round an action), so
-    * the count must bracket construction + materialization, not
-    * materialization alone. */
+    * through the noop sink (the deployment action shape) as one
+    * [[operators.Caches.scoped]] unit, exactly, with [[graft.obs.Meter]].
+    * `mk` is BY-NAME: an iterative operator runs its driver loop while
+    * CONSTRUCTING the frame (each round an action), so the count must
+    * bracket construction + materialization, not materialization alone. */
   private[graft] def jobsOf(spark: SparkSession,
       mk: => org.apache.spark.sql.DataFrame): Int =
-    graft.obs.Meter.measure(spark)(
-      mk.write.format("noop").mode("overwrite").save()).jobs
+    graft.obs.Meter.measure(spark)(operators.Caches.scoped(spark)(mk)(
+      _.write.format("noop").mode("overwrite").save())).jobs
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -471,7 +471,9 @@ object Audit {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     var newFindings = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
+      // planned, never run: the scope releases what construction kept,
+      // and no cache is filled for an action that does not happen
+      try operators.Caches.releasing {
         val df = fn(spark, dir)
         val qe = df.queryExecution
         val hazards =
@@ -484,7 +486,6 @@ object Audit {
       } catch { case e: Throwable =>
         println(s"ERROR   $name  ${e.getMessage.take(120)}")
       }
-      spark.catalog.clearCache()
     }
     // the sixth class EXECUTES (plans can't see driver loops) — the
     // iterative family only, each a few seconds at the audit SF
@@ -497,7 +498,6 @@ object Audit {
       } catch { case e: Throwable =>
         println(s"ERROR   $name  ${e.getMessage.take(120)}")
       }
-      spark.catalog.clearCache()
     }
     println(s"== audit done, $newFindings new finding(s) ==")
     spark.stop()

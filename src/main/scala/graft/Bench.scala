@@ -14,10 +14,10 @@ import org.apache.spark.sql.SparkSession
   * 0.93s warm). Now: a warmup pass absorbs per-query codegen/JIT, then
   * timed passes separated by the length of a full pass — a spike has to
   * recur minutes apart on the same query to survive the min. Every timed
-  * sample starts cache-cold (clearCache after each execution — operators
-  * cache() intermediates they cannot unpersist themselves), matching how
-  * a query runs in isolation; before this, leaked caches measured 4-6×
-  * slowdowns on later-alphabet queries.
+  * sample starts cache-cold (each execution is one
+  * [[operators.Caches.scoped]] unit, whose caches are released after it),
+  * matching how a query runs in isolation; before this, leaked caches
+  * measured 4-6× slowdowns on later-alphabet queries.
   *
   * Round 7, after diagnosing the residual 6-query "unstable" set: the
   * noise is DEFERRED CLEANUP — unpersist/broadcast-removal is
@@ -209,18 +209,20 @@ object Bench {
         org.apache.spark.sql.DataFrame, record: Boolean = false)
         : (Double, Boolean) = {
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: $e"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (record && ok) partial.add((name, dt)): Unit
-      // Teardown OFF the clock: unpersist this query's caches, then give
-      // the ContextCleaner/GC a drain pause — otherwise the async
+      def stop() = (System.nanoTime() - t0) / 1e9
+      // Teardown OFF the clock: the clock stops inside the scope, which
+      // then unpersists this query's caches; then a pause lets the
+      // ContextCleaner/GC drain — otherwise the async
       // unpersist/broadcast-removal debt lands on the NEXT query's timed
       // window (the diagnosed source of the "runs right after heavy work"
       // instability cluster). NO System.gc() here — see the scaladoc A/B.
-      spark.catalog.clearCache()
+      val (dt, ok) =
+        try operators.Caches.scoped(spark)(fn(spark, sfDir)) { df =>
+          df.write.format("noop").mode("overwrite").save()
+          (stop(), true)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e"); (stop(), false) }
+      if (record && ok) partial.add((name, dt)): Unit
       Thread.sleep(150)
       (dt, ok)
     }
@@ -238,7 +240,6 @@ object Bench {
       graft.operators.SketchArtifacts.stage(spark, sfDir)
       graft.operators.StreamArtifacts.stage(spark, sfDir)
       graft.operators.AnnArtifacts.stage(spark, sfDir)
-      spark.catalog.clearCache()
       stagingS = secsSince(tStage)
       // optional warmup phase (default OFF since round 14 — pass 1 warms;
       // see the scaladoc A/B): "selective" skips the cheap tail the

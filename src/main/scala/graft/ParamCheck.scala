@@ -201,12 +201,11 @@ object ParamCheck {
         },
         EmbeddingOps.annServeSqlFor(probeBatch = 2, probeLo = 1)))
     variants.foreach { case (name, fn, _) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try operators.Caches.scoped(spark)(fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[paramcheck] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache()
       // a variant's staged stores are dead once its output parquet is
       // written — reclaim instead of accumulating one per run
       tempRoots.foreach(DedupArtifacts.deleteRoot)

@@ -20,12 +20,13 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (q <- qs) {
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      // explained, never run: no cache is filled, so the dump shows the
+      // plan the first action would start from
+      val plan = operators.Caches.releasing(SparkEntry.queries(q)(spark, dir)
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outDir, s"${q}_$suffix.txt"), plan)
       println(s"[plandump] wrote $outDir/${q}_$suffix.txt")
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

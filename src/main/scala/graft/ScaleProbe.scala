@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.obs.{Meter, Reading}
-import graft.operators.{AnnArtifacts, DedupArtifacts, EmbeddingOps, SketchArtifacts,
-  Skew, StreamArtifacts}
+import graft.operators.{AnnArtifacts, Caches, DedupArtifacts, EmbeddingOps,
+  SketchArtifacts, Skew, StreamArtifacts}
 import graft.operators.DedupArtifacts.deleteRoot
 import graft.streaming._
 
@@ -290,15 +290,13 @@ object ScaleProbe {
     def fresh(): Long = { seq += 1; seq }
 
     /** `warmup` unrecorded runs, then the field-wise fastest of `n`
-      * readings. `staged` is evaluated off the clock before each run
-      * (input rows, a fresh batch) and returns what is timed; after each
-      * run the session cache is cleared and the sample's directories are
-      * deleted, off the clock as well. */
+      * readings. Each run is one [[Caches.releasing]] unit: `staged` is
+      * evaluated off the clock (input rows, a fresh batch) and returns
+      * what is timed; after the reading the run's caches are released and
+      * the sample's directories are deleted, off the clock as well. */
     def sample(n: Int, warmup: Int = 0)(staged: => () => Any): Reading =
       fastest((1 to warmup + n).map { _ =>
-        val run = staged
-        val r = Meter.measure(spark)(run())
-        spark.catalog.clearCache()
+        val r = Caches.releasing { val run = staged; Meter.measure(spark)(run()) }
         perSample.foreach(deleteRoot); perSample.clear()
         r
       }.drop(warmup))
@@ -831,7 +829,7 @@ object ScaleProbe {
       k -> d
     }.toMap
     def once(p: ProbeFn, k: Int): Reading =
-      h.sample(1)(() => noop(p(h, dirs(k), k)))
+      h.sample(1)(() => Caches.scoped(h.spark)(p(h, dirs(k), k))(noop))
     probes.foreach { case (_, p) => once(p, Scales.head) }
     val got = Scales.map(k =>
       Seq.fill(2)(probes.map { case (_, p) => once(p, k) }).transpose.map(fastest))
@@ -1159,8 +1157,8 @@ object ScaleProbe {
       .valueQuantilesBySyntheticSegments(h.spark, h.baseDir, k)
     val rs = SegMuls.map(k => h.sample(2,
       warmup = if (k == SegMuls.head) 1 else 0)(() => noop(frame(k))))
-    val rows = SegMuls.map(frame(_).count()) // off the clock
-    h.spark.catalog.clearCache()
+    // off the clock
+    val rows = SegMuls.map(k => Caches.scoped(h.spark)(frame(k))(_.count()))
     val (mid, last) = (rs(1), rs.last)
     Curve("segment", "grouped qsketch", SegMuls.indices.map { i =>
       val r = rs(i)

@@ -19,16 +19,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try operators.Caches.scoped(spark)(fn(spark, sfDir))(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Library operators cache() intermediates whose lifetime must cover
-      // the caller's action, so they cannot unpersist themselves; dropping
-      // them between queries keeps this long-lived session from accreting
-      // dozens of dead cache entries (memory + CacheManager lookup cost).
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

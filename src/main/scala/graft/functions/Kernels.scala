@@ -1187,10 +1187,13 @@ object Kernels {
     * without [[graft.GraftExtensions]], the one installer such a session
     * needs: a session built by [[graft.GraftSession]] (or with
     * `spark.sql.extensions=graft.GraftExtensions`) already has every
-    * kernel, and so has every session cloned from it, so operators never
-    * call this. Idempotent and quiet: only the names the session lacks
-    * are registered, so a re-register logs no "function replaced"
-    * warning and a kernel added later is never skipped. */
+    * kernel, and so has every session cloned from it, so operators and
+    * specs never call this. It stays for the benchmark harness, whose
+    * `perfbench` main calls it on its `GraftSession` (a no-op there), and
+    * KernelsSpec pins it against the extension. Idempotent and quiet:
+    * only the names the session lacks are registered, so a re-register
+    * logs no "function replaced" warning and a kernel added later is
+    * never skipped. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     for (k <- catalog if !reg.functionExists(k.id))

@@ -394,10 +394,9 @@ object Analytics {
     // per-branch pruning defeats ReuseExchange — without it the raw events
     // scan runs twice. The cached relation is post-agg (≤ types × hours
     // rows), bounded at any event volume.
-    val hourly = Tables.events(spark, dir)
+    val hourly = Caches.keep(Tables.events(spark, dir)
       .select(col("event_type"), expr("ts div 3600000000000").as("hora_epoch"))
-      .groupBy("event_type", "hora_epoch").agg(count(lit(1)).as("n"))
-      .cache()
+      .groupBy("event_type", "hora_epoch").agg(count(lit(1)).as("n")))
     val spans = hourly.groupBy("event_type")
       .agg(min("hora_epoch").as("h0"), max("hora_epoch").as("h1"))
       .select(col("event_type"), explode(expr("sequence(h0, h1)")).as("hora_epoch"))
@@ -541,11 +540,10 @@ object Analytics {
     // at real scale.
     // cache(): baskets feed three consumers (pairs, per-part counts, the
     // order count) and per-branch pruning defeats ReuseExchange.
-    val baskets = Tables.lineitem(spark, dir)
+    val baskets = Caches.keep(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .groupBy("l_orderkey")
-      .agg(sort_array(collect_set("l_partkey")).as("parts"))
-      .cache()
+      .agg(sort_array(collect_set("l_partkey")).as("parts")))
     val perPart = baskets.select(explode(col("parts")).as("l_partkey"))
       .groupBy("l_partkey").agg(count(lit(1)).as("n_part"))
     val nOrders = baskets.select(count(lit(1)).as("n_orders"))
@@ -1713,14 +1711,13 @@ object Analytics {
     * 1 file leaves), the pushed quarter bound, the broadcast hash-join
     * scalar, and no Window. */
   def topSupplierRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val perSupp = Tables.lineitem(spark, dir)
+    val perSupp = Caches.keep(Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >=
           lit(TopRevenueQuarterStart).cast("timestamp") &&
         col("l_shipdate") < lit(TopRevenueQuarterEnd).cast("timestamp"))
       .groupBy(col("l_suppkey"))
       .agg(sum(discounted(cents(col("l_extendedprice")),
-        cents(col("l_discount")))).as("rev_u"))
-      .cache()
+        cents(col("l_discount")))).as("rev_u")))
     val top = perSupp.agg(max("rev_u").as("max_u"))
     perSupp.crossJoin(broadcast(top))
       .filter(col("rev_u") === col("max_u"))

@@ -110,19 +110,17 @@ object AnnArtifacts {
     * canonical-digest manifest. The five families build concurrently
     * ([[DedupArtifacts.concurrently]], [[SliceLog.write]]): the
     * quantizers are plans over the vector frame, so cells and codes never
-    * read the quantizer files being written. The session cache is cleared
-    * once, after all five. */
+    * read the quantizer files being written. */
   private[graft] def writeFrom(spark: SparkSession, v: DataFrame,
       cents: DataFrame, cb: DataFrame, root: String,
       k: Int = IvfK, pqK: Int = PqK): Unit = {
     DedupArtifacts.concurrently(Seq(
-      () => DedupArtifacts.writeArtifact(cents, s"$root/ivf_centroids",
-        "cent_id", centParams(k)),
-      () => DedupArtifacts.writeArtifact(cb, s"$root/pq_codebook",
+      () => DedupArtifacts.writeArtifact(spark, cents,
+        s"$root/ivf_centroids", "cent_id", centParams(k)),
+      () => DedupArtifacts.writeArtifact(spark, cb, s"$root/pq_codebook",
         "cent_id", cbParams(pqK)),
       () => log(root, k, pqK).write(spark, f =>
         sliceFrame(f, v, cents, cb).withColumn("ingest_day", lit(0L))))): Unit
-    spark.catalog.clearCache()
   }
 
   /** The nightly index build: one norm pass (flat), one corpus × O(k)
@@ -321,15 +319,8 @@ object AnnArtifacts {
   // index is built ONCE per (source dir, JVM) and every consumer reads it,
   // exactly as the nightly indexing job feeds every search)
 
-  private val annRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def annRoot(spark: SparkSession, dir: String): String =
-    annRoots.computeIfAbsent(dir, { _ =>
-      val root = DedupArtifacts.stagingRoot()
-      write(spark, dir, root)
-      root
-    })
+    DedupArtifacts.staged(s"ann:$dir")(write(spark, dir, _))
 
   /** Force the per-(dir, JVM) store staging now — the [[graft.Bench]]
     * measured-staging-phase hook (see [[DedupArtifacts.stage]]). */

@@ -161,7 +161,7 @@ object DedupOps {
     // O(chars) signature work at any corpus size. Buckets key on the raw
     // long minima (see [[minhashMinsOf]]) — the pair set is bit-identical
     // to the formatted-string grouping, spec-pinned against the oracle.
-    val mins = minhashMins(spark, dir).cache()
+    val mins = Caches.keep(minhashMins(spark, dir))
     val cold = dropHotBuckets(bucketRows(mins), bucketKeys)
     cold.as("a").join(cold.as("b"),
         bucketKeys.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
@@ -292,11 +292,10 @@ object DedupOps {
       .repartition(par, col("doc_id"))
     // cache() for the same non-reuse reason as dedupMinhashLsh: the simhash
     // kernel would otherwise run once per self-join side
-    val bands = sig
+    val bands = Caches.keep(sig
       .select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("band_val", expr("shiftright(simhash, band * 8) % 256"))
-      .cache()
+      .withColumn("band_val", expr("shiftright(simhash, band * 8) % 256")))
     val cold = dropHotBuckets(bands, Seq("band", "band_val"))
     val cand = cold.as("a").join(cold.as("b"),
         col("a.band") === col("b.band") &&
@@ -387,7 +386,7 @@ object DedupOps {
     // rows; on a mostly-unique real corpus it removes nearly all of them.
     val shared = sigs.groupBy("bucket").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).select("bucket")
-    val multi = sigs.join(shared, Seq("bucket")).cache()
+    val multi = Caches.keep(sigs.join(shared, Seq("bucket")))
     val nodes = Tables.documents(spark, dir)
       .filter(length(lower(trim(col("text")))) >= 5) // the LSH domain
       .select(col("doc_id").as("node"))
@@ -420,7 +419,6 @@ object DedupOps {
     // AQE stays ON for the loop: measured 5.2s vs 6.9s warm at sf0.1 with
     // it off — its per-exchange coalescing of the tiny label shuffles saves
     // more task overhead than its per-stage re-planning costs.
-    try {
     while (!converged && it < maxIters) {
       // doc→bucket→doc sweep: bucket takes its members' min label, every
       // member then takes the min over its buckets — two graph hops in two
@@ -481,9 +479,6 @@ object DedupOps {
       prevSum = s
       labels = next
       it += 1
-    }
-    } finally {
-      multi.unpersist() // even on a non-converged throw, don't leak the cache
     }
     require(converged, s"component propagation did not converge in $maxIters rounds")
     val out = nodes.join(labels, nodes("node") === labels("node"), "left")
@@ -561,8 +556,8 @@ object DedupOps {
     // pruned (doc, source, gram) rows is strictly smaller than three
     // recomputes at any scale; at 100 TB it spills MEMORY_AND_DISK like any
     // cached shuffle-sized intermediate.
-    val grams = raw.join(broadcast(hot), Seq("source", "gram"), "left_anti")
-      .cache()
+    val grams = Caches.keep(
+      raw.join(broadcast(hot), Seq("source", "gram"), "left_anti"))
     val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
     val inter = grams.as("a").join(grams.as("b"),
         col("a.source") === col("b.source") && col("a.gram") === col("b.gram") &&
@@ -707,14 +702,10 @@ object DedupOps {
     * re-aggregate (C33) compose with this so the optimizer never risks
     * sorting the full pair set just to throw the order away downstream.
     *
-    * Cache ownership: this operator cache()s two relations (the signature
-    * rows and the per-doc band aggregate) whose lifetime must cover the
-    * CALLER's action, so it cannot unpersist them itself — the caller owns
-    * reclamation via `spark.catalog.clearCache()` once its action is done
-    * (Bench/Verify/Audit do this between queries). An embedder invoking
-    * graft operators repeatedly in one session without clearing accretes
-    * one dead cache entry pair per invocation. This is the library-wide
-    * contract for every operator whose scaladoc notes a cache(). */
+    * The two relations this operator keeps (the signature rows and the
+    * per-doc band aggregate) must outlive it, through the caller's
+    * action, so they are released by the unit of work that runs it
+    * ([[Caches]]). */
   private[operators] def dedupMinhashEstRaw(
       spark: SparkSession, dir: String): DataFrame = {
     // ONE cached minima pass (96 B/doc) is both the bucket source AND the
@@ -724,7 +715,7 @@ object DedupOps {
     // longs in-row — no per-pair string splits, no collect_list
     // re-aggregation (round 16; the old shape formatted band strings and
     // split them back per pair).
-    val mins = minhashMins(spark, dir).cache()
+    val mins = Caches.keep(minhashMins(spark, dir))
     val cold = dropHotBuckets(bucketRows(mins), bucketKeys)
     val pairs = cold.as("a").join(cold.as("b"),
         bucketKeys.map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _) &&
@@ -902,13 +893,12 @@ object DedupOps {
     * The gram stream is cache()d: its two consumers prune different
     * columns, which defeats ReuseExchange (same lesson as C4). */
   def docNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Tables.documents(spark, dir)
+    val grams = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
-        "graft_word_grams_distinct(toks, 3)")).as("gram"))
-      .cache()
+        "graft_word_grams_distinct(toks, 3)")).as("gram")))
     val df = grams.groupBy("gram").agg(count(lit(1)).as("df"))
     grams.join(df, Seq("gram"))
       .groupBy("doc_id")
@@ -1003,9 +993,9 @@ object DedupOps {
     * distribution tells you clusters exist, this tells you whether to
     * TRUST them.
     *
-    * Plan: the edge set is C2's own (cache()d once, O(pairs) — caller
-    * reclaims). The census is BUDGETED, not all-pairs: this corpus is
-    * near-dup-DENSE, so the naive oriented two-hop join fans out Σ deg²
+    * Plan: the edge set is C2's own (cache()d once, O(pairs)). The
+    * census is BUDGETED, not all-pairs: this corpus is near-dup-DENSE,
+    * so the naive oriented two-hop join fans out Σ deg²
     * — measured 52 s at sf0.1 (flat across inflation, but a huge
     * constant: dense clusters make exact triangle counting cubic-ish in
     * cluster size). Instead each wedge center contributes only its
@@ -1020,7 +1010,7 @@ object DedupOps {
   def dedupTransitivity(spark: SparkSession, dir: String,
       cap: Int = TransNeighborCap): DataFrame =
     transitivityCensusOf(
-      minhashPairs(spark, dir).select("doc_a", "doc_b").cache(), cap)
+      Caches.keep(minhashPairs(spark, dir).select("doc_a", "doc_b")), cap)
 
   /** The budgeted wedge census over an ARBITRARY undirected edge set
     * (doc_a, doc_b) — the frame-parametric body [[dedupTransitivity]]
@@ -1037,11 +1027,10 @@ object DedupOps {
         row_number().over(Window.partitionBy("v").orderBy("u")))
       .filter(col("rnk") <= cap)
       .select("v", "u")
-    val wedges = sampled.as("s1")
+    val wedges = Caches.keep(sampled.as("s1")
       .join(sampled.as("s2"),
         col("s1.v") === col("s2.v") && col("s1.u") < col("s2.u"))
-      .select(col("s1.u").as("doc_a"), col("s2.u").as("doc_b"))
-      .cache()
+      .select(col("s1.u").as("doc_a"), col("s2.u").as("doc_b")))
     val nWedges = wedges.agg(count(lit(1)).as("n_wedges"))
     val nClosed = wedges.join(edges, Seq("doc_a", "doc_b"), "left_semi")
       .agg(count(lit(1)).as("n_closed"))
@@ -1112,10 +1101,9 @@ object DedupOps {
     // + doc join per branch (caught by the round-14 scan pin: 4 documents
     // scans where 2 belong; the C75 plan-shared ≠ materialization-shared
     // lesson, again)
-    val grid = sized.groupBy("size_bucket")
+    val grid = Caches.keep(sized.groupBy("size_bucket")
       .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast("long")).as("n_chars_total"))
-      .cache()
+        sum(col("n_chars").cast("long")).as("n_chars_total")))
     grid
       .crossJoin(grid.agg(sum(col("n_docs")).as("n_total")))
       .select(col("size_bucket"), col("n_docs"), col("n_chars_total"),
@@ -1234,12 +1222,10 @@ object DedupOps {
     * Scale: both batch joins key on 16-byte hashes or (band, sig) buckets
     * — never text, never corpus². The standing sig relation is hot-capped
     * like C2 ([[MaxBucketDocs]]) and cache()d (the bucket-volume count and
-    * the collision join would otherwise each re-sign the corpus);
-    * ownership follows the C29 contract — embedders reclaim via
-    * `spark.catalog.clearCache()` after their action. At 100 TB the
-    * standing sigs would persist as the INDEX (bucketed parquet, written
-    * once, joined daily); here they rebuild per run because the test
-    * harness owns no state between queries. */
+    * the collision join would otherwise each re-sign the corpus). At
+    * 100 TB the standing sigs would persist as the INDEX (bucketed
+    * parquet, written once, joined daily); here they rebuild per run
+    * because the test harness owns no state between queries. */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Feeds
     val standing = Tables.documents(spark, dir)
@@ -1255,7 +1241,7 @@ object DedupOps {
     * (h, exact_partner) and the hot-capped (band, sig, partner) bucket
     * rows. The sig relation is cache()d (bucket-volume count + every
     * collision join read it; at 100 TB this is the bucketed parquet index
-    * written once a day); callers reclaim via `clearCache`. */
+    * written once a day). */
   private[graft] def buildIncrementalIndex(spark: SparkSession,
       standing: DataFrame): (DataFrame, DataFrame) = {
     val indexHash = standing
@@ -1264,7 +1250,7 @@ object DedupOps {
       .groupBy("h").agg(min("doc_id").as("exact_partner"))
     // long bucket keys (see [[minhashMinsOf]]) — the index/batch bucket
     // join and the hot-cap count never touch a formatted sig string
-    val indexSigs = bucketRows(minhashMinsOf(spark, standing)).cache()
+    val indexSigs = Caches.keep(bucketRows(minhashMinsOf(spark, standing)))
     val coldIndex = dropHotBuckets(indexSigs, bucketKeys)
       .select((bucketKeys.map(col) :+ col("doc_id").as("partner")): _*)
     (indexHash, coldIndex)
@@ -1415,9 +1401,7 @@ object DedupOps {
     * pair grid (pair-keyed shuffle, map-side combine) and THEN collapses
     * map-side into ONE row of six counters — the 3-row matrix is assembled
     * from that broadcast-sized relation, so nothing downstream of the pair
-    * grid scales with the corpus. Cache ownership: the generators cache
-    * signature relations; callers reclaim via `spark.catalog.clearCache()`
-    * (the C29 contract). Cost note: this single-action composition holds
+    * grid scales with the corpus. Cost note: this single-action composition holds
     * all three generators' caches at once (measured ≈ 1.8× the sum of the
     * standalone runs at bench scale); at 100 TB the production shape feeds
     * the matrix from the generators' PERSISTED pair sets (each written
@@ -1464,12 +1448,12 @@ object DedupOps {
     // cache(): the 3-row assembly reads `tot` once per cell and the
     // cells' otherwise identical subtrees defeat exchange reuse — without
     // this the pair-grid aggregation replays per row (the C89 lesson).
-    // One cached row of six longs; C29 ownership (caller reclaims).
-    val tot = flags.agg(
+    // One cached row of six longs.
+    val tot = Caches.keep(flags.agg(
       sum("f_mh").as("n_mh"), sum("f_nj").as("n_nj"), sum("f_sb").as("n_sb"),
       sum(col("f_mh") * col("f_nj")).as("b_mh_nj"),
       sum(col("f_mh") * col("f_sb")).as("b_mh_sb"),
-      sum(col("f_nj") * col("f_sb")).as("b_nj_sb")).cache()
+      sum(col("f_nj") * col("f_sb")).as("b_nj_sb")))
     def cell(a: String, b: String, na: String, nb: String, both: String) =
       tot.select(lit(a).as("method_a"), lit(b).as("method_b"),
         col(na).as("n_a"), col(nb).as("n_b"), col(both).as("n_both"),
@@ -1578,8 +1562,7 @@ object DedupOps {
     * (pair × gram) rows: each doc collapses to its distinct gram-hash
     * ARRAY (~52 longs, smaller than the text), the pairs join that
     * relation twice on ids, and the intersection computes in-row via
-    * array_intersect — O(pairs + docs) shuffle. Cache ownership: C29
-    * contract (callers reclaim via clearCache). */
+    * array_intersect — O(pairs + docs) shuffle. */
   def dedupPairPrecision(spark: SparkSession, dir: String): DataFrame =
     pairPrecisionOf(spark, dir,
       minhashPairs(spark, dir),
@@ -1671,8 +1654,8 @@ object DedupOps {
     // assembly reads `tot` once per report row, and the rows' otherwise
     // identical subtrees defeat exchange reuse (plan-measured: the full
     // pair-scoring join replayed per branch) — one cached row of 15
-    // longs ends that. C29 ownership (caller reclaims).
-    val tot = scored.agg(
+    // longs ends that.
+    val tot = Caches.keep(scored.agg(
       sum("f_mh").as("p_mh"), sum("f_nj").as("p_nj"), sum("f_sb").as("p_sb"),
       sum(col("f_mh") * col("v_half")).as("h_mh"),
       sum(col("f_nj") * col("v_half")).as("h_nj"),
@@ -1685,7 +1668,7 @@ object DedupOps {
       sum(col("f_sb") * col("n_common")).as("c_sb"),
       sum(col("f_mh") * col("n_union")).as("u_mh"),
       sum(col("f_nj") * col("n_union")).as("u_nj"),
-      sum(col("f_sb") * col("n_union")).as("u_sb")).cache()
+      sum(col("f_sb") * col("n_union")).as("u_sb")))
     def row(m: String, p: String, h: String, t: String, c: String,
         u: String) =
       tot.select(lit(m).as("method"), col(p).as("n_pairs"),
@@ -1805,21 +1788,19 @@ object DedupOps {
     * C2 hot cap, and verifies O(pairs/10) sampled rows against the shared
     * [[gramSets]] relation. Pair sets per config stay candidate-bounded;
     * at 100 TB each config's pair set would persist as its own artifact
-    * (the DedupArtifacts contract) — here they cache per run (C29
-    * ownership). */
+    * (the DedupArtifacts contract) — here they cache per run. */
   def dedupBandingSweep(spark: SparkSession, dir: String): DataFrame = {
     val par = spark.sessionState.conf.numShufflePartitions
-    val minima = Tables.documents(spark, dir)
+    val minima = Caches.keep(Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)
       .select(col("doc_id"), expr("graft_minhash_rows(norm)").as("mins"))
-      .repartition(par, col("doc_id"))
-      .cache()
+      .repartition(par, col("doc_id")))
     // cache()d: each config's budgeted verifier joins the gram sets on
     // BOTH pair sides — un-cached, "shared" was only plan-shared and the
     // sweep re-tokenized the corpus 2x per config (8 document scans,
     // caught by the round-9 scan-shape pin)
-    val gsets = gramSets(spark, dir).cache()
+    val gsets = Caches.keep(gramSets(spark, dir))
     BandingSweep.map { case (bc, r) =>
       // bucket key: the ':'-formatted sig string — MEASURED faster here
       // than flat long key columns (round-16 A/B: 5.6 s vs 8.9 s matched
@@ -1841,11 +1822,11 @@ object DedupOps {
         .agg(count(lit(1)).as("df")).filter(col("df") > MaxBucketDocs)
         .select("band", "sig")
       val cold = sigs.join(broadcast(hot), Seq("band", "sig"), "left_anti")
-      val pairs = cold.as("a").join(cold.as("b"),
+      val pairs = Caches.keep(cold.as("a").join(cold.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct().cache()
+        .distinct())
       // NOT an eager count: a round-17 A/B of pairs.count()-per-config
       // cache fills read 960 tasks (vs 1052) but ~1.2 s SLOWER wall — the
       // one final action runs all four configs' subtrees concurrently,
@@ -1982,10 +1963,10 @@ object DedupOps {
     * Scale: C14's bucket-capped self-join is the only heavy stage; the
     * sweep adds 4 tiny aggregates over cached bounded relations. */
   def simhashRadiusSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = simhashBandPairs(spark, dir)
-      .select("doc_a", "doc_b", "hamming").cache()
+    val pairs = Caches.keep(simhashBandPairs(spark, dir)
+      .select("doc_a", "doc_b", "hamming"))
     val gsets = gramSets(spark, dir)
-    val sampled = pairs
+    val sampled = Caches.keep(pairs
       .filter(expr(s"""graft_str_hash(concat('srs|', doc_a, ':', doc_b))
           % $BandingSampleMod""") === 0)
       .join(gsets.select(col("doc_id").as("doc_a"), col("gl").as("gl_a")),
@@ -1998,8 +1979,7 @@ object DedupOps {
         (coalesce(size(col("gl_a")), lit(0)).cast("long")
           + coalesce(size(col("gl_b")), lit(0)).cast("long")).as("n_ab"))
       .select(col("hamming"), col("n_common"),
-        (col("n_ab") - col("n_common")).as("n_union"))
-      .cache()
+        (col("n_ab") - col("n_common")).as("n_union")))
     RadiusSweep.map { r =>
       val total = pairs.filter(col("hamming") <= r)
         .agg(count(lit(1)).as("n_pairs"))
@@ -2305,7 +2285,7 @@ object DedupOps {
     * for the interval merge — inheriting C106's output sort would pay a
     * global range exchange only to immediately hash-repartition. */
   private def spanMaskRows(spark: SparkSession, dir: String): DataFrame = {
-    val occ = anchoredSpans(Tables.documents(spark, dir)).cache()
+    val occ = Caches.keep(anchoredSpans(Tables.documents(spark, dir)))
     val dup = occ.groupBy("span_hash")
       .agg(countDistinct("doc_id").as("n_docs"))
       .filter(col("n_docs") >= 2).select("span_hash")
@@ -2582,10 +2562,9 @@ object DedupOps {
     * to detect — the C101/C103 constructed-degeneracy pattern). */
   private[graft] def lshRecallOf(spark: SparkSession, dir: String,
       candidates: DataFrame, mod: Int): DataFrame = {
-    val gs = gramSets(spark, dir)
+    val gs = Caches.keep(gramSets(spark, dir)
       .filter(expr(
-        s"graft_str_hash(concat('rcl|', cast(doc_id as string))) % $mod = 0"))
-      .cache()
+        s"graft_str_hash(concat('rcl|', cast(doc_id as string))) % $mod = 0")))
     val nSample = gs.agg(count(lit(1)).as("n_sample_docs"))
     val mh = candidates
       .select(col("doc_a"), col("doc_b"), lit(1L).as("cand"))
@@ -2707,8 +2686,7 @@ object DedupOps {
     * Scale: composes the three components' own 100 TB-shaped plans; the
     * flag joins key on doc_id (16-byte/8-byte keys) and the funnel
     * collapses map-side into ONE six-counter row expanded to 4 stage rows
-    * (the C75 assembly). Callers reclaim component caches via
-    * `spark.catalog.clearCache()` (the C29 contract). The registered
+    * (the C75 assembly). The registered
     * `q_dedup_funnel` is [[DedupArtifacts.funnelStaged]]: C18's labels are
     * PERSISTED by their own job and the funnel action reads the artifact,
     * so the composed action holds at most the semantic stage's caches —
@@ -2718,7 +2696,7 @@ object DedupOps {
     // ONE component computation feeds both the membership and the keeper
     // rule (canonicalFrom) — calling dedupCanonical here would re-run the
     // C18 iterative loop a second time
-    funnelFrom(spark, dir, dedupComponents(spark, dir).cache())
+    funnelFrom(spark, dir, Caches.keep(dedupComponents(spark, dir)))
 
   /** C82's waterfall over an ALREADY-COMPUTED component relation (cached
     * inline upstream, or read back from the persisted artifact) — shared
@@ -2753,14 +2731,14 @@ object DedupOps {
           coalesce(col("sk"), lit(true))).as("s3"))
     // cache(): the 4-stage assembly reads `t` once per stage row — same
     // exchange-reuse defeat as C75/C89's assembly, same one-row fix.
-    val t = flags.agg(
+    val t = Caches.keep(flags.agg(
       count(lit(1)).as("n0"), sum("n_tok").as("t0"),
       sum(when(col("s1"), 1L).otherwise(0L)).as("n1"),
       sum(when(col("s1"), col("n_tok")).otherwise(0L)).as("t1"),
       sum(when(col("s2"), 1L).otherwise(0L)).as("n2"),
       sum(when(col("s2"), col("n_tok")).otherwise(0L)).as("t2"),
       sum(when(col("s3"), 1L).otherwise(0L)).as("n3"),
-      sum(when(col("s3"), col("n_tok")).otherwise(0L)).as("t3")).cache()
+      sum(when(col("s3"), col("n_tok")).otherwise(0L)).as("t3")))
     def stage(i: Int, name: String, n: String, tk: String) =
       t.select(lit(i.toLong).as("stage"), lit(name).as("stage_name"),
         col(n).as("n_docs"), col(tk).as("n_tokens"),
@@ -2910,13 +2888,12 @@ object DedupOps {
     * divisions of exact longs (sum(min) ≤ n_docs·P stays in a long up to
     * ~4·10⁹ docs; past that the grid would carry decimal partial sums). */
   def minhashRowHealth(spark: SparkSession, dir: String): DataFrame = {
-    val grid = Tables.documents(spark, dir)
+    val grid = Caches.keep(Tables.documents(spark, dir)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)
       .select(posexplode(expr("graft_minhash_rows(norm)")))
       .toDF("row_idx", "m")
-      .groupBy("row_idx", "m").agg(count(lit(1)).as("n"))
-      .cache()
+      .groupBy("row_idx", "m").agg(count(lit(1)).as("n")))
     val stats = grid.groupBy("row_idx").agg(
       sum("n").as("n_docs"), count(lit(1)).as("n_distinct"),
       min("m").as("min_min"), max("m").as("max_min"),

@@ -780,10 +780,10 @@ object EmbeddingOps {
     // to retrievalRrf's). The previous shape replayed the brute-force
     // ground truth per union branch and re-ran both searches inside the
     // fusion — 18 embeddings file scans; now each search runs once.
-    val base = annBruteforce(spark, dir)
-      .select(col("probe_id"), col("neighbor_id")).cache()
-    val lsh = annLsh(spark, dir).cache()
-    val ivf = annIvf(spark, dir).cache()
+    val base = Caches.keep(annBruteforce(spark, dir)
+      .select(col("probe_id"), col("neighbor_id")))
+    val lsh = Caches.keep(annLsh(spark, dir))
+    val ivf = Caches.keep(annIvf(spark, dir))
     def recallOf(method: String, approx: DataFrame): DataFrame = {
       val hits = base.join(approx.select(col("probe_id"), col("neighbor_id"))
           .withColumn("hit", lit(1L)),
@@ -831,14 +831,13 @@ object EmbeddingOps {
     * broadcast centroid set); probe cells and scored candidates are
     * bounded by (probeBatch × nprobe_max × cell size); the sweep explode
     * multiplies only post-scoring fixed-width rows. Caches: the inverted
-    * file (the persisted index at 100 TB) and the bounded scored set —
-    * C29 ownership. */
+    * file (the persisted index at 100 TB) and the bounded scored set. */
   def annNprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val maxNp = NprobeSweep.max
     val v = vectors(spark, dir)
     val cents = ivfCentroids(v, IvfK)
-    val assigned = ivfAssigned(v, cents).cache()
+    val assigned = Caches.keep(ivfAssigned(v, cents))
     def centCos = (expr(dotExpr("embedding", "c_emb")) /
       (sqrt(col("n2")) * sqrt(col("c_n2")))).as("c_cos")
     val probeCells = v.filter(probeFilter(0, ProbeBatch))
@@ -849,14 +848,13 @@ object EmbeddingOps {
         .orderBy(col("c_cos").desc, col("cent_id"))))
       .filter(col("prnk") <= maxNp)
       .select("probe_id", "p_emb", "p_n2", "cent_id", "prnk")
-    val scored = assigned
+    val scored = Caches.keep(assigned
       .join(broadcast(probeCells), Seq("cent_id"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("prnk"),
         col("vec_id").as("neighbor_id"),
         (expr(dotExpr("p_emb", "embedding")) /
-          (sqrt(col("p_n2")) * sqrt(col("n2")))).as("cosine"))
-      .cache()
+          (sqrt(col("p_n2")) * sqrt(col("n2")))).as("cosine")))
     val nps = spark.range(1).select(
       explode(array(NprobeSweep.map(lit(_)): _*)).as("nprobe"))
     val s = nps.join(scored, col("prnk") <= col("nprobe"))
@@ -1273,15 +1271,13 @@ object EmbeddingOps {
       expr(s"sequence(CAST(0 AS BIGINT), CAST(${PqSub - 1} AS BIGINT))")
     // cache(): the four subspace joins each slice this LUT — uncached,
     // every lutS(s) would re-run the probe scan + distance folds (the C29
-    // alias-divergence lesson). Bounded O(batch·PqSub·k) rows. Cache
-    // ownership: caller reclaims via clearCache after its action.
-    val lut = probeSrc.filter(probeFilter(probeLo, probeBatch))
+    // alias-divergence lesson). Bounded O(batch·PqSub·k) rows.
+    val lut = Caches.keep(probeSrc.filter(probeFilter(probeLo, probeBatch))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
       .select(col("probe_id"), col("p_emb"), explode(subSeq).as("sub_id"))
       .crossJoin(cb)
       .select(col("probe_id"), col("sub_id"), col("cent_id"),
-        pqDistExpr("p_emb", "c_emb").as("d"))
-      .cache()
+        pqDistExpr("p_emb", "c_emb").as("d")))
     def lutS(s: Int) = broadcast(lut.filter(col("sub_id") === s)
       .select(col("probe_id"), col("cent_id").as(s"code_$s"),
         col("d").as(s"d_$s")))
@@ -1442,14 +1438,14 @@ object EmbeddingOps {
     * Fixed rounds make the whole refinement a single lazy plan: no
     * driver loop, no checkpoint, no collect. The vector relation and the
     * final assignment are cache()d (each feeds ≥ 2 consumers — the C4
-    * lesson); callers reclaim via `spark.catalog.clearCache()`. */
+    * lesson). */
   /** The trained C62 codebook — the "model" D19's serving path freezes:
-    * seeds refined through `iters` Lloyd rounds. Callers own the cache of
-    * the vector relation used during training (clearCache contract). */
+    * seeds refined through `iters` Lloyd rounds, over a kept vector
+    * relation. */
   private[graft] def kmeansCentroids(spark: SparkSession, dir: String,
       k: Int = KmClusters, iters: Int = KmIters): DataFrame = {
-    val v = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).cache()
+    val v = Caches.keep(Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding")))
     val seeds = v
       .filter(col("vec_id") % 100 === 50 &&
         col("vec_id") < lit(k.toLong * 100L))
@@ -1465,7 +1461,7 @@ object EmbeddingOps {
     val v = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val cents = kmeansCentroids(spark, dir, k, iters)
-    val asg = kmAssign(v, cents).cache()
+    val asg = Caches.keep(kmAssign(v, cents))
     val sizes = asg.groupBy("cluster").agg(count(lit(1)).as("n_members"))
     asg.join(broadcast(sizes), Seq("cluster"))
       .select(col("vec_id"), col("cluster"), col("dist").as("d2"),
@@ -1633,8 +1629,7 @@ object EmbeddingOps {
     * vector shuffle), one `shuffle_hash` doc-id join (C33's rule) of the
     * two-side union, then everything lives on the cache()d ≤ sources·k
     * grid; the top-cluster window partitions that grid by source —
-    * grid-bounded, never corpus-bounded. Callers reclaim the grid cache
-    * via `spark.catalog.clearCache()`. */
+    * grid-bounded, never corpus-bounded. */
   def semanticDrift(spark: SparkSession, dir: String,
       k: Int = KmClusters, iters: Int = KmIters): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1652,12 +1647,11 @@ object EmbeddingOps {
           col("doc_id") - Feeds.IncrRem).otherwise(col("doc_id"))
           .as("vec_id"),
         lit("feed").as("side"))
-    val grid = baseSide.unionByName(feedSide)
+    val grid = Caches.keep(baseSide.unionByName(feedSide)
       .join(asg.hint("shuffle_hash"), Seq("vec_id"))
       .groupBy("source", "cluster").agg(
         sum(when(col("side") === "base", 1L).otherwise(0L)).as("a"),
-        sum(when(col("side") === "feed", 1L).otherwise(0L)).as("b"))
-      .cache()
+        sum(when(col("side") === "feed", 1L).otherwise(0L)).as("b")))
     val tot = grid.groupBy("source")
       .agg(sum("a").cast("long").as("base_docs"),
         sum("b").cast("long").as("feed_docs"))
@@ -2025,7 +2019,7 @@ object EmbeddingOps {
     * Scale: one gramGrid pass (C88's single distributive-aggregate scan)
     * + O(dims²) post-processing — fixed 2080 rows whatever the corpus. */
   def embedDimAudit(spark: SparkSession, dir: String): DataFrame = {
-    val g = gramGrid(Tables.embeddings(spark, dir)).cache()
+    val g = Caches.keep(gramGrid(Tables.embeddings(spark, dir)))
     def dbl(c: String) = col(c).cast("double")
     val diag = g.filter(col("dim_i") === col("dim_j"))
       .select(col("dim_i").as("dim"), col("s_prod").as("s_dd"),
@@ -2266,13 +2260,12 @@ object EmbeddingOps {
     * extreme dims use max-then-min-dim (deterministic ties), and
     * trace_q / trace_share are single divisions. */
   def embedSubspaceVariance(spark: SparkSession, dir: String): DataFrame = {
-    val diag = gramGrid(Tables.embeddings(spark, dir))
+    val diag = Caches.keep(gramGrid(Tables.embeddings(spark, dir))
       .filter(col("dim_i") === col("dim_j"))
       .select(col("dim_i").as("dim"),
         (col("n_vecs") * col("s_prod") - col("s_i") * col("s_i"))
           .as("den"), col("n_vecs"))
-      .withColumn("sub_id", expr(s"dim div $PqSubDim"))
-      .cache()
+      .withColumn("sub_id", expr(s"dim div $PqSubDim")))
     val per = diag.groupBy("sub_id").agg(
       count(lit(1)).as("n_dims"), max("n_vecs").as("n_vecs"),
       sum("den").as("sub_den"), max("den").as("max_den"), min("den").as("min_den"))
@@ -2366,12 +2359,11 @@ object EmbeddingOps {
     // cache(): the 4-row grid feeds BOTH the output and the 1-row total —
     // uncached, the total's branch would replay the whole C55 assignment
     // subtree (the C75/C90 report-assembly lesson)
-    val per = pq.groupBy("sub_id").agg(
+    val per = Caches.keep(pq.groupBy("sub_id").agg(
       count(lit(1)).as("n_vecs"),
       countDistinct("code").as("n_codes_used"),
       sum("mse_n").as("sum_mse_n"),
-      max("mse_n").as("max_mse_n"))
-      .cache()
+      max("mse_n").as("max_mse_n")))
     val tot = per.agg(sum("sum_mse_n").as("tot_mse_n"))
     per.crossJoin(broadcast(tot))
       .select(col("sub_id"), col("n_vecs"), col("n_codes_used"),
@@ -2431,7 +2423,7 @@ object EmbeddingOps {
       "lsh" -> annLsh(spark, dir),
       "pq_adc" -> annPqAdc(spark, dir))
       .map { case (n, df) =>
-        n -> df.select("probe_id", "neighbor_id").cache()
+        n -> Caches.keep(df.select("probe_id", "neighbor_id"))
       }
     val cells = for {
       i <- lists.indices; j <- lists.indices if i < j

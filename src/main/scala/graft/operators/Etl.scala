@@ -661,7 +661,7 @@ object Etl {
     val steps = dailyEtlSteps(spark, dir)
       .withColumn("paso_ok", col("n_cargados") > 0)
     steps.unpersist()
-    steps.cache()
+    Caches.keep(steps): Unit
     val total = steps.agg(sum("n_entrada").as("n_entrada"),
         sum("n_cargados").as("n_cargados"),
         sum("n_rechazados").as("n_rechazados"),

@@ -147,14 +147,13 @@ object Journeys {
     // count both read this bounded (customers × months) relation — without
     // the cache the cohort-size branch re-scans orders and repeats the
     // custkey window (seen in the executed plan; scanLeaves-guarded)
-    val cm = Tables.orders(spark, dir)
+    val cm = Caches.keep(Tables.orders(spark, dir)
       .select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("ym"),
         cents(col("o_totalprice")).as("total_c"))
       .groupBy("o_custkey", "ym").agg(sum("total_c").as("rev_c"))
-      .withColumn("cohort_ym", min("ym").over(Window.partitionBy("o_custkey")))
-      .cache()
+      .withColumn("cohort_ym", min("ym").over(Window.partitionBy("o_custkey"))))
     val cohortSize = cm.filter(col("ym") === col("cohort_ym"))
       .groupBy(col("cohort_ym").as("cs_ym"))
       .agg(count(lit(1)).as("cohort_n"))

@@ -133,8 +133,10 @@ object Nightly {
         AnnArtifacts.compactIfNeeded(spark, annRoot, maxSlices,
           protectFrom = dayEpoch))
 
+    // each chain releases the caches it kept when it ends, and no other
     val stepRows = DedupArtifacts.concurrently(
-      Seq(() => sketchChain(), () => streamChain(), () => annChain())).flatten
+      Seq(() => sketchChain(), () => streamChain(), () => annChain())
+        .map(chain => () => Caches.releasing(chain()))).flatten
 
     // ---- the A15-style report: per-step rows + the total row the
     // scheduler response summarizes (paso_ok = the step landed rows;

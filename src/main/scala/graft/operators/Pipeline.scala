@@ -220,7 +220,7 @@ object Pipeline {
     // cache(): the 20-row source totals feed both the broadcast join and
     // the global min — without it the min branch re-runs the whole
     // token-count scan
-    val tok = d.groupBy("source").agg(sum("n_tok").as("t_src")).cache()
+    val tok = Caches.keep(d.groupBy("source").agg(sum("n_tok").as("t_src")))
     val tmin = tok.agg(min("t_src").as("t_min"))
     d.join(broadcast(tok), "source").crossJoin(broadcast(tmin))
       .withColumn("umbral", expr("(t_min * 1000000) div t_src"))
@@ -270,7 +270,7 @@ object Pipeline {
       .select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
         (expr("graft_str_hash(concat('mix|', lower(trim(text))))") % 1000000).as("h"))
-    val tok = d.groupBy("source").agg(sum("n_tok").as("t_src")).cache()
+    val tok = Caches.keep(d.groupBy("source").agg(sum("n_tok").as("t_src")))
     val tmin = tok.agg(min("t_src").as("t_min"))
     d.join(broadcast(tok), "source").crossJoin(broadcast(tmin))
       .withColumn("umbral", floor(lit(1000000.0) *
@@ -707,19 +707,16 @@ object Pipeline {
     * #sources rows (≤ S² pairs per gram): bounded by the SOURCE count, not
     * by any data property, so no hot-bucket cap is needed (unlike C2/C14's
     * doc-level buckets). The pair aggregate lands on a ≤ S²-row grid and
-    * the final matrix assembles from broadcast S-row totals.
-    * Cache ownership: caller reclaims via `spark.catalog.clearCache()`
-    * after its action (the C29 contract; Bench/Verify already do). */
+    * the final matrix assembles from broadcast S-row totals. */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Tables.documents(spark, dir)
+    val grams = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= OverlapGram)
       .select(col("source"), explode(expr(
         s"graft_word_grams_distinct(toks, $OverlapGram)")).as("gram"))
       .select(col("source"), unhex(md5(col("gram").cast("binary"))).as("gram_hash"))
-      .distinct()
-      .cache()
+      .distinct())
     val totals = grams.groupBy("source").agg(count(lit(1)).as("n_grams"))
     val shared = grams.as("a")
       .join(grams.as("b"), col("a.gram_hash") === col("b.gram_hash") &&
@@ -790,15 +787,14 @@ object Pipeline {
     * Scale: one narrow token-count pass + one source-keyed partial-agg
     * shuffle; the source totals are cache()d (the corpus total and the
     * final report both read them — the C27 lesson) and the 1-row total
-    * rides a broadcast. No fact-side shuffle at any corpus size. Cache
-    * ownership: callers reclaim via `spark.catalog.clearCache()`. */
+    * rides a broadcast. No fact-side shuffle at any corpus size. */
   def mixEpochs(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    val tok = d.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens")).cache()
+    val tok = Caches.keep(d.groupBy("source")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens")))
     val tot = tok.agg(sum("n_tokens").as("t_total"),
       count(lit(1)).as("n_sources"))
     tok.crossJoin(broadcast(tot))
@@ -865,20 +861,18 @@ object Pipeline {
     * threshold grid then LEFT-joins buckets triangularly (idx ≥ i) —
     * a ≤ SweepN² driver-scale join, NO window (a reverse-cumulative
     * window over the grid would be an Audit global-window finding), no
-    * second fact pass at any corpus size. Cache ownership: callers
-    * reclaim the tiny bucket cache via `spark.catalog.clearCache()`. */
+    * second fact pass at any corpus size. */
   def filterThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
         (TextOps.qualityScoreCol(col("text")) >= SweepQualityMin).as("q_ok"))
-    val b = d
+    val b = Caches.keep(d
       .select(least(expr(s"n_tok DIV $SweepStep"), lit((SweepN - 1).toLong))
           .as("b"), col("n_tok"), col("q_ok"))
       .groupBy("b").agg(count(lit(1)).as("nd"), sum("n_tok").as("nt"),
-        sum(when(col("q_ok"), 1L).otherwise(0L)).as("nq"))
-      .cache()
+        sum(when(col("q_ok"), 1L).otherwise(0L)).as("nq")))
     val tot = b.agg(sum("nd").as("td"), sum("nt").as("tt"))
     val grid = spark.range(0, SweepN)
       .select(col("id").as("i"), (col("id") * SweepStep).as("min_tokens"))
@@ -963,18 +957,16 @@ object Pipeline {
     * per gram), and the hot-flag join keys on gram_hash — the same key
     * the grid is already partitioned by, so it replans shuffle-free under
     * AQE off the cache()d grid. The final roll-up lands on ≤ #sources
-    * rows. Cache ownership: callers reclaim via
-    * `spark.catalog.clearCache()` (the C29 contract). */
+    * rows. */
   def gramMemorization(spark: SparkSession, dir: String): DataFrame = {
-    val occ = Tables.documents(spark, dir)
+    val occ = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= MemGram)
       .select(col("source"), explode(expr(
         s"graft_word_grams(toks, $MemGram)")).as("gram"))
       .select(col("source"), unhex(md5(col("gram").cast("binary"))).as("gram_hash"))
-      .groupBy("gram_hash", "source").agg(count(lit(1)).as("occ"))
-      .cache()
+      .groupBy("gram_hash", "source").agg(count(lit(1)).as("occ")))
     val tot = occ.groupBy("gram_hash").agg(sum("occ").as("tot_occ"))
     occ.join(tot, "gram_hash")
       .groupBy("source").agg(
@@ -1057,8 +1049,7 @@ object Pipeline {
     * shuffle); first-bucket mins re-aggregate the grid on its own key, so
     * the join back replans shuffle-free under AQE; the roll-up lands on
     * ≤ B rows. Doc counts come from a separate column-pruned doc_id-only
-    * scan (no token re-read). Callers reclaim the grid cache via
-    * `spark.catalog.clearCache()` (the C29 contract). */
+    * scan (no token re-read). */
   def noveltyCurve(spark: SparkSession, dir: String): DataFrame = {
     val B = NoveltyBuckets
     val d = Tables.documents(spark, dir)
@@ -1070,13 +1061,12 @@ object Pipeline {
     val bucketed = d.crossJoin(broadcast(mx))
       .withColumn("bucket",
         expr(s"least(doc_id * $B div (max_id + 1), ${B - 1})"))
-    val grid = bucketed
+    val grid = Caches.keep(bucketed
       .filter(size(col("toks")) >= MemGram)
       .select(col("bucket"), explode(expr(
         s"graft_word_grams(toks, $MemGram)")).as("gram"))
       .select(col("bucket"), unhex(md5(col("gram").cast("binary"))).as("gram_hash"))
-      .groupBy("gram_hash", "bucket").agg(count(lit(1)).as("occ"))
-      .cache()
+      .groupBy("gram_hash", "bucket").agg(count(lit(1)).as("occ")))
     val firsts = grid.groupBy("gram_hash")
       .agg(min("bucket").as("first_bucket"))
     val perBucket = grid.join(firsts, "gram_hash")
@@ -1323,8 +1313,7 @@ object Pipeline {
     * [[NumShards]] groups — the only exchange moves ≤ tasks·shards rows —
     * plus a 1-row broadcast total. The [[NumShards]]-row manifest is
     * cache()d so the total and the report read it without re-scanning the
-    * corpus (the C27 lesson); callers reclaim via
-    * `spark.catalog.clearCache()`. No fact-side shuffle at any corpus
+    * corpus (the C27 lesson). No fact-side shuffle at any corpus
     * size (the export itself pays the one full shuffle; the manifest
     * never does). */
   def corpusShard(spark: SparkSession, dir: String): DataFrame = {
@@ -1335,10 +1324,9 @@ object Pipeline {
           % NumShards).as("shard_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
         expr("graft_str_hash(concat('cksum|', lower(trim(text))))").as("ck"))
-    val sh = d.groupBy("shard_id").agg(
+    val sh = Caches.keep(d.groupBy("shard_id").agg(
       count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-      expr("bit_xor(ck)").as("content_checksum"))
-      .cache()
+      expr("bit_xor(ck)").as("content_checksum")))
     val tot = sh.agg(sum("n_tokens").as("t_total"))
     sh.crossJoin(broadcast(tot))
       .withColumn("token_share",
@@ -1524,14 +1512,13 @@ object Pipeline {
         .select(lit(side).as("side"), col("source"), col("lang"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
     val dec = "decimal(18,0)"
-    val grid = prep(base, "base")
+    val grid = Caches.keep(prep(base, "base")
       .unionByName(prep(feed, "feed"))
       .select(col("source"), lenb(col("n_tok")).as("lenb"), col("lang"),
         col("side"))
       .groupBy("source", "lenb", "lang")
       .agg(sum(when(col("side") === "base", 1L).otherwise(0L)).as("a"),
-        sum(when(col("side") === "feed", 1L).otherwise(0L)).as("b"))
-      .cache()
+        sum(when(col("side") === "feed", 1L).otherwise(0L)).as("b")))
     val tot = grid.groupBy("source")
       .agg(sum("a").cast("long").as("base_docs"),
         sum("b").cast("long").as("feed_docs"))
@@ -1658,10 +1645,9 @@ object Pipeline {
     * each re-running the feed's documents self-join (round-7 advice: the
     * composition re-scanned the feed four times); at 100 TB the analog is
     * the staged crawl batch every gate reads. Components cache
-    * internally; callers reclaim via `spark.catalog.clearCache()` (the
-    * C29 contract). */
+    * internally. */
   def admissionReport(spark: SparkSession, dir: String): DataFrame = {
-    val feed = Feeds.incomingDocs(spark, dir).cache()
+    val feed = Caches.keep(Feeds.incomingDocs(spark, dir))
     val standing = Tables.documents(spark, dir)
       .filter(col("doc_id") % Feeds.IncrMod =!= Feeds.IncrRem)
     val (indexHash, coldSigs) =
@@ -1968,17 +1954,16 @@ object Pipeline {
   def tokenBudgetFill(spark: SparkSession, dir: String,
       budgetDiv: Int = FillBudgetDiv): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = Tables.documents(spark, dir)
+    // one materialization feeds the budget total, the histogram and both
+    // admit branches — four canonically-different subtrees otherwise
+    // re-run the regex scoring scan four times (the C21 cache rule)
+    val scored = Caches.keep(Tables.documents(spark, dir)
       .filter(length(col("text")) > 0 && length(trim(col("text"))) > 0)
       .select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
         TextOps.qualityScoreCol(col("text")).as("quality_score"))
       .withColumn("bkt",
-        floor(col("quality_score") * lit(FillBucketScale)).cast("long"))
-      // one materialization feeds the budget total, the histogram and both
-      // admit branches — four canonically-different subtrees otherwise
-      // re-run the regex scoring scan four times (the C21 cache rule)
-      .cache()
+        floor(col("quality_score") * lit(FillBucketScale)).cast("long")))
     val budget = scored.agg(sum("n_tok").as("t"))
       .select(expr(s"t div $budgetDiv").as("budget"))
     val grid = scored.groupBy("bkt").agg(sum("n_tok").as("btok"))

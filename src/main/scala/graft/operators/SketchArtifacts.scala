@@ -88,9 +88,7 @@ object SketchArtifacts {
     * directory's manifest records the build geometry. The five families
     * read only the source tables and share no directory, so they build
     * concurrently ([[DedupArtifacts.concurrently]]), each in its own
-    * order (write, then the digest from the files, then the manifest);
-    * no family plan registers a cache, and the session cache is cleared
-    * once, after all five. */
+    * order (write, then the digest from the files, then the manifest). */
   def write(spark: SparkSession, dir: String, root: String,
       m: Int = graft.functions.Kernels.HllM,
       depth: Int = Sketches.HhDepth, width: Int = Sketches.HhWidth,
@@ -99,12 +97,12 @@ object SketchArtifacts {
       dayDepth: Int = Sketches.WeekCmsDepth,
       dayWidth: Int = Sketches.WeekCmsWidth): Unit = {
     DedupArtifacts.concurrently(Seq(
-      () => DedupArtifacts.writeArtifact(
+      () => DedupArtifacts.writeArtifact(spark,
         Sketches.monthCustomers(spark, dir)
           .groupBy("mth")
           .agg(expr(s"graft_hll_sketch_m(o_custkey, $m)").as("regs")),
         s"$root/hll_month", "mth", hllParams(m)),
-      () => DedupArtifacts.writeArtifact(
+      () => DedupArtifacts.writeArtifact(spark,
         graft.sources.Tables.events(spark, dir)
           .select(col("event_type"),
             floor(col("value")).cast("long").cast("string").as("key"))
@@ -118,17 +116,14 @@ object SketchArtifacts {
           dayDepth, dayWidth)),
       () => hllDayLog(root, dayM).write(spark, _ =>
         Sketches.dayHllSketchesOf(Sketches.dayUsers(spark, dir), dayM)))): Unit
-    spark.catalog.clearCache()
   }
 
   /** Just the qsketch_day family — for harnesses (ParamCheck's
     * non-default-geometry store variant) that only consume this family
     * and should not pay the other four families' build passes. */
   def writeQsketchDays(spark: SparkSession, dir: String, root: String,
-      s: Int = graft.functions.Kernels.QSketchS): Unit = {
+      s: Int = graft.functions.Kernels.QSketchS): Unit =
     writeQsketchFamily(spark, dir, root, s)
-    spark.catalog.clearCache()
-  }
 
   private def writeQsketchFamily(spark: SparkSession, dir: String,
       root: String, s: Int): Unit =
@@ -303,14 +298,14 @@ object SketchArtifacts {
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
     val nb = graft.functions.Kernels.qsketchBuckets(s)
-    val wk = qsketchDays(spark, root, s)
+    val wk = Caches.keep(qsketchDays(spark, root, s)
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
       .agg(
         count(lit(1)).as("n_days"),
         expr(s"aggregate(collect_list(regs), " +
           s"array_repeat(CAST(0 AS BIGINT), $nb), " +
           "(acc, x) -> zip_with(acc, x, (a, b) -> a + b))").as("regs"),
-        sum("n").as("n")).cache()
+        sum("n").as("n")))
     Sketches.qReadout(wk, "regs", Seq("week_epoch", "n_days"), s, qPms)
   }
 
@@ -410,15 +405,8 @@ object SketchArtifacts {
   // actions measure what a deployment's weekly panel actually runs — a
   // manifest-verified read of O(days) sketch rows)
 
-  private val storeRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def storeRoot(spark: SparkSession, dir: String): String =
-    storeRoots.computeIfAbsent(dir, { _ =>
-      val root = DedupArtifacts.stagingRoot()
-      write(spark, dir, root)
-      root
-    })
+    DedupArtifacts.staged(s"sketch:$dir")(write(spark, dir, _))
 
   /** Force the per-(dir, JVM) store staging now — the [[graft.Bench]]
     * measured-staging-phase hook (see [[DedupArtifacts.stage]]). */
@@ -461,7 +449,7 @@ object SketchArtifacts {
   def monthOverlap(spark: SparkSession, dir: String, root: String,
       m: Int = graft.functions.Kernels.HllM): DataFrame = {
     Sketches.overlapAssemble(hllMonths(spark, root, m),
-      Sketches.monthCustomers(spark, dir).cache(), m)
+      Caches.keep(Sketches.monthCustomers(spark, dir)), m)
   }
 
   /** B51's deployment shape, estimates only: every column derives from

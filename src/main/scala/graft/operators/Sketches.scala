@@ -150,11 +150,10 @@ object Sketches {
       ms: Seq[Int] = HllSweepMs): DataFrame = {
     val sketchAggs =
       ms.map(m => expr(s"graft_hll_sketch_m(event_id, $m)").as(s"regs_$m"))
-    val one = Tables.events(spark, dir)
+    val one = Caches.keep(Tables.events(spark, dir)
       .agg(sketchAggs.head, sketchAggs.tail: _*)
       .crossJoin(Tables.events(spark, dir)
-        .agg(countDistinct(col("event_id")).as("n_exact")))
-      .cache()
+        .agg(countDistinct(col("event_id")).as("n_exact"))))
     ms.map { m =>
       val am2 = graft.functions.Kernels.hllAlphaM2Of(m)
       one.select(lit(m.toLong).as("m"), col("n_exact"),
@@ -420,7 +419,7 @@ object Sketches {
     * raw estimator's documented behavior, reported as-is). */
   def hllMonthOverlap(spark: SparkSession, dir: String,
       m: Int = graft.functions.Kernels.HllM): DataFrame = {
-    val mc = monthCustomers(spark, dir).cache()
+    val mc = Caches.keep(monthCustomers(spark, dir))
     val sk = mc.groupBy("mth")
       .agg(expr(s"graft_hll_sketch_m(o_custkey, $m)").as("regs"))
     overlapAssemble(sk, mc, m)
@@ -583,9 +582,9 @@ object Sketches {
   def valueQuantileSketch(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    val sk = eventCents(spark, dir)
+    val sk = Caches.keep(eventCents(spark, dir)
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
-        count(lit(1)).as("n")).cache()
+        count(lit(1)).as("n")))
     qReadout(sk, "regs", Seq.empty, s, qPms)
   }
 
@@ -642,7 +641,7 @@ object Sketches {
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
     val aggs = count(lit(1)).as("n") +:
       ss.map(s => expr(s"graft_qsketch_s(cents, $s)").as(s"regs_$s"))
-    val one = eventCents(spark, dir).agg(aggs.head, aggs.tail: _*).cache()
+    val one = Caches.keep(eventCents(spark, dir).agg(aggs.head, aggs.tail: _*))
     ss.map { s =>
       qReadout(one.select(col("n"), col(s"regs_$s").as("regs")),
           "regs", Seq.empty, s, qPms)
@@ -708,10 +707,10 @@ object Sketches {
   def valueQuantilesByType(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    val sk = eventCents(spark, dir)
+    val sk = Caches.keep(eventCents(spark, dir)
       .groupBy("event_type")
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
-        count(lit(1)).as("n")).cache()
+        count(lit(1)).as("n")))
     qReadout(sk, "regs", Seq("event_type"), s, qPms)
   }
 
@@ -766,7 +765,7 @@ object Sketches {
       dir: String, segMul: Int,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    val sk = Tables.events(spark, dir)
+    val sk = Caches.keep(Tables.events(spark, dir)
       .select(
         concat_ws("_", col("event_type"),
           pmod(col("event_id"), lit(segMul.toLong)).cast("string"))
@@ -774,7 +773,7 @@ object Sketches {
         floor(col("value") * lit(100.0) + lit(0.5)).cast("long").as("cents"))
       .groupBy("segment")
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
-        count(lit(1)).as("n")).cache()
+        count(lit(1)).as("n")))
     qReadout(sk, "regs", Seq("segment"), s, qPms)
   }
 
@@ -805,13 +804,13 @@ object Sketches {
   private[operators] def weekQuantileAssemble(days: DataFrame, s: Int,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
     val nb = graft.functions.Kernels.qsketchBuckets(s)
-    val wk = days
+    val wk = Caches.keep(days
       .groupBy(expr("day_epoch div 7").as("week_epoch"))
       .agg(
         expr(s"aggregate(collect_list(regs), " +
           s"array_repeat(CAST(0 AS BIGINT), $nb), " +
           "(acc, x) -> zip_with(acc, x, (a, b) -> a + b))").as("regs"),
-        sum("n").as("n")).cache()
+        sum("n").as("n")))
     qReadout(wk, "regs", Seq("week_epoch"), s, qPms)
   }
 
@@ -1292,14 +1291,14 @@ object Sketches {
   def orderValueQuantilesByMonth(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    val sk = Tables.orders(spark, dir)
+    val sk = Caches.keep(Tables.orders(spark, dir)
       .select((year(col("o_orderdate")) * lit(100) + month(col("o_orderdate")))
           .cast("long").as("ym"),
         floor(col("o_totalprice") * lit(100.0) + lit(0.5)).cast("long")
           .as("cents"))
       .groupBy("ym")
       .agg(expr(s"graft_qsketch_s(cents, $s)").as("regs"),
-        count(lit(1)).as("n")).cache()
+        count(lit(1)).as("n")))
     qReadout(sk, "regs", Seq("ym"), s, qPms)
   }
 
@@ -1352,11 +1351,11 @@ object Sketches {
   def doclenQuantilesBySource(spark: SparkSession, dir: String,
       s: Int = graft.functions.Kernels.QSketchS,
       qPms: Seq[Int] = graft.functions.Kernels.QuantileGridPm): DataFrame = {
-    val sk = Tables.documents(spark, dir)
+    val sk = Caches.keep(Tables.documents(spark, dir)
       .select(col("source"), col("n_chars"))
       .groupBy("source")
       .agg(expr(s"graft_qsketch_s(n_chars, $s)").as("regs"),
-        count(lit(1)).as("n")).cache()
+        count(lit(1)).as("n")))
     qReadout(sk, "regs", Seq("source"), s, qPms)
   }
 

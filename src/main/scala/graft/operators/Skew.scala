@@ -152,7 +152,7 @@ object Skew {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("key"))
     def family(name: String, keys: DataFrame): DataFrame = {
-      val kc = keys.groupBy("key").agg(count(lit(1)).as("n")).cache()
+      val kc = Caches.keep(keys.groupBy("key").agg(count(lit(1)).as("n")))
       val tot = kc.agg(sum("n").as("n_rows"), count(lit(1)).as("n_keys"))
       val top = kc.orderBy(col("n").desc, col("key")).limit(SkewTopK)
         .withColumn("rank", row_number().over(w).cast("long"))

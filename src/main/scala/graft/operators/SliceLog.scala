@@ -56,12 +56,14 @@ final case class SliceLog(root: String, partCol: String,
 
   /** Build every family from `rows(name)` (which carries `partCol`), then
     * stamp it from the files. Each family keeps its own order (write, then
-    * the digest, then the manifest). Reclaiming the caches the producing
-    * plans registered is the caller's. */
+    * the digest, then the manifest), as one [[Caches.scoped]] unit: the
+    * caches its rows kept are released when the family is stamped. */
   def write(spark: SparkSession, rows: String => DataFrame): Unit =
     each { f =>
-      DedupArtifacts.writeSlices(rows(f.name), path(f), partCol, f.sliceKey)
-      stamp(spark, f)
+      Caches.scoped(spark)(rows(f.name)) { df =>
+        DedupArtifacts.writeSlices(df, path(f), partCol, f.sliceKey)
+        stamp(spark, f)
+      }
     }: Unit
 
   /** The params handshake over every family; `op` names the operation
@@ -71,13 +73,14 @@ final case class SliceLog(root: String, partCol: String,
       DedupArtifacts.requireParams(spark, path(f), f.params, op): Unit)
 
   /** Land day `day`'s slice `slice(name)` in every family — an O(day)
-    * pass plus one slice swap each; the standing slices are never
-    * re-read. `restamp = false` defers the re-stamp to [[restamp]]. */
+    * pass plus one slice swap each, one [[Caches.scoped]] unit per family;
+    * the standing slices are never re-read. `restamp = false` defers the
+    * re-stamp to [[restamp]]. */
   def append(spark: SparkSession, day: Long, slice: String => DataFrame,
       restamp: Boolean): Unit = {
     requireParams(spark, "append")
-    each(f => Etl.replaceSlice(spark, path(f), partCol, day.toString,
-      slice(f.name))): Unit
+    each(f => Caches.scoped(spark)(slice(f.name))(
+      Etl.replaceSlice(spark, path(f), partCol, day.toString, _))): Unit
     if (restamp) each(stamp(spark, _)): Unit
   }
 
@@ -91,11 +94,12 @@ final case class SliceLog(root: String, partCol: String,
   /** Merge every slice with label ≤ `upTo` into one slice labeled `upTo`,
     * in every family ([[DedupArtifacts.compactSlices]]: the manifest
     * travels with the publish, and a crashed run is repaired by running
-    * it again). The session cache is cleared once, if anything merged. */
+    * it again). Each family's compaction releases the caches it kept; a
+    * cache over the replaced slices is never matched again, because
+    * verified reads name the files they read ([[read]]). */
   def compact(spark: SparkSession, upTo: Long): Unit =
-    if (each(f => DedupArtifacts.compactSlices(spark, path(f), partCol, upTo,
-        f.canon, f.sliceKey)).contains(true))
-      spark.catalog.clearCache()
+    each(f => Caches.releasing(DedupArtifacts.compactSlices(spark, path(f),
+      partCol, upTo, f.canon, f.sliceKey))): Unit
 
   /** The CADENCE POLICY (round 14): compact when a family's log has grown
     * past `maxSlices` slices. The decision is an FS directory listing per

@@ -149,15 +149,12 @@ object StreamArtifacts {
     * (the D34 convention). Everything lands as `ingest_day=0`; each
     * family's manifest digests the canonical view. The four families
     * share no directory and read only the doc frames, so they build
-    * concurrently ([[SliceLog.write]]); the session cache is cleared
-    * once, after all four. */
+    * concurrently ([[SliceLog.write]]). */
   def writeFrom(spark: SparkSession, standingDocs: DataFrame,
-      spanDocs: DataFrame, root: String): Unit = {
+      spanDocs: DataFrame, root: String): Unit =
     log(root).write(spark, f =>
       slices(f, spark, if (f == "span_index") spanDocs else standingDocs)
         .withColumn("ingest_day", lit(0L)))
-    spark.catalog.clearCache()
-  }
 
   /** Build the store from a source dir: standing split for
     * hash/sigs/grams, the whole corpus for spans; the four families build
@@ -317,15 +314,8 @@ object StreamArtifacts {
   // store is built ONCE per (source dir, JVM); the registered action
   // measures the deployment READ — the C75/C115 precedent)
 
-  private val statsRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def statsRoot(spark: SparkSession, dir: String): String =
-    statsRoots.computeIfAbsent(dir, { _ =>
-      val root = DedupArtifacts.stagingRoot()
-      write(spark, dir, root)
-      root
-    })
+    DedupArtifacts.staged(s"stream:$dir")(write(spark, dir, _))
 
   /** Force the per-(dir, JVM) store staging now — the [[graft.Bench]]
     * measured-staging-phase hook (see [[DedupArtifacts.stage]]). */

@@ -570,7 +570,7 @@ object TextOps {
     // cache(): tf feeds df, the corpus count and the scored join — pruning
     // makes the three subtrees canonically different so the tokenize + tf
     // shuffle would run three times without one materialization
-    val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf")).cache()
+    val tf = Caches.keep(toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val n = tf.select(countDistinct("doc_id").as("n_docs"))
     val scored = tf.join(df, "token").crossJoin(broadcast(n))
@@ -731,11 +731,10 @@ object TextOps {
     * pairs. Exactness: md5 hex keys, integer pair arithmetic (`div 2`
     * exact — n·(n−1) is even), one grid cache for the join's two sides. */
   def dupSourceMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val cells = chunkedWith(spark, dir, Seq("source"))
+    val cells = Caches.keep(chunkedWith(spark, dir, Seq("source"))
       .select(md5(col("chunk_text").cast("binary")).as("chunk_hash"),
         col("source"))
-      .groupBy("chunk_hash", "source").agg(count(lit(1)).as("n"))
-      .cache()
+      .groupBy("chunk_hash", "source").agg(count(lit(1)).as("n")))
     val a = cells.select(col("chunk_hash"), col("source").as("source_a"),
       col("n").as("n_a"))
     val b = cells.select(col("chunk_hash"), col("source").as("source_b"),
@@ -850,11 +849,10 @@ object TextOps {
     // cache(): the token stream feeds tf, the N count and the join probe —
     // per-branch pruning defeats ReuseExchange (measured 3 scans), so the
     // regex tokenize would run three times without one materialization
-    val toks = Tables.documents(spark, dir)
+    val toks = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("doc_id"),
-        posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "token")))
-      .cache()
+        posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "token"))))
     val tf = toks.groupBy("token").agg(count(lit(1)).as("tf"))
     val n = toks.select(count(lit(1)).as("n_total"))
     toks.join(tf, "token").crossJoin(broadcast(n))
@@ -1232,13 +1230,12 @@ object TextOps {
     * tf relation — two consumers, one materialization. */
   def textZipf(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = Tables.documents(spark, dir)
+    val tf = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
       .filter(length(col("term")) > 0)
-      .groupBy("source", "term").agg(count(lit(1)).as("tf"))
-      .cache()
+      .groupBy("source", "term").agg(count(lit(1)).as("tf")))
     val stats = tf.groupBy("source").agg(
       sum("tf").as("total_tokens"),
       count(lit(1)).as("vocab_size"),
@@ -1329,13 +1326,12 @@ object TextOps {
     * the ≤ sources² pair grid. Pairs sharing zero types don't appear
     * (inner-join semantics, same both engines). */
   def sourceVocabOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = Tables.documents(spark, dir)
+    val vocab = Caches.keep(Tables.documents(spark, dir)
       .filter(length(trim(col("text"))) > 0)
       .select(col("source"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
       .filter(length(col("term")) > 0)
-      .select("source", "term").distinct()
-      .cache()
+      .select("source", "term").distinct())
     val sizes = vocab.groupBy("source").agg(count(lit(1)).as("n_vocab"))
     vocab.as("a")
       .join(vocab.as("b"),
@@ -1416,11 +1412,10 @@ object TextOps {
     val bucketed = d.crossJoin(broadcast(mx))
       .withColumn("bucket",
         expr(s"least(doc_id * $B div (max_id + 1), ${B - 1})"))
-    val grid = bucketed
+    val grid = Caches.keep(bucketed
       .select(col("bucket"), explode(col("toks")).as("term"))
       .filter(length(col("term")) > 0)
-      .groupBy("term", "bucket").agg(count(lit(1)).as("occ"))
-      .cache()
+      .groupBy("term", "bucket").agg(count(lit(1)).as("occ")))
     val firsts = grid.groupBy("term").agg(min("bucket").as("first_bucket"))
     val perBucket = grid.join(firsts, "term")
       .groupBy("bucket").agg(

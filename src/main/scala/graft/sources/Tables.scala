@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
 import org.apache.spark.sql.types.StructType
 
@@ -40,7 +41,7 @@ object Tables {
     * fall back to `spark.read.parquet`, so those keep Spark's own
     * behaviour and errors. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path).fold(spark.read.parquet(path))(
+    footerSchema(spark, Seq(path), mergeAll = false).fold(spark.read.parquet(path))(
       spark.read.schema(_).parquet(path))
 
   /** The rows under a parquet path — what `readParquet(spark,
@@ -56,6 +57,31 @@ object Tables {
 
   private val SummaryFiles = Set("_common_metadata", "_metadata")
 
+  /** `df` (a bare read of one listed file relation) over exactly the
+    * files its listing found, or `df` itself when it is anything else. A
+    * cached plan is matched by the paths its scan names: a read of a directory
+    * made after the directory changed still matches an entry cached
+    * before the change, while a read of the listed files matches only an
+    * entry over those same files. The new index answers from the listing
+    * `df` already holds, so nothing is listed again and no listing job
+    * runs, however many files there are. */
+  private[graft] def pinned(spark: SparkSession, df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case LogicalRelation(r @ HadoopFsRelation(index: PartitioningAwareFileIndex,
+          _, _, _, _, _), _, _, _, _) =>
+        val files = index.allFiles()
+        val byPath = files.map(f => f.getPath -> Array(f)).toMap
+        val listed = new FileStatusCache {
+          override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byPath.get(p)
+          override def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }
+        spark.baseRelationToDataFrame(r.copy(location = new InMemoryFileIndex(
+          spark, files.map(_.getPath), Map.empty, None, listed,
+          Some(index.partitionSpec()), None))(r.sparkSession))
+      case _ => df
+    }
+
   private def listing(spark: SparkSession, path: String): Option[InMemoryFileIndex] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -63,23 +89,30 @@ object Tables {
       new InMemoryFileIndex(spark, Seq(fs.makeQualified(root)), Map.empty, None))
   }
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
-    listing(spark, path).flatMap { index =>
-      val files = index.allFiles().sortBy(_.getPath.toString)
+  /** The schema Spark would infer for a read of `paths`, from footers read
+    * on the driver: `mergeAll` (or `spark.sql.parquet.mergeSchema`) merges
+    * every data footer, as the `mergeSchema` option does in a Spark job.
+    * None when a path is missing or no path holds a data file. */
+  private def footerSchema(spark: SparkSession, paths: Seq[String],
+      mergeAll: Boolean): Option[StructType] = {
+    val indexes = paths.map(listing(spark, _))
+    Option.when(indexes.forall(_.isDefined))(indexes.flatten).flatMap { idx =>
+      val files = idx.flatMap(_.allFiles()).sortBy(_.getPath.toString)
       def named(n: String) = files.filter(_.getPath.getName == n)
       val (common, meta) = (named("_common_metadata"), named("_metadata"))
       val data = files.diff(common ++ meta)
       val conf = spark.sessionState.conf
       val touch =
-        if (conf.isParquetSchemaMergingEnabled)
+        if (mergeAll || conf.isParquetSchemaMergingEnabled)
           (if (conf.isParquetSchemaRespectSummaries) Nil else data) ++ meta ++ common
         else common.headOption.orElse(meta.headOption).orElse(data.headOption).toSeq
-      val parts = index.partitionSchema
+      val parts = idx.flatMap(_.partitionSchema.fields).distinctBy(_.name)
       if (data.isEmpty) None
       else GraftFooters.schema(spark, touch)
-        .filterNot(_.fieldNames.exists(f => parts.fieldNames.exists(_.equalsIgnoreCase(f))))
-        .map(s => StructType(s.fields ++ parts.fields))
+        .filterNot(_.fieldNames.exists(f => parts.exists(_.name.equalsIgnoreCase(f))))
+        .map(s => StructType(s.fields ++ parts))
     }
+  }
 
   def region(s: SparkSession, d: String)    = load(s, d, "region")
   def nation(s: SparkSession, d: String)    = load(s, d, "nation")
@@ -159,18 +192,23 @@ object Tables {
     * the canonical type; absent → NULL of that type. Extra file columns are
     * dropped by the projection.
     *
-    * Scale: `mergeSchema` footer-merges ALL files (a parallel job, but
-    * still O(files) work) — at true lake scale a catalog (Delta/Iceberg)
-    * tracks the schema instead and this read drops the option; the conform
-    * projection is the part that stays. It is a narrow codegen'd Project
-    * that fuses into the scan, and column pruning still reaches the reader
-    * because the projection is per-column. */
+    * Scale: the file schema is every footer under `paths` merged on the
+    * driver (what the `mergeSchema` option infers, without its Spark job;
+    * still O(files) footer reads) — at true lake scale a catalog
+    * (Delta/Iceberg) tracks the schema instead; the conform projection is
+    * the part that stays. It is a narrow codegen'd Project that fuses
+    * into the scan, and column pruning still reaches the reader because
+    * the projection is per-column. Building the frame schedules no Spark
+    * job; paths that [[readParquet]] would hand to Spark fall back to the
+    * `mergeSchema` read. */
   def readParquetEvolved(s: SparkSession,
                          schema: org.apache.spark.sql.types.StructType,
                          paths: String*): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    // one read over all paths; files missing a sampled column yield NULLs
-    val raw = s.read.option("mergeSchema", "true").parquet(paths: _*)
+    // one read over all paths; files missing a merged column yield NULLs
+    val raw = footerSchema(s, paths, mergeAll = true)
+      .fold(s.read.option("mergeSchema", "true").parquet(paths: _*))(
+        s.read.schema(_).parquet(paths: _*))
     val have = raw.schema.fieldNames.toSet
     raw.select(schema.fields.toSeq.map { f =>
       if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
@@ -297,14 +335,13 @@ object Tables {
       "the quarantine column name '_malformed' is reserved")
     val withCorrupt = org.apache.spark.sql.types.StructType(
       schema.fields :+ StructField("_malformed", StringType, nullable = true))
-    val parsed = s.read
+    val parsed = graft.operators.Caches.keep(s.read
       .option("header", header.toString)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_malformed")
       .schema(withCorrupt)
       .csv(path)
-      .withColumn("_src_file", input_file_name())
-      .cache()
+      .withColumn("_src_file", input_file_name()))
     val good = parsed.filter(col("_malformed").isNull)
       .select(schema.fieldNames.map(col).toSeq: _*)
     val bad = parsed.filter(col("_malformed").isNotNull)

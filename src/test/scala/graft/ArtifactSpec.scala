@@ -511,7 +511,6 @@ class ArtifactSpec extends SparkSpec {
 
   test("stream index store: day append == union rebuild (manifest-equal)") {
     import operators.StreamArtifacts
-    graft.functions.Kernels.register(spark)
     val docs = sources.Tables.documents(spark, sf)
     val standing = docs.filter(col("doc_id") % sources.Feeds.IncrMod
       =!= sources.Feeds.IncrRem)
@@ -686,7 +685,6 @@ class ArtifactSpec extends SparkSpec {
 
   test("ANN index store: day append == frozen-quantizer rebuild (manifest-equal)") {
     import operators.{AnnArtifacts, EmbeddingOps}
-    graft.functions.Kernels.register(spark)
     def manifest(r: String, fam: String): String =
       java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$r/$fam/_graft_manifest.json"))
@@ -824,6 +822,32 @@ class ArtifactSpec extends SparkSpec {
     spark.catalog.clearCache(): Unit
   }
 
+  test("a store read after an append never answers from a cache over the old files") {
+    import operators.SketchArtifacts
+    spark.catalog.clearCache()
+    val r = tmpDir("graft-stale-read-")
+    SketchArtifacts.writeQsketchDays(spark, sf, r)
+    // five days of one week, past the fixture's own days
+    val week = 5000L
+    def append(i: Long): Unit = SketchArtifacts.appendQsketchDay(spark, r,
+      week * 7 + i, nightEvents(week * 7 + i))
+    (0L until 5L).foreach(append)
+    def estimates() = SketchArtifacts.qsketchWeekEstimates(spark, r)
+    def nDays(): Seq[Long] = estimates().filter(col("week_epoch") === week)
+      .select("n_days").distinct().collect().map(_.getLong(0)).toSeq
+    // the consumer keeps its week reduction (no scope open: the cache is
+    // this caller's), then a sixth day lands in the same week
+    assert(nDays() == Seq(5L))
+    append(5L)
+    assert(nDays() == Seq(6L), "the read after the append answered from " +
+      "the cache kept over the five-day files")
+    // a re-read of the unchanged snapshot still hits the kept reduction
+    assert(estimates().queryExecution.withCachedData
+      .collect { case c: InMemoryRelation => c }
+      .exists(_.cacheBuilder.isCachedColumnBuffersLoaded))
+    spark.catalog.clearCache(): Unit
+  }
+
   test("snapshot memo: a file rewritten after a verified read fails; failures record nothing") {
     val r2 = tmpDir("graft-artifacts-rewrite-")
     DedupArtifacts.writeComponents(spark, sf, r2)
@@ -924,7 +948,6 @@ class ArtifactSpec extends SparkSpec {
 
   test("stream index store: slice compaction preserves the canonical view") {
     import operators.StreamArtifacts
-    graft.functions.Kernels.register(spark)
     def manifest(r: String, fam: String): String =
       java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$r/$fam/_graft_manifest.json"))
@@ -1011,7 +1034,6 @@ class ArtifactSpec extends SparkSpec {
 
   test("compaction cadence: no-op below K, fires above, replay horizon") {
     import operators.StreamArtifacts
-    graft.functions.Kernels.register(spark)
     def manifest(r: String, fam: String): String =
       java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$r/$fam/_graft_manifest.json"))
@@ -1059,7 +1081,7 @@ class ArtifactSpec extends SparkSpec {
 
   test("store recovery: stranded publish restored, missing manifest FAILS") {
     import operators.{AnnArtifacts, StreamArtifacts}
-    graft.functions.Kernels.register(spark)
+    import streaming.UpsertSink
     val sp = spark
     import sp.implicits._
     val day = Seq((91000000001L, (1 to 30).map(i => s"rrx$i").mkString(" "),
@@ -1068,54 +1090,72 @@ class ArtifactSpec extends SparkSpec {
       .filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + 91000000000L).as("vec_id"), col("label"),
         col("embedding"))
-    // every slice-log store takes the same scenario: (store, the family
-    // the crash hits, build, day append, compact, recover)
-    val stores = Seq[(String, String, String => Unit, (String, Long) => Unit,
-        (String, Long) => Unit, String => Boolean)](
+    def restoreStranded(dir: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      sources.Export.restoreStranded(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    }
+    // every store that publishes by rename takes the same crash: (store,
+    // the directory the crash hits, build, recover, and for a slice log
+    // its day append and compact)
+    val stores = Seq[(String, String, String => Unit, String => Boolean,
+        Option[((String, Long) => Unit, (String, Long) => Unit)])](
       ("stream", "incr_hash", StreamArtifacts.write(spark, sf, _),
-        (r, d) => StreamArtifacts.appendDay(spark, r, d, day),
-        StreamArtifacts.compact(spark, _, _), StreamArtifacts.recover(spark, _)),
+        StreamArtifacts.recover(spark, _),
+        Some(((r, d) => StreamArtifacts.appendDay(spark, r, d, day),
+          StreamArtifacts.compact(spark, _, _)))),
       ("ann", "flat", AnnArtifacts.write(spark, sf, _),
-        (r, d) => AnnArtifacts.appendDay(spark, r, d, dayVectors),
-        AnnArtifacts.compact(spark, _, _), AnnArtifacts.recover(spark, _)))
-    for ((store, fam, build, appendDay, compact, recover) <- stores) {
+        AnnArtifacts.recover(spark, _),
+        Some(((r, d) => AnnArtifacts.appendDay(spark, r, d, dayVectors),
+          AnnArtifacts.compact(spark, _, _)))),
+      // the keyed upsert target, which each batch restores before it
+      // merges (the replay itself: StreamingSpec D3)
+      ("upsert", "t", r => UpsertSink.mergeBatch(
+          Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "ver"), "k", "ver",
+          s"$r/t"),
+        r => restoreStranded(s"$r/t"), None))
+    for ((store, fam, build, recover, sliceLog) <- stores) {
       val r = tmpDir(s"graft-recover-$store-")
       build(r)
       val mPath = java.nio.file.Paths.get(s"$r/$fam/_graft_manifest.json")
       // nothing to repair on a healthy store
       assert(!recover(r), store)
-      // the manifest TRAVELS WITH compaction's publish (round 15): after a
-      // real multi-slice compaction the manifest is present and byte-equal
-      // IMMEDIATELY after the swap — there is no re-stamp window a crash
-      // could land in
-      appendDay(r, 1L)
-      val m1 = java.nio.file.Files.readString(mPath)
-      compact(r, 1L)
-      assert(java.nio.file.Files.readString(mPath) == m1,
-        s"$store: compaction's publish did not carry the manifest through")
-      // a missing manifest is now unambiguously a HALF-BUILT store (crash
-      // between the initial family write and its first stamp, params
-      // unknown): the append handshake fails fast, recover() REFUSES to
-      // bless it with caller-asserted params (the round-14 advisor's
-      // finding), and compact() refuses to launder it into a publish
-      java.nio.file.Files.delete(mPath)
-      val e = intercept[RuntimeException](appendDay(r, 9L))
-      assert(e.getMessage.contains("no manifest"), s"$store: ${e.getMessage}")
-      val e2 = intercept[RuntimeException](recover(r))
-      assert(e2.getMessage.contains("half-built"), s"$store: ${e2.getMessage}")
-      val e3 = intercept[RuntimeException](compact(r, 9L))
-      assert(e3.getMessage.contains("no manifest"), s"$store: ${e3.getMessage}")
-      // the rebuild-analog for the test: restore the known-good manifest
-      java.nio.file.Files.writeString(mPath, m1): Unit
-      // crash-mid-publish: the family dir is staged out under _<f>.old —
-      // recover() renames it back, manifest intact inside
+      sliceLog.foreach { case (appendDay, compact) =>
+        // the manifest TRAVELS WITH compaction's publish (round 15): after
+        // a real multi-slice compaction the manifest is present and
+        // byte-equal IMMEDIATELY after the swap — there is no re-stamp
+        // window a crash could land in
+        appendDay(r, 1L)
+        val m1 = java.nio.file.Files.readString(mPath)
+        compact(r, 1L)
+        assert(java.nio.file.Files.readString(mPath) == m1,
+          s"$store: compaction's publish did not carry the manifest through")
+        // a missing manifest is now unambiguously a HALF-BUILT store
+        // (crash between the initial family write and its first stamp,
+        // params unknown): the append handshake fails fast, recover()
+        // REFUSES to bless it with caller-asserted params (the round-14
+        // advisor's finding), and compact() refuses to launder it into a
+        // publish
+        java.nio.file.Files.delete(mPath)
+        val e = intercept[RuntimeException](appendDay(r, 9L))
+        assert(e.getMessage.contains("no manifest"), s"$store: ${e.getMessage}")
+        val e2 = intercept[RuntimeException](recover(r))
+        assert(e2.getMessage.contains("half-built"), s"$store: ${e2.getMessage}")
+        val e3 = intercept[RuntimeException](compact(r, 9L))
+        assert(e3.getMessage.contains("no manifest"), s"$store: ${e3.getMessage}")
+        // the rebuild-analog for the test: restore the known-good manifest
+        java.nio.file.Files.writeString(mPath, m1): Unit
+      }
+      val before = sliceLog.map(_ => java.nio.file.Files.readString(mPath))
+      // crash-mid-publish: the directory is staged out under _<f>.old —
+      // recovery renames it back, manifest intact inside
       val famDir = java.nio.file.Paths.get(s"$r/$fam")
       val oldDir = java.nio.file.Paths.get(s"$r/_$fam.old")
       java.nio.file.Files.move(famDir, oldDir)
       assert(recover(r), store)
-      assert(java.nio.file.Files.exists(mPath) &&
-        java.nio.file.Files.readString(mPath) == m1,
-        s"$store: stranded family not restored")
+      assert(java.nio.file.Files.exists(famDir) &&
+        before.forall(_ == java.nio.file.Files.readString(mPath)),
+        s"$store: stranded directory not restored")
       assert(!recover(r), store)
       spark.catalog.clearCache()
     }
@@ -1123,7 +1163,6 @@ class ArtifactSpec extends SparkSpec {
 
   test("nightly runner: 3 composed days, sane report, crash-replay idempotent") {
     import operators.{AnnArtifacts, Nightly, SketchArtifacts, StreamArtifacts}
-    graft.functions.Kernels.register(spark)
     val work = tmpDir("graft-nightly-spec-")
     val (skR, stR, anR) = (s"$work/sk", s"$work/st", s"$work/an")
     SketchArtifacts.write(spark, sf, skR)
@@ -1265,7 +1304,6 @@ class ArtifactSpec extends SparkSpec {
     * already hold threads when `conc` runs. */
   private lazy val nights: Nights = {
     import operators.{AnnArtifacts, Nightly, SketchArtifacts, StreamArtifacts}
-    graft.functions.Kernels.register(spark)
     val work = tmpDir("graft-concurrent-night-")
     def roots(s: String) = (s"$work/$s/sk", s"$work/$s/st", s"$work/$s/an")
     val (conc, seq) = (roots("conc"), roots("seq"))
@@ -1396,6 +1434,26 @@ class ArtifactSpec extends SparkSpec {
       "a job of the failed night ended after runDay threw")
     assert(jobs.ids.size > 2, "the other chains did not run")
     spark.catalog.clearCache(): Unit
+  }
+
+  test("a compacting night releases only what it kept: the caller's cache survives") {
+    import operators.{AnnArtifacts, Nightly, SketchArtifacts, StreamArtifacts}
+    val work = tmpDir("graft-held-night-")
+    val (sk, st, an) = (s"$work/sk", s"$work/st", s"$work/an")
+    SketchArtifacts.write(spark, sf, sk)
+    StreamArtifacts.write(spark, sf, st)
+    AnnArtifacts.write(spark, sf, an)
+    val held = sources.Tables.documents(spark, sf).select("doc_id", "source")
+      .cache()
+    held.count(): Unit
+    // at one slice per log, night 2 compacts both index stores
+    val reports = (1L to 2L).map(d => Nightly.runDay(spark, d, sk, st, an,
+      nightEvents(d), nightDocs(d), nightVectors(d), maxSlices = 1).collect())
+    assert(reports.last.count(_.getString(2) == "compact") == 2,
+      reports.last.mkString("; "))
+    assert(held.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the night released a cache it did not keep")
+    held.unpersist(): Unit
   }
 
   test("landed slices: footer row count == Spark's count, every slice") {

@@ -115,7 +115,6 @@ class CubesSpec extends SparkSpec {
   test("HLL estimate tracks exact distinct within raw-HLL error") {
     val sp = spark
     import sp.implicits._
-    graft.functions.Kernels.register(sp)
     // the raw estimator (no bias corrections on purpose — ln() is
     // libm-dependent and would break the oracle's bit-exactness) is only
     // accurate once n >> m; test it where it's specified: n = 5000 >> 64.
@@ -135,7 +134,6 @@ class CubesSpec extends SparkSpec {
   test("HLL registers merge idempotently across partitionings") {
     val sp = spark
     import sp.implicits._
-    graft.functions.Kernels.register(sp)
     val vals = (1L to 5000L).toDF("v")
     def regs(parts: Int): Seq[Long] =
       vals.repartition(parts).agg(expr("graft_hll_sketch(v)")).head

@@ -547,7 +547,6 @@ class CurationOpsSpec extends SparkSpec {
     // graft_minhash_rows regrouped at (4,3) must reproduce
     // graft_minhash_sigs verbatim — C93's sweep shares C2's hash family
     // by construction, pinned here so a kernel edit cannot split them
-    Kernels.register(spark)
     val d = Tables.documents(spark, sf)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)

@@ -1775,8 +1775,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("kmeans: coverage, seeded clusters, Lloyd monotonicity") {
     val km = operators.EmbeddingOps.embedKmeans(spark, sf).cache()
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding")).cache()
+    // the vector relation embedKmeans already kept: keep() does not cache
+    // an equal plan twice
+    val emb = operators.Caches.keep(graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding")))
     assert(km.count() == emb.count())
     // clusters are (a subset of) the seed ids; sizes reconcile
     val k = operators.EmbeddingOps.KmClusters
@@ -2536,7 +2538,6 @@ class OperatorsSpec extends SparkSpec {
     assert(math.abs(m.agg(sum("token_share")).head.getDouble(0) - 1.0) < 1e-9)
     // the XOR fingerprint reconciles with an independent regroup, and the
     // second salt keeps it from collapsing onto the shard id
-    graft.functions.Kernels.register(spark)
     val re = d.select(
         (expr("graft_str_hash(concat('shard|', lower(trim(text))))")
           % Pipeline.NumShards).as("shard_id"),

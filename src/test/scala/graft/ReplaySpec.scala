@@ -51,7 +51,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     val docs = graft.sources.Tables.documents(sp, sf)
 
     // ---- D18: incremental dedup against the frozen standing index
@@ -191,7 +190,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.{DedupOps, Pipeline, StreamArtifacts}
     import org.apache.spark.sql.DataFrame
 
@@ -276,7 +274,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.SketchArtifacts
 
     val full = tmpDir("d37_full")
@@ -322,7 +319,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.AnnArtifacts
 
     // the nightly index build, then a probe day served BOTH ways: corpus
@@ -358,7 +354,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.SketchArtifacts
 
     val full = tmpDir("d3839_full")
@@ -422,7 +417,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.{AnnArtifacts, EmbeddingOps}
 
     // base index from the corpus; two ingest days of admitted vectors
@@ -490,7 +484,6 @@ class ReplaySpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     import graft.operators.{AnnArtifacts, EmbeddingOps}
     val root = tmpDir("d40c_store")
     AnnArtifacts.write(sp, sf, root)

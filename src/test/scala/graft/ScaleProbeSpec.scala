@@ -51,7 +51,6 @@ class ScaleProbeSpec extends SparkSpec {
   }
 
   test("embedding replica is an exact permutation: element multisets preserved, norms to rounding") {
-    graft.functions.Kernels.register(spark)
     val inflated = spark.read.parquet(s"$root/embeddings.parquet")
     val pairs = inflated.filter(col("vec_id") < Off)
       .select(col("vec_id"), sort_array(col("embedding")).as("a"),

@@ -55,7 +55,6 @@ class SkewSpec extends SparkSpec {
     // C2 / 343 C14 at sf0.01, 1381 / 3253 at sf0.1)
     import graft.operators.DedupOps
     val sp = spark
-    graft.functions.Kernels.register(sp)
     val sigMax = graft.sources.Tables.documents(sp, sf)
       .withColumn("norm", lower(trim(col("text"))))
       .filter(length(col("norm")) >= 5)

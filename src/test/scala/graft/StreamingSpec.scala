@@ -612,7 +612,6 @@ class StreamingSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     val in = MemoryStream[String]
     val agg = in.toDF().toDF("event_type")
       .groupBy().agg(expr("graft_cms_sketch(event_type)").as("m"))
@@ -1771,7 +1770,6 @@ class StreamingSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     val docs = graft.sources.Tables.documents(sp, sf)
     // frozen index: the standing corpus's dup-span relation (C73)
     val spanIndex = graft.operators.DedupOps.substrDupSpans(sp, sf)
@@ -1821,7 +1819,6 @@ class StreamingSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx = sp.sqlContext
-    graft.functions.Kernels.register(sp)
     val docs = graft.sources.Tables.documents(sp, sf)
     val spanIndex = graft.operators.DedupOps.substrDupSpans(sp, sf)
       .select("span_hash").cache()

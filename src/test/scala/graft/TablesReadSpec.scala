@@ -62,6 +62,53 @@ class TablesReadSpec extends SparkSpec {
     }.jobs == 0)
   }
 
+  test("an evolved read builds its frame with zero Spark jobs, all footers merged") {
+    import org.apache.spark.sql.types._
+    val root = tmpDir("graft-tables-evolved-")
+    // two drifted files in one path: the first by name lacks `score`
+    spark.range(0, 3).select(col("id"), lit("a").as("name"))
+      .coalesce(1).write.parquet(s"$root/v/a")
+    spark.range(3, 5).select(col("id"), (col("id") * 1.5).as("score"))
+      .coalesce(1).write.parquet(s"$root/v/b")
+    val canonical = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType), StructField("score", DoubleType)))
+    var out: DataFrame = null
+    val jobs = graft.obs.Meter.measure(spark) {
+      out = Tables.readParquetEvolved(spark, canonical, s"$root/v/a", s"$root/v/b")
+    }.jobs
+    assert(jobs == 0, s"building the evolved frame ran $jobs job(s)")
+    sameFrame(out, spark.read.option("mergeSchema", "true")
+      .parquet(s"$root/v/a", s"$root/v/b")
+      .select(col("id"), col("name"), col("score")), "evolved")
+  }
+
+  test("a pinned read of a 40-file family lists nothing and runs no job") {
+    val root = tmpDir("graft-tables-pinned-") + "/fam"
+    spark.range(0, 400).repartition(40).write.parquet(root)
+    val raw = Tables.readParquet(spark, root)
+    val files = raw.inputFiles.toSeq
+    assert(files.size == 40)
+    // the naive pin, one path per file, lists its 40 paths in a job
+    assert(graft.obs.Meter.measure(spark)(
+      spark.read.schema(raw.schema).parquet(files: _*)).jobs > 0)
+    var pinned: DataFrame = null
+    assert(graft.obs.Meter.measure(spark) {
+      pinned = Tables.pinned(spark, raw)
+    }.jobs == 0)
+    assert(pinned.inputFiles.toSeq.sorted == files.sorted)
+    sameFrame(pinned, raw, "pinned")
+    // a verified re-read of the family (the snapshot memo skips the
+    // digest) is pinned the same way and runs no job either
+    import graft.operators.DedupArtifacts
+    DedupArtifacts.refreshManifest(spark, root, Map.empty, identity)
+    DedupArtifacts.readVerified(spark, root): Unit
+    var reread: DataFrame = null
+    assert(graft.obs.Meter.measure(spark) {
+      reread = DedupArtifacts.readVerified(spark, root)
+    }.jobs == 0)
+    assert(reread.inputFiles.toSeq.sorted == files.sorted)
+  }
+
   test("an empty directory and a missing path raise spark.read.parquet's errors") {
     val empty = tmpDir("graft-tables-empty-")
     for (p <- Seq(empty, s"$empty/no_such.parquet")) {
